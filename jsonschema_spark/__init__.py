@@ -9,16 +9,15 @@ Spark-first:
 - ``compiler``  — lowers a spec to (a) native Spark ``Column`` boolean
                   predicates per typed column, (b) vectorized Arrow/pandas
                   UDF kernels for free-form JSON columns.
-- ``operators`` — table-level checks: column stats profiles, salted
-                  uniqueness, broadcast referential integrity, distribution
-                  drift (chi-square / PSI), plus training-data pipeline ops
-                  (dedup, similarity search, text analysis, multimodal).
+- ``operators`` — table-level checks: salted uniqueness, broadcast
+                  referential integrity, column stats profiles, distribution
+                  drift (chi-square / PSI) and the sampled pre-flight gate.
 - ``plans``     — CompiledPlan + ValidationJob: one partition-parallel pass
-                  emitting per-partition verdicts, violation rows, lineage,
-                  checkpoint/resume.
-- ``sources``   — deterministic synthetic corpus generator + parquet/iceberg
-                  table loaders.
-- ``streaming`` — Structured Streaming validation path.
+                  emitting per-row verdicts, violation rows, the
+                  accepted/quarantined split, lineage, checkpoint/resume and
+                  rollout diagnostics.
+- ``sources``   — Spark session factory + deterministic synthetic corpus
+                  generator.
 """
 
 from jsonschema_spark.spec.compile import (

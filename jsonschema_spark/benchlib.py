@@ -1,6 +1,6 @@
-"""Benchmark building blocks shared by bench.py (repo harness) and the CLI
-``throughput`` command (spark-submit scaling runs). Lives inside the package
-so it ships with --py-files."""
+"""Benchmark building blocks: the flagship corpus contract and the one-pass
+validation job behind the CLI ``throughput`` command (spark-submit scaling
+runs). Lives inside the package so it ships with --py-files."""
 
 from __future__ import annotations
 

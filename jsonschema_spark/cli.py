@@ -150,105 +150,21 @@ def cmd_validate(args) -> int:
     return 0
 
 
-def cmd_repair(args) -> int:
-    """Fix-mode pass: canonicalize every sequence (strip misplaced
-    BOS/EOS/PAD markers, remap out-of-vocab ids to unk, re-frame) and
-    write the repaired corpus; prints one JSON line with before/after
-    structure-verdict counts and total repair work. The repaired output
-    passes sequence_structure by construction."""
-    spark = _build_session(args)
-    from pyspark.sql import functions as F
-
-    from jsonschema_spark.operators.checks import (
-        repair_sequences,
-        sequence_structure,
-    )
-
-    if args.input == "synthetic":
-        from jsonschema_spark.sources.corpus import token_neardup_corpus
-
-        df = token_neardup_corpus(spark, args.rows, seed=args.seed)
-    else:
-        df = spark.read.parquet(args.input)
-
-    ids = dict(
-        vocab_size=args.vocab_size, bos_id=args.bos, eos_id=args.eos,
-        pad_id=args.pad,
-    )
-    before = (
-        sequence_structure(df, **ids)
-        .agg(F.sum((~F.col("structure_ok")).cast("long")))
-        .collect()[0][0]
-    )
-    t0 = time.time()
-    repaired = repair_sequences(df, unk_id=args.unk, **ids)
-    other_cols = [c for c in df.columns if c != "tokens"]
-    out = df.select(other_cols).join(
-        repaired.select("doc_id", "tokens", "n_stripped", "n_remapped",
-                        "changed"),
-        on="doc_id",
-    )
-    if "n_tok" in out.columns:
-        # repair changes sequence lengths; a stale n_tok would violate the
-        # length-consistency check the validate job runs on this output
-        out = out.withColumn("n_tok", F.size("tokens"))
-    out.write.mode("overwrite").parquet(args.out)
-    back = spark.read.parquet(args.out)
-    summary = back.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.col("changed").cast("long")).alias("n_changed"),
-        F.sum("n_stripped").alias("n_stripped_total"),
-        F.sum("n_remapped").alias("n_remapped_total"),
-    ).collect()[0]
-    after = (
-        sequence_structure(back, **ids)
-        .agg(F.sum((~F.col("structure_ok")).cast("long")))
-        .collect()[0][0]
-    )
-    print(json.dumps({
-        "n_rows": summary["n_rows"],
-        "n_changed": int(summary["n_changed"] or 0),
-        "n_stripped_total": int(summary["n_stripped_total"] or 0),
-        "n_remapped_total": int(summary["n_remapped_total"] or 0),
-        "violations_before": int(before or 0),
-        "violations_after": int(after or 0),
-        "wall_sec": round(time.time() - t0, 3),
-    }))
-    return 0 if (after or 0) == 0 else 1
-
-
 def cmd_throughput(args) -> int:
     """One timed validation pass (no sinks) — the scaling-protocol probe.
-    Prints {rows, tokens, wall_sec, sequences_per_sec, tokens_per_sec}.
-    ``--layout packed`` runs the same checks over the packed-binary token
-    layout (sources/packed.py) instead of array<int>."""
+    Prints {rows, tokens, wall_sec, sequences_per_sec, tokens_per_sec}."""
     spark = _build_session(args)
     from jsonschema_spark.benchlib import corpus_validation_pass, materialize_corpus
 
     path = args.input
     if path == "synthetic":
         path = materialize_corpus(spark, args.rows, args.cache_dir, seed=args.seed)
-    one_pass = corpus_validation_pass
-    layout = getattr(args, "layout", "array")
-    if layout in ("packed", "packed_stats"):
-        from jsonschema_spark.sources.packed import (
-            pack_corpus,
-            packed_stats_validation_pass,
-            packed_validation_pass,
-        )
-
-        path = pack_corpus(spark, path, path.rstrip("/") + "_packed")
-        one_pass = (
-            packed_stats_validation_pass
-            if layout == "packed_stats"
-            else packed_validation_pass
-        )
     # warm-up then best-of-N
-    one_pass(spark, path)
+    corpus_validation_pass(spark, path)
     best = float("inf")
     for _ in range(args.repeat):
         t0 = time.time()
-        n_rows, n_valid, n_tokens, n_dups = one_pass(spark, path)
+        n_rows, n_valid, n_tokens, n_dups = corpus_validation_pass(spark, path)
         best = min(best, time.time() - t0)
     print(
         json.dumps(
@@ -303,19 +219,6 @@ def main(argv=None) -> int:
     )
     pv.set_defaults(fn=cmd_validate)
 
-    pr = sub.add_parser("repair")
-    pr.add_argument("--input", default="synthetic")
-    pr.add_argument("--out", required=True)
-    pr.add_argument("--rows", type=int, default=10_000)
-    pr.add_argument("--seed", type=int, default=5)
-    pr.add_argument("--cores", type=int, default=None)
-    pr.add_argument("--vocab-size", type=int, default=32_000)
-    pr.add_argument("--bos", type=int, default=1)
-    pr.add_argument("--eos", type=int, default=2)
-    pr.add_argument("--pad", type=int, default=0)
-    pr.add_argument("--unk", type=int, default=3)
-    pr.set_defaults(fn=cmd_repair)
-
     pt = sub.add_parser("throughput")
     pt.add_argument("--input", default="synthetic")
     pt.add_argument("--rows", type=int, default=1_000_000)
@@ -323,9 +226,6 @@ def main(argv=None) -> int:
     pt.add_argument("--repeat", type=int, default=2)
     pt.add_argument("--cores", type=int, default=None)
     pt.add_argument("--cache-dir", default="/tmp/jsonschema_spark_bench")
-    pt.add_argument(
-        "--layout", choices=["array", "packed", "packed_stats"], default="array"
-    )
     pt.set_defaults(fn=cmd_throughput)
 
     args = p.parse_args(argv)

@@ -1,17 +1,8 @@
-"""Text-analysis functions for training-data pipelines: tokenization,
-language ID, quality scoring, fingerprinting.
+"""Column helpers shared by the validation operators.
 
 Everything here is a native Column expression (JVM-side, whole-stage
-codegen where Catalyst supports it) — no Python on the hot path. These are
-*new semantics* relative to the reference validator (SURVEY.md §2.3): the
-reference's per-document accept/reject vocabulary (pattern
-/root/reference/validate.go:202-204, length validate.go:193-200) generalized
-to per-document *profiling* columns that feed TableSpec row checks
-(e.g. ``{"row_checks": {"quality": "quality >= 0.3"}}``).
-
-Determinism: every function is a pure expression of the input text, so
-results are identical at any parallelism/partitioning — required for the
-DuckDB oracle twins and for cross-cluster reproducibility.
+codegen) — no Python on the hot path, and a pure function of its input so
+results are identical at any parallelism/partitioning.
 """
 
 from __future__ import annotations
@@ -19,375 +10,11 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# Small, unambiguous stopword lists (disjoint across languages on purpose —
-# the tie-break story stays trivial and the oracle SQL stays readable).
-STOPWORDS = {
-    "en": ["the", "and", "of", "to", "in", "is", "that", "for", "with", "was"],
-    "de": ["der", "die", "das", "und", "ist", "nicht", "ein", "mit", "für", "auf"],
-    "fr": ["le", "la", "les", "et", "est", "pas", "une", "pour", "dans", "que"],
-    "es": ["el", "los", "las", "es", "no", "una", "por", "para", "con", "del"],
-}
-
-
-def let_(value: Column, body) -> Column:
-    """Let-binding for Column expressions: evaluate ``value`` ONCE per row
-    and pass it to ``body`` as a lambda variable.
-
-    Catalyst inlines sub-expressions through projections, and higher-order
-    functions are interpreted (no whole-stage codegen, no common
-    sub-expression elimination) — so an expensive array expression
-    referenced k times is computed k times. Wrapping it as the element of a
-    one-element array and binding it via ``transform``'s lambda variable
-    forces single evaluation:
-
-        let_(expensive, lambda x: f(x, x, x))   # expensive runs once
-    """
-    return F.element_at(F.transform(F.array(value), body), 1)
-
-
-def index_range(n: Column) -> Column:
-    """``sequence(1, n)`` that is EMPTY when n < 1. Spark's sequence(1, 0)
-    yields the DESCENDING [1, 0] (default step -1), which sends index 0
-    into slice/element_at and crashes — a trap every n-gram/windowing
-    expression over short inputs hits. Always use this for 1-based
-    positional loops with a data-dependent upper bound."""
-    return F.when(n >= 1, F.sequence(F.lit(1), n)).otherwise(
-        F.array().cast("array<int>")
-    )
-
-
-def words(col: Column) -> Column:
-    """Whitespace tokenization; empty string -> empty array (not [''])."""
-    trimmed = F.trim(col)
-    return F.when(trimmed == "", F.array().cast("array<string>")).otherwise(
-        F.split(trimmed, r"\s+")
-    )
-
-
-def token_count(col: Column) -> Column:
-    """Whitespace token count (the cheap n_tok proxy for raw text)."""
-    return F.size(words(col))
-
-
-def bpe_ish_token_count(col: Column) -> Column:
-    """Sub-word token estimate with a BPE-ish regex: words, numbers, and
-    individual punctuation marks each count as one token, and long words
-    cost ceil(len/6) tokens (roughly GPT-style bytes-per-token)."""
-    pieces = F.regexp_extract_all(col, F.lit(r"([A-Za-z]+|[0-9]+|[^\sA-Za-z0-9])"), 1)
-    return F.aggregate(
-        pieces,
-        F.lit(0),
-        lambda acc, p: acc + F.ceil(F.length(p) / F.lit(6.0)).cast("int"),
-    )
-
-
-def stopword_ratio(col: Column, lang: str) -> Column:
-    """Fraction of whitespace tokens that are in STOPWORDS[lang]. The
-    tokenization is let-bound so the split/lower pipeline runs once, not
-    three times (size twice + filter once) — HOFs get no CSE."""
-
-    def _ratio(ws: Column) -> Column:
-        hits = F.size(F.filter(ws, lambda w: w.isin(STOPWORDS[lang])))
-        return F.when(F.size(ws) == 0, F.lit(0.0)).otherwise(
-            hits.cast("double") / F.size(ws)
-        )
-
-    return let_(words(F.lower(col)), _ratio)
-
-
-def lang_id(col: Column) -> Column:
-    """N-gram-free heuristic language ID: argmax of per-language stopword
-    ratios; 'und' when no language scores > 0. Ties break toward the
-    lexicographically largest language code (struct max semantics — mirrored
-    exactly in the oracle SQL). The tokenization is let-bound once and
-    shared by all four ratio expressions."""
-
-    def _ratio(ws: Column, lang: str) -> Column:
-        hits = F.size(F.filter(ws, lambda w: w.isin(STOPWORDS[lang])))
-        return F.when(F.size(ws) == 0, F.lit(0.0)).otherwise(
-            hits.cast("double") / F.size(ws)
-        )
-
-    def _pick(ws: Column) -> Column:
-        candidates = F.array(
-            *[
-                F.struct(_ratio(ws, lang).alias("ratio"), F.lit(lang).alias("lang"))
-                for lang in sorted(STOPWORDS)
-            ]
-        )
-        best = F.array_max(candidates)
-        return F.when(best.getField("ratio") > 0, best.getField("lang")).otherwise(
-            F.lit("und")
-        )
-
-    return let_(words(F.lower(col)), _pick)
-
-
-def quality_score(col: Column) -> Column:
-    """Composite [0,1] quality heuristic, equal-weighted:
-
-    - length score:    min(n_words / 100, 1)        (too-short docs score low)
-    - diversity:       distinct_words / n_words      (boilerplate repeats)
-    - stopword score:  min(any-language ratio / 0.4, 1)  (natural prose has
-                       function words; token soup doesn't)
-    - word-len score:  1 - min(|avg_word_len - 5| / 5, 1) (gibberish and
-                       minified blobs have extreme average word lengths)
-    """
-    all_stop = [w for lst in STOPWORDS.values() for w in lst]
-
-    def _score(ws: Column) -> Column:
-        n = F.size(ws)
-        hits = F.size(F.filter(ws, lambda w: w.isin(all_stop)))
-        total_chars = F.aggregate(ws, F.lit(0), lambda acc, w: acc + F.length(w))
-        len_score = F.least(n / F.lit(100.0), F.lit(1.0))
-        diversity = F.size(F.array_distinct(ws)).cast("double") / n
-        stop_score = F.least(hits / (n * F.lit(0.4)), F.lit(1.0))
-        avg_len = total_chars / n.cast("double")
-        wl_score = F.lit(1.0) - F.least(F.abs(avg_len - 5.0) / F.lit(5.0), F.lit(1.0))
-        score = (len_score + diversity + stop_score + wl_score) / 4.0
-        return F.when(n == 0, F.lit(0.0)).otherwise(score)
-
-    return let_(words(F.lower(col)), _score)
-
-
-def repetition_ratio(col: Column, n: int = 3) -> Column:
-    """Fraction of word n-grams that are repeats of an earlier n-gram in
-    the same document: ``1 - distinct_ngrams / total_ngrams`` (0 when the
-    document has fewer than n words). The Gopher-style repetition filter
-    (Rae et al. 2021 §A1.1 use exactly this family of duplicate-n-gram
-    fractions) — boilerplate, keyword stuffing and template spam score
-    high, natural prose scores near 0. Pure expression; one pass."""
-
-    def _ratio(ws: Column) -> Column:
-        n_grams = F.size(ws) - F.lit(n - 1)
-        grams = F.transform(
-            index_range(n_grams),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(ws, i + F.lit(j)) for j in range(n)]
-            ),
-        )
-        return F.when(n_grams < 1, F.lit(0.0)).otherwise(
-            let_(
-                grams,
-                lambda g: F.lit(1.0)
-                - F.size(F.array_distinct(g)).cast("double") / F.size(g),
-            )
-        )
-
-    return let_(words(F.lower(col)), _ratio)
-
-
-def top_ngram_fraction(col: Column, n: int = 2) -> Column:
-    """Fraction of word n-grams accounted for by the single most frequent
-    n-gram in the document (0 when the document has fewer than n words).
-    The Gopher "top n-gram fraction" filter signal (Rae et al. 2021
-    §A1.1): templated/stuffed text concentrates mass on one gram, natural
-    prose spreads it. Pure expression, O(grams x distinct) per row — the
-    same per-row cost envelope as token_entropy."""
-
-    def _frac(ws: Column) -> Column:
-        n_grams = F.size(ws) - F.lit(n - 1)
-        grams = F.transform(
-            index_range(n_grams),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(ws, i + F.lit(j)) for j in range(n)]
-            ),
-        )
-        return F.when(n_grams < 1, F.lit(0.0)).otherwise(
-            let_(
-                grams,
-                lambda g: F.array_max(
-                    F.transform(
-                        F.array_distinct(g),
-                        lambda d: F.size(F.filter(g, lambda x: x == d)),
-                    )
-                ).cast("double")
-                / F.size(g),
-            )
-        )
-
-    return let_(words(F.lower(col)), _frac)
-
-
-def token_entropy(col: Column) -> Column:
-    """Shannon entropy (nats) of the within-document word distribution:
-    ``-sum_w p_w ln p_w`` — the unigram-diversity quality signal (low
-    entropy = repetitive/templated text, complements repetition_ratio's
-    n-gram view). Pure expression, O(words x distinct) per row.
-
-    The distinct-word fold iterates in SORTED order so the float
-    accumulation order is identical in the DuckDB oracle twin (distinct
-    preserves first-occurrence order otherwise, which differs across
-    engines)."""
-
-    def _entropy(ws: Column) -> Column:
-        n = F.size(ws).cast("double")
-        acc = F.aggregate(
-            F.array_sort(F.array_distinct(ws)),
-            F.lit(0.0),
-            lambda a, w: a
-            - let_(
-                F.size(F.filter(ws, lambda x: x == w)) / n,
-                lambda p: p * F.log(p),
-            ),
-        )
-        return F.when(F.size(ws) == 0, F.lit(0.0)).otherwise(acc)
-
-    return let_(words(F.lower(col)), _entropy)
-
 
 def portable_hash60(col: Column) -> Column:
     """Cross-engine deterministic 60-bit hash: the first 15 hex chars of
-    md5, as a non-negative bigint. Exists so sketch operators (simhash, IVF
-    init) have a hash an external SQL engine can reproduce exactly — the
-    DuckDB twin is ``CAST(concat('0x', substr(md5(x), 1, 15)) AS BIGINT)``.
-    Slower than xxhash64 (still fully JVM-side); ops that use it expose a
-    ``portable=False`` switch for the xxhash64 fast path at scale."""
+    md5, as a non-negative bigint. Exists so content-addressed samples (the
+    pre-flight gate, violation examples) are reproducible by an external
+    SQL engine — the DuckDB twin is
+    ``CAST(concat('0x', substr(md5(x), 1, 15)) AS BIGINT)``."""
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
-def normalized(col: Column) -> Column:
-    """Canonical text form for content hashing: lowercase, collapsed
-    whitespace, trimmed."""
-    return F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
-
-
-def fingerprint(col: Column) -> Column:
-    """Whole-document content fingerprint: md5 of the normalized text
-    (md5 chosen over xxhash64 for cross-engine oracle parity)."""
-    return F.md5(normalized(col))
-
-
-def rolling_hashes(col: Column, k: int = 5, portable: bool = False) -> Column:
-    """Rolling character k-gram hash sequence of the normalized text —
-    input to winnowing. xxhash64 per k-gram by default (fast path);
-    ``portable=True`` switches to portable_hash60 (md5-based) so an
-    external SQL engine can replay every hash exactly."""
-    def _hashes(norm: Column) -> Column:
-        n_grams = F.length(norm) - F.lit(k - 1)
-        h = portable_hash60 if portable else F.xxhash64
-        return F.transform(
-            index_range(n_grams),
-            lambda i: h(norm.substr(i, F.lit(k))),
-        )
-
-    # let-bound: the regex normalization runs once, not once per k-gram
-    return F.element_at(
-        F.transform(F.array(normalized(col)), _hashes), 1
-    )
-
-
-def winnow(col: Column, k: int = 5, window: int = 4,
-           portable: bool = False) -> Column:
-    """Winnowing document fingerprint (Schleimer et al., SIGMOD'03): the
-    distinct set of per-window minima over the rolling k-gram hash sequence.
-    Robust to local edits; the standard near-copy sketch for text corpora."""
-    def _winnow(hashes: Column) -> Column:
-        n_windows = F.size(hashes) - F.lit(window - 1)
-        mins = F.transform(
-            index_range(n_windows),
-            lambda i: F.array_min(F.slice(hashes, i, window)),
-        )
-        return F.array_sort(F.array_distinct(mins))
-
-    return let_(rolling_hashes(col, k, portable=portable), _winnow)
-
-
-# Unicode script ranges as explicit code-point classes. Explicit ranges
-# (not \p{IsCyrillic} names) on purpose: Java regex and RE2 spell the
-# property names differently, but literal-range character classes mean the
-# same thing in both engines, so the DuckDB oracle twin is the same
-# pattern string verbatim.
-SCRIPT_RANGES = {
-    "arabic": "[؀-ۿ]",
-    "cjk": "[぀-ヿ一-鿿]",
-    "cyrillic": "[Ѐ-ӿ]",
-    "greek": "[Ͱ-Ͽ]",
-    "hangul": "[가-힯]",
-    "latin": "[A-Za-zÀ-ɏ]",
-}
-
-# Mojibake / encoding-damage signals: the replacement character U+FFFD is
-# what lenient UTF-8 decoding leaves behind; C0 control characters (minus
-# tab/newline/CR) never belong in prose.
-REPLACEMENT_CLASS = "[�]"
-CONTROL_CLASS = "[\x00-\x08\x0b\x0c\x0e-\x1f]"
-NON_ASCII_CLASS = "[^\x00-\x7f]"
-
-
-def char_class_count(col: Column, char_class: str) -> Column:
-    """Number of characters of ``col`` matching a regex character class,
-    as length(col) - length(regexp_replace(col, class, '')) — one codegen
-    pass per class, no explode, and the identical formulation runs in
-    DuckDB (regexp_replace with the 'g' flag)."""
-    return F.length(col) - F.length(F.regexp_replace(col, char_class, ""))
-
-
-def dominant_script(col: Column) -> Column:
-    """Argmax Unicode script of the document by character count; 'none'
-    when no script character occurs. Ties break toward the
-    lexicographically largest script name (struct max semantics — the same
-    tie-break lang_id uses, mirrored exactly in the oracle SQL)."""
-    candidates = F.array(
-        *[
-            F.struct(
-                char_class_count(col, pat).alias("n"), F.lit(name).alias("s")
-            )
-            for name, pat in sorted(SCRIPT_RANGES.items())
-        ]
-    )
-    best = F.array_max(candidates)
-    return F.when(best.getField("n") > 0, best.getField("s")).otherwise(
-        F.lit("none")
-    )
-
-
-def hashed_classifier_score(
-    col: Column,
-    n_buckets: int = 1024,
-    weights: list[float] | None = None,
-    decimals: int = 6,
-) -> Column:
-    """fastText-style linear text classifier over a hashed bag of words:
-    each lowercase word hashes to one of ``n_buckets`` buckets, the bucket
-    weights are summed, and the mean weight goes through a sigmoid →
-    score in (0, 1). This is the *serving* path of the standard quality/
-    toxicity/domain classifier stage of web-crawl pipelines (fastText is
-    exactly hashed bag-of-n-grams + linear layer): training happens
-    offline; at corpus scale only this scoring pass runs.
-
-    ``weights`` is the trained weight table (literal array, indexed by
-    bucket — small enough to live in the plan; at 10^6+ buckets ship it as
-    a broadcast DataFrame and join instead). When ``weights`` is None a
-    frozen hash-derived surrogate table is used — weight(b) = (b mod 997)
-    / 498 - 1, uniform in [-1, 1] — which keeps the operator fully
-    deterministic and lets the DuckDB oracle reproduce every score
-    closed-form.
-
-    Pure scan-stage expression: bucketing uses portable_hash60 (md5-based,
-    cross-engine); no shuffle, no Python. Empty documents score sigmoid(0)
-    = 0.5 (no evidence either way)."""
-
-    def _bucket(w: Column) -> Column:
-        return F.pmod(portable_hash60(w), F.lit(n_buckets))
-
-    if weights is not None:
-        if len(weights) != n_buckets:
-            raise ValueError("weights must have exactly n_buckets entries")
-        table = F.lit(weights)
-
-        def _weight(w: Column) -> Column:
-            return F.element_at(table, (_bucket(w) + 1).cast("int"))
-
-    else:
-
-        def _weight(w: Column) -> Column:
-            return F.pmod(_bucket(w), F.lit(997)).cast("double") / 498.0 - 1.0
-
-    def _score(ws: Column) -> Column:
-        n = F.size(ws)
-        total = F.aggregate(ws, F.lit(0.0), lambda acc, w: acc + _weight(w))
-        logit = F.when(n > 0, total / n).otherwise(F.lit(0.0))
-        return F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-logit)), decimals)
-
-    return let_(words(F.lower(col)), _score)

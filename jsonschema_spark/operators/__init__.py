@@ -1,3 +1,3 @@
-"""Table-level validation operators (stats, uniqueness, referential, drift)
-and training-data pipeline operators (dedup, similarity, text analysis,
-multimodal plumbing)."""
+"""Table-level validation operators: salted uniqueness, referential
+integrity, column stats profiles, distribution drift and the sampled
+pre-flight gate."""

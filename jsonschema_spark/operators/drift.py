@@ -31,344 +31,6 @@ def _aligned_counts(
     return [(r.k, r.cur, r.base) for r in rows]
 
 
-def psi_terms(
-    current: DataFrame, baseline: DataFrame, key: str = "bucket",
-    cnt: str = "cnt", epsilon: float = 1e-6, decimals: int = 6,
-) -> DataFrame:
-    """Per-bucket PSI contribution, fully as DataFrame ops (no driver math):
-    ``(key, psi_term)`` where psi = sum(psi_term). Inputs are pre-aggregated
-    histograms, so every join/agg here is over ≤ bins rows."""
-    cur = current.select(F.col(key).alias("k"), F.col(cnt).alias("cur"))
-    base = baseline.select(F.col(key).alias("k"), F.col(cnt).alias("base"))
-    joined = cur.join(base, on="k", how="full_outer").select(
-        "k",
-        F.coalesce("cur", F.lit(0)).alias("cur"),
-        F.coalesce("base", F.lit(0)).alias("base"),
-    )
-    totals = joined.agg(
-        F.sum("cur").alias("n_cur"), F.sum("base").alias("n_base")
-    )
-    p = F.greatest(F.col("cur") / F.col("n_cur"), F.lit(epsilon))
-    q = F.greatest(F.col("base") / F.col("n_base"), F.lit(epsilon))
-    return (
-        joined.crossJoin(F.broadcast(totals))
-        .select(
-            F.col("k").alias(key),
-            F.round((p - q) * F.log(p / q), decimals).alias("psi_term"),
-        )
-    )
-
-
-def psi(current: DataFrame, baseline: DataFrame, key: str = "bucket",
-        cnt: str = "cnt", epsilon: float = 1e-6) -> float:
-    """Population Stability Index: sum((p-q) * ln(p/q)) over aligned buckets.
-    Common reading: <0.1 stable, 0.1-0.25 moderate shift, >0.25 major shift."""
-    rows = _aligned_counts(current, baseline, key, cnt)
-    n_cur = sum(r[1] for r in rows) or 1
-    n_base = sum(r[2] for r in rows) or 1
-    total = 0.0
-    for _, cur, base in rows:
-        p = max(cur / n_cur, epsilon)
-        q = max(base / n_base, epsilon)
-        total += (p - q) * math.log(p / q)
-    return total
-
-
-def chi_square(current: DataFrame, baseline: DataFrame, key: str = "bucket",
-               cnt: str = "cnt") -> dict:
-    """Pearson chi-square of current counts vs baseline-proportioned
-    expectations. Returns {statistic, dof, buckets}."""
-    rows = [r for r in _aligned_counts(current, baseline, key, cnt) if r[2] > 0]
-    n_cur = sum(r[1] for r in rows)
-    n_base = sum(r[2] for r in rows)
-    if n_cur == 0 or n_base == 0:
-        return {"statistic": 0.0, "dof": 0, "buckets": 0}
-    stat = 0.0
-    for _, cur, base in rows:
-        expected = n_cur * (base / n_base)
-        if expected > 0:
-            stat += (cur - expected) ** 2 / expected
-    return {"statistic": stat, "dof": max(len(rows) - 1, 1), "buckets": len(rows)}
-
-
-def chi_square_terms(
-    current: DataFrame, baseline: DataFrame, key: str = "bucket",
-    cnt: str = "cnt", decimals: int = 6,
-) -> DataFrame:
-    """Per-bucket Pearson chi-square contribution as DataFrame ops (the
-    oracle-checkable twin of :func:`chi_square`): ``(key, chi2_term)``
-    with term = (observed - expected)^2 / expected, expected = n_cur *
-    (base / n_base); buckets absent from the baseline are skipped (no
-    defined expectation). Inputs are pre-aggregated histograms — O(bins)."""
-    cur = current.select(F.col(key).alias("k"), F.col(cnt).alias("cur"))
-    base = baseline.select(F.col(key).alias("k"), F.col(cnt).alias("base"))
-    joined = cur.join(base, on="k", how="full_outer").select(
-        "k",
-        F.coalesce("cur", F.lit(0)).alias("cur"),
-        F.coalesce("base", F.lit(0)).alias("base"),
-    )
-    totals = joined.agg(
-        F.sum("cur").alias("n_cur"), F.sum("base").alias("n_base")
-    )
-    # cast before multiplying: long * long would overflow at 10^12-row
-    # histograms (and the double form is what the oracle SQL mirrors)
-    expected = F.col("n_cur").cast("double") * F.col("base") / F.col("n_base")
-    return (
-        joined.crossJoin(F.broadcast(totals))
-        .filter(F.col("base") > 0)
-        .select(
-            F.col("k").alias(key),
-            F.round(
-                F.pow(F.col("cur") - expected, F.lit(2)) / expected, decimals
-            ).alias("chi2_term"),
-        )
-    )
-
-
-def ks_statistic(
-    current: DataFrame, baseline: DataFrame, key: str = "bucket",
-    cnt: str = "cnt", decimals: int = 6,
-) -> DataFrame:
-    """Two-sample Kolmogorov–Smirnov statistic from pre-aggregated value
-    histograms: ``max |CDF_cur(v) - CDF_base(v)|`` over the union of
-    support points. Exact for integer-valued columns (n_tok, n_chars)
-    where the histogram IS the empirical distribution.
-
-    Scale shape: inputs are already aggregated (≤ distinct-values rows),
-    so the cumulative-sum window over a single ordered partition is over
-    bins, never over raw rows — the same O(bins) compare contract as
-    psi/chi_square. Returns one row ``(ks double)``."""
-    from pyspark.sql import Window
-
-    cur = current.select(F.col(key).alias("k"), F.col(cnt).alias("cur"))
-    base = baseline.select(F.col(key).alias("k"), F.col(cnt).alias("base"))
-    joined = cur.join(base, on="k", how="full_outer").select(
-        "k",
-        F.coalesce("cur", F.lit(0)).alias("cur"),
-        F.coalesce("base", F.lit(0)).alias("base"),
-    )
-    totals = joined.agg(
-        F.sum("cur").alias("n_cur"), F.sum("base").alias("n_base")
-    )
-    w = Window.orderBy("k").rowsBetween(Window.unboundedPreceding, 0)
-    cdfs = joined.crossJoin(F.broadcast(totals)).select(
-        (F.sum("cur").over(w) / F.col("n_cur")).alias("cdf_cur"),
-        (F.sum("base").over(w) / F.col("n_base")).alias("cdf_base"),
-    )
-    return cdfs.agg(
-        F.round(F.max(F.abs(F.col("cdf_cur") - F.col("cdf_base"))), decimals).alias("ks")
-    )
-
-
-def emd_statistic(
-    current: DataFrame, baseline: DataFrame, key: str = "bucket",
-    cnt: str = "cnt", decimals: int = 6,
-) -> DataFrame:
-    """Exact 1-Wasserstein (earth mover's) distance between two
-    pre-aggregated value histograms: ``sum |CDF_cur(v) - CDF_base(v)| *
-    (next_v - v)`` over the sorted union support. The magnitude-aware
-    complement of ``ks_statistic``: KS reports only the LARGEST CDF gap
-    (a +1 shift of every value scores ~1/support_width), while W1 reports
-    how far the mass moved in value units (+1 shift scores exactly 1.0)
-    — the drift gate for "sequences got systematically longer". Exact
-    for integer-valued columns (n_tok, n_chars) where the histogram IS
-    the empirical distribution.
-
-    Scale shape: same O(bins) compare contract as ks/psi/chi2 — inputs
-    are pre-aggregated, the cumulative window runs over bins, never raw
-    rows. Returns one row ``(emd double)``."""
-    from pyspark.sql import Window
-
-    cur = current.select(F.col(key).alias("k"), F.col(cnt).alias("cur"))
-    base = baseline.select(F.col(key).alias("k"), F.col(cnt).alias("base"))
-    joined = cur.join(base, on="k", how="full_outer").select(
-        "k",
-        F.coalesce("cur", F.lit(0)).alias("cur"),
-        F.coalesce("base", F.lit(0)).alias("base"),
-    )
-    totals = joined.agg(
-        F.sum("cur").alias("n_cur"), F.sum("base").alias("n_base")
-    )
-    ow = Window.orderBy("k")
-    w = ow.rowsBetween(Window.unboundedPreceding, 0)
-    terms = joined.crossJoin(F.broadcast(totals)).select(
-        (F.sum("cur").over(w) / F.col("n_cur")).alias("cdf_cur"),
-        (F.sum("base").over(w) / F.col("n_base")).alias("cdf_base"),
-        (F.lead("k").over(ow) - F.col("k")).alias("gap"),
-    )
-    return terms.filter(F.col("gap").isNotNull()).agg(
-        F.round(
-            F.sum(F.abs(F.col("cdf_cur") - F.col("cdf_base")) * F.col("gap")),
-            decimals,
-        ).alias("emd")
-    )
-
-
-def embedding_mean_drift(
-    current: DataFrame,
-    baseline: DataFrame,
-    vec_col: str = "embedding",
-    decimals: int = 6,
-) -> DataFrame:
-    """Embedding-distribution drift between two corpus slices via their
-    per-dimension mean vectors: one row ``(mean_cosine, l2_shift)`` where
-    ``mean_cosine`` is the cosine similarity of the two mean vectors and
-    ``l2_shift`` their euclidean distance. A cosine well below 1.0 (or a
-    large l2) flags that the embedding distribution moved — the cheap
-    first-line drift check before anything cluster-based.
-
-    Scale shape: per-dimension means via ``posexplode`` + partial avg —
-    the shuffle carries dim × partitions pre-aggregated rows, never raw
-    vectors. The final compare joins two dim-row tables. Floats are cast
-    to double before multiplying (cross-engine parity contract).
-    """
-
-    def dim_means(df: DataFrame, name: str) -> DataFrame:
-        return (
-            df.select(F.posexplode(vec_col).alias("dim", "v"))
-            .groupBy("dim")
-            .agg(F.avg(F.col("v").cast("double")).alias(name))
-        )
-
-    joined = dim_means(current, "mc").join(dim_means(baseline, "mb"), on="dim")
-    sums = joined.agg(
-        F.sum(F.col("mc") * F.col("mb")).alias("dot"),
-        F.sum(F.col("mc") * F.col("mc")).alias("nc"),
-        F.sum(F.col("mb") * F.col("mb")).alias("nb"),
-        F.sum(F.pow(F.col("mc") - F.col("mb"), F.lit(2))).alias("sq"),
-    )
-    return sums.select(
-        F.round(
-            F.col("dot") / (F.sqrt("nc") * F.sqrt("nb")), decimals
-        ).alias("mean_cosine"),
-        F.round(F.sqrt("sq"), decimals).alias("l2_shift"),
-    )
-
-
-def windowed_psi(
-    df: DataFrame,
-    ts_col: str,
-    value_col: str,
-    window: str = "1 day",
-    bins: int = 10,
-    lo: float = 0.0,
-    hi: float = 200.0,
-    epsilon: float = 1e-6,
-    decimals: int = 6,
-) -> DataFrame:
-    """Time-sliced drift: PSI of each tumbling window's value histogram
-    against the whole-input histogram, one row ``(window_start, n, psi)``
-    per window. This is the batch twin of the streaming drift monitor —
-    it answers "which day's data shifted" instead of a single global
-    verdict.
-
-    Scale shape: raw rows are aggregated ONCE into (window, bucket)
-    counts (map-side combine; ≤ windows·(bins+2) rows survive the
-    shuffle); the global baseline is re-aggregated from that small table
-    — the raw input is never scanned twice. The per-window compare runs
-    on a dense (window × bucket) grid built by exploding the closed
-    bucket domain (-1..bins) under each window key — no nested-loop join
-    — so a bucket missing from one window still contributes its
-    epsilon-floored PSI term exactly as in :func:`psi_terms`; buckets
-    empty in EVERY window are dropped by the inner join against the
-    baseline, exactly as the old cross-join grid dropped them.
-    """
-    width = (hi - lo) / bins
-    bucket = (
-        F.when(F.col(value_col).isNull(), F.lit(None))
-        .when(F.col(value_col) < lo, F.lit(-1))
-        .when(F.col(value_col) >= hi, F.lit(bins))
-        .otherwise(F.floor((F.col(value_col) - lo) / width).cast("int"))
-    )
-    counts = (
-        df.select(
-            F.window(F.col(ts_col), window).alias("w"), bucket.alias("bucket")
-        )
-        .groupBy(F.col("w.start").alias("ws"), "bucket")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=False)  # reused 4× below; windows·bins rows
-    )
-    base = counts.groupBy("bucket").agg(F.sum("cnt").alias("base"))
-    n_base = base.agg(F.sum("base").alias("n_base"))
-    wtot = counts.groupBy("ws").agg(F.sum("cnt").alias("n_cur"))
-    grid = (
-        counts.select("ws").distinct()
-        .select(
-            "ws",
-            F.explode(
-                F.sequence(F.lit(-1), F.lit(int(bins)))
-            ).alias("bucket"),
-        )
-        .join(counts, on=["ws", "bucket"], how="left")
-        .select("ws", "bucket", F.coalesce("cnt", F.lit(0)).alias("cur"))
-    )
-    joined = (
-        grid.join(F.broadcast(base), on="bucket")
-        .join(F.broadcast(wtot), on="ws")
-        .crossJoin(F.broadcast(n_base))
-    )
-    p = F.greatest(F.col("cur") / F.col("n_cur"), F.lit(epsilon))
-    q = F.greatest(F.col("base") / F.col("n_base"), F.lit(epsilon))
-    return (
-        joined.select(
-            "ws", F.col("n_cur"), ((p - q) * F.log(p / q)).alias("t")
-        )
-        .groupBy("ws")
-        .agg(F.first("n_cur").alias("n"), F.sum("t").alias("psi_raw"))
-        .select(
-            F.date_format("ws", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "n",
-            F.round("psi_raw", decimals).alias("psi"),
-        )
-    )
-
-
-def token_sketch_psi(
-    current: DataFrame,
-    baseline: DataFrame,
-    tokens_col: str = "tokens",
-    buckets: int = 64,
-    epsilon: float = 1e-6,
-    decimals: int = 6,
-    portable: bool = True,
-) -> DataFrame:
-    """PSI drift on hashed token-frequency sketches — the north rule's
-    "PSI on … token-frequency sketches vs a baseline snapshot" as one
-    oracle-checkable query: each side's ``tokens array<int>`` collapses to
-    a fixed-width frequency vector (``bucket = hash(token) % buckets``)
-    and the two vectors are compared with :func:`psi_terms`.
-
-    Scale shape: explode is a shuffle-free Generate; the groupBy's partial
-    aggregation bounds shuffle volume at (#partitions × buckets)
-    regardless of corpus size, so a 10^12-sequence side costs one scan +
-    one tiny shuffle, and the comparison itself is O(buckets). Unlike the
-    count-min sketch (:func:`~jsonschema_spark.operators.stats.token_frequency_sketch`,
-    point queries), the fixed-bucket vector is the right sketch for
-    *distribution* tests — PSI needs aligned mass buckets, not point
-    estimates. ``portable=True`` hashes with :func:`portable_hash60` so an
-    external SQL engine reproduces every bucket exactly; pass ``False``
-    for the xxhash64 fast path at scale.
-    """
-    from ..functions.text import portable_hash60
-
-    def sketch(df: DataFrame) -> DataFrame:
-        tok = F.explode(tokens_col).alias("token")
-        h = (
-            portable_hash60(F.col("token").cast("string"))
-            if portable
-            else F.abs(F.xxhash64("token"))
-        )
-        return (
-            df.select(tok)
-            .groupBy(F.pmod(h, F.lit(buckets)).alias("bucket"))
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-
-    return psi_terms(
-        sketch(current), sketch(baseline), epsilon=epsilon, decimals=decimals
-    )
-
-
 def drift_report(current: DataFrame, baseline: DataFrame, key: str = "bucket",
                  cnt: str = "cnt", psi_threshold: float = 0.25,
                  epsilon: float = 1e-6) -> dict:
@@ -393,78 +55,3 @@ def drift_report(current: DataFrame, baseline: DataFrame, key: str = "bucket",
         "dof": max(chi_buckets - 1, 1),
         "drifted": psi_total > psi_threshold,
     }
-
-
-def corpus_minhash_overlap(
-    current: DataFrame,
-    baseline: DataFrame,
-    text_col: str = "text",
-    n_perm: int = 64,
-    decimals: int = 6,
-    portable: bool = True,
-) -> DataFrame:
-    """Corpus-level content-overlap estimate between a current corpus and
-    a baseline snapshot, as ONE row ``(n_perm, est_jaccard,
-    exact_jaccard)``.
-
-    Semantics: each side collapses to a MinHash signature over its set of
-    document fingerprints (one min per permutation, computed as a single
-    map-side-combined aggregation — O(n_perm) state per partition, no
-    shuffle of document rows); the estimated Jaccard is the fraction of
-    permutations whose minima agree (Broder 1997). ``exact_jaccard`` is
-    the ground-truth |A∩B| / |A∪B| over distinct fingerprints — cheap at
-    any scale (one union + one groupBy on a uniform md5 key) and kept in
-    the output so drift dashboards can show estimate vs truth; drop it
-    when only the O(n_perm)-state sketch pass is affordable.
-
-    Why it exists: snapshot-to-snapshot *content* drift (how much of
-    yesterday's corpus survived into today's) is a different axis from
-    distribution drift (PSI/chi-square on histograms) — a refresh that
-    replaced half the documents but kept the token distribution identical
-    is invisible to PSI and fully visible here.
-
-    ``portable=True`` hashes with portable_hash60 (md5-based) so the
-    DuckDB oracle reproduces every permutation minimum exactly; pass
-    ``False`` for the xxhash64 fast path at scale.
-    """
-    from ..functions.text import fingerprint, portable_hash60
-
-    def _hash(fp, p: int):
-        salted = F.concat(fp, F.lit(f":{p}"))
-        return portable_hash60(salted) if portable else F.abs(F.xxhash64(salted))
-
-    def _sig(df: DataFrame, side: str) -> DataFrame:
-        fps = df.select(fingerprint(F.col(text_col)).alias("fp"))
-        return fps.agg(
-            *[F.min(_hash(F.col("fp"), p)).alias(f"{side}{p}") for p in range(n_perm)]
-        )
-
-    matches = _sig(current, "a").crossJoin(_sig(baseline, "b")).select(
-        sum(
-            [(F.col(f"a{p}") == F.col(f"b{p}")).cast("int") for p in range(n_perm)],
-            F.lit(0),
-        ).alias("n_match")
-    )
-
-    fa = current.select(fingerprint(F.col(text_col)).alias("fp")).distinct()
-    fb = baseline.select(fingerprint(F.col(text_col)).alias("fp")).distinct()
-    exact = (
-        fa.withColumn("a", F.lit(1)).withColumn("b", F.lit(0))
-        .unionAll(fb.withColumn("a", F.lit(0)).withColumn("b", F.lit(1)))
-        .groupBy("fp")
-        .agg(F.max("a").alias("a"), F.max("b").alias("b"))
-        .agg(
-            F.sum(F.col("a") * F.col("b")).alias("n_inter"),
-            F.count(F.lit(1)).alias("n_union"),
-        )
-    )
-
-    return matches.crossJoin(exact).select(
-        F.lit(n_perm).alias("n_perm"),
-        F.round(F.col("n_match") / F.lit(float(n_perm)), decimals).alias(
-            "est_jaccard"
-        ),
-        F.round(F.col("n_inter") / F.col("n_union"), decimals).alias(
-            "exact_jaccard"
-        ),
-    )

@@ -11,7 +11,7 @@ after map-side combine, which is the scalable shape at 10^12 rows.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -97,839 +97,4 @@ def token_frequencies(df: DataFrame, tokens_col: str = "tokens") -> DataFrame:
         df.select(F.explode(tokens_col).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-
-
-def token_frequency_sketch(
-    df: DataFrame, tokens_col: str = "tokens",
-    eps: float = 0.0001, confidence: float = 0.99, seed: int = 42,
-):
-    """Count-min sketch of token frequencies — the O(1)-memory alternative
-    to the exact explode+groupBy when the id space is huge (byte-level or
-    merged vocabularies). Spark's count_min_sketch aggregate merges
-    per-partition sketches tree-wise; the result answers point queries
-    with ±eps*N error at the given confidence. Returns the binary sketch
-    bytes for driver-side queries (see cms_estimate) or merging."""
-    row = (
-        df.select(F.explode(tokens_col).alias("token"))
-        .agg(
-            F.count_min_sketch(
-                "token", F.lit(eps), F.lit(confidence), F.lit(seed)
-            ).alias("sketch")
-        )
-        .collect()[0]
-    )
-    return bytes(row.sketch)
-
-
-def cms_estimate(spark, sketch: bytes, value: int) -> int:
-    """Point-query a serialized count-min sketch (upper-bound estimate)."""
-    jvm = spark.sparkContext._jvm
-    bais = jvm.java.io.ByteArrayInputStream(bytearray(sketch))
-    cms = jvm.org.apache.spark.util.sketch.CountMinSketch.readFrom(bais)
-    return cms.estimateCount(jvm.java.lang.Long(value))
-
-
-def ntok_quantiles(df: DataFrame, column: str = "n_tok") -> DataFrame:
-    return df.agg(
-        F.percentile_approx(column, [0.5, 0.9, 0.99], 10000).alias("q"),
-        F.min(column).alias("min"),
-        F.max(column).alias("max"),
-        F.avg(column).alias("mean"),
-    ).select(
-        F.col("q")[0].alias("p50"),
-        F.col("q")[1].alias("p90"),
-        F.col("q")[2].alias("p99"),
-        "min", "max", "mean",
-    )
-
-
-def rare_token_rate(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    tokens_col: str = "tokens",
-    min_count: int = 5,
-    decimals: int = 6,
-) -> DataFrame:
-    """(id, n_tok, n_rare, rare_rate): fraction of each document's tokens
-    whose GLOBAL corpus frequency is below ``min_count`` — the OOV /
-    rare-token quality signal (a document dominated by tokens the corpus
-    barely uses is noise, OCR garbage, or another language; a tokenizer
-    mismatch shows up here before anything else).
-
-    Scale shape: the frequency table is bounded by the vocabulary (BPE
-    vocabularies are 10^4-10^5 ids regardless of corpus size), so it
-    BROADCASTS — the exploded token stream joins it map-side with no
-    shuffle, and the only shuffles are the two map-side-combined aggs
-    (token frequencies; per-doc re-agg). For open vocabularies the same
-    plan holds with the broadcast replaced by a shuffle join on the token
-    key (uniform by construction). Documents with empty token arrays get
-    ``n_tok = 0`` and a null rate."""
-    toks = df.select(
-        F.col(id_col).alias("id"), F.explode(F.col(tokens_col)).alias("tok")
-    )
-    freq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt"))
-    per_doc = (
-        toks.join(F.broadcast(freq), on="tok")
-        .groupBy("id")
-        .agg(
-            F.count(F.lit(1)).alias("n_tok"),
-            F.sum((F.col("cnt") < min_count).cast("long")).alias("n_rare"),
-        )
-    )
-    ids = df.select(F.col(id_col).alias("id"))
-    return ids.join(per_doc, on="id", how="left").select(
-        "id",
-        F.coalesce("n_tok", F.lit(0)).alias("n_tok"),
-        F.coalesce("n_rare", F.lit(0)).alias("n_rare"),
-        F.when(
-            F.coalesce("n_tok", F.lit(0)) > 0,
-            F.round(F.col("n_rare") / F.col("n_tok"), decimals),
-        ).alias("rare_rate"),
-    )
-
-
-def tokenizer_fertility_qa(
-    df: DataFrame,
-    text_col: str = "text",
-    group_col: str = "source",
-    fertility_gate: float = 1.5,
-    max_high_rate: float = 0.25,
-) -> DataFrame:
-    """Per-source tokenizer fertility / compression QA — the pre-tokenize
-    gate a training pipeline runs before spending GPU-scale compute on
-    tokenization: fertility (subword tokens per whitespace word) spikes
-    when the tokenizer's vocabulary mismatches the data (wrong language,
-    mojibake, code-as-prose), and chars-per-token is the compression ratio
-    that sizes storage and packing budgets. Table-scope analogue of the
-    reference's per-document numeric gates (min/max walk,
-    /root/reference/validate.go:180-260) applied to derived tokenizer
-    statistics.
-
-    Returns one row per ``group_col``: ``n_docs``, ``mean_fertility``,
-    ``mean_chars_per_token``, ``high_fertility_rate`` (share of docs at
-    ``fertility >= fertility_gate``; empty docs count as not-high), and a
-    ``verdict`` ('pass' unless the high rate exceeds ``max_high_rate``).
-    Means skip empty docs (null per-doc ratio, like SQL AVG).
-
-    Scale shape: one codegen projection computes the three per-doc counts
-    as separate columns (each evaluated once — the BPE-ish HOF gets no CSE
-    if referenced twice in one expression), then a single map-side-combined
-    groupBy on the low-cardinality source key. Nothing shuffles but the
-    partial aggregates; no skew concern at any corpus size."""
-    from jsonschema_spark.functions.text import bpe_ish_token_count, token_count
-
-    proj = df.select(
-        F.col(group_col).alias(group_col),
-        token_count(F.col(text_col)).cast("long").alias("_ws"),
-        bpe_ish_token_count(F.col(text_col)).cast("long").alias("_bpe"),
-        F.length(F.col(text_col)).cast("long").alias("_chars"),
-    )
-    fert = F.when(F.col("_ws") > 0, F.col("_bpe") / F.col("_ws"))
-    cpt = F.when(F.col("_bpe") > 0, F.col("_chars") / F.col("_bpe"))
-    high = F.when((F.col("_ws") > 0) & (fert >= fertility_gate), 1).otherwise(0)
-    return (
-        proj.groupBy(group_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.round(F.avg(fert), 6).alias("mean_fertility"),
-            F.round(F.avg(cpt), 6).alias("mean_chars_per_token"),
-            F.round(F.avg(high), 6).alias("high_fertility_rate"),
-        )
-        .withColumn(
-            "verdict",
-            F.when(F.col("high_fertility_rate") <= max_high_rate, F.lit("pass"))
-            .otherwise(F.lit("fail")),
-        )
-    )
-
-
-def token_ngram_diversity(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    tokens_col: str = "tokens",
-    n: int = 2,
-    decimals: int = 6,
-) -> DataFrame:
-    """``(id, n_grams, n_distinct, diversity)``: distinct-n-gram fraction
-    computed DIRECTLY on the pre-tokenized sequence — the token-native
-    repetition / compressibility signal (Rae et al. 2021 §A1.1 apply this
-    family of duplicate-n-gram filters on words; on an already-tokenized
-    corpus recomputing words would detokenize, so the right column is the
-    tokens array itself). A sequence stuck in a generation loop or padded
-    with repeated chunks scores low; diversity 1.0 means every n-gram is
-    unique.
-
-    Grams are exact (comma-joined token ids, not hashes), so there are no
-    collisions and the DuckDB oracle reproduces every value. Scale shape:
-    pure scan-stage expression over the array column — zero shuffle, zero
-    Python; the per-row gram array is O(n_tok) and freed per batch. The
-    tokenization loop is let-bound so the gram array materializes once
-    (HOFs get no CSE).
-    """
-    from ..functions.text import index_range, let_
-
-    toks = F.col(tokens_col)
-    grams = F.transform(
-        index_range(F.size(toks) - F.lit(n - 1)),
-        lambda i: F.array_join(F.slice(toks, i, n), ","),
-    )
-
-    def _stats(g: Column) -> Column:
-        return F.struct(
-            F.size(g).alias("n_grams"),
-            F.size(F.array_distinct(g)).alias("n_distinct"),
-        )
-
-    return df.select(
-        F.col(id_col).alias("id"), let_(grams, _stats).alias("_s")
-    ).select(
-        "id",
-        F.col("_s.n_grams").alias("n_grams"),
-        F.col("_s.n_distinct").alias("n_distinct"),
-        F.when(
-            F.col("_s.n_grams") > 0,
-            F.round(F.col("_s.n_distinct") / F.col("_s.n_grams"), decimals),
-        ).alias("diversity"),
-    )
-
-
-def zipf_slope(
-    df: DataFrame,
-    group_col: str = "source",
-    tokens_col: str = "tokens",
-    top_v: int = 1_000,
-    decimals: int = 6,
-) -> DataFrame:
-    """Per-group Zipf fit over token frequencies: OLS slope/intercept of
-    ``ln(freq) ~ ln(rank)`` across the ``top_v`` most frequent token ids,
-    as ``(group, n_terms, slope, intercept)``.
-
-    Natural-language token streams follow Zipf's law (slope ≈ -1); the
-    slope is a one-number distributional fingerprint per source. A source
-    whose slope drifts toward 0 has gone unnaturally uniform (shuffled or
-    synthetic ids); toward -2+ means template/boilerplate domination. As a
-    drift check, compare slopes between snapshots — a complementary axis
-    to PSI (which needs aligned buckets) and to corpus overlap (which sees
-    identity, not shape).
-
-    Determinism under frequency ties: ranks come from row_number ordered
-    by (freq DESC, token ASC) — a total order, so Spark and the DuckDB
-    oracle agree exactly; and since ln(freq) is constant within a tied
-    block while the block occupies a fixed rank range, the OLS sums are
-    tie-order invariant anyway.
-
-    Scale shape: explode → groupBy (group, token) with map-side combine
-    (the only full shuffle, keyed by uniform token ids — no hot key);
-    the rank window runs over ≤ |vocab| rows per group, and the final
-    OLS reduces ≤ top_v rows per group to one. At 10^12 rows the explode
-    dominates and is embarrassingly parallel.
-    """
-    x = F.ln(F.col("rank").cast("double"))
-    y = F.ln(F.col("freq").cast("double"))
-
-    from pyspark.sql import Window
-
-    counts = (
-        df.select(F.col(group_col).alias("grp"), F.explode(tokens_col).alias("tok"))
-        .groupBy("grp", "tok")
-        .agg(F.count(F.lit(1)).alias("freq"))
-    )
-    w = Window.partitionBy("grp").orderBy(F.col("freq").desc(), F.col("tok").asc())
-    ranked = counts.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= top_v
-    )
-    agg = ranked.groupBy("grp").agg(
-        F.count(F.lit(1)).alias("n_terms"),
-        F.sum(x).alias("sx"),
-        F.sum(y).alias("sy"),
-        F.sum(x * x).alias("sxx"),
-        F.sum(x * y).alias("sxy"),
-    )
-    n = F.col("n_terms").cast("double")
-    denom = n * F.col("sxx") - F.col("sx") * F.col("sx")
-    slope = (n * F.col("sxy") - F.col("sx") * F.col("sy")) / denom
-    intercept = (F.col("sy") - slope * F.col("sx")) / n
-    return agg.select(
-        F.col("grp").alias(group_col),
-        "n_terms",
-        F.when(denom > 0, F.round(slope, decimals)).alias("slope"),
-        F.when(denom > 0, F.round(intercept, decimals)).alias("intercept"),
-    )
-
-
-def bigram_pmi(
-    df: DataFrame,
-    tokens_col: str = "tokens",
-    min_count: int = 5,
-    top_k: int = 100,
-    decimals: int = 6,
-) -> DataFrame:
-    """Top-``top_k`` token-bigram collocations by pointwise mutual
-    information: ``(tok_a, tok_b, n_pair, pmi)`` with
-    ``pmi = ln(p(a,b) / (p(a) p(b)))`` over adjacent-pair and unigram
-    corpus frequencies. High-PMI pairs are segmentation/merge candidates
-    (the signal BPE merges maximize); a tokenizer leaving many very-high
-    PMI pairs unmergeid wastes sequence length. Pairs below ``min_count``
-    are dropped before ranking (rare-pair PMI is noise).
-
-    Scale shape: one explode for unigrams, one positional-pair explode for
-    bigrams, each into a map-side-combined count keyed by uniform token
-    ids; the unigram table (≤ vocab rows) broadcasts onto the bigram table
-    twice; final ranking is TakeOrderedAndProject over ≤ |bigram vocab|
-    rows. The corpus shuffles nothing but counts.
-
-    Determinism: counts are exact integers; the ranking orders by
-    (pmi DESC, tok_a ASC, tok_b ASC) so ties cannot reorder across
-    engines; PMI itself is a pure function of exact counts.
-    """
-    from ..functions.text import index_range
-
-    toks = F.col(tokens_col)
-    uni = (
-        df.select(F.explode(toks).alias("tok"))
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("n_uni"))
-    )
-    pair_arrays = F.transform(
-        index_range(F.size(toks) - 1),
-        lambda i: F.struct(
-            F.element_at(toks, i).alias("tok_a"),
-            F.element_at(toks, i + 1).alias("tok_b"),
-        ),
-    )
-    pairs = (
-        df.select(F.explode(pair_arrays).alias("p"))
-        .groupBy(F.col("p.tok_a").alias("tok_a"), F.col("p.tok_b").alias("tok_b"))
-        .agg(F.count(F.lit(1)).alias("n_pair"))
-        .filter(F.col("n_pair") >= min_count)
-    )
-    totals = uni.agg(F.sum("n_uni").alias("n_tokens"))
-    n_pairs_total = df.agg(
-        F.sum(F.greatest(F.size(toks) - 1, F.lit(0))).alias("n_pairs_total")
-    )
-    joined = (
-        pairs.join(
-            F.broadcast(uni.select(F.col("tok").alias("tok_a"),
-                                   F.col("n_uni").alias("na"))),
-            on="tok_a",
-        )
-        .join(
-            F.broadcast(uni.select(F.col("tok").alias("tok_b"),
-                                   F.col("n_uni").alias("nb"))),
-            on="tok_b",
-        )
-        .crossJoin(F.broadcast(totals))
-        .crossJoin(F.broadcast(n_pairs_total))
-    )
-    pmi = F.ln(
-        (F.col("n_pair").cast("double") / F.col("n_pairs_total"))
-        / (
-            (F.col("na").cast("double") / F.col("n_tokens"))
-            * (F.col("nb").cast("double") / F.col("n_tokens"))
-        )
-    )
-    return (
-        joined.select(
-            "tok_a", "tok_b", "n_pair", F.round(pmi, decimals).alias("pmi")
-        )
-        .orderBy(F.col("pmi").desc(), F.col("tok_a").asc(), F.col("tok_b").asc())
-        .limit(top_k)
-    )
-
-
-def dup_gram_scale(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    tokens_col: str = "tokens",
-    scales: tuple[int, ...] = (1, 2, 4, 8, 16, 32),
-) -> DataFrame:
-    """``(id, max_dup_scale)``: the largest probed n (dyadic ladder) at
-    which the sequence still contains a DUPLICATED exact n-gram; 0 when
-    even single tokens are all distinct. Because a repeated n-gram implies
-    repeated (n-1)-grams, "has a duplicate n-gram" is monotone in n, so
-    the dyadic probe brackets the true longest repeated substring length
-    within a factor of 2 at O(|scales| · n_tok) cost — the cheap
-    self-repetition severity scale behind Rae et al. 2021 §A1.1's
-    duplicate-n-gram family (their fractions say *how much* repeats; this
-    says *how long* the repeats run — a generation loop scores high here
-    even when its duplicate fraction is modest).
-
-    Scale shape: one scan-stage projection; each probe is an exact
-    comma-joined gram array (let-bound — HOFs get no CSE) compared
-    distinct-vs-total. Zero shuffle, zero Python.
-    """
-    from ..functions.text import index_range, let_
-
-    toks = F.col(tokens_col)
-
-    def _has_dup(n: int) -> Column:
-        grams = F.transform(
-            index_range(F.size(toks) - F.lit(n - 1)),
-            lambda i: F.array_join(F.slice(toks, i, n), ","),
-        )
-        return let_(
-            grams, lambda g: F.size(F.array_distinct(g)) < F.size(g)
-        )
-
-    out = F.lit(0)
-    for n in sorted(scales):
-        out = F.when(_has_dup(n), F.lit(int(n))).otherwise(out)
-    return df.select(F.col(id_col).alias("id"), out.alias("max_dup_scale"))
-
-
-def positional_entropy(
-    df: DataFrame,
-    tokens_col: str = "tokens",
-    max_pos: int = 64,
-    decimals: int = 6,
-) -> DataFrame:
-    """``(pos, n_seqs, n_distinct, entropy)`` for positions 1..max_pos:
-    the Shannon entropy (nats) of the token distribution at each absolute
-    sequence position. A healthy corpus has near-flat per-position
-    entropy; a template-injected or boilerplate-framed corpus shows a
-    low-entropy prefix (every document starts with the same tokens) that
-    document-level repetition metrics cannot see — the signal is ACROSS
-    documents at a fixed position, not within one.
-
-    Scale shape: posexplode of the first ``max_pos`` tokens only (the
-    slice prunes the rest in the scan), one map-side-combined groupBy on
-    (pos, token) — shuffle bounded by max_pos × vocab regardless of
-    corpus size — then an entropy agg over ≤ vocab rows per position.
-    """
-    toks = F.col(tokens_col)
-    exploded = df.select(
-        F.posexplode(F.slice(toks, 1, max_pos)).alias("pos0", "tok")
-    ).select((F.col("pos0") + 1).alias("pos"), "tok")
-    counts = exploded.groupBy("pos", "tok").agg(F.count(F.lit(1)).alias("cnt"))
-    return (
-        counts.groupBy("pos")
-        .agg(
-            F.sum("cnt").alias("n_seqs"),
-            F.count(F.lit(1)).alias("n_distinct"),
-            F.round(
-                F.ln(F.sum("cnt"))
-                - F.sum(F.col("cnt") * F.ln(F.col("cnt"))) / F.sum("cnt"),
-                decimals,
-            ).alias("entropy"),
-        )
-    )
-
-
-def vocab_coverage(
-    df: DataFrame,
-    tokens_col: str = "tokens",
-    ks: tuple[int, ...] = (100, 1_000, 10_000),
-    decimals: int = 6,
-) -> DataFrame:
-    """``(k, covered_tokens, total_tokens, coverage)`` for each k in
-    ``ks``: the fraction of the corpus's token MASS covered by its k most
-    frequent token ids — the vocab-size headroom curve (a tokenizer whose
-    top-1k ids already cover 99% of mass is oversized for the corpus; a
-    flat curve says ids are being wasted). Rank ties break on token id,
-    so the curve is a pure function of the corpus on any engine.
-
-    Scale shape: one explode → map-side-combined count per id (the only
-    corpus-sized stage), then ranking and cumulative sums over ≤ |vocab|
-    rows — the window runs on the tiny aggregate, never on the corpus.
-    """
-    from pyspark.sql import Window
-
-    counts = (
-        df.select(F.explode(tokens_col).alias("tok"))
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    w = Window.orderBy(F.col("cnt").desc(), F.col("tok").asc()).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    ranked = counts.select(
-        F.row_number().over(
-            Window.orderBy(F.col("cnt").desc(), F.col("tok").asc())
-        ).alias("rank"),
-        F.sum("cnt").over(w).alias("cum"),
-    )
-    total = counts.agg(F.sum("cnt").alias("total"))
-    ks_df = df.sparkSession.createDataFrame(
-        [(int(k),) for k in sorted(ks)], "k: int"
-    )
-    # per k: the cumulative mass at rank = min(k, |vocab|). The ks fan-out
-    # is a literal-array explode on the ranked rows — no nested-loop join
-    # anywhere in the plan (plan_report flags those as cartesian).
-    at_k = (
-        ranked.select(
-            "rank",
-            "cum",
-            F.explode(
-                F.array(*[F.lit(int(k)) for k in sorted(ks)])
-            ).alias("k"),
-        )
-        .filter(F.col("rank") <= F.col("k"))
-        .groupBy("k")
-        .agg(F.max("cum").alias("covered_tokens"))
-    )
-    return (
-        ks_df.join(at_k, on="k", how="left")
-        .crossJoin(F.broadcast(total))
-        .select(
-            "k",
-            F.coalesce("covered_tokens", F.lit(0)).alias("covered_tokens"),
-            F.col("total").alias("total_tokens"),
-            F.when(
-                F.col("total") > 0,
-                F.round(
-                    F.coalesce("covered_tokens", F.lit(0))
-                    / F.col("total").cast("double"),
-                    decimals,
-                ),
-            ).alias("coverage"),
-        )
-    )
-
-
-def vocab_richness(
-    df: DataFrame,
-    tokens_col: str = "tokens",
-    decimals: int = 6,
-) -> DataFrame:
-    """Vocabulary-richness estimate from the frequency-of-frequencies
-    spectrum — Good-Turing coverage (Good 1953) and the bias-corrected
-    Chao1 unseen-species estimate (Chao 1984): how much token mass the
-    NEXT shard of this corpus will contribute in ids never seen so far,
-    and how large the asymptotic vocabulary is. The corpus-planning
-    question ("is more crawl still buying vocabulary?") answered from
-    one pass.
-
-        coverage = 1 - f1/N         (Turing: P(next token is unseen))
-        chao1    = V + f1*(f1-1)/(2*(f2+1))   (bias-corrected form)
-
-    with f_k = number of token ids occurring exactly k times, N total
-    tokens, V observed vocabulary. Returns ONE row
-    ``(n_tokens, vocab, f1, f2, chao1, coverage)`` — f-integers exact,
-    the two estimates rounded.
-
-    Scale shape: explode → token-count agg (map-side combined, uniform
-    ids) → frequency-of-frequencies agg over ≤ vocab rows → one final
-    row. Nothing but vocab-bounded tables move after the first agg.
-    """
-    counts = (
-        df.select(F.explode(F.col(tokens_col)).alias("t"))
-        .groupBy("t")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    ff = counts.groupBy("n").agg(F.count(F.lit(1)).alias("fk"))
-    f1 = F.coalesce(F.sum(F.when(F.col("n") == 1, F.col("fk"))), F.lit(0))
-    f2 = F.coalesce(F.sum(F.when(F.col("n") == 2, F.col("fk"))), F.lit(0))
-    n_tot = F.sum(F.col("n") * F.col("fk"))
-    v = F.sum("fk")
-    return ff.agg(
-        n_tot.alias("n_tokens"),
-        v.alias("vocab"),
-        f1.alias("f1"),
-        f2.alias("f2"),
-    ).select(
-        "n_tokens",
-        "vocab",
-        "f1",
-        "f2",
-        F.round(
-            F.col("vocab")
-            + (F.col("f1") * (F.col("f1") - 1))
-            / (F.lit(2) * (F.col("f2") + 1)),
-            decimals,
-        ).alias("chao1"),
-        F.round(
-            F.lit(1.0) - F.col("f1") / F.col("n_tokens"), decimals
-        ).alias("coverage"),
-    )
-
-
-def vocab_diversity(
-    df: DataFrame,
-    source_col: str,
-    tokens_col: str = "tokens",
-    decimals: int = 6,
-) -> DataFrame:
-    """Per-source vocabulary diversity as Hill numbers (the "effective
-    vocabulary size" ladder ecology standardized; Hill 1973): q=0 is the
-    raw vocabulary, q=1 is exp(Shannon entropy), q=2 is the inverse
-    Simpson index N²/Σn² — progressively discounting rare tokens. Two
-    sources with equal vocab but different hill2 differ in how
-    head-heavy their token distribution is — the one-line fingerprint
-    for comparing mixture components. Returns one row per source
-    ``(source, n_tokens, vocab, hill1, hill2)``.
-
-    hill2 is computed as the integer ratio N²/Σn² (exact sums, one
-    double division) so any engine reproduces it bit-for-bit; hill1's
-    entropy uses the same ``ln N - Σ n·ln n / N`` form as token_entropy.
-
-    Scale shape: one (source × token) count agg (map-side combined),
-    then a per-source agg over vocab-bounded rows. Nothing else moves.
-    """
-    counts = (
-        df.select(
-            F.col(source_col).alias("source"),
-            F.explode(F.col(tokens_col)).alias("t"),
-        )
-        .groupBy("source", "t")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    n_tot = F.sum("n")
-    ent = F.ln(n_tot) - F.sum(F.col("n") * F.ln("n")) / n_tot
-    return (
-        counts.groupBy("source")
-        .agg(
-            n_tot.alias("n_tokens"),
-            F.count(F.lit(1)).alias("vocab"),
-            F.round(F.exp(ent), decimals).alias("hill1"),
-            F.round(
-                (n_tot * n_tot) / F.sum(F.col("n") * F.col("n")), decimals
-            ).alias("hill2"),
-        )
-    )
-
-
-def periodic_sequences(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    tokens_col: str = "tokens",
-    max_period: int = 32,
-) -> DataFrame:
-    """``(id, n_tok, period)``: sequences that are EXACTLY a short phrase
-    looped — ``period`` is the smallest p ≤ max_period with
-    ``tokens[i] == tokens[i-p]`` for every i ≥ p (the whole sequence is
-    its first p tokens cycled, last repeat possibly truncated); rows
-    where no such p exists are dropped. The degenerate-generation
-    detector: a decoding loop ("the the the", "1 2 3 1 2 3 …") is exactly
-    periodic, which ``dup_gram_scale`` (any repeated gram) and
-    ``repetition_ratio`` (duplicate fraction) flag only weakly and a
-    dedup pass not at all (the loop is unique text corpus-wide).
-
-    Scale shape: one scan-stage projection, zero shuffle, zero Python —
-    O(max_period · n_tok) integer comparisons per row; the per-p guard is
-    a CaseWhen (lazy per-branch evaluation) so sequence(1, n-p) never
-    sees p ≥ n (the descending-sequence trap)."""
-    from ..functions.text import let_
-
-    toks = F.col(tokens_col)
-
-    def probe(xs: Column) -> Column:
-        n = F.size(xs)
-
-        def is_period(p: Column) -> Column:
-            return F.when(
-                p < n,
-                F.forall(
-                    F.sequence(F.lit(1), n - p),
-                    lambda i: F.element_at(xs, i + p) == F.element_at(xs, i),
-                ),
-            ).otherwise(F.lit(False))
-
-        cands = F.filter(
-            F.sequence(F.lit(1), F.lit(max_period)).cast("array<int>"),
-            is_period,
-        )
-        return F.array_min(cands)
-
-    return (
-        df.select(
-            F.col(id_col).alias("id"),
-            F.size(toks).cast("long").alias("n_tok"),
-            let_(toks, probe).alias("period"),
-        )
-        .filter(F.col("period").isNotNull())
-        .select("id", "n_tok", F.col("period").cast("long").alias("period"))
-    )
-
-
-def source_concentration(
-    df: DataFrame,
-    strata_col: str = "source",
-    weight_col: str | None = None,
-    decimals: int = 6,
-) -> DataFrame:
-    """One row ``(n_sources, top_share, hhi, entropy)``: concentration of
-    the corpus across sources — the mixing audit a pretraining recipe
-    reads before and after re-mixing (HHI near 1 = one crawl dominates;
-    entropy in nats; ``weight_col`` weights by tokens/chars instead of
-    documents). Complements ``mix_to_proportions``/``temperature_mix``
-    (which CHANGE the mix) with the measurement of it.
-
-    Scale shape: one map-side-combined groupBy on the source key, then
-    arithmetic over <= |source-registry| rows collapsed to one."""
-    w = F.lit(1).cast("double") if weight_col is None else F.col(
-        weight_col
-    ).cast("double")
-    counts = df.groupBy(F.col(strata_col).alias("_src")).agg(
-        F.sum(w).alias("_w")
-    )
-    tot = counts.agg(F.sum("_w").alias("_tot"))
-    shares = counts.crossJoin(F.broadcast(tot)).select(
-        (F.col("_w") / F.col("_tot")).alias("p")
-    )
-    return shares.agg(
-        F.count(F.lit(1)).cast("long").alias("n_sources"),
-        F.round(F.max("p"), decimals).alias("top_share"),
-        F.round(F.sum(F.col("p") * F.col("p")), decimals).alias("hhi"),
-        F.round(
-            -F.sum(
-                F.when(F.col("p") > 0, F.col("p") * F.log(F.col("p"))).otherwise(
-                    F.lit(0.0)
-                )
-            ),
-            decimals,
-        ).alias("entropy"),
-    )
-
-
-def vocab_churn(
-    current: DataFrame,
-    baseline: DataFrame,
-    tokens_col: str = "tokens",
-) -> DataFrame:
-    """One row ``(n_new, n_gone, n_shared)``: distinct-token-id set
-    difference between two corpus snapshots — the tokenizer-version-skew
-    QA gate (a tokenizer upgrade, vocab remap, or id-shift bug shows up
-    as MASS churn of token ids; honest corpus growth adds a handful of
-    rare ids). Complements ``token_sketch_drift`` (frequency shape) with
-    set membership.
-
-    Scale shape: each side reduces to its distinct token-id set via
-    explode + map-side-combined groupBy (rows ≤ vocab per side); the
-    full-outer join and counts run over two vocab-bounded tables."""
-
-    def vocab(df: DataFrame, name: str) -> DataFrame:
-        return (
-            df.select(F.explode(F.col(tokens_col)).alias("t"))
-            .groupBy("t")
-            .agg(F.lit(1).alias(name))
-        )
-
-    j = vocab(current, "_c").join(vocab(baseline, "_b"), "t", "full_outer")
-    return j.agg(
-        F.sum(F.col("_b").isNull().cast("long")).alias("n_new"),
-        F.sum(F.col("_c").isNull().cast("long")).alias("n_gone"),
-        F.sum(
-            (F.col("_c").isNotNull() & F.col("_b").isNotNull()).cast("long")
-        ).alias("n_shared"),
-    )
-
-
-def corpus_datasheet(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    strata_col: str = "source",
-    decimals: int = 6,
-) -> DataFrame:
-    """One row — the corpus front page a datasheet/model-card pulls:
-    ``(n_docs, total_words, p50_chars, exact_dup_rate, mean_quality,
-    n_sources, source_hhi)``. Composes the engine's scalar signals into
-    the summary every downstream consumer asks for first; each column's
-    deep form exists as its own operator (dup groups, quality
-    distribution, concentration ladder, quantile grid).
-
-    Scale shape: one pass for the per-doc expressions (words/quality/
-    fingerprint are scan-stage), one count-distinct on the uniform
-    fingerprint key, one registry-sized source agg; everything reduces
-    to 1-row broadcasts before the final crossJoin."""
-    from ..functions.text import fingerprint, quality_score, words
-
-    base = df.select(
-        F.col(id_col),
-        F.col(strata_col).alias("_src"),
-        F.col("n_chars") if "n_chars" in df.columns else F.length(text_col).alias("n_chars"),
-        F.size(words(F.lower(F.col(text_col)))).alias("_nw"),
-        # per-doc rounding BEFORE the avg: cross-engine summation order
-        # differs, so averaging unrounded doubles can flip the 6th place
-        F.round(quality_score(F.col(text_col)), decimals).alias("_q"),
-        fingerprint(F.col(text_col)).alias("_fp"),
-    )
-    main = base.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("_nw").cast("long").alias("total_words"),
-        F.round(F.percentile(F.col("n_chars").cast("double"), F.lit(0.5)), decimals).alias(
-            "p50_chars"
-        ),
-        F.countDistinct("_fp").alias("_uniq"),
-        F.round(F.avg("_q"), decimals).alias("mean_quality"),
-    )
-    srcs = (
-        base.groupBy("_src")
-        .agg(F.count(F.lit(1)).cast("double").alias("_c"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_sources"),
-            F.round(
-                F.sum(F.col("_c") * F.col("_c")) / (F.sum("_c") * F.sum("_c")),
-                decimals,
-            ).alias("source_hhi"),
-        )
-    )
-    return main.crossJoin(F.broadcast(srcs)).select(
-        "n_docs",
-        "total_words",
-        "p50_chars",
-        F.round(
-            F.lit(1.0) - F.col("_uniq") / F.col("n_docs").cast("double"),
-            decimals,
-        ).alias("exact_dup_rate"),
-        "mean_quality",
-        "n_sources",
-        "source_hhi",
-    )
-
-
-def token_burstiness(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    top_k: int = 20,
-) -> DataFrame:
-    """(token, total, mean_per_doc, vmr) for the ``top_k`` most frequent
-    word tokens: the variance-to-mean ratio (index of dispersion) of
-    per-document counts — Church & Gale 1995's burstiness. Function words
-    sit near VMR ≈ 1 (Poisson-ish across docs); topical/boilerplate tokens
-    run VMR >> 1 (concentrated bursts). A corpus whose HEAD tokens are all
-    highly bursty is template-dominated — a cleaning signal no marginal
-    frequency table can show.
-
-    Zeros count without materializing: over N total docs, mean = total/N
-    and var = Σc²/N − mean² (population), so documents lacking the token
-    never produce a row — the explode emits only occurrences. Scale shape:
-    one explode → per-(doc, token) count (map-side combined) → one
-    token-level agg bounded by vocab; the top-k cut is a vocab-bounded
-    sort with a deterministic (total DESC, token ASC) tie-break so engine
-    replays pick the same head set. N comes from one bounded aggregate
-    (a driver scalar, O(1) state)."""
-    from pyspark.sql.window import Window
-
-    from jsonschema_spark.functions.text import words
-
-    n_docs = df.count()
-    per_doc = (
-        df.select(
-            F.col(id_col).alias("id"),
-            F.explode(words(F.lower(F.col(text_col)))).alias("token"),
-        )
-        .groupBy("id", "token")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    agg = per_doc.groupBy("token").agg(
-        F.sum("c").alias("total"),
-        F.sum(F.col("c") * F.col("c")).alias("sumsq"),
-    )
-    # vocab-bounded rank: the window input is the token-level aggregate
-    # (|vocab| rows), never the corpus
-    w = Window.orderBy(F.desc("total"), F.asc("token"))
-    mean = F.col("total") / F.lit(float(n_docs))
-    var = F.col("sumsq") / F.lit(float(n_docs)) - mean * mean
-    return (
-        agg.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= top_k)
-        .select(
-            "token",
-            "total",
-            F.round(mean, 6).alias("mean_per_doc"),
-            F.round(var / mean, 6).alias("vmr"),
-        )
     )

@@ -20,9 +20,8 @@ Scale shape (design target 10^12 rows; see SURVEY.md §4):
   caching 10^12 rows; Parquet column pruning makes each re-read touch only
   the columns it needs.
 - Checkpoint/resume: lineage rows are written per unit; a resumed run
-  anti-joins completed units and processes only the remainder (the sink
-  abstraction is a parquet directory in-sandbox, an Iceberg table on a real
-  cluster — same logic either way).
+  anti-joins completed units and processes only the remainder (results are
+  parquet directories).
 """
 
 from __future__ import annotations
@@ -213,12 +212,15 @@ class ValidationJob:
         Scale shape: both halves are filters over the SAME annotated
         scan-stage projection — no shuffle, no second pass; the
         failed-check array is the in-stage filter(array(when...)) idiom
-        violations() uses, bounded by |checks|."""
+        violations() uses, bounded by |checks|. A NULL ``_valid`` routes
+        to the quarantined half, so the two halves always partition the
+        input."""
         checks = self.check_columns(annotated)
         drop = checks + ["_valid"] + [
             c for c in annotated.columns if c.startswith("_verdict_")
         ]
-        accepted = annotated.filter(F.col("_valid")).drop(*drop)
+        valid = F.coalesce(F.col("_valid"), F.lit(False))
+        accepted = annotated.filter(valid).drop(*drop)
         failed = F.filter(
             F.array(
                 *[
@@ -233,7 +235,7 @@ class ValidationJob:
         )
         payload = [c for c in annotated.columns if c not in set(drop)]
         quarantined = (
-            annotated.filter(~F.col("_valid"))
+            annotated.filter(~valid)
             .select(
                 *payload,
                 F.size(failed).alias("n_failed"),

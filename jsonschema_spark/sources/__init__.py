@@ -1,2 +1,2 @@
-"""Sources: Spark session factory, testdata table loaders, deterministic
-synthetic corpus generator."""
+"""Sources: Spark session factory and the deterministic synthetic corpus
+generator."""

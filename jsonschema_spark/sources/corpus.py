@@ -117,169 +117,6 @@ def corpus(
     )
 
 
-TOKDUP_EXACT_MOD, TOKDUP_NEAR_MOD = 67, 41
-
-
-def token_neardup_corpus(spark: SparkSession, n_rows: int, seed: int = 5) -> DataFrame:
-    """(doc_id long, tokens array<int>): 40-120 token sequences over a
-    500-id vocabulary with injected duplicates for token-level dedup tests:
-
-    - every 67th row copies the previous row's tokens verbatim (exact dup,
-      token-shingle Jaccard 1.0)
-    - every 41st row copies the previous row's tokens plus one appended
-      token (near dup, Jaccard >= ~0.93)
-
-    Deterministic at any parallelism (hash-derived, like ``corpus``); the
-    moduli are coprime and offset so no row is both kinds at n <= 2746.
-    """
-    base = spark.range(n_rows)
-    i = F.col("id")
-    exact_dup = F.pmod(i, TOKDUP_EXACT_MOD) == TOKDUP_EXACT_MOD - 1
-    near_dup = F.pmod(i, TOKDUP_NEAR_MOD) == TOKDUP_NEAR_MOD - 1
-    src = F.when(exact_dup | near_dup, i - 1).otherwise(i) + F.lit(seed)
-    u = (
-        F.pmod(F.xxhash64(src, F.lit(1)), F.lit(1_000_000_007)).cast("double")
-        / 1_000_000_007.0
-    )
-    n_tok = (F.lit(40) + F.floor(F.lit(80) * u)).cast("int")
-    tokens = F.transform(
-        F.sequence(F.lit(1), n_tok),
-        lambda pos: F.pmod(F.xxhash64(src, pos), F.lit(500)).cast("int"),
-    )
-    tokens = F.when(
-        near_dup, F.concat(tokens, F.array(F.lit(7).cast("int")))
-    ).otherwise(tokens)
-    return base.select(i.alias("doc_id"), tokens.alias("tokens"))
-
-
-BOILERPLATE_LINES = [
-    "subscribe to our newsletter for weekly updates",
-    "all rights reserved unauthorized reproduction prohibited",
-    "click here to continue reading the full article",
-]
-LINE_BP_MODS = (3, 5, 7)  # doc i carries boilerplate line j iff i % mod_j == j
-
-
-def line_corpus(spark: SparkSession, n_rows: int, seed: int = 7) -> DataFrame:
-    """(doc_id long, text string): multi-line documents (newline-joined)
-    with deterministically injected boilerplate lines for the line-level
-    cleaning operators:
-
-    - every doc has 4 content lines of 6 hash-derived words over a
-      ~400-word surface (content lines are effectively unique per doc)
-    - doc i additionally carries ``BOILERPLATE_LINES[j]`` iff
-      ``i % LINE_BP_MODS[j] == j`` — so boilerplate doc-frequencies have
-      the closed forms ``len(range(j, n, mod_j))``
-
-    Hash-derived from the row id -> identical at any parallelism."""
-    base = spark.range(n_rows)
-    i = F.col("id")
-
-    def _line(li: int):
-        return F.concat_ws(
-            " ",
-            *[
-                F.concat(
-                    F.lit("w"),
-                    F.pmod(
-                        F.xxhash64(i, F.lit(seed), F.lit(li), F.lit(wi)),
-                        F.lit(400),
-                    ).cast("string"),
-                )
-                for wi in range(6)
-            ],
-        )
-    lines = F.array(*[_line(li) for li in range(4)])
-    for j, (mod, bp) in enumerate(zip(LINE_BP_MODS, BOILERPLATE_LINES)):
-        lines = F.when(
-            F.pmod(i, F.lit(mod)) == j, F.concat(lines, F.array(F.lit(bp)))
-        ).otherwise(lines)
-    return base.select(
-        i.alias("doc_id"), F.concat_ws("\n", lines).alias("text")
-    )
-
-
-def expected_boilerplate_doc_counts(n_rows: int) -> dict:
-    """Closed-form doc-frequency of each injected boilerplate line."""
-    return {
-        bp: len(range(j, n_rows, mod))
-        for j, (mod, bp) in enumerate(zip(LINE_BP_MODS, BOILERPLATE_LINES))
-    }
-
-
-def zipf_token_corpus(
-    spark: SparkSession, n_rows: int, seed: int = 11, vocab: int = VOCAB_SIZE
-) -> DataFrame:
-    """(doc_id long, tokens array<int>, n_tok int): 40-120 token sequences
-    with a SKEWED (Zipf-ish) token distribution — ``tok = floor(v * u^4)``
-    concentrates mass near id 0 while the high ids form a genuine rare
-    tail, which is what the rare-token-rate quality signal needs (a
-    uniform vocabulary has no rare tokens). Hash-derived -> identical at
-    any parallelism."""
-    base = spark.range(n_rows)
-    i = F.col("id")
-    u0 = (
-        F.pmod(F.xxhash64(i, F.lit(seed)), F.lit(1_000_000_007)).cast("double")
-        / 1_000_000_007.0
-    )
-    n_tok = (F.lit(40) + F.floor(F.lit(80) * u0)).cast("int")
-
-    def _tok(pos):
-        u = (
-            F.pmod(F.xxhash64(i, F.lit(seed), pos), F.lit(1_000_000_007)).cast(
-                "double"
-            )
-            / 1_000_000_007.0
-        )
-        return F.floor(F.lit(float(vocab)) * F.pow(u, F.lit(4.0))).cast("int")
-
-    tokens = F.transform(F.sequence(F.lit(1), n_tok), _tok)
-    return base.select(
-        i.alias("doc_id"), tokens.alias("tokens"), n_tok.alias("n_tok")
-    )
-
-
-PII_EMAIL_MOD, PII_SSN_MOD, PII_DIGITS_MOD = 7, 11, 5
-
-
-def pii_corpus(spark: SparkSession, n_rows: int, seed: int = 9) -> DataFrame:
-    """(doc_id long, text string): filler prose with deterministically
-    injected PII-shaped spans for the pii_scan operator:
-
-    - every 7th row (offset 3): an email ``user<k>@example.com``
-    - every 11th row (offset 5): an SSN-shaped ``ddd-dd-dddd``
-    - every 5th row (offset 2): a 10-digit run (account-number shape)
-
-    The three shapes are regex-disjoint (the digit-run pattern requires
-    >= 9 consecutive digits, which neither the dashed SSN nor the short
-    email-local digits contain), so per-pattern counts have closed forms.
-    Hash-derived -> identical at any parallelism."""
-    base = spark.range(n_rows)
-    i = F.col("id")
-    k = F.pmod(F.xxhash64(i, F.lit(seed)), F.lit(1000))
-    email = F.when(
-        F.pmod(i, PII_EMAIL_MOD) == 3,
-        F.concat(F.lit("reach user"), k.cast("string"), F.lit("@example.com for details")),
-    ).otherwise(F.lit("no contact on file"))
-    ssn = F.when(
-        F.pmod(i, PII_SSN_MOD) == 5,
-        F.concat(
-            F.lit("id "),
-            F.lpad(F.pmod(k, F.lit(900)).cast("string"), 3, "0"), F.lit("-"),
-            F.lpad(F.pmod(k, F.lit(90)).cast("string"), 2, "0"), F.lit("-"),
-            F.lpad(F.pmod(k, F.lit(9000)).cast("string"), 4, "0"),
-        ),
-    ).otherwise(F.lit("record redacted"))
-    digits = F.when(
-        F.pmod(i, PII_DIGITS_MOD) == 2,
-        F.concat(F.lit("acct "), (k + F.lit(9_000_000_000)).cast("string")),
-    ).otherwise(F.lit("acct masked"))
-    text = F.concat_ws(
-        " ", F.lit("the data row mentions"), email, ssn, digits, F.lit("end of note")
-    )
-    return base.select(i.alias("doc_id"), text.alias("text"))
-
-
 def expected_violation_counts(n_rows: int) -> dict:
     """Closed-form counts of injected violations (for test oracles)."""
     return {

@@ -9,6 +9,28 @@ import os
 
 from pyspark.sql import SparkSession
 
+_MAX_HEAP_MB = 16 * 1024
+_HEAP_FRACTION = 4  # default heap = 1/4 of the memory this process may use
+
+
+def _default_driver_memory() -> str:
+    """``min(16g, 1/4 of MemTotal or the cgroup memory limit)``: the heap
+    is committed and pre-touched at start, so it must fit next to the
+    Python workers and whatever else shares the host."""
+    mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    for path in (
+        "/sys/fs/cgroup/memory.max",  # cgroup v2 ("max" = no limit)
+        "/sys/fs/cgroup/memory/memory.limit_in_bytes",  # cgroup v1
+    ):
+        try:
+            with open(path) as fh:
+                raw = fh.read().strip()
+        except OSError:
+            continue
+        if raw.isdigit():
+            mb = min(mb, int(raw) // 2**20)
+    return f"{min(_MAX_HEAP_MB, mb // _HEAP_FRACTION)}m"
+
 
 def get_spark(
     app_name: str = "jsonschema_spark",
@@ -20,7 +42,7 @@ def get_spark(
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 8)
-    mem = os.environ.get("SPARK_DRIVER_MEMORY", "16g")
+    mem = os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory()
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)

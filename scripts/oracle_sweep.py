@@ -34,17 +34,7 @@ TABLES = [
 
 # VERDICT r3 #6: every query's executed plan is audited in the same sweep —
 # a regression to a cartesian join or row-at-a-time Python (BatchEvalPython)
-# fails here, not on a 100-TB run. The quarantined O(n^2) oracle baselines
-# are the only sanctioned cartesian/nested-loop plans (VERDICT "What's
-# wrong" #2 — scale-safe twins ship alongside them).
-PLAN_ALLOW_CARTESIAN = {
-    "embedding_near_dup",   # exact all-pairs cosine baseline (similarity.py)
-    "ngram_jaccard_pairs",  # exact n-gram Jaccard baseline (dedup.py) — the
-                            # scale path is minhash_near_dup / winnow_dups
-    "lsh_recall",           # bounded QA probe: all-pairs ground truth over a
-                            # CONSTANT-SIZE content-addressed sample (dedup.py
-                            # lsh_recall_probe) — corpus-size-independent
-}
+# fails here, not on a 100-TB run.
 
 
 def _normalize(rows, columns):
@@ -92,7 +82,7 @@ def main() -> int:
             sdf = queries[name](spark, args.sf_dir)
             rep = plan_report(sdf)
             plan_flags = []
-            if rep["cartesian"] and name not in PLAN_ALLOW_CARTESIAN:
+            if rep["cartesian"]:
                 plan_flags.append("CARTESIAN")
             if rep["row_python"]:
                 plan_flags.append("ROW_PYTHON")

@@ -25,30 +25,7 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-JOB_SCRIPTS = {
-    "validate": "throughput_job.py",
-    "dedup": "dedup_scaling_job.py",
-    "simhash": "simhash_scaling_job.py",
-    "ppl": "ppl_scaling_job.py",
-    "cc": "cc_scaling_job.py",
-    "tokenstats": "tokenstats_scaling_job.py",
-    "semdedup": "semdedup_scaling_job.py",
-    "winnow": "winnow_scaling_job.py",
-    "increm": "increm_scaling_job.py",
-    "dupspans": "dupspans_scaling_job.py",
-    "shuffle": "shuffle_scaling_job.py",
-    "survivors": "survivors_scaling_job.py",
-    "asof": "asof_scaling_job.py",
-    "sessions": "sessions_scaling_job.py",
-    "profile": "profile_scaling_job.py",
-    "lshrecall": "lshrecall_scaling_job.py",
-}
-
-
-def run_level(
-    cores: int, rows: int, repeat: int, zip_path: str,
-    job_script: str = "throughput_job.py", extra_args: list | None = None,
-) -> dict:
+def run_level(cores: int, rows: int, repeat: int, zip_path: str) -> dict:
     cmd = [
         "spark-submit",
         "--master", f"local[{cores}]",
@@ -61,11 +38,11 @@ def run_level(
         "--conf", "spark.driver.extraJavaOptions=-Xms8g -XX:+AlwaysPreTouch",
         "--conf", "spark.sql.parquet.enableNestedColumnVectorizedReader=true",
         "--py-files", zip_path,
-        os.path.join(REPO, "scripts", job_script),
+        os.path.join(REPO, "scripts", "throughput_job.py"),
         "--cores", str(cores),
         "--rows", str(rows),
         "--repeat", str(repeat),
-    ] + (extra_args or [])
+    ]
     out = subprocess.run(
         cmd, capture_output=True, text=True, cwd=REPO, timeout=1800
     )
@@ -83,14 +60,6 @@ def main() -> int:
     ap.add_argument("--rows", type=int, default=1_000_000)
     ap.add_argument("--pairs", default="8:32")
     ap.add_argument("--repeat", type=int, default=2)
-    ap.add_argument(
-        "--job", choices=sorted(JOB_SCRIPTS), default="validate",
-        help="validate = corpus validation pass; dedup = minhash near-dup",
-    )
-    ap.add_argument(
-        "--layout", choices=["array", "packed", "packed_stats"], default="array",
-        help="validate job only: token storage layout (see sources/packed.py)",
-    )
     ap.add_argument("--out", default=os.path.join(REPO, "BENCH", "scaling.json"))
     args = ap.parse_args()
 
@@ -102,13 +71,11 @@ def main() -> int:
     )
     zip_path = os.path.join(REPO, "dist", "jsonschema_spark.zip")
 
-    extra = ["--layout", args.layout] if args.job == "validate" else []
-    job_key = args.job if args.layout == "array" else f"{args.job}_{args.layout}"
     results = {"rows": args.rows, "pairs": []}
     for pair in args.pairs.split(","):
         lo, hi = (int(x) for x in pair.split(":"))
-        rec_lo = run_level(lo, args.rows, args.repeat, zip_path, JOB_SCRIPTS[args.job], extra)
-        rec_hi = run_level(hi, args.rows, args.repeat, zip_path, JOB_SCRIPTS[args.job], extra)
+        rec_lo = run_level(lo, args.rows, args.repeat, zip_path)
+        rec_hi = run_level(hi, args.rows, args.repeat, zip_path)
         eff = (rec_hi["tokens_per_sec"] / rec_lo["tokens_per_sec"]) / (hi / lo)
         results["pairs"].append(
             {
@@ -121,17 +88,15 @@ def main() -> int:
             }
         )
     os.makedirs(os.path.dirname(args.out), exist_ok=True)
-    # merge: the file keeps one section per job so dedup evidence doesn't
-    # clobber the validation headline (legacy layout = bare validate record)
+    # merge: only the "validate" section is rewritten; other keys are kept
     merged: dict = {}
     if os.path.isfile(args.out):
         with open(args.out) as fh:
-            prior = json.load(fh)
-        merged = prior if "validate" in prior or "dedup" in prior else {"validate": prior}
-    merged[job_key] = results
+            merged = json.load(fh)
+    merged["validate"] = results
     with open(args.out, "w") as fh:
         json.dump(merged, fh, indent=2)
-    print(json.dumps({job_key: results}))
+    print(json.dumps({"validate": results}))
     return 0
 
 

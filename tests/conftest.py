@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import os
+
 import pytest
 
 
@@ -7,5 +9,8 @@ import pytest
 def spark():
     from jsonschema_spark.sources.session import get_spark
 
-    session = get_spark(app_name="jsonschema_spark-tests", cores=8, shuffle_partitions=8)
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+    session = get_spark(
+        app_name="jsonschema_spark-tests", cores=cores, shuffle_partitions=8
+    )
     yield session

@@ -1,6 +1,6 @@
-"""Unit tests for table-level acceptance checks (operators/checks.py) and
-embedding-mean drift (operators/drift.py::embedding_mean_drift), pinned
-against closed-form NumPy/SciPy-free references computed inline."""
+"""Unit tests for the pre-flight validation gate
+(operators/checks.py::sampled_validation_gate), pinned against the
+closed-form Wilson bound computed inline."""
 
 from __future__ import annotations
 
@@ -9,403 +9,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from jsonschema_spark.operators.checks import (
-    iqr_bounds,
-    iqr_outlier_counts,
-    iqr_outlier_rows,
-    monotonic_violations,
-    token_parity,
-    wilson_rates,
-)
-from jsonschema_spark.operators.drift import embedding_mean_drift
-
-
-def _wilson(fails: int, n: int, z: float = 1.96) -> tuple[float, float]:
-    p = fails / n
-    z2 = z * z
-    denom = 1 + z2 / n
-    center = (p + z2 / (2 * n)) / denom
-    half = z * math.sqrt(p * (1 - p) / n + z2 / (4 * n * n)) / denom
-    return max(center - half, 0.0), min(center + half, 1.0)
-
-
-class TestWilsonRates:
-    def test_matches_closed_form(self, spark):
-        rows = [("a", True)] * 2 + [("a", False)] * 8 + [("b", True)] * 20 + [
-            ("b", False)
-        ] * 980
-        df = spark.createDataFrame(rows, "grp string, fail boolean")
-        out = {
-            r["grp"]: r
-            for r in wilson_rates(df, "grp", F.col("fail")).collect()
-        }
-        lo_a, hi_a = _wilson(2, 10)
-        lo_b, hi_b = _wilson(20, 1000)
-        assert out["a"]["n"] == 10 and out["a"]["fails"] == 2
-        assert out["a"]["rate"] == pytest.approx(0.2)
-        assert out["a"]["wilson_lo"] == pytest.approx(lo_a, abs=1e-6)
-        assert out["a"]["wilson_hi"] == pytest.approx(hi_a, abs=1e-6)
-        assert out["b"]["wilson_lo"] == pytest.approx(lo_b, abs=1e-6)
-        assert out["b"]["wilson_hi"] == pytest.approx(hi_b, abs=1e-6)
-        # the point of Wilson: the small group's interval is much wider
-        assert (hi_a - lo_a) > 5 * (hi_b - lo_b)
-
-    def test_zero_and_full_failure_groups(self, spark):
-        rows = [("clean", False)] * 5 + [("dirty", True)] * 5
-        df = spark.createDataFrame(rows, "grp string, fail boolean")
-        out = {
-            r["grp"]: r
-            for r in wilson_rates(df, "grp", F.col("fail")).collect()
-        }
-        assert out["clean"]["rate"] == 0.0
-        assert out["clean"]["wilson_lo"] == 0.0
-        assert out["clean"]["wilson_hi"] > 0.0  # never certain from n=5
-        assert out["dirty"]["rate"] == 1.0
-        assert out["dirty"]["wilson_hi"] == 1.0
-        assert out["dirty"]["wilson_lo"] < 1.0
-
-
-class TestIqrOutliers:
-    def test_bounds_match_numpy_interpolation(self, spark):
-        vals = [10, 20, 30, 40, 50, 60, 70, 80, 1000]
-        df = spark.createDataFrame(
-            [("g", v) for v in vals], "grp string, v long"
-        )
-        b = iqr_bounds(df, "v", "grp").collect()[0]
-        # linear interpolation quartiles of the 9 sorted values
-        assert b["q1"] == pytest.approx(30.0)
-        assert b["q3"] == pytest.approx(70.0)
-        assert b["lo"] == pytest.approx(30.0 - 1.5 * 40.0)
-        assert b["hi"] == pytest.approx(70.0 + 1.5 * 40.0)
-        counts = iqr_outlier_counts(df, "v", "grp").collect()[0]
-        assert counts["n"] == 9
-        assert counts["n_outliers"] == 1  # only 1000 > 130
-        out_rows = iqr_outlier_rows(df, "v", "grp").collect()
-        assert [r["v"] for r in out_rows] == [1000]
-
-    def test_per_group_independence(self, spark):
-        rows = [("a", v) for v in range(1, 12)] + [("b", v) for v in (5, 6, 7, 500)]
-        df = spark.createDataFrame(rows, "grp string, v long")
-        out = {r["grp"]: r for r in iqr_outlier_counts(df, "v", "grp").collect()}
-        assert out["a"]["n_outliers"] == 0
-        assert out["b"]["n_outliers"] == 1
-
-
-class TestMonotonicViolations:
-    def test_counts_regressions_per_key(self, spark):
-        rows = [
-            # key u1 ordered by seq: 1,3,2,5 -> one regression (3->2)
-            ("u1", 1, 1.0), ("u1", 2, 3.0), ("u1", 3, 2.0), ("u1", 4, 5.0),
-            # key u2: monotone
-            ("u2", 1, 1.0), ("u2", 2, 1.0), ("u2", 3, 9.0),
-        ]
-        df = spark.createDataFrame(rows, "k string, seq long, v double")
-        out = monotonic_violations(df, "k", "seq", "v").collect()[0]
-        assert out["n_pairs"] == 5
-        assert out["n_violations"] == 1
-        strict = monotonic_violations(df, "k", "seq", "v", strict=True).collect()[0]
-        assert strict["n_violations"] == 2  # the u2 plateau now counts
-
-    def test_single_row_keys_produce_no_pairs(self, spark):
-        df = spark.createDataFrame(
-            [("a", 1, 1.0), ("b", 1, 2.0)], "k string, seq long, v double"
-        )
-        out = monotonic_violations(df, "k", "seq", "v").collect()[0]
-        assert out["n_pairs"] == 0
-        assert out["n_violations"] == 0
-
-
-class TestEmbeddingMeanDrift:
-    def test_identical_slices_have_cosine_one(self, spark):
-        df = spark.createDataFrame(
-            [(i, [float(i % 3), 1.0, 2.0]) for i in range(30)],
-            "id long, embedding array<float>",
-        )
-        out = embedding_mean_drift(df, df).collect()[0]
-        assert out["mean_cosine"] == pytest.approx(1.0)
-        assert out["l2_shift"] == pytest.approx(0.0)
-
-    def test_known_shift(self, spark):
-        cur = spark.createDataFrame(
-            [(0, [1.0, 0.0]), (1, [1.0, 0.0])], "id long, embedding array<float>"
-        )
-        base = spark.createDataFrame(
-            [(0, [0.0, 2.0]), (1, [0.0, 2.0])], "id long, embedding array<float>"
-        )
-        out = embedding_mean_drift(cur, base).collect()[0]
-        assert out["mean_cosine"] == pytest.approx(0.0)  # orthogonal means
-        assert out["l2_shift"] == pytest.approx(math.sqrt(1 + 4))
-
-
-class TestTokenParity:
-    def _frames(self, spark):
-        golden = spark.createDataFrame(
-            [
-                (1, [1, 2, 3]),
-                (2, [4, 5]),
-                (3, [6, 7, 8]),   # dropped from current
-                (4, [9, 9]),      # diverges at position 2
-                (5, [1, 2, 3, 4]),  # current holds a strict prefix
-            ],
-            "doc_id long, tokens array<int>",
-        )
-        current = spark.createDataFrame(
-            [
-                (1, [1, 2, 3]),      # identical -> no row
-                (2, [4, 5]),         # identical -> no row
-                (4, [9, 8]),
-                (5, [1, 2, 3]),
-                (6, [7]),            # extra doc -> missing_golden
-            ],
-            "doc_id long, tokens array<int>",
-        )
-        return current, golden
-
-    def test_reports_exactly_the_violations(self, spark):
-        current, golden = self._frames(spark)
-        rows = {r["doc_id"]: r for r in token_parity(current, golden).collect()}
-        assert set(rows) == {3, 4, 5, 6}
-        assert rows[3]["status"] == "missing_current"
-        assert rows[3]["first_diff_pos"] is None
-        assert rows[3]["len_golden"] == 3 and rows[3]["len_current"] is None
-        assert rows[4]["status"] == "token_mismatch"
-        assert rows[4]["first_diff_pos"] == 2
-        assert rows[5]["status"] == "token_mismatch"
-        assert rows[5]["first_diff_pos"] == 4  # prefix diverges at len+1
-        assert rows[5]["len_current"] == 3 and rows[5]["len_golden"] == 4
-        assert rows[6]["status"] == "missing_golden"
-
-    def test_identical_snapshots_emit_nothing(self, spark):
-        _, golden = self._frames(spark)
-        assert token_parity(golden, golden).count() == 0
-
-
-class TestIdGapAudit:
-    def test_gap_accounting(self, spark):
-        from jsonschema_spark.operators.checks import id_gap_audit
-
-        # group a: stride 2, ids 0..10 with 4 and 8 missing -> 2 breaks,
-        # 2 missing. group b: dense 100..104 complete. group c: singleton.
-        rows = (
-            [("a", i) for i in [0, 2, 6, 10]]
-            + [("b", i) for i in range(100, 105)]
-            + [("c", 7)]
-        )
-        df = spark.createDataFrame(rows, "grp: string, id: long")
-        got = {r.grp: r for r in id_gap_audit(df, "id", "grp").collect()}
-        a = got["a"]
-        assert (a.stride, a.n_breaks, a.n_missing) == (2, 2, 2)
-        b = got["b"]
-        assert (b.stride, b.n_breaks, b.n_missing) == (1, 0, 0)
-        c = got["c"]
-        assert (c.stride, c.n_breaks, c.n_missing) == (0, 0, 0)
-        assert (c.id_min, c.id_max, c.n_rows) == (7, 7, 1)
-
-
-def test_shard_manifest_localizes_corruption(spark, tmp_path):
-    """Per-file XOR checksums: equal content -> equal checksum regardless
-    of row order inside the file; a single changed value flips ONLY the
-    affected shard's checksum while row counts stay equal."""
-    from pyspark.sql import functions as F
-
-    from jsonschema_spark.operators.checks import shard_manifest
-
-    base = spark.range(200).select(
-        F.col("id").alias("doc_id"),
-        F.md5(F.col("id").cast("string")).alias("payload"),
-        F.pmod(F.col("id"), F.lit(2)).alias("grp"),
-    )
-    a = str(tmp_path / "a")
-    b = str(tmp_path / "b")
-    base.repartition(2, "grp").write.parquet(a)
-    # same rows, same shard assignment, DIFFERENT order within each file
-    base.repartition(2, "grp").sortWithinPartitions(
-        F.desc("doc_id")
-    ).write.parquet(b)
-
-    ma = {
-        (r.n_rows, r.min_id, r.max_id): r.checksum
-        for r in shard_manifest(spark.read.parquet(a), "doc_id").collect()
-    }
-    mb = {
-        (r.n_rows, r.min_id, r.max_id): r.checksum
-        for r in shard_manifest(spark.read.parquet(b), "doc_id").collect()
-    }
-    assert ma == mb  # order inside a shard does not matter
-
-    # corrupt one row's payload -> only that shard's checksum changes
-    c = str(tmp_path / "c")
-    base.withColumn(
-        "payload",
-        F.when(F.col("doc_id") == 7, F.lit("CORRUPT")).otherwise(
-            F.col("payload")
-        ),
-    ).repartition(2, "grp").write.parquet(c)
-    mc = {
-        (r.n_rows, r.min_id, r.max_id): r.checksum
-        for r in shard_manifest(spark.read.parquet(c), "doc_id").collect()
-    }
-    assert set(ma) == set(mc)  # same shapes/counts
-    diffs = [k for k in ma if ma[k] != mc[k]]
-    assert len(diffs) == 1  # exactly the shard holding doc 7
-    assert diffs[0][1] % 2 == 1 or diffs[0][2] % 2 == 1  # the odd-grp shard
-
-
-def test_manifest_diff_statuses(spark):
-    """All four statuses from hand-built manifests; count-only change is
-    'changed' too."""
-    from jsonschema_spark.operators.checks import manifest_diff
-
-    schema = "file_name string, n_rows long, min_id long, max_id long, checksum long"
-    cur = spark.createDataFrame(
-        [
-            ("f1", 10, 0, 9, 111),    # ok
-            ("f2", 5, 10, 14, 999),   # checksum changed
-            ("f4", 3, 20, 22, 444),   # added
-            ("f5", 7, 30, 36, 555),   # row count changed, checksum same
-        ],
-        schema,
-    )
-    base = spark.createDataFrame(
-        [
-            ("f1", 10, 0, 9, 111),
-            ("f2", 5, 10, 14, 222),
-            ("f3", 2, 40, 41, 333),   # removed
-            ("f5", 6, 30, 36, 555),
-        ],
-        schema,
-    )
-    got = {
-        r.file_name: (r.status, r.n_rows_cur, r.n_rows_base)
-        for r in manifest_diff(cur, base).collect()
-    }
-    assert got == {
-        "f1": ("ok", 10, 10),
-        "f2": ("changed", 5, 5),
-        "f3": ("removed", 0, 2),
-        "f4": ("added", 3, 0),
-        "f5": ("changed", 7, 6),
-    }
-
-
-def test_classifier_eval_exact_auc(spark):
-    """AUC/Brier/accuracy match sklearn-free closed forms on a small
-    hand-checkable set, including score ties across classes (the 1/2
-    contribution) and the degenerate one-class case (auc null)."""
-    from jsonschema_spark.operators.checks import classifier_eval
-
-    rows = [
-        (0.9, 1), (0.8, 1), (0.8, 0), (0.4, 1), (0.3, 0), (0.1, 0),
-    ]
-    df = spark.createDataFrame(rows, "score double, label int")
-    r = classifier_eval(df, "score", "label", threshold=0.5).collect()[0]
-    # pairs (pos, neg): (0.9 vs .8,.3,.1)=3 wins; (0.8 vs .8)=0.5, vs .3,.1 = 2
-    # (0.4 vs .3,.1)=2, vs .8 = 0 -> total 7.5 / 9
-    assert r.n_pos == 3 and r.n_neg == 3
-    assert r.auc == round(7.5 / 9, 6)
-    brier = sum((s - y) ** 2 for s, y in rows) / len(rows)
-    assert r.brier == round(brier, 6)
-    acc = sum(1 for s, y in rows if (1 if s >= 0.5 else 0) == y) / len(rows)
-    assert r.accuracy == round(acc, 6)
-
-    one_class = spark.createDataFrame(
-        [(0.9, 1), (0.2, 1)], "score double, label int"
-    )
-    r1 = classifier_eval(one_class, "score", "label").collect()[0]
-    assert r1.auc is None and r1.n_neg == 0
-
-
-def test_source_concentration_closed_form(spark):
-    import math
-
-    from jsonschema_spark.operators.stats import source_concentration
-
-    # doc-count mode: shares 0.5 / 0.25 / 0.25
-    df = spark.createDataFrame(
-        [("a", 10), ("a", 30), ("b", 5), ("c", 15)], "src string, w long"
-    )
-    r = source_concentration(df, "src").collect()[0]
-    assert r.n_sources == 3 and r.top_share == 0.5
-    assert r.hhi == round(0.25 + 0.0625 + 0.0625, 6)
-    h = -(0.5 * math.log(0.5) + 2 * 0.25 * math.log(0.25))
-    assert r.entropy == round(h, 6)
-
-    # weighted: a=40/60, b=5/60, c=15/60
-    rw = source_concentration(df, "src", weight_col="w").collect()[0]
-    ps = [40 / 60, 5 / 60, 15 / 60]
-    assert rw.top_share == round(max(ps), 6)
-    assert rw.hhi == round(sum(p * p for p in ps), 6)
-
-
-def test_key_skew_profile_closed_form(spark):
-    from jsonschema_spark.operators.checks import key_skew_profile
-
-    # keys: a x 8, b x 1, c x 1 -> n_keys 3, max 8, avg 10/3, ratio 2.4
-    df = spark.createDataFrame([("a",)] * 8 + [("b",), ("c",)], "k string")
-    r = key_skew_profile(df, "k").collect()[0]
-    assert r.n_keys == 3 and r.n_rows == 10 and r.max_count == 8
-    assert r.avg_count == round(10 / 3, 6)
-    assert r.skew_ratio == round(8 / (10 / 3), 6)
-    # p99 over counts [1, 1, 8] (quantile_cont): 1 + 0.98*7 = 7.86
-    assert r.p99_count == round(1 + 0.98 * 7, 6)
-
-
-def test_snapshot_churn_counts(spark):
-    from pyspark.sql import functions as F
-
-    from jsonschema_spark.operators.checks import snapshot_churn
-
-    base = spark.createDataFrame(
-        [(1, "x"), (2, "y"), (3, "z"), (4, "w")], "doc_id long, payload string"
-    )
-    cur = spark.createDataFrame(
-        [(1, "x"), (2, "CHANGED"), (5, "new")], "doc_id long, payload string"
-    )
-    r = snapshot_churn(cur, base, "doc_id", F.md5("payload")).collect()[0]
-    assert (r.n_added, r.n_removed, r.n_changed, r.n_same) == (1, 2, 1, 1)
-
-
-def test_embedding_parity_probe(spark):
-    """All four violation classes with exact probe values: per-dim bump
-    above atol (first_diff_dim + max_abs_diff), sub-atol noise ignored,
-    dimensionality change diverging at min(dim)+1, and the two missing
-    statuses; identical snapshots emit nothing."""
-    from jsonschema_spark.operators.checks import embedding_parity
-
-    gold = spark.createDataFrame(
-        [
-            (1, [0.5, 0.25, 0.125]),
-            (2, [1.0, 2.0, 3.0]),
-            (3, [1.0, 1.0, 1.0]),   # dropped from current
-            (4, [0.5, 0.5, 0.5]),
-        ],
-        "vec_id long, embedding array<float>",
-    )
-    cur = spark.createDataFrame(
-        [
-            (1, [0.5, 0.25, 0.125]),        # identical -> no row
-            (2, [1.0, 2.5, 3.0]),           # dim 2 off by 0.5
-            (4, [0.5, 0.5]),                # truncated -> diverges at 3
-            (5, [9.0]),                     # extra -> missing_golden
-        ],
-        "vec_id long, embedding array<float>",
-    )
-    rows = {r.vec_id: r for r in embedding_parity(cur, gold).collect()}
-    assert set(rows) == {2, 3, 4, 5}
-    assert rows[2].status == "vector_mismatch"
-    assert rows[2].first_diff_dim == 2 and rows[2].max_abs_diff == 0.5
-    assert rows[3].status == "missing_current" and rows[3].dim_current is None
-    assert rows[4].status == "vector_mismatch"
-    assert rows[4].first_diff_dim == 3  # null-padded overhang
-    assert rows[5].status == "missing_golden" and rows[5].dim_golden is None
-
-    # sub-atol float noise is NOT a violation
-    noisy = spark.createDataFrame(
-        [(1, [0.5 + 1e-9, 0.25, 0.125])], "vec_id long, embedding array<float>"
-    )
-    base1 = gold.filter("vec_id = 1")
-    assert embedding_parity(noisy, base1).count() == 0
-    assert embedding_parity(base1, base1).count() == 0
+from jsonschema_spark.operators.checks import sampled_validation_gate
 
 
 class TestSampledValidationGate:
@@ -416,8 +20,6 @@ class TestSampledValidationGate:
         """k=20 sample of a 20-row corpus (whole corpus), 4 planted
         failures -> p=0.2; the Wilson upper bound matches the closed
         form and the verdict compares the ROUNDED bound to the budget."""
-        from jsonschema_spark.operators.checks import sampled_validation_gate
-
         rows = [(i, -1 if i % 5 == 0 else 1) for i in range(20)]
         df = spark.createDataFrame(rows, ["doc_id", "x"])
         out = sampled_validation_gate(
@@ -435,8 +37,6 @@ class TestSampledValidationGate:
     def test_sample_is_constant_size_and_deterministic(self, spark):
         """Doubling the corpus keeps n_sampled == sample_k, and the gate
         row is a pure function of the corpus content (two runs agree)."""
-        from jsonschema_spark.operators.checks import sampled_validation_gate
-
         def corpus(n):
             return spark.createDataFrame(
                 [(i, -1 if i % 7 == 0 else 1) for i in range(n)],
@@ -456,11 +56,22 @@ class TestSampledValidationGate:
         assert a == again
 
     def test_empty_corpus_fails_closed(self, spark):
-        from jsonschema_spark.operators.checks import sampled_validation_gate
-
         df = spark.createDataFrame([], "doc_id long, x int")
         out = sampled_validation_gate(
             df, "doc_id", self._annotate, sample_k=8, budget=0.9
         ).collect()[0]
         assert out["n_sampled"] == 0
+        assert out["within_budget"] is False
+
+    def test_null_verdict_counts_as_failure(self, spark):
+        """A NULL ``_valid`` (x is NULL, so ``x >= 0`` is NULL) is a
+        failure: the gate fails closed instead of dropping the row from
+        the failure sum."""
+        rows = [(i, None if i < 3 else 1) for i in range(10)]
+        df = spark.createDataFrame(rows, "doc_id long, x int")
+        out = sampled_validation_gate(
+            df, "doc_id", self._annotate, sample_k=10, budget=0.1
+        ).collect()[0]
+        assert out["n_sampled"] == 10 and out["n_fail"] == 3
+        assert out["fail_rate"] == pytest.approx(0.3, abs=1e-6)
         assert out["within_budget"] is False

@@ -1,5 +1,5 @@
 """CLI (spark-submit entry) contract: package zip, validate job with
-results tree + resume, throughput probe."""
+results tree + resume, diagnostics, pre-flight gate and quarantine."""
 
 from __future__ import annotations
 
@@ -22,7 +22,7 @@ def test_package_zip(tmp_path):
     path = json.loads(res.stdout.strip().splitlines()[-1])["py_files"]
     names = zipfile.ZipFile(path).namelist()
     assert "jsonschema_spark/cli.py" in names
-    assert "jsonschema_spark/operators/dedup.py" in names
+    assert "jsonschema_spark/operators/checks.py" in names
     assert not any(n.endswith(".pyc") for n in names if "__pycache__" not in n)
 
 
@@ -63,52 +63,6 @@ def test_validate_cli_and_resume(tmp_path, spark):
     summary2 = json.loads((results / "summary.json").read_text())
     assert summary2["resumed_units_skipped"] > 0
     assert summary2["n_rows"] == 5000
-
-
-def test_repair_cli(tmp_path):
-    out = tmp_path / "repaired.parquet"
-    res = subprocess.run(
-        [
-            sys.executable, "-m", "jsonschema_spark", "repair",
-            "--out", str(out), "--rows", "500", "--cores", "4",
-        ],
-        cwd=REPO, capture_output=True, text=True, timeout=300,
-    )
-    assert res.returncode == 0, res.stderr[-800:]
-    summary = json.loads(res.stdout.strip().splitlines()[-1])
-    assert summary["n_rows"] == 500
-    # the raw synthetic corpus has no BOS/EOS framing: every row repairs,
-    # and the repaired output validates clean (exit code asserts it too)
-    assert summary["n_changed"] == 500
-    assert summary["violations_after"] == 0
-    assert summary["violations_before"] == 500
-
-
-def test_repair_cli_refreshes_n_tok(tmp_path, spark):
-    from pyspark.sql import functions as F
-
-    from jsonschema_spark.sources.corpus import token_neardup_corpus
-
-    src = tmp_path / "in.parquet"
-    token_neardup_corpus(spark, 200, seed=5).withColumn(
-        "n_tok", F.size("tokens")
-    ).write.parquet(str(src))
-    out = tmp_path / "out.parquet"
-    res = subprocess.run(
-        [
-            sys.executable, "-m", "jsonschema_spark", "repair",
-            "--input", str(src), "--out", str(out), "--cores", "4",
-        ],
-        cwd=REPO, capture_output=True, text=True, timeout=300,
-    )
-    assert res.returncode == 0, res.stderr[-800:]
-    import duckdb
-
-    stale = duckdb.sql(
-        f"SELECT count(*) FROM read_parquet('{out}/*.parquet')"
-        " WHERE n_tok <> len(tokens)"
-    ).fetchone()[0]
-    assert stale == 0
 
 
 def test_validate_cli_diagnostics(tmp_path, spark):

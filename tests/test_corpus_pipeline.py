@@ -146,6 +146,31 @@ def test_quarantine_split(job, corpus_df):
     assert labels[src_id] == "ref_source"
 
 
+def test_quarantine_partitions_null_verdicts(spark):
+    """Rows whose verdict is NULL stay in the partition: a row check that
+    evaluates to NULL, and an annotated frame whose ``_valid`` is NULL,
+    both land in the quarantined half, so accepted + quarantined always
+    equals the input."""
+    df = spark.createDataFrame(
+        [(1, 5), (2, None), (3, -1), (4, None)], "doc_id long, x int"
+    )
+    plan = compile_table_spec(
+        TableSpec.from_dict({"row_checks": {"positive": "x > 0"}}), df.schema
+    )
+    job = ValidationJob(plan)
+    accepted, quarantined = job.quarantine(job.annotate(df))
+    assert sorted(r.doc_id for r in accepted.collect()) == [1]
+    assert sorted(r.doc_id for r in quarantined.collect()) == [2, 3, 4]
+
+    raw = df.select(
+        "doc_id", "x", (F.col("x") > 0).alias("chk_positive")
+    ).withColumn("_valid", F.col("chk_positive"))
+    accepted, quarantined = job.quarantine(raw)
+    assert accepted.count() + quarantined.count() == df.count()
+    labels = {r.doc_id: r.failed_checks for r in quarantined.collect()}
+    assert labels == {2: "positive", 3: "positive", 4: "positive"}
+
+
 def test_violation_rows(job, corpus_df):
     v = job.violations(job.annotate(corpus_df))
     counts = {r.check: r.cnt for r in v.groupBy("check").agg(F.count("*").alias("cnt")).collect()}
@@ -212,38 +237,6 @@ def test_violation_sampling(job, corpus_df):
     assert na == nb  # deterministic (hash, not rand)
     assert 0 < na < full
     assert abs(na / full - 0.25) < 0.15
-
-
-def test_token_frequency_sketch(spark, corpus_df):
-    from jsonschema_spark.operators.stats import (
-        cms_estimate, token_frequencies, token_frequency_sketch,
-    )
-
-    sketch = token_frequency_sketch(corpus_df.limit(2000), eps=0.0001)
-    exact = {
-        r.token: r.cnt
-        for r in token_frequencies(corpus_df.limit(2000)).orderBy(
-            F.col("cnt").desc()
-        ).limit(5).collect()
-    }
-    for token, cnt in exact.items():
-        est = cms_estimate(spark, sketch, token)
-        assert est >= cnt  # CMS overestimates only
-        assert est <= cnt * 1.05 + 1000
-
-
-def test_results_sink_parquet_mode(spark, tmp_path):
-    from jsonschema_spark.sources.sink import ResultsSink, iceberg_available
-
-    assert iceberg_available(spark) is False  # sandbox: no iceberg jar
-    sink = ResultsSink(spark)
-    assert sink.mode == "parquet"
-    df = spark.range(10)
-    target = str(tmp_path / "t")
-    sink.write(df, target)
-    assert sink.exists(target) and sink.read(target).count() == 10
-    sink.write(df, target, append=True)
-    assert sink.read(target).count() == 20
 
 
 def test_partial_resume_processes_only_remainder(tmp_path, spark, job, corpus_df):

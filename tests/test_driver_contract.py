@@ -83,46 +83,34 @@ def test_entry_smoke(spark):
 
 
 def test_r5_gate_window_order_pinned():
-    """The driver's correctness gate takes the FIRST 50 queries() entries.
-    Round 5 rotated the 32 never-previously-gated queries into that
-    window (VERDICT r4 'Next round' #3), followed by the two r4
-    driver-reds fixed this round, 15 spot re-gates, and the round-5
-    sampled_gate addition; this pin fails if a later edit inserts or
-    reorders entries ahead of them, which would silently un-gate queries
-    the rotation plan promised to cover."""
-    import __spark_entry__ as entry_mod
-
-    want_first_50 = [
-        # 32 never gated in r1-r4 (r4-addition queue + Deequ family)
-        "emd_drift", "component_size_hist", "containment_dups",
-        "token_burstiness", "doremi_weights", "spec_rollout",
-        "violation_cooccur", "check_activation", "bigram_kn_ppl",
-        "repeat_value", "epoch_order_audit", "asof_thresholds",
-        "maintenance_overlap", "event_sessions", "watermark_audit",
-        "event_rollup", "lsh_recall", "violation_examples",
-        "component_purity", "trigram_kn_ppl",
-        "column_profile", "numeric_profile", "fd_audit", "fd_audit_by",
-        "table_expectations", "suggest_constraints", "categorical_mi",
-        "benford_digits", "metric_anomaly", "join_cardinality",
-        "inclusion_dependency", "freshness_audit",
-        # the two r4 driver-reds, fixed this round
-        "dup_loss_mask", "positional_entropy",
-        # spot re-gates + the round-5 addition in slot 50
-        "corpus_validate", "exact_stats", "dup_keys", "orphans",
-        "minhash_near_dup", "simhash_near_dup", "dup_components",
-        "incremental_near_dup", "semdedup", "global_shuffle",
-        "token_sketch_drift", "ks_drift", "unigram_ppl",
-        "sequence_packing", "quarantine_rows", "sampled_gate",
+    """The correctness gate takes the FIRST 50 queries() entries; all 32
+    fit, so the pin covers the full ordered list: the 22 draft-4
+    keyword queries, the table-scope uniqueness / referential / histogram
+    checks, the ValidationJob queries (full pass, quarantine router,
+    pre-flight gate) and the rollout diagnostics. It fails if an edit
+    adds, drops or reorders an entry."""
+    assert list(entry_mod.queries()) == [
+        # draft-4 keywords lowered to native Columns / kernel / variant
+        "type_integer", "enum_scalar", "all_of", "any_of", "one_of", "not",
+        "bounds_exclusive", "multiple_of", "string_length", "pattern",
+        "array_bounds", "unique_items", "forall_items", "required",
+        "dependencies", "properties_struct", "tuple_items", "map_object",
+        "pattern_properties", "json_wellformed", "json_schema_kernel",
+        "json_schema_variant",
+        # table-scope checks
+        "dup_keys", "orphans", "histogram",
+        # ValidationJob: full pass, quarantine router, pre-flight gate
+        "corpus_validate", "quarantine_rows", "sampled_gate",
+        # rollout diagnostics
+        "spec_rollout", "violation_cooccur", "check_activation",
+        "violation_examples",
     ]
-    assert list(entry_mod.queries())[:50] == want_first_50
 
 
 def test_every_query_has_oracle_twin_or_is_known_rows_only():
     """queries() and oracle_sql() stay in lockstep: every query has a
     DuckDB twin (the repo currently carries zero rows-only queries —
     adding one is a deliberate decision, not a forgotten entry)."""
-    import __spark_entry__ as entry_mod
-
     q = set(entry_mod.queries())
     o = set(entry_mod.oracle_sql())
     assert o <= q, f"oracle entries without queries: {sorted(o - q)}"
