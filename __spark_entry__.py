@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from jsonschema_spark.compiler.columns import lower_predicate
 from jsonschema_spark.compiler.kernel import json_validation_kernel
+from jsonschema_spark.plans.plan import failed
 from jsonschema_spark.spec.compile import compile_spec
 
 
@@ -85,7 +86,7 @@ def entry(spark: SparkSession) -> DataFrame:
     annotated = job.annotate(df)
     checks = job.check_columns(annotated)
     aggs = [
-        F.sum((~F.col(c)).cast("long")).alias(c.removeprefix("chk_")) for c in checks
+        F.sum(failed(F.col(c)).cast("long")).alias(c.removeprefix("chk_")) for c in checks
     ] + [F.count(F.lit(1)).alias("n_rows")]
     wide = annotated.agg(*aggs)
     names = [c.removeprefix("chk_") for c in checks]
@@ -242,24 +243,6 @@ def q_json_schema_kernel(spark, sf_dir):
     return _count_pass(df, verdict.getField("valid"))
 
 
-def q_json_schema_variant(spark, sf_dir):
-    """SURVEY §1.4 VariantType path: the SAME draft-4 spec as
-    json_schema_kernel, lowered to native Spark 4 variant expressions —
-    try_parse_json once in the scan stage, then pure-codegen
-    type/required/bounds/keys probes (no Python anywhere). Twin of the
-    kernel query: identical verdict counts, JVM-side throughput."""
-    from jsonschema_spark.compiler.variant import variant_validation_predicate
-
-    df = _t(spark, sf_dir, "events")
-    spec = {
-        "type": "object",
-        "required": ["k"],
-        "properties": {"k": {"type": "integer", "minimum": 0, "maximum": 80}},
-        "additionalProperties": False,
-    }
-    return _count_pass(df, variant_validation_predicate(spec, F.col("props")))
-
-
 def q_dup_keys(spark, sf_dir):
     """SURVEY §2.3: table-scope uniqueness via salted two-phase agg."""
     from jsonschema_spark.operators.uniqueness import duplicate_keys
@@ -335,7 +318,7 @@ def q_corpus_validate(spark, sf_dir):
     return annotated.agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.sum(F.col("_valid").cast("long")).alias("n_valid"),
-        *[F.sum((~F.col(c)).cast("long")).alias(f"fail_{c.removeprefix('chk_')}") for c in checks],
+        *[F.sum(failed(F.col(c)).cast("long")).alias(f"fail_{c.removeprefix('chk_')}") for c in checks],
     )
 
 
@@ -638,7 +621,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pattern_properties": q_pattern_properties,
         "json_wellformed": q_json_wellformed,
         "json_schema_kernel": q_json_schema_kernel,
-        "json_schema_variant": q_json_schema_variant,
         "dup_keys": q_dup_keys,
         "orphans": q_orphans,
         "histogram": q_histogram,
@@ -819,14 +801,6 @@ def oracle_sql() -> dict[str, str]:
             " count(*) AS n_rows FROM events"
         ),
         "json_schema_kernel": (
-            "SELECT count(*) FILTER (WHERE json_valid(props)"
-            " AND json_type(json(props)) = 'OBJECT'"
-            " AND json_type(json(props), '$.k') IN ('UBIGINT','BIGINT')"
-            " AND CAST(json_extract_string(props, '$.k') AS DOUBLE) BETWEEN 0 AND 80"
-            " AND len(json_keys(json(props))) = 1) AS n_pass,"
-            " count(*) AS n_rows FROM events"
-        ),
-        "json_schema_variant": (
             "SELECT count(*) FILTER (WHERE json_valid(props)"
             " AND json_type(json(props)) = 'OBJECT'"
             " AND json_type(json(props), '$.k') IN ('UBIGINT','BIGINT')"

@@ -9,6 +9,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from jsonschema_spark.functions.text import portable_hash60
+from jsonschema_spark.plans.plan import failed
 
 
 def ensure_parallelism(df: DataFrame) -> DataFrame:
@@ -76,9 +77,7 @@ def sampled_validation_gate(
     ann = annotate(sample)
     agg = ann.agg(
         F.count(F.lit(1)).cast("long").alias("n_sampled"),
-        F.sum((~F.coalesce(F.col("_valid"), F.lit(False))).cast("long")).alias(
-            "n_fail"
-        ),
+        F.sum(failed(F.col("_valid")).cast("long")).alias("n_fail"),
     )
     n = F.col("n_sampled").cast("double")
     p = F.col("n_fail") / n

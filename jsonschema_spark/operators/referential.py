@@ -55,26 +55,6 @@ def orphan_key_counts(
 DOMAIN_ISIN_MAX = 10_000
 
 
-def domain_predicate(
-    fact: DataFrame, fact_key: str, dim: DataFrame, dim_key: str,
-    isin_max: int = DOMAIN_ISIN_MAX,
-):
-    """Boolean membership column usable inside the one-pass verdict select:
-    collects the (small) domain to the driver once and compiles it into an
-    ``isin`` hash set — the dynamic-enum fast path for source registries.
-    Guarded: reads at most ``isin_max + 1`` distinct keys; a larger domain
-    raises so a misconfigured dimension can never OOM the driver — use
-    ``domain_flag`` (the join form) instead."""
-    head = dim.select(dim_key).distinct().limit(isin_max + 1).collect()
-    if len(head) > isin_max:
-        raise ValueError(
-            f"domain of {dim_key!r} exceeds {isin_max} distinct keys; "
-            "use domain_flag() (join-based membership) for large dimensions"
-        )
-    domain = [r[0] for r in head]
-    return F.col(fact_key).isin(domain) | F.col(fact_key).isNull()
-
-
 def domain_flag(
     fact: DataFrame, fact_key: str, dim: DataFrame, dim_key: str,
     flag_col: str, isin_max: int = DOMAIN_ISIN_MAX,
@@ -83,16 +63,16 @@ def domain_flag(
     dimension. Small domains compile to the isin fast path (stays inside the
     verdict codegen stage); larger ones become a left join against the
     distinct key set — broadcast when under Spark's auto-broadcast
-    threshold, shuffle otherwise — so domain size never hits the driver."""
-    head = dim.select(dim_key).distinct().limit(isin_max + 1).collect()
+    threshold, shuffle otherwise — so domain size never hits the driver.
+    NULL dimension keys are not in the domain: ``key IN (..., NULL)`` would
+    make the flag NULL for every orphan key."""
+    keys = dim.select(F.col(dim_key).alias(fact_key)).dropna().distinct()
+    head = keys.limit(isin_max + 1).collect()
     if len(head) <= isin_max:
         domain = [r[0] for r in head]
         pred = F.col(fact_key).isin(domain) | F.col(fact_key).isNull()
         return fact.withColumn(flag_col, pred)
-    marked = (
-        dim.select(F.col(dim_key).alias(fact_key)).distinct()
-        .withColumn("_in_domain", F.lit(True))
-    )
+    marked = keys.withColumn("_in_domain", F.lit(True))
     return (
         fact.join(marked, on=fact_key, how="left")
         .withColumn(

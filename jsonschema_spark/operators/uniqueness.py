@@ -10,9 +10,6 @@ Strategy (north rule: skew handled explicitly):
   ≤S partials per key. A pathological key that appears 10^9 times costs
   bounded rows per reducer instead of 10^9. For near-unique keys AQE
   coalesces the tiny second shuffle.
-- ``uniqueness_report``: cheap O(1)-output pre-check — exact count vs
-  approx_count_distinct in one pass. At design scale you run the report
-  first; only if it signals duplicates do you pay for the exact listing.
 """
 
 from __future__ import annotations
@@ -44,29 +41,3 @@ def duplicate_keys(df: DataFrame, key: str, salt_buckets: int = 64) -> DataFrame
         .filter(F.col("dup_count") > 1)
         .select(F.col("key").alias(key), "dup_count")
     )
-
-
-def uniqueness_report(df: DataFrame, key: str) -> dict:
-    """Single-pass scalar report: {n_rows, approx_distinct, approx_duplicates,
-    exact (bool|None)}. approx_count_distinct (HLL++, rsd 1%) makes this a
-    constant-memory pre-check; `exact` is decided only when the approx gap is
-    far outside the HLL error band."""
-    row = df.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.approx_count_distinct(key, 0.01).alias("approx_distinct"),
-        F.sum(F.col(key).isNull().cast("long")).alias("n_null"),
-    ).collect()[0]
-    gap = row.n_rows - row.approx_distinct
-    band = int(row.n_rows * 0.02)
-    exact = None
-    if gap > band:
-        exact = False
-    elif gap <= 0:
-        exact = True
-    return {
-        "n_rows": row.n_rows,
-        "approx_distinct": row.approx_distinct,
-        "approx_duplicates": max(gap, 0),
-        "n_null": row.n_null,
-        "unique": exact,
-    }

@@ -38,7 +38,24 @@ from jsonschema_spark.operators import drift as drift_ops
 from jsonschema_spark.operators import stats as stats_ops
 from jsonschema_spark.operators.referential import domain_flag, orphan_key_counts
 from jsonschema_spark.operators.uniqueness import duplicate_keys
-from jsonschema_spark.plans.plan import CompiledPlan
+from jsonschema_spark.plans.plan import (
+    CHECK_PREFIX,
+    CompiledPlan,
+    annotation_columns,
+    check_columns,
+    failed,
+    failed_checks,
+    failure_entries,
+)
+
+
+def _unit() -> Column:
+    """The lineage unit of a row: its input file when reading files (stable
+    across reruns, so resumable), else its spark partition id."""
+    return F.coalesce(
+        F.nullif(F.input_file_name(), F.lit("")),
+        F.concat(F.lit("partition:"), F.spark_partition_id().cast("string")),
+    )
 
 
 def drop_completed_units(annotated: DataFrame, done_units: DataFrame) -> DataFrame:
@@ -48,15 +65,7 @@ def drop_completed_units(annotated: DataFrame, done_units: DataFrame) -> DataFra
     literal list would inline potentially millions of path strings into
     the plan (tests/test_corpus_pipeline.py pins the join shape)."""
     return (
-        annotated.withColumn(
-            "_unit",
-            F.coalesce(
-                F.nullif(F.input_file_name(), F.lit("")),
-                F.concat(
-                    F.lit("partition:"), F.spark_partition_id().cast("string")
-                ),
-            ),
-        )
+        annotated.withColumn("_unit", _unit())
         .join(
             F.broadcast(done_units.select("unit")),
             F.col("_unit") == F.col("unit"),
@@ -92,110 +101,51 @@ class ValidationJob:
             dim = self.dims.get(ref["dim"])
             if dim is None:
                 raise ValueError(f"missing dimension table {ref['dim']!r}")
-            out = domain_flag(out, col_name, dim, ref["key"], f"chk_ref_{col_name}")
-            out = out.withColumn("_valid", F.col("_valid") & F.col(f"chk_ref_{col_name}"))
+            flag = f"{CHECK_PREFIX}ref_{col_name}"
+            out = domain_flag(out, col_name, dim, ref["key"], flag)
+            out = out.withColumn("_valid", F.col("_valid") & F.col(flag))
         return out
 
     def check_columns(self, annotated: DataFrame) -> list:
-        return [c for c in annotated.columns if c.startswith("chk_")]
+        return check_columns(annotated)
 
     def violations(
         self, annotated: DataFrame, sample_fraction: float | None = None
     ) -> DataFrame:
-        """(id, check, path) rows for every failed check — melted via an
-        array of named structs filtered in-stage, so passing rows never
-        leave the scan. For struct columns the plan carries per-field
-        predicates (CompiledPlan.detail), so ``path`` pinpoints the failing
-        field ('/addr/zip'), matching the reference's path-wrapped errors
-        (validate.go:74,346,500); scalar checks report path ''.
+        """(id, check, path, detail) rows for every failed check: each
+        check's failure entries (CompiledCheck.failures) exploded from the
+        failing rows only, in the scan stage. For struct and map columns
+        ``path`` pinpoints the failing field ('/addr/zip'), matching the
+        reference's path-wrapped errors (validate.go:74,346,500); scalar
+        checks report path ''. A NULL verdict is a failure.
 
         ``sample_fraction``: at 10^12 rows a 1% violation rate is 10^10
         rows — often too many to materialize. A deterministic hash sample
         on the id (NOT rand(): reproducible across retries/resume) keeps
         the per-check *counts* exact in lineage while bounding the itemized
         rows written."""
-        checks = self.check_columns(annotated)
         if sample_fraction is not None and sample_fraction < 1.0:
             threshold = int(sample_fraction * 1_000_000)
             annotated = annotated.filter(
                 F.pmod(F.xxhash64(F.col(self.id_column), F.lit(7)), F.lit(1_000_000))
                 < threshold
             )
-        detail = getattr(self.plan, "detail", None) or {}
-        detail_specs = getattr(self.plan, "detail_specs", None) or {}
-        items = []
-
-        def entry(name: str, path: str) -> Column:
-            # `detail` = the violated spec fragment, a compile-time constant
-            # (the reference's keyword-bearing error text, README.md:41-42)
-            frag = detail_specs.get(name, {}).get(path)
-            return F.struct(
-                F.lit(name).alias("check"),
-                F.lit(path).alias("path"),
-                (F.lit(frag) if frag is not None else F.lit(None).cast("string")).alias(
-                    "detail"
-                ),
+        per_check = []
+        for c in self.check_columns(annotated):
+            name = c.removeprefix(CHECK_PREFIX)
+            check = self.plan.checks.get(name)
+            failures = (
+                check.failures
+                if check is not None
+                else failure_entries(F.col(c), F.lit(""), F.lit(None))
             )
-
-        kernel_verdicts = getattr(self.plan, "kernel_verdicts", None) or {}
-        for c in checks:
-            name = c.removeprefix("chk_")
-            named = detail.get(name)
-            if named:
-                # one candidate entry per path; the per-path predicate is
-                # evaluated in the same stage (input columns are still
-                # present in the annotated frame), never a second pass
-                for path, pred in named.items():
-                    items.append(
-                        F.when(~F.coalesce(pred, F.lit(False)), entry(name, path))
-                    )
-            elif name in kernel_verdicts and f"_verdict_{name}" in annotated.columns:
-                # kernel checks carry the evaluator's own error location:
-                # path/keyword/message from the materialized verdict struct
-                v = F.col(f"_verdict_{name}")
-                items.append(
-                    F.when(
-                        ~F.col(c),
-                        F.struct(
-                            F.lit(name).alias("check"),
-                            F.coalesce(v.getField("first_path"), F.lit("")).alias(
-                                "path"
-                            ),
-                            F.concat_ws(
-                                ": ",
-                                v.getField("first_keyword"),
-                                v.getField("first_message"),
-                            ).alias("detail"),
-                        ),
-                    )
-                )
-            else:
-                items.append(F.when(~F.col(c), entry(name, "")))
-        entries = F.filter(F.array(*items), lambda x: x.isNotNull())
-        # dynamic map keys (patternProperties/additionalProperties over
-        # arbitrary keys): the plan carries a runtime array of failing
-        # '/<key>' paths per row — same scan stage, concatenated in
-        def _tag(check_name: str):
-            # NOTE: must be unary — F.transform inspects lambda arity, and a
-            # second (defaulted) parameter would receive the element INDEX
-            return lambda x: F.struct(
-                F.lit(check_name).alias("check"),
-                x.getField("path").alias("path"),
-                x.getField("detail").alias("detail"),
+            per_check.append(
+                F.struct(F.lit(name).alias("check"), failures.alias("failures"))
             )
-
-        for name, arr in (getattr(self.plan, "detail_dynamic", None) or {}).items():
-            entries = F.concat(entries, F.transform(arr, _tag(name)))
         return (
-            annotated.select(F.col(self.id_column).alias("id"), entries.alias("failed"))
-            .filter(F.size("failed") > 0)
-            .select("id", F.explode("failed").alias("f"))
-            .select(
-                "id",
-                F.col("f.check").alias("check"),
-                F.col("f.path").alias("path"),
-                F.col("f.detail").alias("detail"),
-            )
+            annotated.filter(failed(F.col("_valid")))
+            .select(F.col(self.id_column).alias("id"), F.inline(F.array(*per_check)))
+            .select("id", "check", F.inline("failures"))
         )
 
     def quarantine(
@@ -211,59 +161,34 @@ class ValidationJob:
 
         Scale shape: both halves are filters over the SAME annotated
         scan-stage projection — no shuffle, no second pass; the
-        failed-check array is the in-stage filter(array(when...)) idiom
-        violations() uses, bounded by |checks|. A NULL ``_valid`` routes
+        failed-check array is bounded by |checks|. A NULL ``_valid`` routes
         to the quarantined half, so the two halves always partition the
         input."""
-        checks = self.check_columns(annotated)
-        drop = checks + ["_valid"] + [
-            c for c in annotated.columns if c.startswith("_verdict_")
-        ]
-        valid = F.coalesce(F.col("_valid"), F.lit(False))
-        accepted = annotated.filter(valid).drop(*drop)
-        failed = F.filter(
-            F.array(
-                *[
-                    F.when(
-                        ~F.coalesce(F.col(c), F.lit(False)),
-                        F.lit(c.removeprefix("chk_")),
-                    )
-                    for c in checks
-                ]
-            ),
-            lambda x: x.isNotNull(),
-        )
-        payload = [c for c in annotated.columns if c not in set(drop)]
-        quarantined = (
-            annotated.filter(~valid)
-            .select(
-                *payload,
-                F.size(failed).alias("n_failed"),
-                F.array_join(F.array_sort(failed), ",").alias(
-                    "failed_checks"
-                ),
-            )
+        drop = annotation_columns(annotated)
+        rejected = failed(F.col("_valid"))
+        accepted = annotated.filter(~rejected).drop(*drop)
+        names = failed_checks(self.check_columns(annotated))
+        quarantined = annotated.filter(rejected).select(
+            *[c for c in annotated.columns if c not in drop],
+            F.size(names).alias("n_failed"),
+            F.array_join(F.array_sort(names), ",").alias("failed_checks"),
         )
         return accepted, quarantined
 
-    def partition_lineage(self, annotated: DataFrame, unit: str = "auto") -> DataFrame:
+    def partition_lineage(self, annotated: DataFrame) -> DataFrame:
         """Per-unit pass/fail + per-check fail counts. Unit = input file name
         when present (stable across reruns → resumable), else partition id."""
-        checks = self.check_columns(annotated)
-        if unit == "auto":
-            unit_col = F.coalesce(
-                F.nullif(F.input_file_name(), F.lit("")),
-                F.concat(F.lit("partition:"), F.spark_partition_id().cast("string")),
-            )
-        else:
-            unit_col = F.col(unit)
         aggs = [
             F.count(F.lit(1)).alias("n_rows"),
             F.sum(F.col("_valid").cast("long")).alias("n_valid"),
         ]
-        for c in checks:
-            aggs.append(F.sum((~F.col(c)).cast("long")).alias(f"fail_{c.removeprefix('chk_')}"))
-        return annotated.groupBy(unit_col.alias("unit")).agg(*aggs)
+        for c in self.check_columns(annotated):
+            aggs.append(
+                F.sum(failed(F.col(c)).cast("long")).alias(
+                    f"fail_{c.removeprefix(CHECK_PREFIX)}"
+                )
+            )
+        return annotated.groupBy(_unit().alias("unit")).agg(*aggs)
 
     # ---- table-level checks --------------------------------------------------
 

@@ -38,6 +38,7 @@ Example::
 from __future__ import annotations
 
 import json
+import warnings
 from dataclasses import dataclass, field
 from typing import Optional
 
@@ -82,70 +83,116 @@ class TableSpec:
         return cls.from_dict(json.loads(text))
 
 
+CHECK_PREFIX = "chk_"
+VERDICT_PREFIX = "_verdict_"
+FAILURES_TYPE = "array<struct<path:string,detail:string>>"
+
+
+def failed(verdict: Column) -> Column:
+    """The failed-check test: a check fails unless its verdict is TRUE, so
+    a NULL verdict is a failure in every output that reads it."""
+    return ~F.coalesce(verdict, F.lit(False))
+
+
+def failure_entries(verdict: Column, path: Column, detail: Column) -> Column:
+    """One ``(path, detail)`` failure entry when ``verdict`` fails, else an
+    empty array — a CASE over literal arrays, so no higher-order function
+    runs per row."""
+    entry = F.struct(path.alias("path"), detail.cast("string").alias("detail"))
+    return F.when(failed(verdict), F.array(entry)).otherwise(
+        F.array().cast(FAILURES_TYPE)
+    )
+
+
+def check_columns(annotated: DataFrame) -> list:
+    """The ``chk_*`` verdict columns of an annotated frame, in order."""
+    return [c for c in annotated.columns if c.startswith(CHECK_PREFIX)]
+
+
+def annotation_columns(annotated: DataFrame) -> list:
+    """Every column annotation adds: the checks, the kernel verdict structs
+    and ``_valid`` — what a consumer strips to get the payload back."""
+    return [
+        c
+        for c in annotated.columns
+        if c.startswith((CHECK_PREFIX, VERDICT_PREFIX)) or c == "_valid"
+    ]
+
+
+def failed_checks(checks: list) -> Column:
+    """array<string> of the names (prefix stripped) of the failed ``chk_*``
+    columns among ``checks``, in the given order; bounded by |checks|."""
+    return F.filter(
+        F.array(
+            *[
+                F.when(failed(F.col(c)), F.lit(c.removeprefix(CHECK_PREFIX)))
+                for c in checks
+            ]
+        ),
+        lambda x: x.isNotNull(),
+    )
+
+
+@dataclass(frozen=True)
+class CompiledCheck:
+    """One compiled check. ``verdict`` is its boolean (True = pass);
+    ``failures`` its ``array<struct<path, detail>>`` of failure entries,
+    empty on a pass: per-field paths for struct and map columns (static
+    names, plus runtime '/<key>' paths for dynamically matched map keys),
+    the evaluator's first path/keyword/message for a JSON-text check, the
+    root path '' with the check's spec fragment otherwise. ``failures``
+    reads the annotated frame, so it is valid only on ``annotate``'s
+    output. ``kernel`` is the evaluator's verdict struct of a
+    ``json_columns`` check: annotate materializes it once as
+    ``_verdict_<name>`` and both ``verdict`` and ``failures`` read it."""
+
+    verdict: Column
+    failures: Column
+    kernel: Optional[Column] = None
+
+
+def _root_check(name: str, verdict: Column, detail: Optional[str]) -> CompiledCheck:
+    """A check reported at the root path: its failure entry reads the
+    annotated ``chk_`` column, so a kernel verdict is never recomputed."""
+    return CompiledCheck(
+        verdict,
+        failure_entries(F.col(CHECK_PREFIX + name), F.lit(""), F.lit(detail)),
+    )
+
+
 @dataclass
 class CompiledPlan:
-    """Named boolean check columns plus table-check descriptors; the verdict
-    select is one projection over the scan (zero extra passes)."""
+    """Compiled checks plus table-check descriptors; the verdict select is
+    one projection over the scan (zero extra passes)."""
 
     spec: TableSpec
-    checks: dict          # check name -> Column (True = pass; never NULL)
-    kernel_checks: dict   # check name -> Column (pandas-UDF backed)
+    checks: dict  # check name -> CompiledCheck; kernel-backed checks last
     unique: list
     references: dict
     drift: dict
-    # check name -> {json-pointer path -> Column}: per-field predicates for
-    # struct columns (conjunction == the check), so violations can report
-    # the failing field path (reference's path-wrapped errors)
-    detail: dict = field(default_factory=dict)
-    # check name -> {path -> spec-fragment JSON}: the constraint text at
-    # each detailed path (compile-time constant; the reference's keyword-
-    # bearing error messages, README.md:41-42)
-    detail_specs: dict = field(default_factory=dict)
-    # check name -> verdict STRUCT Column (valid, n_violations, first_path,
-    # first_keyword, first_message) for kernel-backed checks — annotate
-    # materializes the struct once and derives the boolean from it, so
-    # violations() can report the evaluator's own path/keyword/message
-    kernel_verdicts: dict = field(default_factory=dict)
-    # check name -> array<struct<path,detail>> Column of per-key failures on
-    # map keys matched only dynamically (patternProperties /
-    # additionalProperties) — their names exist only at runtime, so these
-    # paths can't live in `detail`'s static dict. Invariant (pinned by
-    # tests/test_violation_paths.py): AND(detail[name].values()) AND
-    # size(detail_dynamic[name]) == 0 == checks[name].
-    detail_dynamic: dict = field(default_factory=dict)
 
     @property
     def check_names(self) -> list:
-        return list(self.checks) + list(self.kernel_checks)
+        return list(self.checks)
 
-    def annotate(self, df: DataFrame, prefix: str = "chk_") -> DataFrame:
-        """df + one boolean column per check + `_valid` conjunction. Kernel
-        checks with a verdict struct land as `_verdict_<name>` + the
-        derived boolean — the kernel runs ONCE for both."""
+    def annotate(self, df: DataFrame) -> DataFrame:
+        """df + one boolean column per check + `_valid` conjunction. A
+        json_columns check lands as `_verdict_<name>` + the derived
+        boolean — the kernel runs ONCE for both."""
         out = df
         valid = F.lit(True)
-        for name, pred in self.checks.items():
-            out = out.withColumn(prefix + name, pred)
-            valid = valid & F.col(prefix + name)
-        for name, pred in self.kernel_checks.items():
-            verdict = self.kernel_verdicts.get(name)
-            if verdict is not None:
-                out = out.withColumn(f"_verdict_{name}", verdict)
-                out = out.withColumn(
-                    prefix + name, F.col(f"_verdict_{name}").getField("valid")
-                )
-            else:
-                out = out.withColumn(prefix + name, pred)
-            valid = valid & F.col(prefix + name)
+        for name, check in self.checks.items():
+            if check.kernel is not None:
+                out = out.withColumn(VERDICT_PREFIX + name, check.kernel)
+            out = out.withColumn(CHECK_PREFIX + name, check.verdict)
+            valid = valid & F.col(CHECK_PREFIX + name)
         return out.withColumn("_valid", valid)
 
 
 def compile_table_spec(spec: TableSpec, schema: T.StructType) -> CompiledPlan:
     checks: dict = {}
-    kernel_checks: dict = {}
-    detail: dict = {}
-    detail_dynamic: dict = {}
-    detail_specs: dict = {}
+    # kernel-backed checks follow the native ones in annotate's column order
+    kernel_backed: dict = {}
     fields = {f.name: f.dataType for f in schema.fields}
 
     for col_name, col_spec in spec.columns.items():
@@ -153,78 +200,85 @@ def compile_table_spec(spec: TableSpec, schema: T.StructType) -> CompiledPlan:
             raise SpecError(f"column {col_name!r} not in table schema")
         compiled = compile_spec(col_spec)
         name = f"col_{col_name}"
-        detail_specs[name] = {"": _spec_fragment_at(col_spec, "")}
+        root_spec = _spec_fragment_at(col_spec, "")
+        dtype = fields[col_name]
         try:
-            import warnings
-
             with warnings.catch_warnings(record=True) as caught:
                 warnings.simplefilter("always")
-                native = lower_predicate(
-                    compiled, F.col(col_name), fields[col_name]
-                )
-            precision_lost = any(
-                issubclass(c.category, PrecisionWarning) for c in caught
-            )
-            for c in caught:  # pass through anything we didn't handle
-                if not issubclass(c.category, PrecisionWarning):
-                    warnings.warn_explicit(c.message, c.category, c.filename, c.lineno)
-            if precision_lost and not isinstance(
-                fields[col_name], (T.StructType, T.MapType)
-            ):
-                # a bound beyond Spark's exact range (long / Decimal(38))
-                # would compile to a double approximation — route the check
-                # to the evaluator kernel's exact-Fraction math instead
-                # (reference: internal/jsonequal/equal.go:39-79 compares
-                # 1e1000 exactly via big.Rat)
-                kernel_checks[name] = value_validation_kernel(
-                    col_spec, F.col(col_name)
-                )
-                continue
-            checks[name] = native
-            if isinstance(fields[col_name], (T.StructType, T.MapType)):
-                dyn = lower_dynamic_key_violations(
-                    compiled, F.col(col_name), fields[col_name], raw_spec=col_spec
-                )
-                named = lower_named_predicates(
-                    compiled,
-                    F.col(col_name),
-                    fields[col_name],
-                    dynamic_paths=dyn is not None,
-                )
-                if dyn is not None:
-                    detail_dynamic[name] = dyn
-                if len(named) > 1 or dyn is not None:
-                    detail[name] = named
-                    detail_specs[name] = {
-                        path: _spec_fragment_at(col_spec, path) for path in named
-                    }
+                native = lower_predicate(compiled, F.col(col_name), dtype)
         except LoweringError:
-            if isinstance(fields[col_name], T.StringType):
-                # kernel fallback validates the cell as a raw string VALUE
-                # (json_columns is the explicit JSON-text path) — used when
-                # the native lowering refuses, e.g. the regex dialect gate
-                kernel_checks[name] = value_validation_kernel(
-                    col_spec, F.col(col_name)
-                )
-            else:
+            if not isinstance(dtype, T.StringType):
                 raise
+            # the kernel validates the cell as a raw string VALUE
+            # (json_columns is the explicit JSON-text path) — used when the
+            # native lowering refuses, e.g. the regex dialect gate
+            native, caught = None, []
+        precision_lost = False
+        for c in caught:
+            if issubclass(c.category, PrecisionWarning):
+                precision_lost = True
+            else:  # pass through anything we didn't handle
+                warnings.warn_explicit(c.message, c.category, c.filename, c.lineno)
+        if native is None or (
+            precision_lost and not isinstance(dtype, (T.StructType, T.MapType))
+        ):
+            # a bound beyond Spark's exact range (long / Decimal(38)) would
+            # compile to a double approximation — route the check to the
+            # evaluator kernel's exact-Fraction math instead (reference:
+            # internal/jsonequal/equal.go:39-79 compares 1e1000 exactly via
+            # big.Rat)
+            kernel_backed[name] = _root_check(
+                name, value_validation_kernel(col_spec, F.col(col_name)), root_spec
+            )
+            continue
+        check = _root_check(name, native, root_spec)
+        if isinstance(dtype, (T.StructType, T.MapType)):
+            dyn = lower_dynamic_key_violations(
+                compiled, F.col(col_name), dtype, raw_spec=col_spec
+            )
+            named = lower_named_predicates(
+                compiled, F.col(col_name), dtype, dynamic_paths=dyn is not None
+            )
+            if len(named) > 1 or dyn is not None:
+                # per-field predicates whose conjunction (with no dynamic
+                # failure) is the check, so each failure names its field
+                # path (the reference's path-wrapped errors); pinned by
+                # tests/test_violation_paths.py
+                entries = [
+                    failure_entries(
+                        pred, F.lit(path), F.lit(_spec_fragment_at(col_spec, path))
+                    )
+                    for path, pred in named.items()
+                ]
+                check = CompiledCheck(
+                    native, F.concat(*entries, *([dyn] if dyn is not None else []))
+                )
+        checks[name] = check
 
     for col_name in spec.required:
         if col_name not in fields:
             raise SpecError(f"required column {col_name!r} not in table schema")
-        checks[f"required_{col_name}"] = F.col(col_name).isNotNull()
+        name = f"required_{col_name}"
+        checks[name] = _root_check(name, F.col(col_name).isNotNull(), None)
 
-    for name, expr in spec.row_checks.items():
-        checks[f"row_{name}"] = F.coalesce(F.expr(expr), F.lit(False))
-        detail_specs[f"row_{name}"] = {"": expr}
+    for key, expr in spec.row_checks.items():
+        name = f"row_{key}"
+        checks[name] = _root_check(name, F.coalesce(F.expr(expr), F.lit(False)), expr)
 
-    kernel_verdicts: dict = {}
     for col_name, col_spec in spec.json_columns.items():
         if not isinstance(fields.get(col_name), T.StringType):
             raise SpecError(f"json column {col_name!r} must be a string column")
-        verdict = json_validation_kernel(col_spec, F.col(col_name))
-        kernel_verdicts[f"json_{col_name}"] = verdict
-        kernel_checks[f"json_{col_name}"] = verdict.getField("valid")
+        name = f"json_{col_name}"
+        v = F.col(VERDICT_PREFIX + name)
+        kernel_backed[name] = CompiledCheck(
+            v.getField("valid"),
+            failure_entries(
+                v.getField("valid"),
+                F.coalesce(v.getField("first_path"), F.lit("")),
+                F.concat_ws(": ", v.getField("first_keyword"), v.getField("first_message")),
+            ),
+            kernel=json_validation_kernel(col_spec, F.col(col_name)),
+        )
 
     for col_name in spec.unique:
         if col_name not in fields:
@@ -237,15 +291,10 @@ def compile_table_spec(spec: TableSpec, schema: T.StructType) -> CompiledPlan:
 
     return CompiledPlan(
         spec=spec,
-        checks=checks,
-        kernel_checks=kernel_checks,
+        checks={**checks, **kernel_backed},
         unique=list(spec.unique),
         references=dict(spec.references),
         drift=dict(spec.drift),
-        detail=detail,
-        detail_dynamic=detail_dynamic,
-        detail_specs=detail_specs,
-        kernel_verdicts=kernel_verdicts,
     )
 
 

@@ -21,15 +21,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from jsonschema_spark.plans.plan import CompiledPlan
+from jsonschema_spark.plans.plan import (
+    CHECK_PREFIX,
+    CompiledPlan,
+    annotation_columns,
+    check_columns,
+    failed,
+    failed_checks,
+)
 
 
-def _strip_annotation(df: DataFrame, prefix: str = "chk_") -> list:
-    return [
-        c
-        for c in df.columns
-        if c.startswith(prefix) or c.startswith("_verdict_")
-    ]
+def _checks(annotated: DataFrame) -> list:
+    checks = sorted(check_columns(annotated))
+    if not checks:
+        raise ValueError("no chk_* columns: annotate the frame first")
+    return checks
 
 
 def spec_rollout_audit(
@@ -50,10 +56,8 @@ def spec_rollout_audit(
     and referential verdicts are table-level jobs with their own outputs
     and don't belong in a per-row transition matrix.
     """
-    a = old_plan.annotate(df)
-    a = a.withColumnRenamed("_valid", "_valid_old").drop(
-        *_strip_annotation(a)
-    )
+    a = old_plan.annotate(df).withColumnRenamed("_valid", "_valid_old")
+    a = a.drop(*annotation_columns(a))
     b = new_plan.annotate(a).withColumnRenamed("_valid", "_valid_new")
     old_v = F.col("_valid_old")
     new_v = F.col("_valid_new")
@@ -106,18 +110,13 @@ def check_activation_profile(
     the per-check unpivot is a ``stack()`` over that one row,
     metadata-sized at any corpus size.
     """
-    checks = sorted(c for c in annotated.columns if c.startswith("chk_"))
-    if not checks:
-        raise ValueError("no chk_* columns: annotate the frame first")
+    checks = _checks(annotated)
     aggs = [F.count(F.lit(1)).alias("_n")] + [
-        F.sum((~F.coalesce(F.col(c), F.lit(False))).cast("long")).alias(
-            f"_f_{c}"
-        )
-        for c in checks
+        F.sum(failed(F.col(c)).cast("long")).alias(f"_f_{c}") for c in checks
     ]
     one = annotated.agg(*aggs)
     stack = ", ".join(
-        f"'{c.removeprefix('chk_')}', `_f_{c}`" for c in checks
+        f"'{c.removeprefix(CHECK_PREFIX)}', `_f_{c}`" for c in checks
     )
     return (
         one.selectExpr(
@@ -164,26 +163,12 @@ def violation_examples(
     """
     from jsonschema_spark.functions.text import portable_hash60
 
-    checks = sorted(c for c in annotated.columns if c.startswith("chk_"))
-    if not checks:
-        raise ValueError("no chk_* columns: annotate the frame first")
-    failed = F.filter(
-        F.array(
-            *[
-                F.when(
-                    ~F.coalesce(F.col(c), F.lit(False)),
-                    F.lit(c.removeprefix("chk_")),
-                )
-                for c in checks
-            ]
-        ),
-        lambda x: x.isNotNull(),
-    )
     from pyspark.sql import Window
 
     pairs = (
         annotated.select(
-            F.col(id_col).cast("string").alias("id"), failed.alias("_f")
+            F.col(id_col).cast("string").alias("id"),
+            failed_checks(_checks(annotated)).alias("_f"),
         )
         .filter(F.size("_f") > 0)
         .select("id", F.explode("_f").alias("check"))
@@ -232,18 +217,6 @@ def violation_cooccurrence(
     expansion of a per-row array bounded by the number of CHECKS (not
     data), and the final aggregate's key space is ≤ checks² rows.
     """
-    checks = sorted(
-        c for c in annotated.columns if c.startswith("chk_")
-    )
-    failed = F.filter(
-        F.array(
-            *[
-                F.when(~F.coalesce(F.col(c), F.lit(False)), F.lit(c.removeprefix("chk_")))
-                for c in checks
-            ]
-        ),
-        lambda x: x.isNotNull(),
-    )
     # unordered pairs via index-pairing over the (≤ #checks)-element array;
     # flatten(transform(transform)) stays a native HOF — no explode of a
     # Python product, no join
@@ -260,7 +233,7 @@ def violation_cooccurrence(
         )
     )
     return (
-        annotated.select(failed.alias("_failed"))
+        annotated.select(failed_checks(sorted(check_columns(annotated))).alias("_failed"))
         .filter(F.size("_failed") >= 2)
         .select(F.explode(pairs).alias("p"))
         .groupBy(

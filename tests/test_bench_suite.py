@@ -31,6 +31,12 @@ from jsonschema_spark.spec.model import parse_json
 BENCH_ROOT = "/root/reference/_bench"
 
 FAMILIES = sorted(os.listdir(BENCH_ROOT)) if os.path.isdir(BENCH_ROOT) else []
+# per-family cases, or one case that reports the corpus missing
+FAMILY_CASES = FAMILIES or [
+    pytest.param(
+        None, marks=pytest.mark.skip(reason=f"reference suite absent: {BENCH_ROOT}")
+    )
+]
 
 
 def _schema_bytes(family: str) -> bytes:
@@ -45,7 +51,7 @@ def _payloads(family: str):
             yield name, fh.read()
 
 
-@pytest.mark.parametrize("family", FAMILIES)
+@pytest.mark.parametrize("family", FAMILY_CASES)
 def test_bench_schema_compiles(family):
     """Every real-world schema compiles — deep $ref graphs (openapi /
     swagger definitions maps, the metaschema's recursive '#') included."""
@@ -53,7 +59,7 @@ def test_bench_schema_compiles(family):
     assert compiled is not None
 
 
-@pytest.mark.parametrize("family", FAMILIES)
+@pytest.mark.parametrize("family", FAMILY_CASES)
 def test_bench_payloads_validate_clean(family):
     """reference parity: require.NoError(s.Schema.Validate(data)) for
     every payload (validate_test.go:70)."""
@@ -65,7 +71,7 @@ def test_bench_payloads_validate_clean(family):
         )
 
 
-@pytest.mark.parametrize("family", FAMILIES)
+@pytest.mark.parametrize("family", FAMILY_CASES)
 def test_bench_negative_controls_reject(family):
     """Not vacuous: a bare scalar and an empty array violate every
     family schema (all 8 pin object/array document structure)."""

@@ -37,6 +37,10 @@ def remote_server():
 
 def _cases():
     if not os.path.isfile(REFREMOTE):
+        yield pytest.param(
+            None, None, None,
+            marks=pytest.mark.skip(reason=f"reference suite absent: {REFREMOTE}"),
+        )
         return
     with open(REFREMOTE) as fh:
         groups = json.load(fh)

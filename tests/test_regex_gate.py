@@ -94,6 +94,7 @@ def test_tablespec_verdicts_match_evaluator_on_divergent_corpus(spark, pat):
     string — i.e. the gate + kernel fallback preserves the engine's
     reference semantics where a raw rlike would silently diverge."""
     from jsonschema_spark.plans.plan import TableSpec, compile_table_spec
+    from jsonschema_spark.plans.audit import plan_report
     from jsonschema_spark.plans.job import ValidationJob
 
     rows = [(i, s) for i, s in enumerate(CORPUS)]
@@ -103,8 +104,8 @@ def test_tablespec_verdicts_match_evaluator_on_divergent_corpus(spark, pat):
         TableSpec.from_dict({"columns": {"s": spec_dict}}), df.schema
     )
     gated = bool(regex_dialect_risks(pat))
-    assert ("col_s" in plan.kernel_checks) == gated
-    assert ("col_s" in plan.checks) == (not gated)
+    verdict = df.select(plan.checks["col_s"].verdict)
+    assert plan_report(verdict)["arrow_python"] == gated
 
     ann = ValidationJob(plan, id_column="id").annotate(df)
     got = {r.id: bool(r.chk_col_s) for r in ann.collect()}

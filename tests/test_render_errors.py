@@ -9,6 +9,8 @@ row + its document back to the exact reference string.
 
 from __future__ import annotations
 
+import pytest
+
 from jsonschema_spark.spec.compile import compile_spec
 from jsonschema_spark.spec.evaluate import validate_value
 from jsonschema_spark.spec.model import parse_json
@@ -123,7 +125,7 @@ def test_render_never_raises_on_suite_corpus():
     suite_dir = "/root/reference/_testdata/suite/draft4"
     remotes = "/root/reference/_testdata/remotes"
     if not os.path.isdir(suite_dir):
-        return
+        pytest.skip(f"reference suite absent: {suite_dir}")
     resolver = file_map_resolver({"http://localhost:1234/": remotes})
     n_rendered = 0
     for fname in sorted(os.listdir(suite_dir)):

@@ -33,6 +33,10 @@ resolver = file_map_resolver({"http://localhost:1234/": REMOTES_DIR})
 
 def _load_cases(directory):
     if not os.path.isdir(directory):
+        yield pytest.param(
+            None, None, None,
+            marks=pytest.mark.skip(reason=f"reference suite absent: {directory}"),
+        )
         return
     for fname in sorted(os.listdir(directory)):
         if not fname.endswith(".json") or fname in SKIP_FILES:

@@ -14,6 +14,7 @@ from jsonschema_spark.compiler.columns import (
     lower_named_predicates,
     lower_predicate,
 )
+from jsonschema_spark.plans.audit import plan_report
 from jsonschema_spark.plans.job import ValidationJob
 from jsonschema_spark.plans.plan import TableSpec, compile_table_spec
 from jsonschema_spark.spec.compile import compile_spec
@@ -58,6 +59,17 @@ def docs(spark):
     return spark.createDataFrame(ROWS, DOC_TYPE)
 
 
+def _failure_paths(plan, name, annotated) -> set:
+    """(id, path) of every entry in check ``name``'s compiled failures."""
+    rows = annotated.select("id", plan.checks[name].failures.alias("f")).collect()
+    return {(r.id, e.path) for r in rows for e in r.f}
+
+
+def _on_kernel(df, check) -> bool:
+    """True iff the check's verdict runs in the Arrow-batched kernel."""
+    return plan_report(df.select(check.verdict))["arrow_python"]
+
+
 def test_named_conjunction_equals_single_predicate(spark, docs):
     compiled = compile_spec(DOC_SPEC)
     dtype = docs.schema["doc"].dataType
@@ -75,13 +87,13 @@ def test_violation_rows_carry_field_paths(spark, docs):
     plan = compile_table_spec(
         TableSpec.from_dict({"columns": {"doc": DOC_SPEC}}), docs.schema
     )
-    assert "col_doc" in plan.detail
     job = ValidationJob(plan, id_column="id")
     ann = job.annotate(docs)
     got = {
         (r.id, r.check, r.path)
         for r in job.violations(ann).collect()
     }
+    assert _failure_paths(plan, "col_doc", ann) == {(i, p) for i, _, p in got}
     assert got == {
         (2, "col_doc", "/name"),
         (3, "col_doc", "/n"),
@@ -102,10 +114,12 @@ def test_scalar_checks_report_root_path(spark):
         TableSpec.from_dict({"columns": {"v": {"minimum": 0}}}), df.schema
     )
     job = ValidationJob(plan, id_column="id")
-    rows = job.violations(job.annotate(df)).collect()
+    ann = job.annotate(df)
+    rows = job.violations(ann).collect()
     assert [(r.id, r.check, r.path, r.detail) for r in rows] == [
         (2, "col_v", "", '{"minimum":0}')
     ]
+    assert _failure_paths(plan, "col_v", ann) == {(2, "")}
 
 
 def test_detail_carries_violated_fragment(spark, docs):
@@ -256,10 +270,10 @@ def test_map_violations_pinpoint_declared_keys(spark, map_docs):
     plan = compile_table_spec(
         TableSpec.from_dict({"columns": {"doc": MAP_SPEC}}), map_docs.schema
     )
-    assert "col_doc" in plan.detail
-    assert "col_doc" in plan.detail_dynamic
     job = ValidationJob(plan, id_column="id")
-    got = {(r.id, r.path) for r in job.violations(job.annotate(map_docs)).collect()}
+    ann = job.annotate(map_docs)
+    got = {(r.id, r.path) for r in job.violations(ann).collect()}
+    assert _failure_paths(plan, "col_doc", ann) == got
     assert got == {
         (2, "/a"),
         (3, "/b"),
@@ -298,10 +312,11 @@ def test_dynamic_key_violations_carry_runtime_paths(spark, dyn_docs):
     plan = compile_table_spec(
         TableSpec.from_dict({"columns": {"doc": DYN_SPEC}}), dyn_docs.schema
     )
-    assert "col_doc" in plan.detail_dynamic
     job = ValidationJob(plan, id_column="id")
-    rows = job.violations(job.annotate(dyn_docs)).collect()
+    ann = job.annotate(dyn_docs)
+    rows = job.violations(ann).collect()
     got = {(r.id, r.path) for r in rows}
+    assert _failure_paths(plan, "col_doc", ann) == got
     assert got == {
         (2, "/n_bad"),
         (3, "/free"),
@@ -351,7 +366,7 @@ def test_beyond_decimal38_routes_to_exact_kernel(spark):
     plan = compile_table_spec(
         TableSpec.from_dict({"columns": {"v": {"minimum": B}}}), df.schema
     )
-    assert "col_v" in plan.kernel_checks and "col_v" not in plan.checks
+    assert _on_kernel(df, plan.checks["col_v"])
 
     job = ValidationJob(plan, id_column="id")
     got = {r.id for r in job.violations(job.annotate(df)).collect()}
@@ -368,7 +383,7 @@ def test_beyond_decimal38_routes_to_exact_kernel(spark):
     plan2 = compile_table_spec(
         TableSpec.from_dict({"columns": {"v": {"maximum": 10**1000}}}), df.schema
     )
-    assert "col_v" in plan2.kernel_checks
+    assert _on_kernel(df, plan2.checks["col_v"])
     job2 = ValidationJob(plan2, id_column="id")
     assert job2.violations(job2.annotate(df)).count() == 0  # all <= 1e1000
 
@@ -376,4 +391,4 @@ def test_beyond_decimal38_routes_to_exact_kernel(spark):
     plan3 = compile_table_spec(
         TableSpec.from_dict({"columns": {"v": {"minimum": 0}}}), df.schema
     )
-    assert "col_v" in plan3.checks and not plan3.kernel_checks
+    assert not _on_kernel(df, plan3.checks["col_v"])
