@@ -36,8 +36,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from jsonschema_spark.spec.compile import regex_dialect_risks
-from jsonschema_spark.spec.evaluate import _deref, is_valid
-from jsonschema_spark.spec.model import CompiledSchema
+from jsonschema_spark.spec.evaluate import is_valid
+from jsonschema_spark.spec.model import CompiledSchema, deref
+from jsonschema_spark.spec.pointer import escape_token
 
 
 class LoweringError(ValueError):
@@ -179,9 +180,9 @@ def lower_dynamic_key_violations(
     key, declared or not) and ``additionalProperties`` failures on keys
     matched by neither a declared name nor a pattern. The key names exist
     only at runtime, so unlike :func:`lower_named_predicates` (static paths)
-    this returns one runtime-computed ``'/<key>'`` path per failing entry —
-    the reference's per-key wrapped object errors for arbitrary keys
-    (/root/reference/validate.go:471-500).
+    this returns one runtime-computed, RFC 6901-escaped ``'/<key>'`` path
+    per failing entry — the reference's per-key wrapped object errors for
+    arbitrary keys (/root/reference/validate.go:471-500).
 
     Contract with ``lower_named_predicates(..., dynamic_paths=True)``:
     ``AND(static predicates) AND size(this) == 0  ==  lower_predicate``.
@@ -191,7 +192,7 @@ def lower_dynamic_key_violations(
     declared keys keep static-prefix reporting."""
     import json as _json
 
-    target = _deref(schema)
+    target = deref(schema)
     if (
         target is None
         or not isinstance(dtype, T.MapType)
@@ -225,7 +226,10 @@ def lower_dynamic_key_violations(
     def per_entry(kv: Column) -> Column:
         k = kv.getField("key")
         v = kv.getField("value")
-        path = F.concat(F.lit("/"), k)
+        # RFC 6901: "~" -> "~0" before "/" -> "~1"
+        path = F.concat(
+            F.lit("/"), F.replace(F.replace(k, F.lit("~"), F.lit("~0")), F.lit("/"), F.lit("~1"))
+        )
         cases = []
         for regex, child in s.pattern_properties:
             ok = F.coalesce(_lower(child, v, vtype, seen), F.lit(False))
@@ -274,10 +278,10 @@ def lower_named_predicates(
 ) -> dict:
     """Per-path boolean predicates whose conjunction equals
     ``lower_predicate``: for struct columns, each property subschema keys
-    under ``/<field>`` (recursively ``/a/b`` for nested structs) while every
-    schema-level constraint (type, enum, combinators, required,
-    min/maxProperties, dependencies) keys at ``''``. Non-struct dtypes yield
-    a single ``''`` entry.
+    under ``/<field>`` (RFC 6901-escaped; recursively ``/a/b`` for nested
+    structs) while every schema-level constraint (type, enum, combinators,
+    required, min/maxProperties, dependencies) keys at ``''``. Non-struct
+    dtypes yield a single ``''`` entry.
 
     This is how the native path recovers the reference's path-wrapped error
     locations (validate.go:74,346,500): ValidationJob.violations evaluates
@@ -296,7 +300,7 @@ def lower_named_predicates(
     ``AND(static) AND size(dynamic) == 0 == lower_predicate``."""
     import dataclasses
 
-    target = _deref(schema)
+    target = deref(schema)
     if (
         target is not None
         and isinstance(dtype, T.MapType)
@@ -309,15 +313,16 @@ def lower_named_predicates(
         entries = {}
         for name, child in s.properties.items():
             v = F.element_at(col, F.lit(name))
+            path = "/" + escape_token(name)
             # absent key / NULL map: a property doesn't constrain
             guard = ~F.coalesce(F.map_contains_key(col, F.lit(name)), F.lit(False))
-            if isinstance(vtype, (T.StructType, T.MapType)) and _deref(child) is not None:
+            if isinstance(vtype, (T.StructType, T.MapType)) and deref(child) is not None:
                 for p, pred in lower_named_predicates(child, v, vtype).items():
-                    entries[f"/{name}{p}"] = F.when(guard, F.lit(True)).otherwise(
+                    entries[path + p] = F.when(guard, F.lit(True)).otherwise(
                         F.coalesce(pred, F.lit(False))
                     )
             else:
-                entries[f"/{name}"] = F.when(guard, F.lit(True)).otherwise(
+                entries[path] = F.when(guard, F.lit(True)).otherwise(
                     F.coalesce(_lower(child, v, vtype, seen), F.lit(False))
                 )
         # root keeps everything else; declared property VALUES are already
@@ -352,21 +357,22 @@ def lower_named_predicates(
             if regex.search(name) is not None:
                 applied.append(child)
         fcol = col.getField(name)
+        path = "/" + escape_token(name)
         # absent member (NULL field) / NULL object: properties don't constrain
         guard = col.isNull() | fcol.isNull()
         if applied:
             for child in applied:
-                if isinstance(ftype, T.StructType) and _deref(child) is not None:
+                if isinstance(ftype, T.StructType) and deref(child) is not None:
                     for p, pred in lower_named_predicates(child, fcol, ftype).items():
-                        put(f"/{name}{p}", pred, guard)
+                        put(path + p, pred, guard)
                 else:
-                    put(f"/{name}", _lower(child, fcol, ftype, seen), guard)
+                    put(path, _lower(child, fcol, ftype, seen), guard)
         elif s.additional_properties is False:
-            entries[f"/{name}"] = F.when(col.isNull(), F.lit(True)).otherwise(
+            entries[path] = F.when(col.isNull(), F.lit(True)).otherwise(
                 fcol.isNull()
             )
         elif isinstance(s.additional_properties, CompiledSchema):
-            put(f"/{name}", _lower(s.additional_properties, fcol, ftype, seen), guard)
+            put(path, _lower(s.additional_properties, fcol, ftype, seen), guard)
 
     root = dataclasses.replace(
         s, properties={}, pattern_properties=[], additional_properties=None
@@ -378,7 +384,7 @@ def lower_named_predicates(
 def _lower(
     schema: CompiledSchema, col: Column, dtype: T.DataType, seen: frozenset
 ) -> Column:
-    target = _deref(schema)
+    target = deref(schema)
     if target is None:
         return F.lit(True)  # degenerate pure-$ref cycle: no reachable constraints
     if id(target) in seen:
@@ -564,7 +570,7 @@ def _bounds_only_items(
     evaluation (the hottest expression of the corpus validation pass; see
     BASELINE.md). Null elements fail the numeric type check in the general
     path, so the fast path adds an explicit no-nulls guard for parity."""
-    target = _deref(items)
+    target = deref(items)
     if target is None or not isinstance(elem_type, _INTEGRAL):
         return None
     simple_type = not target.types or set(target.types) <= {"integer", "number"}

@@ -1,5 +1,5 @@
-"""Arrow-batched pandas-UDF kernel: validate a column of raw JSON text
-against a compiled spec.
+"""Arrow-batched pandas-UDF kernels: validate a column of raw JSON text (or
+raw typed values) against a compiled spec.
 
 This is the fallback path for constraints a native ``Column`` cannot express
 (recursive specs over free-form JSON, composite enum variants, ...). Data
@@ -8,7 +8,16 @@ crosses the JVM↔Python boundary once per Arrow batch — never per row.
 The spec travels to executors as its *source JSON text* (tiny, stable), and
 each executor process compiles it exactly once (module-level cache keyed by
 text), mirroring the reference's compile-once contract
-(/root/reference/compiler.go:48-247) in a distributed setting.
+(/root/reference/compiler.go:48-247) in a distributed setting. The
+evaluator's closures are built on the first document and cached on the
+compiled spec, so they are built once per executor process too.
+
+Kernels that only need the verdict (``value_validation_kernel``,
+``multi_spec_validity_kernel``) run the evaluator's fail-fast boolean mode.
+``json_validation_kernel`` runs ``validate_json``: fail-fast with float
+numbers first, so a valid document costs one plain ``json.loads`` and one
+short-circuiting walk; only a failing document collects its violations for
+``n_violations`` and the ``first_*`` fields.
 """
 
 from __future__ import annotations
@@ -124,12 +133,10 @@ def value_validation_kernel(spec: dict | str, value_col: Column) -> Column:
 
     @F.pandas_udf(T.BooleanType())
     def _validate(batch: pd.Series) -> pd.Series:
-        from jsonschema_spark.spec.evaluate import validate_value
+        from jsonschema_spark.spec.evaluate import is_valid
 
         compiled = _compiled(spec_text)
-        return pd.Series(
-            [not validate_value(compiled, _as_json_value(v)) for v in batch]
-        )
+        return pd.Series([is_valid(compiled, _as_json_value(v)) for v in batch])
 
     return _validate(value_col)
 
@@ -145,16 +152,16 @@ def multi_spec_validity_kernel(specs: list, idx_col: Column, doc_col: Column) ->
 
     @F.pandas_udf(T.BooleanType())
     def _validate(idx: pd.Series, docs: pd.Series) -> pd.Series:
-        from jsonschema_spark.spec.evaluate import validate_json, validate_value
+        from jsonschema_spark.spec.evaluate import is_valid, is_valid_json
 
         compiled = [_compiled(t) for t in specs_text]
         out = []
         for i, text in zip(idx, docs):
             schema = compiled[int(i)]
             if text is None:
-                out.append(not validate_value(schema, None))
+                out.append(is_valid(schema, None))
             else:
-                out.append(not validate_json(schema, text))
+                out.append(is_valid_json(schema, text))
         return pd.Series(out)
 
     return _validate(idx_col, doc_col)

@@ -142,6 +142,13 @@ class ValidationJob:
             per_check.append(
                 F.struct(F.lit(name).alias("check"), failures.alias("failures"))
             )
+        if not per_check:
+            # no row checks (e.g. only `unique`): nothing fails, and an empty
+            # array literal would have no element type to inline
+            return annotated.select(
+                F.col(self.id_column).alias("id"),
+                *[F.lit(None).cast("string").alias(c) for c in ("check", "path", "detail")],
+            ).filter(F.lit(False))
         return (
             annotated.filter(failed(F.col("_valid")))
             .select(F.col(self.id_column).alias("id"), F.inline(F.array(*per_check)))

@@ -55,6 +55,7 @@ from jsonschema_spark.compiler.columns import (
 )
 from jsonschema_spark.compiler.kernel import json_validation_kernel, value_validation_kernel
 from jsonschema_spark.spec.compile import SpecError, compile_spec
+from jsonschema_spark.spec.pointer import split_pointer
 
 
 @dataclass
@@ -304,12 +305,11 @@ def _spec_fragment_at(raw_spec: dict, path: str) -> Optional[str]:
     only via patternProperties/additionalProperties yield None (the path
     alone still locates the failure)."""
     node = raw_spec
-    if path:
-        for token in path.lstrip("/").split("/"):
-            props = node.get("properties") if isinstance(node, dict) else None
-            if not isinstance(props, dict) or token not in props:
-                return None
-            node = props[token]
+    for token in split_pointer(path):
+        props = node.get("properties") if isinstance(node, dict) else None
+        if not isinstance(props, dict) or token not in props:
+            return None
+        node = props[token]
     try:
         return json.dumps(node, sort_keys=True, separators=(",", ":"))
     except (TypeError, ValueError):

@@ -43,14 +43,31 @@ ALL_TYPES = frozenset(
 NumberLike = Union[int, Fraction]
 
 
+def _not_json(token: str) -> Any:
+    raise ValueError(f"{token} is not a JSON value (RFC 8259)")
+
+
 def parse_json(text: Union[str, bytes]) -> Any:
     """Parse JSON with exact-rational numbers.
 
     Floats become ``Fraction`` (exact decimal value, any magnitude — e.g.
     ``1e1000`` round-trips exactly); ints stay ``int``. Raises ``ValueError``
-    on malformed input.
+    on malformed input, including the ``NaN``/``Infinity`` tokens that
+    Python's decoder would otherwise accept.
     """
-    return json.loads(text, parse_float=Fraction)
+    return json.loads(text, parse_float=Fraction, parse_constant=_not_json)
+
+
+_FLOAT_DECODER = json.JSONDecoder(parse_constant=_not_json)
+
+
+def parse_json_float(text: Union[str, bytes]) -> Any:
+    """Parse JSON with floats as ``float``: the evaluator's fast first pass
+    (spec/evaluate.py re-parses with :func:`parse_json` when a float cannot
+    settle a decision). Same errors as :func:`parse_json`."""
+    if isinstance(text, str):
+        return _FLOAT_DECODER.decode(text)
+    return json.loads(text, parse_constant=_not_json)
 
 
 def is_json_integer(value: Any) -> bool:
@@ -110,11 +127,19 @@ def json_equal(a: Any, b: Any) -> bool:
     return a == b
 
 
-def json_contains(items: list, value: Any) -> bool:
-    return any(json_equal(value, item) for item in items)
-
-
 # --- Compiled check tree -----------------------------------------------------
+
+
+def deref(schema: "CompiledSchema") -> Optional["CompiledSchema"]:
+    """Follow $ref indirection; a degenerate pure-ref cycle has no reachable
+    constraints and therefore accepts everything (returns None)."""
+    seen = set()
+    while schema.ref is not None:
+        if id(schema) in seen:
+            return None
+        seen.add(id(schema))
+        schema = schema.ref
+    return schema
 
 
 @dataclass
@@ -174,45 +199,5 @@ class CompiledSchema:
     # provenance for error paths / plan naming
     source_uri: str = ""
 
-    def has_number_checks(self) -> bool:
-        return (
-            self.minimum is not None
-            or self.maximum is not None
-            or self.multiple_of is not None
-        )
-
-    def has_string_checks(self) -> bool:
-        return (
-            self.min_length is not None
-            or self.max_length is not None
-            or self.pattern is not None
-        )
-
-    def has_array_checks(self) -> bool:
-        return (
-            self.min_items is not None
-            or self.max_items is not None
-            or self.unique_items
-            or self.items is not None
-            or self.additional_items is not None
-        )
-
-    def has_object_checks(self) -> bool:
-        return bool(
-            self.properties
-            or self.pattern_properties
-            or self.additional_properties is not None
-            or self.required
-            or self.dependencies
-            or self.min_properties is not None
-            or self.max_properties is not None
-        )
-
-    def has_combinators(self) -> bool:
-        return bool(
-            self.enum is not None
-            or self.all_of
-            or self.any_of
-            or self.one_of
-            or self.not_ is not None
-        )
+    # evaluator closures (spec/evaluate.py), built on first use, keyed by mode
+    closures: dict = field(default_factory=dict, init=False, repr=False, compare=False)

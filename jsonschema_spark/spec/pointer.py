@@ -12,6 +12,11 @@ class PointerError(ValueError):
     pass
 
 
+def escape_token(token: str) -> str:
+    # order matters: ~ before / (RFC 6901 §3)
+    return token.replace("~", "~0").replace("/", "~1")
+
+
 def unescape_token(token: str) -> str:
     # order matters: ~1 before ~0 (RFC 6901 §4)
     return token.replace("~1", "/").replace("~0", "~")

@@ -8,13 +8,16 @@ reports the same metric for BOTH of our execution paths:
 
 1. ``evaluator`` — the single-threaded pure-Python evaluator, the
    apples-to-apples analog of the reference's single-threaded Go walk
-   (expected slower: interpreted Python vs compiled Go; it exists for
-   semantics, not throughput), and
+   (expected slower: interpreted Python vs compiled Go, though it runs
+   each schema as closures built once and stops at the first failure,
+   like the reference), and
 2. ``kernel`` — the Arrow-batched Spark kernel over a corpus of payload
    copies on local[N]: the engine's actual serving shape, where the
    table-scale design earns back the per-document constant.
 
-Writes BENCH/refbench.json and prints one JSON line per family.
+Writes BENCH/refbench.json and prints one JSON line per family. Exits
+with code 2 and ``reference suite absent: <path>`` when the reference's
+``_bench`` directory is not on the machine.
 
 Usage: python scripts/refbench.py [--families geojson,swagger]
        [--target-mb 64] [--cores 32] [--evaluator-sec 1.0]
@@ -59,6 +62,9 @@ def main() -> int:
     )
     args = ap.parse_args()
     only = set(args.families.split(",")) if args.families else None
+    if not os.path.isdir(BENCH_ROOT):
+        print(f"reference suite absent: {BENCH_ROOT}", file=sys.stderr)
+        return 2
 
     from jsonschema_spark.compiler.kernel import multi_spec_validity_kernel
     from jsonschema_spark.sources.session import get_spark

@@ -111,3 +111,20 @@ def test_bench_kernel_path_one_job(spark):
         if bool(r["got"]) != r["valid"]
     ]
     assert not mismatches, "\n".join(mismatches)
+
+
+def test_refbench_reports_absent_reference(tmp_path, monkeypatch, capsys):
+    """scripts/refbench.py exits 2 with the same reason the tests give,
+    before starting Spark, when the reference's _bench tree is missing."""
+    import importlib.util
+    import sys
+
+    path = os.path.join(os.path.dirname(__file__), os.pardir, "scripts", "refbench.py")
+    spec = importlib.util.spec_from_file_location("refbench", path)
+    refbench = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(refbench)
+    absent = str(tmp_path / "_bench")
+    monkeypatch.setattr(refbench, "BENCH_ROOT", absent)
+    monkeypatch.setattr(sys, "argv", ["refbench.py"])
+    assert refbench.main() == 2
+    assert capsys.readouterr().err.strip() == f"reference suite absent: {absent}"

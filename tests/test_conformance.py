@@ -15,8 +15,11 @@ job. The last column says what the native leg must do:
 
 No row is skipped, so neither backend can silently collect zero cases.
 
-Schemas and instances are JSON text, parsed with the engine's exact-number
-parser, so ``1e1000`` is compared as a rational, never as a float.
+Schemas and instances are JSON text. The evaluator leg runs each row twice:
+on the value from the engine's exact-number parser (so ``1e1000`` is
+compared as a rational, never as a float), and on the text through
+``validate_json``, which parses floats first and must re-parse exactly when
+a float cannot settle the decision (the ``tie/`` rows).
 """
 
 from __future__ import annotations
@@ -27,7 +30,7 @@ from fractions import Fraction
 import pytest
 
 from jsonschema_spark.spec.compile import compile_spec
-from jsonschema_spark.spec.evaluate import is_valid
+from jsonschema_spark.spec.evaluate import Violation, is_valid, validate_json
 from jsonschema_spark.spec.model import parse_json
 
 EXACT, DOUBLE, REFUSED = "exact", "double", "refused"
@@ -75,12 +78,46 @@ TABLE = [
     ("unique/nested-arrays", '{"uniqueItems": true}', "[[1, 2], [2, 1]]", True, EXACT),
 ]
 
-IDS = [row[0] for row in TABLE]
+# Text-path ties: the instance's nearest double cannot decide the keyword
+# (it equals the bound's double, is integral, or equals an enum number), so
+# validate_json must re-parse the text exactly. Evaluator-only (native None):
+# a double column holds the nearest double, and the native leg compares it
+# with the bound's double, so a native leg would test that rounding instead.
+TIES = [
+    ("tie/maximum-equal", '{"maximum": 0.1}', "0.1", True, None),
+    ("tie/maximum-above", '{"maximum": 0.1}', "0.10000000000000000001", False, None),
+    ("tie/integer-near-one", '{"type": "integer"}', "1.0000000000000001", False, None),
+    ("tie/enum-near-one", '{"enum": [1]}', "1.0000000000000001", False, None),
+    ("tie/minimum-overflow", '{"minimum": 1e1000}', "1e400", False, None),
+]
+
+IDS = [row[0] for row in TABLE + TIES]
 
 
-@pytest.mark.parametrize("case_id,schema,instance,valid,native", TABLE, ids=IDS)
+@pytest.mark.parametrize("case_id,schema,instance,valid,native", TABLE + TIES, ids=IDS)
 def test_evaluator(case_id, schema, instance, valid, native):
     assert is_valid(compile_spec(schema), parse_json(instance)) is valid
+    assert (not validate_json(compile_spec(schema), instance)) is valid
+
+
+# RFC 8259 has no NaN or Infinity; Python's decoder accepts the tokens
+NOT_JSON = [
+    ("nan/minimum", '{"minimum": 0}', "NaN"),
+    ("infinity/number", '{"type": "number"}', "Infinity"),
+    ("neg-infinity/number", '{"type": "number"}', "-Infinity"),
+    ("nan/in-array", '{"items": {"minimum": 0}}', "[NaN]"),
+]
+
+
+@pytest.mark.parametrize(
+    "case_id,schema,instance", NOT_JSON, ids=[row[0] for row in NOT_JSON]
+)
+def test_non_json_number_tokens_are_invalid_json(case_id, schema, instance):
+    assert validate_json(compile_spec(schema), instance) == [
+        Violation("", "json", "invalid json")
+    ]
+    with pytest.raises(ValueError):
+        parse_json(instance)
 
 
 def _lower(schema: str, instance: str):

@@ -11,17 +11,22 @@ combinator composition):
 - a singleton ``enum`` accepts exactly structural equality
 - every value satisfies its own JSON type; integral numbers also
   satisfy ``integer`` (value-not-lexeme, validate.go:220-229)
+- the float-first text path agrees with the exact path on decimal texts
+  at and next to numeric bounds, ``multipleOf`` and ``enum`` values
 
 Pure Python — no Spark session.
 """
 
 from __future__ import annotations
 
+import math
+from fractions import Fraction
+
 from hypothesis import given, settings, strategies as st
 
 from jsonschema_spark.spec.compile import compile_spec
-from jsonschema_spark.spec.evaluate import is_valid
-from jsonschema_spark.spec.model import json_equal, json_type
+from jsonschema_spark.spec.evaluate import is_valid, validate_json, validate_value
+from jsonschema_spark.spec.model import json_equal, json_type, parse_json
 
 # JSON values: no NaN/inf (not JSON), bounded depth/size for speed
 _scalars = st.one_of(
@@ -113,3 +118,68 @@ def test_oneof_with_disjoint_pair(schema, value):
     assert is_valid(
         compile_spec({"oneOf": [schema, {"not": schema}]}), value
     )
+
+
+# decimal texts "<mantissa>e<exponent>", small and past the double range
+_decimals = st.builds(
+    "{}e{}".format,
+    st.integers(min_value=-(10**20), max_value=10**20),
+    st.one_of(st.integers(-30, 30), st.integers(-330, 330)),
+)
+
+
+def _near(bound: str) -> st.SearchStrategy:
+    """Texts equal to ``bound``, past double precision on either side of
+    it, or on its double and the double's neighbours."""
+    m, e = (int(part) for part in bound.split("e"))
+    texts = [
+        bound,
+        f"{m}.0e{e}",
+        f"{m * 10**20 - 1}e{e - 20}",
+        f"{m * 10**20 + 1}e{e - 20}",
+    ]
+    try:
+        f = float(Fraction(bound))
+    except OverflowError:
+        f = math.inf
+    if math.isfinite(f):
+        texts += [repr(f), repr(math.nextafter(f, math.inf)), repr(math.nextafter(f, -math.inf))]
+    return st.sampled_from(texts)
+
+
+@st.composite
+def _numeric_cases(draw):
+    bound = draw(_decimals)
+    kind = draw(st.sampled_from(
+        ["minimum", "maximum", "exclusiveMinimum", "exclusiveMaximum",
+         "multipleOf", "enum", "integer", "uniqueItems"]
+    ))
+    text = draw(_near(bound))
+    if kind.startswith("exclusive"):
+        bound_kw = "minimum" if kind == "exclusiveMinimum" else "maximum"
+        schema = '{"%s": %s, "%s": true}' % (bound_kw, bound, kind)
+    elif kind == "multipleOf":
+        schema = '{"multipleOf": %s}' % bound.lstrip("-")
+        if Fraction(bound) == 0:
+            schema = '{"multipleOf": 1e-3}'
+    elif kind == "enum":
+        schema = '{"enum": [%s, [%s]]}' % (bound, bound)
+        text = draw(st.sampled_from([text, f"[{text}]"]))
+    elif kind == "integer":
+        schema = '{"type": "integer"}'
+    elif kind == "uniqueItems":
+        schema = '{"uniqueItems": true}'
+        text = f"[{text}, {bound}]"
+    else:
+        schema = '{"%s": %s}' % (kind, bound)
+    return schema, text
+
+
+@settings(max_examples=400, deadline=None)
+@given(case=_numeric_cases())
+def test_float_first_text_path_matches_exact_values(case):
+    """validate_json parses floats first and re-parses exactly on a tie;
+    its violations must be those of the exact parse."""
+    schema, text = case
+    compiled = compile_spec(schema)
+    assert validate_json(compiled, text) == validate_value(compiled, parse_json(text))

@@ -75,6 +75,13 @@ def test_bounds_render_rational_like_big_rat():
     assert out == "number: value 2/1 is smaller than 3/1"
 
 
+def test_key_with_pointer_escapes():
+    """A key holding '/' and '~' travels as one RFC 6901 token ('~1',
+    '~0') and renders as the original key."""
+    out = _render_first('{"properties": {"a/b~c": {"type": "string"}}}', '{"a/b~c": 1}')
+    assert out == 'object: "a/b~c": number: type is not allowed'
+
+
 def test_length_literals():
     out = _render_first('{"maxLength": 2}', '"abc"')
     assert out == "string: length is bigger than 2"
@@ -155,6 +162,8 @@ RENDER_CORPUS = [
     ("ref/recursive",
      '{"properties": {"child": {"$ref": "#"}}, "additionalProperties": false}',
      '{"child": {"bad": 1}}'),
+    ("key/pointer-escapes", '{"properties": {"a/b~c": {"type": "string"}}}',
+     '{"a/b~c": 1}'),
 ]
 
 FIRST_FRAMES = {

@@ -176,6 +176,7 @@ def test_kernel_json_violations_carry_evaluator_paths(spark):
         (2, '{"k": -1}'),
         (3, '{"nope": 1}'),
         (4, "not json"),
+        (5, '{"k": NaN}'),  # not JSON (RFC 8259), though Python's decoder takes it
     ]
     df = spark.createDataFrame(rows, "id long, payload string")
     spec = TableSpec.from_dict(
@@ -195,10 +196,11 @@ def test_kernel_json_violations_carry_evaluator_paths(spark):
         r.id: (r.check, r.path, r.detail)
         for r in job.violations(job.annotate(df)).collect()
     }
-    assert set(got) == {2, 3, 4}
+    assert set(got) == {2, 3, 4, 5}
     assert got[2] == ("json_payload", "/k", "minimum: value must be >= 0")
     assert got[3][1] == "" and got[3][2].startswith("required")
     assert got[4][2].startswith("json")
+    assert got[5] == ("json_payload", "", "json: invalid json")
 
 
 def test_precision_warning_beyond_decimal38(spark):
@@ -392,3 +394,39 @@ def test_beyond_decimal38_routes_to_exact_kernel(spark):
         TableSpec.from_dict({"columns": {"v": {"minimum": 0}}}), df.schema
     )
     assert not _on_kernel(df, plan3.checks["col_v"])
+
+
+def test_struct_field_paths_escape_pointer_characters(spark):
+    """A field named 'a/b~c' is one RFC 6901 token: '/a~1b~0c'."""
+    df = spark.createDataFrame([(1, (5,)), (2, (-1,))], "id long, doc struct<`a/b~c`: long>")
+    spec = {"properties": {"a/b~c": {"minimum": 0}}}
+    plan = compile_table_spec(TableSpec.from_dict({"columns": {"doc": spec}}), df.schema)
+    job = ValidationJob(plan, id_column="id")
+    rows = job.violations(job.annotate(df)).collect()
+    assert [(r.id, r.path, r.detail) for r in rows] == [(2, "/a~1b~0c", '{"minimum":0}')]
+
+
+def test_map_key_paths_escape_pointer_characters(spark):
+    """Declared (static) and dynamic map keys escape '~' and '/' alike."""
+    df = spark.createDataFrame(
+        [(1, {"a/b": 1}), (2, {"a/b": -1}), (3, {"x/y~z": 1})],
+        "id long, doc map<string, long>",
+    )
+    spec = {"properties": {"a/b": {"minimum": 0}}, "additionalProperties": False}
+    plan = compile_table_spec(TableSpec.from_dict({"columns": {"doc": spec}}), df.schema)
+    job = ValidationJob(plan, id_column="id")
+    got = {(r.id, r.path) for r in job.violations(job.annotate(df)).collect()}
+    assert got == {(2, "/a~1b"), (3, "/x~1y~0z")}
+
+
+def test_violations_of_a_plan_without_row_checks(spark, tmp_path):
+    """A spec with only table-level checks has no per-row check array:
+    violations() is empty with its usual columns, and run() completes."""
+    df = spark.createDataFrame([(1,), (1,), (2,)], "id long")
+    plan = compile_table_spec(TableSpec.from_dict({"unique": ["id"]}), df.schema)
+    job = ValidationJob(plan, id_column="id")
+    violations = job.violations(job.annotate(df))
+    assert violations.columns == ["id", "check", "path", "detail"]
+    assert violations.count() == 0
+    summary = job.run(df, str(tmp_path / "results"))
+    assert summary["n_invalid"] == 0 and summary["duplicates"] == {"id": 1}
