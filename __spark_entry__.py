@@ -252,7 +252,7 @@ def q_dup_keys(spark, sf_dir):
 
 
 def q_orphans(spark, sf_dir):
-    """SURVEY §2.3: referential check via broadcast anti-join (dimension =
+    """SURVEY §2.3: referential check via domain membership (dimension =
     customers with even custkey, so orphans provably exist)."""
     from jsonschema_spark.operators.referential import orphan_key_counts
 
@@ -810,6 +810,7 @@ def oracle_sql() -> dict[str, str]:
         ),
         "dup_keys": (
             "SELECT o_custkey, count(*) AS dup_count FROM orders"
+            " WHERE o_custkey IS NOT NULL"
             " GROUP BY o_custkey HAVING count(*) > 1"
         ),
         "orphans": (

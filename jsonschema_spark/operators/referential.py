@@ -2,9 +2,15 @@
 (/root/reference/validate.go:79-98) lifted from a static variant list to a
 dynamic domain given by a dimension table (SURVEY.md §2.3).
 
-The dimension is small by construction (a source registry), so the check is
-a *broadcast* left-anti join: the fact side streams through executors once,
-probing an in-memory hash set — no shuffle of the 10^12-row side, ever.
+``domain_flag`` is the one membership test: a small domain compiles to an
+isin set inside the verdict codegen stage, a large one to a
+(broadcast-eligible) join against the distinct keys, so the fact side is
+never shuffled for a small dimension. ``ValidationJob.annotate`` adds it as
+the ``chk_ref_<col>`` verdict. Orphan keys are the rows whose flag failed,
+counted per key with the salted two-phase aggregation
+(``uniqueness.salted_key_counts``). ``ValidationJob.run`` counts them from
+the annotated ``chk_ref_<col>`` flag, so the domain is resolved once per
+run.
 """
 
 from __future__ import annotations
@@ -12,39 +18,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def orphan_rows(
-    fact: DataFrame, fact_key: str, dim: DataFrame, dim_key: str
-) -> DataFrame:
-    """Rows of ``fact`` whose ``fact_key`` has no match in ``dim.dim_key``.
-    NULL keys are not orphans (missingness is the `required` check's job)."""
-    dim_keys = dim.select(F.col(dim_key).alias(fact_key)).distinct()
-    return fact.filter(F.col(fact_key).isNotNull()).join(
-        F.broadcast(dim_keys), on=fact_key, how="left_anti"
-    )
+from jsonschema_spark.operators.uniqueness import salted_key_counts
 
 
 def orphan_key_counts(
     fact: DataFrame, fact_key: str, dim: DataFrame, dim_key: str,
     salt_buckets: int = 64,
 ) -> DataFrame:
-    """``(fact_key, n_rows)`` per distinct orphan key, via two-phase salted
-    aggregation: orphan keys are adversarially skewed by nature (one
-    unregistered source typically accounts for most violations — our
-    injected corpus does exactly this), so phase 1 groups by (salt, key)
-    splitting any hot key across salt_buckets reducers; phase 2 sums ≤
-    salt_buckets partials per key."""
-    salted = (
-        orphan_rows(fact, fact_key, dim, dim_key)
-        .select(F.col(fact_key).alias("key"))
-        .withColumn("salt", F.pmod(F.spark_partition_id(), F.lit(salt_buckets)))
-        .groupBy("salt", "key")
-        .agg(F.count(F.lit(1)).alias("partial"))
-    )
-    return (
-        salted.groupBy("key")
-        .agg(F.sum("partial").alias("n_rows"))
-        .select(F.col("key").alias(fact_key), "n_rows")
+    """``(fact_key, n_rows)`` per distinct key of ``fact`` that is not in
+    ``dim.dim_key``: the salted count over the rows ``domain_flag`` fails
+    (its flag is never NULL). NULL keys are not orphans (missingness is the
+    `required` check's job). Orphan keys are adversarially skewed by nature
+    (one unregistered source typically accounts for most violations — our
+    injected corpus does exactly this), hence the salt."""
+    flagged = domain_flag(fact, fact_key, dim, dim_key, "_in_dim")
+    return salted_key_counts(
+        flagged.filter(~F.col("_in_dim")), fact_key, "n_rows", salt_buckets
     )
 
 

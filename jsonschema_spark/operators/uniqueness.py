@@ -9,7 +9,8 @@ Strategy (north rule: skew handled explicitly):
   S reducers, each emitting one (key, partial_count) row; phase 2 sums the
   ≤S partials per key. A pathological key that appears 10^9 times costs
   bounded rows per reducer instead of 10^9. For near-unique keys AQE
-  coalesces the tiny second shuffle.
+  coalesces the tiny second shuffle. ``salted_key_counts`` is that
+  count; ``referential.orphan_key_counts`` uses it too.
 """
 
 from __future__ import annotations
@@ -18,12 +19,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def duplicate_keys(df: DataFrame, key: str, salt_buckets: int = 64) -> DataFrame:
-    """``(key, dup_count)`` for every key value appearing more than once.
-
-    The salt must vary *within* a key or it splits nothing: we salt by
-    partition id, so a key appearing 10^9 times across the cluster
-    contributes at most (#partitions) phase-1 rows spread over
+def salted_key_counts(
+    df: DataFrame, key: str, count_col: str, salt_buckets: int = 64
+) -> DataFrame:
+    """``(key, count_col)`` per distinct value of ``key`` in ``df``, in two
+    salted phases. The salt must vary *within* a key or it splits nothing:
+    we salt by partition id, so a key appearing 10^9 times across the
+    cluster contributes at most (#partitions) phase-1 rows spread over
     salt_buckets reducers, and phase 2 sums ≤ salt_buckets partials per
     key. (Catalyst's map-side partial aggregation gives count-aggs similar
     protection implicitly; the explicit two-phase shape keeps the bound
@@ -37,7 +39,16 @@ def duplicate_keys(df: DataFrame, key: str, salt_buckets: int = 64) -> DataFrame
     )
     return (
         salted.groupBy("key")
-        .agg(F.sum("partial").alias("dup_count"))
-        .filter(F.col("dup_count") > 1)
-        .select(F.col("key").alias(key), "dup_count")
+        .agg(F.sum("partial").alias(count_col))
+        .select(F.col("key").alias(key), count_col)
     )
+
+
+def duplicate_keys(df: DataFrame, key: str, salt_buckets: int = 64) -> DataFrame:
+    """``(key, dup_count)`` for every key value appearing more than once.
+    NULL is not a key value: as in SQL ``UNIQUE``, uniqueness holds over
+    the rows whose key is not NULL (missingness is the `required` check's
+    job)."""
+    return salted_key_counts(
+        df.filter(F.col(key).isNotNull()), key, "dup_count", salt_buckets
+    ).filter(F.col("dup_count") > 1)

@@ -3,25 +3,37 @@
 - per-row verdict columns + violation rows (the reference's per-document
   accept/reject contract, /root/reference/validate.go:15-21, reshaped to
   verdict rows per its own collect-errors TODO at validate.go:18),
-- per-partition pass/fail lineage + metrics (persisted — resumable),
+- per-unit pass/fail lineage, per-check fail counts and column-profile
+  partials (persisted — the checkpoint a resumed run continues from),
 - table-level check results: uniqueness, referential, stats profile, drift.
 
-Scale shape (design target 10^12 rows; see SURVEY.md §4):
+Scale shape (design target 10^12 rows; see SURVEY.md §4). ``run()`` reads
+the input four times and runs no job whose only purpose is to count:
 
-- The row pass is ONE projection + ONE aggregation: verdict columns are
-  whole-stage-codegen boolean expressions; the lineage aggregation groups by
-  a *unit id* (input file when reading files, else spark partition id) with
-  map-side combine, so shuffle volume is O(#units × #checks), independent of
-  row count.
-- Violations are filtered *before* leaving the scan stage (only failing rows
-  are materialized) and written partition-parallel.
-- Uniqueness/referential/drift are separate small-output jobs (salted agg /
-  broadcast anti-join / histogram agg) — they re-read the scan rather than
-  caching 10^12 rows; Parquet column pruning makes each re-read touch only
-  the columns it needs.
-- Checkpoint/resume: lineage rows are written per unit; a resumed run
-  anti-joins completed units and processes only the remainder (results are
-  parquet directories).
+1. **Lineage** — ONE aggregation over the annotated scan, grouped by a
+   *unit id* (input file when reading files, else spark partition id) with
+   map-side combine: row and valid counts, each check's fail count and the
+   mergeable profile partials (operators/stats.py). Shuffle volume is
+   O(#units × (#checks + #columns)), independent of row count.
+2. **Violations** — failing rows filtered *before* leaving the scan stage
+   and written partition-parallel.
+3. **Duplicates** — the salted two-phase key count (operators/uniqueness.py);
+   its row count is an ``Observation`` on the write.
+4. **Orphans** — the same salted count over the rows whose ``chk_ref_<col>``
+   verdict failed, read from the annotated frame, so the dimension's
+   domain is resolved once per run (operators/referential.py).
+
+Everything else comes from ONE read of ``lineage/``: ``n_rows``,
+``n_valid``, each orphan count (the sum of ``fail_ref_<col>``) and
+``profile/`` (a roll-up of the partials), so a resumed run's totals and
+profile cover the whole table without re-reading it. The passes re-read
+the scan rather than caching 10^12 rows; Parquet column pruning makes each
+re-read touch only the columns it needs.
+
+Checkpoint/resume: lineage rows are written per unit; a resumed run
+anti-joins completed units and processes only the remainder (results are
+parquet directories). It refuses a ``lineage/`` whose columns differ from
+the ones it would append (another spec, or no profile partials).
 """
 
 from __future__ import annotations
@@ -31,13 +43,13 @@ import os
 import time
 from typing import Optional
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from jsonschema_spark.operators import drift as drift_ops
 from jsonschema_spark.operators import stats as stats_ops
 from jsonschema_spark.operators.referential import domain_flag, orphan_key_counts
-from jsonschema_spark.operators.uniqueness import duplicate_keys
+from jsonschema_spark.operators.uniqueness import duplicate_keys, salted_key_counts
 from jsonschema_spark.plans.plan import (
     CHECK_PREFIX,
     CompiledPlan,
@@ -45,7 +57,7 @@ from jsonschema_spark.plans.plan import (
     check_columns,
     failed,
     failed_checks,
-    failure_entries,
+    root_failures,
 )
 
 
@@ -56,6 +68,41 @@ def _unit() -> Column:
         F.nullif(F.input_file_name(), F.lit("")),
         F.concat(F.lit("partition:"), F.spark_partition_id().cast("string")),
     )
+
+
+def _payload(annotated: DataFrame) -> list:
+    """The input columns of an annotated frame: what the profile covers."""
+    skip = set(annotation_columns(annotated))
+    return [c for c in annotated.columns if c not in skip]
+
+
+def _check_lineage_layout(spark, lineage_path: str, lineage: DataFrame) -> None:
+    """Refuse to resume onto a ``lineage/`` whose columns differ from the
+    ones this run writes — one written for another spec or by a version
+    without the profile partials. Appending to it would leave units whose
+    counts or partials read as NULL or cannot be read at all, and the
+    totals and profile would come out wrong. The footers of all files are
+    merged, and a file without some column reads as NULL there, which no
+    unit with rows has: its counts and partials are aggregates."""
+    found = spark.read.option("mergeSchema", "true").parquet(lineage_path)
+    got = {f.name: f.dataType.simpleString() for f in found.schema.fields}
+    want = {f.name: f.dataType.simpleString() for f in lineage.schema.fields}
+    differ = sorted(n for n in got.keys() | want.keys() if got.get(n) != want.get(n))
+    counted = [c for c in want if c.startswith(("fail_", stats_ops.PROFILE_PREFIX))]
+    if counted and not differ:
+        gaps = (
+            found.filter(F.col("n_rows") > 0)
+            .agg(*[F.count_if(F.col(c).isNull()).alias(c) for c in counted])
+            .first()
+        )
+        differ = [c for c in counted if gaps[c]]
+    if differ:
+        raise ValueError(
+            f"cannot resume onto {lineage_path}: columns {differ} are missing"
+            " from some or all of its files, or of another type than the"
+            " lineage this run writes; write to a new results directory"
+            " instead"
+        )
 
 
 def drop_completed_units(annotated: DataFrame, done_units: DataFrame) -> DataFrame:
@@ -134,11 +181,7 @@ class ValidationJob:
         for c in self.check_columns(annotated):
             name = c.removeprefix(CHECK_PREFIX)
             check = self.plan.checks.get(name)
-            failures = (
-                check.failures
-                if check is not None
-                else failure_entries(F.col(c), F.lit(""), F.lit(None))
-            )
+            failures = check.failures if check is not None else root_failures(name, None)
             per_check.append(
                 F.struct(F.lit(name).alias("check"), failures.alias("failures"))
             )
@@ -183,8 +226,15 @@ class ValidationJob:
         return accepted, quarantined
 
     def partition_lineage(self, annotated: DataFrame) -> DataFrame:
-        """Per-unit pass/fail + per-check fail counts. Unit = input file name
-        when present (stable across reruns → resumable), else partition id."""
+        """Per-unit pass/fail, per-check fail counts and the profile
+        partials of every input column, in one aggregate. Unit = input file
+        name when present (stable across reruns → resumable), else
+        partition id.
+
+        Columns: ``unit``, ``n_rows``, ``n_valid``, ``fail_<check>`` per
+        check, then ``profile_<column>`` per input column (a struct of
+        mergeable partials, see ``stats.profile_partials``; the HLL sketch
+        adds 552 bytes per unit and column)."""
         aggs = [
             F.count(F.lit(1)).alias("n_rows"),
             F.sum(F.col("_valid").cast("long")).alias("n_valid"),
@@ -195,6 +245,7 @@ class ValidationJob:
                     f"fail_{c.removeprefix(CHECK_PREFIX)}"
                 )
             )
+        aggs.extend(stats_ops.profile_partials(annotated.schema, _payload(annotated)))
         return annotated.groupBy(_unit().alias("unit")).agg(*aggs)
 
     # ---- table-level checks --------------------------------------------------
@@ -205,10 +256,19 @@ class ValidationJob:
         }
 
     def referential(self, df: DataFrame) -> dict:
+        """``(col, n_rows)`` orphan-key counts per referenced column. On
+        ``annotate``'s output they count the rows whose ``chk_ref_<col>``
+        failed, so the domain is not resolved again; on the input they
+        resolve it (``orphan_key_counts``)."""
         out = {}
         for col_name, ref in self.plan.references.items():
-            dim = self.dims.get(ref["dim"])
-            out[col_name] = orphan_key_counts(df, col_name, dim, ref["key"])
+            flag = f"{CHECK_PREFIX}ref_{col_name}"
+            if flag in df.columns:
+                failing = df.filter(failed(F.col(flag)))
+                out[col_name] = salted_key_counts(failing, col_name, "n_rows")
+            else:
+                dim = self.dims.get(ref["dim"])
+                out[col_name] = orphan_key_counts(df, col_name, dim, ref["key"])
         return out
 
     def drift(self, df: DataFrame) -> dict:
@@ -236,25 +296,23 @@ class ValidationJob:
 
     # ---- orchestrated run with checkpoint/resume ------------------------------
 
-    def run(
-        self,
-        df: DataFrame,
-        results_dir: str,
-        resume: bool = False,
-        profile_columns: Optional[list] = None,
-    ) -> dict:
+    def run(self, df: DataFrame, results_dir: str, resume: bool = False) -> dict:
         """Full validation pass. Writes under results_dir:
-        ``lineage/`` (per-unit verdicts, the checkpoint), ``violations/``,
-        ``duplicates_<key>/``, ``orphans_<col>/``, ``profile/``,
+        ``lineage/`` (per-unit verdicts and profile partials, the
+        checkpoint), ``violations/``, ``duplicates_<key>/``,
+        ``orphans_<col>/``, ``profile/`` (the roll-up of ``lineage/``),
         ``summary.json``. Returns the summary dict."""
         spark = df.sparkSession
         t0 = time.time()
 
-        annotated = self.annotate(df)
+        # orphans read the whole annotated table, resumed units included
+        full = annotated = self.annotate(df)
+        columns = _payload(annotated)
 
         resumed_units_skipped = 0
         lineage_path = os.path.join(results_dir, "lineage")
         if resume and os.path.isdir(lineage_path):
+            _check_lineage_layout(spark, lineage_path, self.partition_lineage(annotated))
             # Anti-join resume (the contract in the module docstring): at
             # design scale units are input files — potentially millions of
             # path strings — so the completed set must never ride the plan
@@ -272,50 +330,54 @@ class ValidationJob:
             if resumed_units_skipped:
                 annotated = drop_completed_units(annotated, done_units)
 
-        lineage = self.partition_lineage(annotated)
-        lineage.write.mode("append" if resume else "overwrite").parquet(lineage_path)
-
-        self.violations(annotated).write.mode(
-            "append" if resume else "overwrite"
-        ).parquet(os.path.join(results_dir, "violations"))
+        mode = "append" if resume else "overwrite"
+        self.partition_lineage(annotated).write.mode(mode).parquet(lineage_path)
+        self.violations(annotated).write.mode(mode).parquet(
+            os.path.join(results_dir, "violations")
+        )
 
         dup_counts = {}
         for key, dups in self.uniqueness(df).items():
-            dups.write.mode("overwrite").parquet(
-                os.path.join(results_dir, f"duplicates_{key}")
-            )
-            dup_counts[key] = spark.read.parquet(
-                os.path.join(results_dir, f"duplicates_{key}")
-            ).count()
+            seen = Observation()
+            dups.observe(seen, F.count(F.lit(1)).alias("n")).write.mode(
+                "overwrite"
+            ).parquet(os.path.join(results_dir, f"duplicates_{key}"))
+            dup_counts[key] = seen.get["n"]
 
-        orphan_counts = {}
-        for col_name, orphans in self.referential(df).items():
+        for col_name, orphans in self.referential(full).items():
             orphans.write.mode("overwrite").parquet(
                 os.path.join(results_dir, f"orphans_{col_name}")
             )
-            orphan_counts[col_name] = (
-                spark.read.parquet(os.path.join(results_dir, f"orphans_{col_name}"))
-                .agg(F.sum("n_rows")).collect()[0][0] or 0
-            )
-
-        stats_ops.column_profile(df, profile_columns).write.mode("overwrite").parquet(
-            os.path.join(results_dir, "profile")
-        )
 
         drift_reports = self.drift(df)
 
-        final_lineage = spark.read.parquet(lineage_path)
-        totals = final_lineage.agg(
-            F.sum("n_rows").alias("n"), F.sum("n_valid").alias("v")
-        ).collect()[0]
+        # one read of lineage/: the totals are aggregated next to the
+        # profile roll-up and observed on its one-row result, in the write's
+        # own stage (an observation in a shuffle map stage could count a
+        # retried task twice)
+        totals = {
+            "n_rows": F.sum("n_rows"),
+            "n_valid": F.sum("n_valid"),
+            **{f"orphans_{c}": F.sum(f"fail_ref_{c}") for c in self.plan.references},
+        }
+        rolled = spark.read.parquet(lineage_path).agg(
+            *[agg.alias(k) for k, agg in totals.items()],
+            stats_ops.profile_rollup(df.schema, columns).alias("_profile"),
+        )
+        seen = Observation()
+        rolled.observe(seen, *[F.max(k).alias(k) for k in totals]).select(
+            F.inline("_profile")
+        ).write.mode("overwrite").parquet(os.path.join(results_dir, "profile"))
+        got = {k: v or 0 for k, v in seen.get.items()}
+
         summary = {
-            "n_rows": totals.n or 0,
-            "n_valid": totals.v or 0,
-            "n_invalid": (totals.n or 0) - (totals.v or 0),
+            "n_rows": got["n_rows"],
+            "n_valid": got["n_valid"],
+            "n_invalid": got["n_rows"] - got["n_valid"],
             "checks": self.plan.check_names
             + [f"ref_{c}" for c in self.plan.references],
             "duplicates": dup_counts,
-            "orphans": orphan_counts,
+            "orphans": {c: got[f"orphans_{c}"] for c in self.plan.references},
             "drift": drift_reports,
             "resumed_units_skipped": resumed_units_skipped,
             "wall_sec": time.time() - t0,

@@ -95,14 +95,40 @@ def failed(verdict: Column) -> Column:
     return ~F.coalesce(verdict, F.lit(False))
 
 
-def failure_entries(verdict: Column, path: Column, detail: Column) -> Column:
+def failure_entries(verdict: Column | str, path: str, detail: str) -> Column:
     """One ``(path, detail)`` failure entry when ``verdict`` fails, else an
     empty array — a CASE over literal arrays, so no higher-order function
-    runs per row."""
-    entry = F.struct(path.alias("path"), detail.cast("string").alias("detail"))
-    return F.when(failed(verdict), F.array(entry)).otherwise(
-        F.array().cast(FAILURES_TYPE)
-    )
+    runs per row. ``path`` and ``detail`` are SQL expressions
+    (``_sql_string`` quotes a literal). So is ``verdict`` when it reads the
+    annotated frame: the entry is then one ``F.expr``, 3 py4j round trips
+    where Column operators cost about 60. A predicate the annotated frame
+    has no column for comes as a Column."""
+    entry = f"array(named_struct('path', {path}, 'detail', CAST({detail} AS STRING)))"
+    empty = f"CAST(array() AS {FAILURES_TYPE})"
+    if isinstance(verdict, Column):
+        return F.when(failed(verdict), F.expr(entry)).otherwise(F.expr(empty))
+    return F.expr(f"CASE WHEN coalesce({verdict}, false) THEN {empty} ELSE {entry} END")
+
+
+def _sql_ident(name: str) -> str:
+    """A Spark SQL identifier naming the top-level column ``name``."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_string(value: Optional[str]) -> str:
+    """A Spark SQL literal of ``value`` (NULL for None). ``$`` is written
+    as an escape, so the parser's ``${var}`` substitution never rewrites
+    it."""
+    if value is None:
+        return "CAST(NULL AS STRING)"
+    escaped = value.replace("\\", "\\\\").replace("'", "\\'").replace("$", "\\u0024")
+    return "'" + escaped + "'"
+
+
+def root_failures(name: str, detail: Optional[str]) -> Column:
+    """``failure_entries`` of check ``name`` at the root path: it reads the
+    annotated ``chk_`` column, so a kernel verdict is never recomputed."""
+    return failure_entries(_sql_ident(CHECK_PREFIX + name), "''", _sql_string(detail))
 
 
 def check_columns(annotated: DataFrame) -> list:
@@ -153,12 +179,8 @@ class CompiledCheck:
 
 
 def _root_check(name: str, verdict: Column, detail: Optional[str]) -> CompiledCheck:
-    """A check reported at the root path: its failure entry reads the
-    annotated ``chk_`` column, so a kernel verdict is never recomputed."""
-    return CompiledCheck(
-        verdict,
-        failure_entries(F.col(CHECK_PREFIX + name), F.lit(""), F.lit(detail)),
-    )
+    """A check reported at the root path (see ``root_failures``)."""
+    return CompiledCheck(verdict, root_failures(name, detail))
 
 
 @dataclass
@@ -247,7 +269,7 @@ def compile_table_spec(spec: TableSpec, schema: T.StructType) -> CompiledPlan:
                 # tests/test_violation_paths.py
                 entries = [
                     failure_entries(
-                        pred, F.lit(path), F.lit(_spec_fragment_at(col_spec, path))
+                        pred, _sql_string(path), _sql_string(_spec_fragment_at(col_spec, path))
                     )
                     for path, pred in named.items()
                 ]
@@ -260,7 +282,8 @@ def compile_table_spec(spec: TableSpec, schema: T.StructType) -> CompiledPlan:
         if col_name not in fields:
             raise SpecError(f"required column {col_name!r} not in table schema")
         name = f"required_{col_name}"
-        checks[name] = _root_check(name, F.col(col_name).isNotNull(), None)
+        verdict = F.expr(f"{_sql_ident(col_name)} IS NOT NULL")
+        checks[name] = _root_check(name, verdict, None)
 
     for key, expr in spec.row_checks.items():
         name = f"row_{key}"
@@ -270,13 +293,13 @@ def compile_table_spec(spec: TableSpec, schema: T.StructType) -> CompiledPlan:
         if not isinstance(fields.get(col_name), T.StringType):
             raise SpecError(f"json column {col_name!r} must be a string column")
         name = f"json_{col_name}"
-        v = F.col(VERDICT_PREFIX + name)
+        v = _sql_ident(VERDICT_PREFIX + name)
         kernel_backed[name] = CompiledCheck(
-            v.getField("valid"),
+            F.col(VERDICT_PREFIX + name).getField("valid"),
             failure_entries(
-                v.getField("valid"),
-                F.coalesce(v.getField("first_path"), F.lit("")),
-                F.concat_ws(": ", v.getField("first_keyword"), v.getField("first_message")),
+                f"{v}.valid",
+                f"coalesce({v}.first_path, '')",
+                f"concat_ws(': ', {v}.first_keyword, {v}.first_message)",
             ),
             kernel=json_validation_kernel(col_spec, F.col(col_name)),
         )

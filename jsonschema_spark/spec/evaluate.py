@@ -453,10 +453,12 @@ def _object(s: CompiledSchema, exact: bool) -> list:
                         if name not in v:
                             return False
             return True
-        missing = set(required)
+        # declared order, then dependency names: a dict keeps the first
+        # occurrence, so the list is the same in every process
+        missing = dict.fromkeys(required)
         for key, names in dep_names:
             if key in v:
-                missing.update(names)
+                missing.update(dict.fromkeys(names))
         ok = True
         for key in missing:
             if key not in v:

@@ -24,6 +24,7 @@ a float cannot settle the decision (the ``tie/`` rows).
 
 from __future__ import annotations
 
+import json
 import warnings
 from fractions import Fraction
 
@@ -175,3 +176,35 @@ def test_native_lowering(spark):
         if got[i] is not want[i]
     ]
     assert not mismatches, "\n".join(mismatches)
+
+
+def test_required_order_is_the_same_in_every_process():
+    """Missing members come out in declared ``required`` order, then the
+    dependency names, each once — never in ``set`` order, which moves with
+    the string hash seed."""
+    import os
+    import subprocess
+    import sys
+
+    code = (
+        "import json\n"
+        "from jsonschema_spark.spec.compile import compile_spec\n"
+        "from jsonschema_spark.spec.evaluate import validate_json\n"
+        "s = compile_spec({'required': ['zeta', 'alpha', 'mid'],"
+        " 'dependencies': {'x': ['beta', 'alpha', 'omega']}})\n"
+        "print(json.dumps([v.message for v in validate_json(s, '{\"x\": 1}')]))\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    runs = []
+    for seed in ("0", "1"):
+        env = {**os.environ, "PYTHONHASHSEED": seed, "PYTHONPATH": root}
+        res = subprocess.run(
+            [sys.executable, "-c", code], env=env, capture_output=True, text=True,
+            timeout=60, check=True,
+        )
+        runs.append(res.stdout)
+    want = [
+        f"required member {k!r} is missing"
+        for k in ("zeta", "alpha", "mid", "beta", "omega")
+    ]
+    assert [json.loads(r) for r in runs] == [want, want]

@@ -222,6 +222,18 @@ def test_uniqueness_salted(job, corpus_df):
     assert all(r.dup_count == 2 for r in rows)
 
 
+def test_uniqueness_ignores_null_keys(spark):
+    """NULL is not a key value (SQL ``UNIQUE``): two rows with a NULL key
+    are not a duplicate, two rows with the same value are."""
+    from jsonschema_spark.operators.uniqueness import duplicate_keys
+
+    df = spark.createDataFrame(
+        [(1, None), (2, None), (3, "a"), (4, "a"), (5, "b"), (6, None)],
+        "id long, key string",
+    )
+    assert [tuple(r) for r in duplicate_keys(df, "key").collect()] == [("a", 2)]
+
+
 def test_referential_orphans(job, corpus_df):
     orphans = job.referential(corpus_df)["source"].collect()
     assert len(orphans) == 1  # one unregistered source value
@@ -263,6 +275,20 @@ def test_profile(spark, corpus_df):
     assert prof["n_tok"].n_rows == N
 
 
+def test_profile_counts_empty_values(spark):
+    """An empty string and an empty binary are values: the distinct count
+    includes them, and NULL is not counted."""
+    from jsonschema_spark.operators.stats import column_profile
+
+    df = spark.createDataFrame(
+        [("", bytearray(b"")), ("a", bytearray(b"a")), (None, None), ("", bytearray(b""))],
+        "s string, b binary",
+    )
+    prof = {r.column: r for r in column_profile(df).collect()}
+    assert prof["s"].approx_distinct == 2 and prof["b"].approx_distinct == 2
+    assert (prof["s"].min_value, prof["s"].max_value, prof["s"].min_len) == ("", "a", 0)
+
+
 def test_violation_sampling(job, corpus_df):
     """Deterministic hash sampling of violation rows: reproducible subset,
     roughly proportional to the fraction."""
@@ -293,14 +319,95 @@ def test_partial_resume_processes_only_remainder(tmp_path, spark, job, corpus_df
         "overwrite"
     ).parquet(results + "/lineage")
 
+    full_profile = spark.read.parquet(results + "/profile").collect()
+
     resumed = job.run(corpus_df, results, resume=True)
     assert resumed["resumed_units_skipped"] == len(keep)
     # lineage total: kept rows + re-processed remainder = full corpus
     assert resumed["n_rows"] == full["n_rows"] == N
+    assert resumed["orphans"] == full["orphans"]
     final_units = {
         r.unit for r in spark.read.parquet(results + "/lineage").select("unit").distinct().collect()
     }
     assert final_units == set(units)
+    # the profile is a roll-up of lineage, so the resumed run's covers the
+    # whole table, sketches included
+    assert spark.read.parquet(results + "/profile").collect() == full_profile
+
+
+def test_resume_refuses_a_lineage_of_another_layout(tmp_path, spark, job, corpus_df):
+    """A lineage/ whose files lack the profile partials (written by a
+    version without them) is refused on resume, whether every file lacks
+    them or only some: appending would profile only the new units."""
+    import os
+
+    results = str(tmp_path / "layout")
+    job.run(corpus_df, results)
+    lineage = spark.read.parquet(results + "/lineage")
+    old = lineage.select(*[c for c in lineage.columns if not c.startswith("profile_")])
+
+    old_only = str(tmp_path / "old_only")
+    old.write.parquet(old_only + "/lineage")
+    # one old-layout file next to the new ones
+    old.limit(1).localCheckpoint(eager=True).write.mode("append").parquet(
+        results + "/lineage"
+    )
+    for path in (old_only, results):
+        before = sorted(os.listdir(path + "/lineage"))
+        with pytest.raises(ValueError, match="profile_doc_id"):
+            job.run(corpus_df, path, resume=True)
+        assert sorted(os.listdir(path + "/lineage")) == before
+
+
+def test_run_profile_matches_column_profile(tmp_path, spark, job, corpus_df):
+    """``profile/`` written by run() equals column_profile(df) on every
+    field; approx_distinct (HLL, lgConfigK 9: rsd 1.04/sqrt(512)) is within
+    3 rsd of the exact distinct count."""
+    from jsonschema_spark.operators.stats import column_profile
+
+    results = str(tmp_path / "profiled")
+    ValidationJob(job.plan, dims=job.dims).run(corpus_df, results)
+    got = {r.column: r.asDict() for r in spark.read.parquet(results + "/profile").collect()}
+    want = {r.column: r.asDict() for r in column_profile(corpus_df).collect()}
+    assert list(got) == corpus_df.columns
+    exact = corpus_df.agg(
+        *[F.countDistinct(c).alias(c) for c in corpus_df.columns]
+    ).collect()[0]
+    rsd = 1.04 / 512 ** 0.5
+    for name in corpus_df.columns:
+        assert abs(got[name].pop("approx_distinct") - exact[name]) <= 3 * rsd * exact[name]
+        want[name].pop("approx_distinct")
+        assert got[name] == want[name], name
+
+
+def test_run_pass_structure(spark, job, corpus_df, tmp_path):
+    """run() is four input passes plus one lineage read: at most 16 Spark
+    jobs on this corpus (no read-back counts, no separate profile scan)."""
+    sc = spark.sparkContext
+    group = "test_run_pass_structure"
+    sc.setJobGroup(group, "run()")
+    try:
+        ValidationJob(job.plan, dims=job.dims).run(corpus_df, str(tmp_path / "r"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert 0 < len(sc.statusTracker().getJobIdsForGroup(group)) <= 16
+
+
+def test_run_on_map_column(spark, tmp_path):
+    """A MAP column has no ordering: the profile leaves its min/max NULL
+    instead of failing the run, and still counts its distinct values."""
+    df = spark.createDataFrame(
+        [(1, {"a": 1}), (2, {"b": 2}), (3, None), (4, {"a": 1})],
+        "id long, doc map<string,long>",
+    )
+    plan = compile_table_spec(TableSpec.from_dict({"required": ["id"]}), df.schema)
+    results = str(tmp_path / "map")
+    summary = ValidationJob(plan, id_column="id").run(df, results)
+    assert summary["n_rows"] == 4 and summary["n_invalid"] == 0
+    prof = {r.column: r for r in spark.read.parquet(results + "/profile").collect()}
+    assert prof["doc"].min_value is None and prof["doc"].max_value is None
+    assert prof["doc"].null_rate == 0.25 and prof["doc"].approx_distinct == 2
+    assert (prof["id"].min_value, prof["id"].max_value) == ("1", "4")
 
 
 def test_json_columns_kernel_in_tablespec(spark):
@@ -369,12 +476,21 @@ def test_resume_anti_joins_completed_units(tmp_path, spark, job, corpus_df):
     lineage = spark.read.parquet(results + "/lineage")
     n_real = lineage.select("unit").distinct().count()
 
-    # append 4000 synthetic completed units (zero-filled counts so totals
-    # are unchanged) — simulates resuming a many-file run
-    zeros = [F.lit(0).cast("long").alias(c) for c in lineage.columns if c != "unit"]
+    # append 4000 synthetic completed units (zero-filled counts and NULL
+    # profile partials, so totals are unchanged) — simulates resuming a
+    # many-file run
+    fill = [
+        (
+            F.lit(None).cast(f.dataType)
+            if f.name.startswith("profile_")
+            else F.lit(0).cast("long")
+        ).alias(f.name)
+        for f in lineage.schema.fields
+        if f.name != "unit"
+    ]
     spark.range(4000).select(
         F.concat(F.lit("file:///gone/part-"), F.col("id").cast("string")).alias("unit"),
-        *zeros,
+        *fill,
     ).write.mode("append").parquet(results + "/lineage")
 
     resumed = job.run(corpus_df, results, resume=True)

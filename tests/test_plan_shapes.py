@@ -26,6 +26,15 @@ def test_orphans_broadcast_no_fact_shuffle(spark):
     assert "SortMergeJoin" not in plan
 
 
+def test_dim_source_is_a_jvm_relation(spark):
+    """The corpus dimension is built in the JVM: scanning it (every
+    domain_flag collect) starts no Python worker."""
+    from jsonschema_spark.sources.corpus import dim_source
+
+    plan = _plan(dim_source(spark))
+    assert "ExistingRDD" not in plan and "PythonRDD" not in plan
+
+
 def test_validation_hot_path_has_no_row_python(spark):
     from jsonschema_spark.plans.plan import TableSpec, compile_table_spec
     from jsonschema_spark.plans.job import ValidationJob

@@ -430,3 +430,33 @@ def test_violations_of_a_plan_without_row_checks(spark, tmp_path):
     assert violations.count() == 0
     summary = job.run(df, str(tmp_path / "results"))
     assert summary["n_invalid"] == 0 and summary["duplicates"] == {"id": 1}
+
+
+def test_root_detail_survives_sql_quoting(spark):
+    """A root check's failure entry is built as one SQL expression: its
+    detail (quotes, backslashes, newlines, non-ASCII, ``${...}`` that the
+    SQL parser would substitute) comes back verbatim, and a column name
+    that needs quoting still resolves."""
+    df = spark.createDataFrame([(1, "it's"), (2, "ok"), (3, None)], "id long, `we ird` string")
+    pattern = "^[a-z]+\\d?$"  # a regex with a backslash escape
+    row_check = "`we ird` <> 'it\\'s' AND `we ird` RLIKE '^o\\\\w'\n-- é ✓"
+    spec = {
+        "columns": {
+            "we ird": {"pattern": pattern, "not": {"enum": ["${env:HOME}", "${system:user.name}"]}}
+        },
+        "required": ["we ird"],
+        "row_checks": {"quote": row_check},
+    }
+    plan = compile_table_spec(TableSpec.from_dict(spec), df.schema)
+    job = ValidationJob(plan, id_column="id")
+    rows = job.violations(job.annotate(df)).collect()
+    got = {(r.id, r.check): (r.path, r.detail) for r in rows}
+    assert got == {
+        (1, "col_we ird"): (
+            "",
+            '{"not":{"enum":["${env:HOME}","${system:user.name}"]},"pattern":"^[a-z]+\\\\d?$"}',
+        ),
+        (1, "row_quote"): ("", row_check),
+        (3, "required_we ird"): ("", None),
+        (3, "row_quote"): ("", row_check),
+    }
