@@ -3,9 +3,9 @@
 `entry(spark)` — flagship: full TableSpec validation of the documents table
 at sf0.001 (per-check fail counts, the engine's verdict-summary shape).
 
-`queries()` — the validation product's 32 queries: the draft-4 keyword
+`queries()` — the validation product's 30 queries: the draft-4 keyword
 operators of SURVEY.md §2.1 lowered through the engine's compiler, the
-table-scope uniqueness / referential / histogram checks, the ValidationJob
+table-scope uniqueness / referential checks, the ValidationJob
 full pass, quarantine router and pre-flight gate, and the rollout
 diagnostics. Each returns a DataFrame over (spark, sf_dir).
 
@@ -259,14 +259,6 @@ def q_orphans(spark, sf_dir):
     fact = _t(spark, sf_dir, "orders")
     dim = _t(spark, sf_dir, "customer").filter(F.col("c_custkey") % 2 == 0)
     return orphan_key_counts(fact, "o_custkey", dim, "c_custkey")
-
-
-def q_histogram(spark, sf_dir):
-    """SURVEY §2.3: fixed-width histogram agg (drift input)."""
-    from jsonschema_spark.operators.stats import histogram
-
-    df = _t(spark, sf_dir, "documents")
-    return histogram(df, "n_chars", bins=20, lo=0, hi=600)
 
 
 def _corpus_oracle_path() -> str:
@@ -623,7 +615,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "json_schema_kernel": q_json_schema_kernel,
         "dup_keys": q_dup_keys,
         "orphans": q_orphans,
-        "histogram": q_histogram,
         "corpus_validate": q_corpus_validate,
         "quarantine_rows": q_quarantine_rows,
         "sampled_gate": q_sampled_gate,
@@ -818,12 +809,6 @@ def oracle_sql() -> dict[str, str]:
             " WHERE o_custkey IS NOT NULL AND o_custkey NOT IN"
             " (SELECT c_custkey FROM customer WHERE c_custkey % 2 = 0)"
             " GROUP BY o_custkey"
-        ),
-        "histogram": (
-            "SELECT CASE WHEN n_chars IS NULL THEN NULL"
-            " WHEN n_chars < 0 THEN -1 WHEN n_chars >= 600 THEN 20"
-            " ELSE CAST(floor(n_chars / 30.0) AS INT) END AS bucket,"
-            " count(*) AS cnt FROM documents GROUP BY 1"
         ),
         "corpus_validate": _corpus_validate_oracle_sql(),
         "sampled_gate": _sampled_gate_oracle_sql(),

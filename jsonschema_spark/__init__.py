@@ -10,8 +10,8 @@ Spark-first:
                   predicates per typed column, (b) vectorized Arrow/pandas
                   UDF kernels for free-form JSON columns.
 - ``operators`` — table-level checks: salted uniqueness, broadcast
-                  referential integrity, column stats profiles, distribution
-                  drift (chi-square / PSI) and the sampled pre-flight gate.
+                  referential integrity, column stats profiles and the
+                  sampled pre-flight gate.
 - ``plans``     — CompiledPlan + ValidationJob: one partition-parallel pass
                   emitting per-row verdicts, violation rows, the
                   accepted/quarantined split, lineage, checkpoint/resume and

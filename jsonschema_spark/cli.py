@@ -79,7 +79,7 @@ def cmd_validate(args) -> int:
 
         dims["dim_source"] = dim_source(spark)
 
-    job = ValidationJob(plan, dims=dims)
+    job = ValidationJob(plan, dims=dims, id_column=args.id_col)
     t0 = time.time()
 
     if args.preflight_k:
@@ -146,39 +146,6 @@ def cmd_validate(args) -> int:
     return 0
 
 
-def cmd_throughput(args) -> int:
-    """One timed validation pass (no sinks) — the scaling-protocol probe.
-    Prints {rows, tokens, wall_sec, sequences_per_sec, tokens_per_sec}."""
-    spark = _build_session(args)
-    from jsonschema_spark.benchlib import corpus_validation_pass, materialize_corpus
-
-    path = args.input
-    if path == "synthetic":
-        path = materialize_corpus(spark, args.rows, args.cache_dir, seed=args.seed)
-    # warm-up then best-of-N
-    corpus_validation_pass(spark, path)
-    best = float("inf")
-    for _ in range(args.repeat):
-        t0 = time.time()
-        n_rows, n_valid, n_tokens, n_dups = corpus_validation_pass(spark, path)
-        best = min(best, time.time() - t0)
-    print(
-        json.dumps(
-            {
-                "rows": n_rows,
-                "tokens": int(n_tokens),
-                "invalid": int(n_rows - n_valid),
-                "duplicates": int(n_dups),
-                "wall_sec": round(best, 3),
-                "sequences_per_sec": round(n_rows / best, 1),
-                "tokens_per_sec": round(n_tokens / best, 1),
-                "parallelism": spark.sparkContext.defaultParallelism,
-            }
-        )
-    )
-    return 0
-
-
 def main(argv=None) -> int:
     p = argparse.ArgumentParser(prog="jsonschema_spark")
     sub = p.add_subparsers(dest="cmd", required=True)
@@ -221,15 +188,6 @@ def main(argv=None) -> int:
         help="also write accepted/ + quarantined/ parquet under this dir",
     )
     pv.set_defaults(fn=cmd_validate)
-
-    pt = sub.add_parser("throughput")
-    pt.add_argument("--input", default="synthetic")
-    pt.add_argument("--rows", type=int, default=1_000_000)
-    pt.add_argument("--seed", type=int, default=42)
-    pt.add_argument("--repeat", type=int, default=2)
-    pt.add_argument("--cores", type=int, default=None)
-    pt.add_argument("--cache-dir", default="/tmp/jsonschema_spark_bench")
-    pt.set_defaults(fn=cmd_throughput)
 
     args = p.parse_args(argv)
     return args.fn(args)

@@ -1,3 +1,2 @@
 """Table-level validation operators: salted uniqueness, referential
-integrity, column stats profiles, distribution drift and the sampled
-pre-flight gate."""
+integrity, column stats profiles and the sampled pre-flight gate."""

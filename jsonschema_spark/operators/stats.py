@@ -10,11 +10,6 @@ profile costs no pass of its own; ``profile_rollup`` merges the partials
 of any set of groups into one row per column. ``column_profile`` is that
 roll-up over a single group, so there is one profile code path, and a
 resumed run's profile (a roll-up of ``lineage/``) equals a full run's.
-
-Histograms and token frequencies (the drift inputs) are single hash
-aggregations; token frequencies explode the tokens column and shuffle
-(token, partial_count) pairs after map-side combine, which is the scalable
-shape at 10^12 rows.
 """
 
 from __future__ import annotations
@@ -127,40 +122,4 @@ def column_profile(df: DataFrame, columns: list[str] | None = None) -> DataFrame
     )
     return partials.agg(profile_rollup(df.schema, columns).alias("_profile")).select(
         F.inline("_profile")
-    )
-
-
-def histogram(
-    df: DataFrame, column: str, bins: int, lo: float, hi: float
-) -> DataFrame:
-    """Fixed-width histogram ``(bucket int, cnt long)``; values outside
-    [lo, hi) land in buckets -1 / bins. One groupBy shuffle of ≤ bins+2 rows
-    after map-side combine."""
-    width = (hi - lo) / bins
-    bucket = (
-        F.when(F.col(column).isNull(), F.lit(None))
-        .when(F.col(column) < lo, F.lit(-1))
-        .when(F.col(column) >= hi, F.lit(bins))
-        .otherwise(F.floor((F.col(column) - lo) / width).cast("int"))
-    )
-    return (
-        df.select(bucket.alias("bucket"))
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-
-
-def token_frequencies(df: DataFrame, tokens_col: str = "tokens") -> DataFrame:
-    """``(token int, cnt long)`` over the exploded token arrays.
-
-    explode → groupBy(token) is the canonical scalable shape: Catalyst's
-    partial aggregation combines map-side before the shuffle, so shuffle
-    volume is bounded by (#partitions × vocab), not by total token count.
-    Token-id keys are near-uniform under hashing, so no salting needed even
-    though token *frequencies* are Zipf-skewed.
-    """
-    return (
-        df.select(F.explode(tokens_col).alias("token"))
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("cnt"))
     )

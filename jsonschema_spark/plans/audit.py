@@ -166,7 +166,7 @@ def assert_plan(
     violated invariant (with the plan attached) otherwise.
 
     ``no_single_partition`` defaults False because bounded-input global
-    windows (an O(bins) histogram CDF, a registry-sized rank) are
+    windows (a CDF over a few bins, a registry-sized rank) are
     legitimate — enable it for corpus-sized plans."""
     rep = plan_report(df)
     plan = _plan_text(df)

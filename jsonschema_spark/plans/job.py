@@ -5,7 +5,7 @@
   verdict rows per its own collect-errors TODO at validate.go:18),
 - per-unit pass/fail lineage, per-check fail counts and column-profile
   partials (persisted — the checkpoint a resumed run continues from),
-- table-level check results: uniqueness, referential, stats profile, drift.
+- table-level check results: uniqueness, referential, stats profile.
 
 Scale shape (design target 10^12 rows; see SURVEY.md §4). ``run()`` reads
 the input four times and runs no job whose only purpose is to count:
@@ -46,7 +46,6 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
-from jsonschema_spark.operators import drift as drift_ops
 from jsonschema_spark.operators import stats as stats_ops
 from jsonschema_spark.operators.referential import domain_flag, orphan_key_counts
 from jsonschema_spark.operators.uniqueness import duplicate_keys, salted_key_counts
@@ -126,13 +125,11 @@ class ValidationJob:
     def __init__(
         self,
         plan: CompiledPlan,
-        dims: Optional[dict] = None,       # dim name -> DataFrame
-        baselines: Optional[dict] = None,  # drift key -> baseline histogram DF
+        dims: Optional[dict] = None,  # dim name -> DataFrame
         id_column: str = "doc_id",
     ):
         self.plan = plan
         self.dims = dims or {}
-        self.baselines = baselines or {}
         self.id_column = id_column
 
     # ---- row pass -----------------------------------------------------------
@@ -156,27 +153,13 @@ class ValidationJob:
     def check_columns(self, annotated: DataFrame) -> list:
         return check_columns(annotated)
 
-    def violations(
-        self, annotated: DataFrame, sample_fraction: float | None = None
-    ) -> DataFrame:
+    def violations(self, annotated: DataFrame) -> DataFrame:
         """(id, check, path, detail) rows for every failed check: each
         check's failure entries (CompiledCheck.failures) exploded from the
         failing rows only, in the scan stage. For struct and map columns
         ``path`` pinpoints the failing field ('/addr/zip'), matching the
         reference's path-wrapped errors (validate.go:74,346,500); scalar
-        checks report path ''. A NULL verdict is a failure.
-
-        ``sample_fraction``: at 10^12 rows a 1% violation rate is 10^10
-        rows — often too many to materialize. A deterministic hash sample
-        on the id (NOT rand(): reproducible across retries/resume) keeps
-        the per-check *counts* exact in lineage while bounding the itemized
-        rows written."""
-        if sample_fraction is not None and sample_fraction < 1.0:
-            threshold = int(sample_fraction * 1_000_000)
-            annotated = annotated.filter(
-                F.pmod(F.xxhash64(F.col(self.id_column), F.lit(7)), F.lit(1_000_000))
-                < threshold
-            )
+        checks report path ''. A NULL verdict is a failure."""
         per_check = []
         for c in self.check_columns(annotated):
             name = c.removeprefix(CHECK_PREFIX)
@@ -271,29 +254,6 @@ class ValidationJob:
                 out[col_name] = orphan_key_counts(df, col_name, dim, ref["key"])
         return out
 
-    def drift(self, df: DataFrame) -> dict:
-        out = {}
-        for key, conf in self.plan.drift.items():
-            if key == "token_freq":
-                if not conf:
-                    continue
-                current = stats_ops.token_frequencies(df)
-                baseline = self.baselines.get("token_freq")
-                if baseline is None:
-                    continue
-                out["token_freq"] = drift_ops.drift_report(
-                    current, baseline, key="token", cnt="cnt"
-                )
-            else:
-                baseline = self.baselines.get(key)
-                if baseline is None:
-                    continue
-                current = stats_ops.histogram(
-                    df, key, conf["bins"], conf["lo"], conf["hi"]
-                )
-                out[key] = drift_ops.drift_report(current, baseline, key="bucket")
-        return out
-
     # ---- orchestrated run with checkpoint/resume ------------------------------
 
     def run(self, df: DataFrame, results_dir: str, resume: bool = False) -> dict:
@@ -349,8 +309,6 @@ class ValidationJob:
                 os.path.join(results_dir, f"orphans_{col_name}")
             )
 
-        drift_reports = self.drift(df)
-
         # one read of lineage/: the totals are aggregated next to the
         # profile roll-up and observed on its one-row result, in the write's
         # own stage (an observation in a shuffle map stage could count a
@@ -378,7 +336,6 @@ class ValidationJob:
             + [f"ref_{c}" for c in self.plan.references],
             "duplicates": dup_counts,
             "orphans": {c: got[f"orphans_{c}"] for c in self.plan.references},
-            "drift": drift_reports,
             "resumed_units_skipped": resumed_units_skipped,
             "wall_sec": time.time() - t0,
         }

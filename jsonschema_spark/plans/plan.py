@@ -4,8 +4,8 @@ form.
 A TableSpec is to this engine what the schema document is to the reference
 (/root/reference/raw_schema.go:85-120): a JSON-serializable constraint
 specification. Instead of addressing one JSON document by pointer, it
-addresses a *table* by column name, and adds the table-scope checks the
-north rule requires (uniqueness, referential, drift, stats).
+addresses a *table* by column name, and adds the table-scope checks
+(uniqueness, referential).
 
 Compilation happens once, driver-side (the reference's compile-once contract,
 compiler.go:48-247): every per-column draft-4 spec lowers to a native Column
@@ -30,8 +30,6 @@ Example::
         "row_checks": {"len_consistent": "n_tok = size(tokens)"},
         "unique": ["doc_id"],
         "references": {"source": {"dim": "dim_source", "key": "source_id"}},
-        "drift": {"n_tok": {"bins": 64, "lo": 0, "hi": 2560},
-                   "token_freq": true},
     })
 """
 
@@ -66,13 +64,12 @@ class TableSpec:
     json_columns: dict = field(default_factory=dict)  # col of JSON text -> spec
     unique: list = field(default_factory=list)        # key columns, each unique
     references: dict = field(default_factory=dict)    # col -> {"dim": name, "key": col}
-    drift: dict = field(default_factory=dict)         # col -> {bins, lo, hi}; "token_freq": bool
 
     @classmethod
     def from_dict(cls, raw: dict) -> "TableSpec":
         known = {
             "columns", "required", "row_checks", "json_columns", "unique",
-            "references", "drift",
+            "references",
         }
         unknown = set(raw) - known
         if unknown:
@@ -192,7 +189,6 @@ class CompiledPlan:
     checks: dict  # check name -> CompiledCheck; kernel-backed checks last
     unique: list
     references: dict
-    drift: dict
 
     @property
     def check_names(self) -> list:
@@ -318,7 +314,6 @@ def compile_table_spec(spec: TableSpec, schema: T.StructType) -> CompiledPlan:
         checks={**checks, **kernel_backed},
         unique=list(spec.unique),
         references=dict(spec.references),
-        drift=dict(spec.drift),
     )
 
 

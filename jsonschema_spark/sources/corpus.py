@@ -1,4 +1,4 @@
-"""Deterministic synthetic tokenized-corpus generator (FIXTURES.md F1-F3).
+"""Deterministic synthetic tokenized-corpus generator (FIXTURES.md F1-F2).
 
 Shape per BASELINE.json input_hint: ``(doc_id string, tokens array<int>,
 n_tok int, source string)`` with ~1% injected constraint violations.
@@ -7,9 +7,8 @@ Everything is generated *inside Spark* from ``spark.range(n)`` using
 hash-derived pseudo-randomness (xxhash64 of the row id + a stream tag), so
 the same (n, seed) produces the same table at any parallelism and any scale —
 no driver-side data, no numpy on executors, partition-parallel from row one.
-This is the property that lets the identical job run at local[8] and
-local[32] (and at N vs 4N executors on a real cluster) for the scaling
-protocol, and would let it run at 10^12 rows unchanged.
+The identical job runs at any core or executor count, and would run at
+10^12 rows unchanged.
 
 Violation injection is positional (row-id modulus), hence exactly
 reproducible and countable in closed form:
@@ -59,10 +58,9 @@ def corpus(
     spark: SparkSession,
     n_rows: int,
     seed: int = 42,
-    inject_violations: bool = True,
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """F1 (violations on) / F3 baseline variant (violations off)."""
+    """F1: the corpus with its injected violations."""
     base = spark.range(0, n_rows, 1, num_partitions) if num_partitions else spark.range(n_rows)
     i = F.col("id")
     s = F.lit(seed)
@@ -91,27 +89,22 @@ def corpus(
         .withColumn("source_clean", source)
     )
 
-    if inject_violations:
-        dup = F.pmod(i, DUP_MOD) == DUP_MOD - 1
-        bad_ntok = F.pmod(i, NTOK_MOD) == NTOK_MOD - 1
-        bad_len = F.pmod(i, LEN_MOD) == LEN_MOD - 1
-        bad_src = F.pmod(i, SRC_MOD) == SRC_MOD - 1
+    dup = F.pmod(i, DUP_MOD) == DUP_MOD - 1
+    bad_ntok = F.pmod(i, NTOK_MOD) == NTOK_MOD - 1
+    bad_len = F.pmod(i, LEN_MOD) == LEN_MOD - 1
+    bad_src = F.pmod(i, SRC_MOD) == SRC_MOD - 1
 
-        doc_id = F.when(dup, F.format_string("doc-%012d", i - 1)).otherwise(
-            F.format_string("doc-%012d", i)
-        )
-        n_tok_col = (
-            F.when(bad_ntok, F.when(F.pmod(i, 2) == 0, F.lit(0)).otherwise(F.lit(4096)))
-            .when(bad_len, F.col("n_tok_clean") + 1)
-            .otherwise(F.col("n_tok_clean"))
-        ).cast("int")
-        source_col = F.when(bad_src, F.lit("src-unregistered")).otherwise(
-            F.col("source_clean")
-        )
-    else:
-        doc_id = F.format_string("doc-%012d", i)
-        n_tok_col = F.col("n_tok_clean")
-        source_col = F.col("source_clean")
+    doc_id = F.when(dup, F.format_string("doc-%012d", i - 1)).otherwise(
+        F.format_string("doc-%012d", i)
+    )
+    n_tok_col = (
+        F.when(bad_ntok, F.when(F.pmod(i, 2) == 0, F.lit(0)).otherwise(F.lit(4096)))
+        .when(bad_len, F.col("n_tok_clean") + 1)
+        .otherwise(F.col("n_tok_clean"))
+    ).cast("int")
+    source_col = F.when(bad_src, F.lit("src-unregistered")).otherwise(
+        F.col("source_clean")
+    )
 
     return df.select(
         doc_id.alias("doc_id"),

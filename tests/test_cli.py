@@ -65,6 +65,30 @@ def test_validate_cli_and_resume(tmp_path, spark):
     assert summary2["n_rows"] == 5000
 
 
+def test_validate_cli_id_col(tmp_path, spark):
+    """--id-col names the id column of the violation rows; a table without
+    ``doc_id`` validates and reports its own key."""
+    table = tmp_path / "table"
+    spark.createDataFrame(
+        [(1, "ok"), (2, "too long"), (3, "abc")], "key long, s string"
+    ).write.parquet(str(table))
+    spec_file = tmp_path / "spec.json"
+    spec_file.write_text(
+        json.dumps({"columns": {"s": {"maxLength": 3, "type": "string"}}})
+    )
+    results = tmp_path / "results"
+
+    from jsonschema_spark.cli import main
+
+    rc = main([
+        "validate", "--input", str(table), "--spec", str(spec_file),
+        "--results", str(results), "--id-col", "key",
+    ])
+    assert rc == 0
+    rows = spark.read.parquet(str(results / "violations")).collect()
+    assert [(r.id, r.check) for r in rows] == [(2, "col_s")]
+
+
 def test_validate_cli_diagnostics(tmp_path, spark):
     spec = {
         "columns": {

@@ -1,38 +1,21 @@
 """End-to-end tests of the tokenized-corpus validation pipeline (the north
 rule's flagship): synthetic corpus → TableSpec → one-pass verdicts →
-violations / uniqueness / referential / stats / drift → lineage + resume."""
+violations / uniqueness / referential / stats → lineage + resume."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from jsonschema_spark.sources import corpus as corpus_mod
+from jsonschema_spark.benchlib import CORPUS_SPEC_DICT
 from jsonschema_spark.sources.corpus import (
-    DUP_MOD, LEN_MOD, NTOK_MOD, SRC_MOD, MAX_TOKENS, SOURCES, VOCAB_SIZE,
-    corpus, dim_source,
+    DUP_MOD, LEN_MOD, NTOK_MOD, SRC_MOD, VOCAB_SIZE, corpus, dim_source,
 )
 from jsonschema_spark.plans.plan import TableSpec, compile_table_spec
 from jsonschema_spark.plans.job import ValidationJob
+from jsonschema_spark.spec.compile import SpecError
 
 N = 20_000
-
-CORPUS_SPEC = {
-    "columns": {
-        "doc_id": {"type": "string", "pattern": "^doc-[0-9]{12}$"},
-        "tokens": {
-            "type": "array",
-            "minItems": 1,
-            "items": {"type": "integer", "minimum": 0, "maximum": VOCAB_SIZE - 1},
-        },
-        "n_tok": {"type": "integer", "minimum": 1, "maximum": MAX_TOKENS},
-    },
-    "required": ["doc_id", "tokens", "n_tok", "source"],
-    "row_checks": {"len_consistent": "n_tok = size(tokens)"},
-    "unique": ["doc_id"],
-    "references": {"source": {"dim": "dim_source", "key": "source_id"}},
-    "drift": {"n_tok": {"bins": 64, "lo": 0, "hi": 2560}, "token_freq": True},
-}
 
 
 @pytest.fixture(scope="module")
@@ -45,18 +28,15 @@ def corpus_df(spark, tmp_path_factory):
 
 
 @pytest.fixture(scope="module")
-def job(spark, corpus_df, tmp_path_factory):
-    plan = compile_table_spec(TableSpec.from_dict(CORPUS_SPEC), corpus_df.schema)
-    clean_path = str(tmp_path_factory.mktemp("corpus") / "clean")
-    corpus(spark, N, seed=7, inject_violations=False).write.parquet(clean_path)
-    clean = spark.read.parquet(clean_path)
-    from jsonschema_spark.operators import stats as stats_ops
+def job(spark, corpus_df):
+    plan = compile_table_spec(TableSpec.from_dict(CORPUS_SPEC_DICT), corpus_df.schema)
+    return ValidationJob(plan, dims={"dim_source": dim_source(spark)})
 
-    baselines = {
-        "n_tok": stats_ops.histogram(clean, "n_tok", 64, 0, 2560),
-        "token_freq": stats_ops.token_frequencies(clean),
-    }
-    return ValidationJob(plan, dims={"dim_source": dim_source(spark)}, baselines=baselines)
+
+def test_tablespec_rejects_unknown_keys():
+    """``from_dict`` refuses any key it does not know, ``drift`` included."""
+    with pytest.raises(SpecError, match="unknown TableSpec keys: \\['drift'\\]"):
+        TableSpec.from_dict({**CORPUS_SPEC_DICT, "drift": {}})
 
 
 def _expected(mods_hit: str) -> set:
@@ -240,17 +220,6 @@ def test_referential_orphans(job, corpus_df):
     assert orphans[0].n_rows == len(_expected("src"))
 
 
-def test_drift_detects_shift(spark, job, corpus_df):
-    reports = job.drift(corpus_df)
-    # same generator family, different seed: distribution identical in shape
-    assert reports["n_tok"]["psi"] < 0.05
-    assert not reports["n_tok"]["drifted"]
-    # force drift: halve the length distribution
-    shifted = corpus_df.withColumn("n_tok", (F.col("n_tok") / 4 + 1).cast("int"))
-    rep2 = job.drift(shifted)
-    assert rep2["n_tok"]["psi"] > 0.25 and rep2["n_tok"]["drifted"]
-
-
 def test_run_and_resume(tmp_path, spark, job, corpus_df):
     results = str(tmp_path / "results")
     summary = job.run(corpus_df, results)
@@ -287,19 +256,6 @@ def test_profile_counts_empty_values(spark):
     prof = {r.column: r for r in column_profile(df).collect()}
     assert prof["s"].approx_distinct == 2 and prof["b"].approx_distinct == 2
     assert (prof["s"].min_value, prof["s"].max_value, prof["s"].min_len) == ("", "a", 0)
-
-
-def test_violation_sampling(job, corpus_df):
-    """Deterministic hash sampling of violation rows: reproducible subset,
-    roughly proportional to the fraction."""
-    ann = job.annotate(corpus_df)
-    full = job.violations(ann).count()
-    a = job.violations(ann, sample_fraction=0.25)
-    b = job.violations(ann, sample_fraction=0.25)
-    na, nb = a.count(), b.count()
-    assert na == nb  # deterministic (hash, not rand)
-    assert 0 < na < full
-    assert abs(na / full - 0.25) < 0.15
 
 
 def test_partial_resume_processes_only_remainder(tmp_path, spark, job, corpus_df):

@@ -83,12 +83,12 @@ def test_entry_smoke(spark):
 
 
 def test_r5_gate_window_order_pinned():
-    """The correctness gate takes the FIRST 50 queries() entries; all 31
+    """The correctness gate takes the FIRST 50 queries() entries; all 30
     fit, so the pin covers the full ordered list: the 21 draft-4
-    keyword queries, the table-scope uniqueness / referential / histogram
-    checks, the ValidationJob queries (full pass, quarantine router,
-    pre-flight gate) and the rollout diagnostics. It fails if an edit
-    adds, drops or reorders an entry."""
+    keyword queries, the table-scope uniqueness / referential checks,
+    the ValidationJob queries (full pass, quarantine router, pre-flight
+    gate) and the rollout diagnostics. It fails if an edit adds, drops or
+    reorders an entry."""
     assert list(entry_mod.queries()) == [
         # draft-4 keywords lowered to native Columns / kernel
         "type_integer", "enum_scalar", "all_of", "any_of", "one_of", "not",
@@ -97,7 +97,7 @@ def test_r5_gate_window_order_pinned():
         "dependencies", "properties_struct", "tuple_items", "map_object",
         "pattern_properties", "json_wellformed", "json_schema_kernel",
         # table-scope checks
-        "dup_keys", "orphans", "histogram",
+        "dup_keys", "orphans",
         # ValidationJob: full pass, quarantine router, pre-flight gate
         "corpus_validate", "quarantine_rows", "sampled_gate",
         # rollout diagnostics
