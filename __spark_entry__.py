@@ -3,11 +3,11 @@
 `entry(spark)` — flagship: full TableSpec validation of the documents table
 at sf0.001 (per-check fail counts, the engine's verdict-summary shape).
 
-`queries()` — the validation product's 30 queries: the draft-4 keyword
+`queries()` — the validation product's 26 queries: the draft-4 keyword
 operators of SURVEY.md §2.1 lowered through the engine's compiler, the
 table-scope uniqueness / referential checks, the ValidationJob
-full pass, quarantine router and pre-flight gate, and the rollout
-diagnostics. Each returns a DataFrame over (spark, sf_dir).
+full pass, quarantine router and pre-flight gate. Each returns a
+DataFrame over (spark, sf_dir).
 
 `oracle_sql()` — DuckDB twin per query. Aggregates are aliased identically
 on both sides; count-based metrics avoid HUGEINT/float-order pitfalls, and
@@ -394,201 +394,6 @@ def q_pattern_properties(spark, sf_dir):
     return _count_pass(m_df, pred)
 
 
-def _rollout_specs() -> tuple[dict, dict]:
-    """v1 = the flagship corpus contract's row-level checks; v2 = the
-    next contract revision: n_tok ceiling tightened 2048 → 1024 and the
-    len-consistency row check dropped (the new ingest recomputes n_tok
-    itself) — a tighten + a loosen, so every transition cell is
-    exercised."""
-    from jsonschema_spark.benchlib import CORPUS_SPEC_DICT
-
-    v1 = {
-        k: CORPUS_SPEC_DICT[k] for k in ("columns", "required", "row_checks")
-    }
-    v2 = {
-        "columns": {
-            "doc_id": v1["columns"]["doc_id"],
-            "tokens": v1["columns"]["tokens"],
-            "n_tok": {"type": "integer", "minimum": 1, "maximum": 1024},
-        },
-        "required": v1["required"],
-    }
-    return v1, v2
-
-
-def _capped_plan(df):
-    """Plan of the v1 contract with token arrays capped at 2000 items, so
-    overlong arrays co-fire col_tokens with the injected violations."""
-    from jsonschema_spark.plans.plan import TableSpec, compile_table_spec
-
-    v1, _ = _rollout_specs()
-    v1 = {**v1, "columns": {**v1["columns"], "tokens": {
-        **v1["columns"]["tokens"], "maxItems": 2000,
-    }}}
-    return compile_table_spec(TableSpec.from_dict(v1), df.schema)
-
-
-def _rollout_check_sql() -> dict:
-    """DuckDB twins of the v1 row-level checks, keyed by the compiler's
-    check names (the corpus checks without the referential one)."""
-    ok = _corpus_check_exprs()
-    del ok["ref_source"]
-    return ok
-
-
-def _capped_check_sql() -> dict:
-    """DuckDB twins of the checks of ``_capped_plan``."""
-    from jsonschema_spark.sources.corpus import VOCAB_SIZE
-
-    ok = _rollout_check_sql()
-    ok["col_tokens"] = (
-        "(tokens IS NULL OR (len(tokens) >= 1 AND len(tokens) <= 2000"
-        " AND len(list_filter(tokens,"
-        f" t -> t < 0 OR t > {VOCAB_SIZE - 1})) = 0))"
-    )
-    return ok
-
-
-def _spec_rollout_oracle_sql() -> str:
-    ok = _rollout_check_sql()
-    tbl = f"read_parquet('{_corpus_oracle_path()}/*.parquet')"
-    v1 = " AND ".join(ok.values())
-    v2 = " AND ".join(
-        "(n_tok IS NULL OR (n_tok >= 1 AND n_tok <= 1024))"
-        if name == "col_n_tok"
-        else expr
-        for name, expr in ok.items()
-        if name != "row_len_consistent"
-    )
-    return (
-        f"WITH t AS (SELECT source, {v1} AS v1, {v2} AS v2 FROM {tbl})"
-        ' SELECT source AS "group", count(*) AS n,'
-        " count(*) FILTER (WHERE v1 AND v2) AS pass_pass,"
-        " count(*) FILTER (WHERE v1 AND NOT v2) AS pass_fail,"
-        " count(*) FILTER (WHERE NOT v1 AND v2) AS fail_pass,"
-        " count(*) FILTER (WHERE NOT v1 AND NOT v2) AS fail_fail,"
-        " round(count(*) FILTER (WHERE v1 AND NOT v2)"
-        "   / CAST(count(*) AS DOUBLE), 6) AS break_rate"
-        " FROM t GROUP BY source"
-    )
-
-
-def _violation_cooccur_oracle_sql() -> str:
-    ok = _capped_check_sql()
-    tbl = f"read_parquet('{_corpus_oracle_path()}/*.parquet')"
-    cases = ", ".join(
-        f"CASE WHEN NOT {expr} THEN '{name}' END" for name, expr in ok.items()
-    )
-    return (
-        f"WITH f AS (SELECT list_filter([{cases}], x -> x IS NOT NULL)"
-        f"  AS fl FROM {tbl}),"
-        " g AS (SELECT fl FROM f WHERE len(fl) >= 2),"
-        " p AS (SELECT a.u AS check_a, b.u AS check_b"
-        "  FROM g, unnest(g.fl) AS a(u), unnest(g.fl) AS b(u)"
-        "  WHERE a.u < b.u)"
-        " SELECT check_a, check_b, count(*) AS n_docs"
-        " FROM p GROUP BY check_a, check_b"
-    )
-
-
-def q_spec_rollout(spark, sf_dir):
-    """Pre-rollout audit of a contract change: validate the corpus against
-    spec v1 AND v2 in ONE scan (both compiled to native Columns in the
-    same codegen projection) and emit the per-source pass/fail transition
-    matrix — pass_fail is the rollout blast radius, fail_pass the checks
-    the revision silently loosened. Shuffle is O(sources)."""
-    from jsonschema_spark.plans.plan import TableSpec, compile_table_spec
-    from jsonschema_spark.plans.rollout import spec_rollout_audit
-
-    df = _materialized_corpus(spark)
-    v1, v2 = _rollout_specs()
-    p1 = compile_table_spec(TableSpec.from_dict(v1), df.schema)
-    p2 = compile_table_spec(TableSpec.from_dict(v2), df.schema)
-    return spec_rollout_audit(df, p1, p2, group_col="source")
-
-
-def q_violation_cooccur(spark, sf_dir):
-    """Root-cause view of a validation run: which checks fail TOGETHER
-    (injected bad-n_tok rows co-fire col_n_tok + len_consistent; overlong
-    token arrays co-fire col_tokens with whichever injection hits the same
-    row). Failing rows are filtered inside the scan stage; the pair
-    fan-out is a HOF over a ≤|checks| array, aggregate keys ≤ checks²."""
-    from jsonschema_spark.plans.rollout import violation_cooccurrence
-
-    df = _materialized_corpus(spark)
-    plan = _capped_plan(df)
-    return violation_cooccurrence(plan.annotate(df))
-
-
-def _check_activation_oracle_sql() -> str:
-    # NULL verdicts count as failures on both sides: the engine's row
-    # checks coalesce NULL -> False (plans/plan.py), so the oracle wraps
-    # every predicate in coalesce(expr, FALSE) for the same truth table
-    ok = _capped_check_sql()
-    tbl = f"read_parquet('{_corpus_oracle_path()}/*.parquet')"
-    parts = []
-    for name, expr in ok.items():
-        fail = f"count(*) FILTER (WHERE NOT coalesce({expr}, FALSE))"
-        parts.append(
-            f"SELECT '{name}' AS \"check\", count(*) AS n,"
-            f" {fail} AS n_fail,"
-            f" round({fail} / CAST(count(*) AS DOUBLE), 6) AS fail_rate,"
-            f" CASE WHEN {fail} = 0 THEN 'dead'"
-            f"  WHEN {fail} = count(*) THEN 'always'"
-            f"  ELSE 'active' END AS status"
-            f" FROM {tbl}"
-        )
-    return " UNION ALL ".join(parts)
-
-
-def q_check_activation(spark, sf_dir):
-    """Per-check fire-rate profile of the flagship contract over the
-    corpus — the marginal complement of violation_cooccur: 'dead' checks
-    (never fail) are removal candidates, 'always' checks mean the
-    contract no longer matches the data. One map-side-combined aggregate;
-    no data row shuffles (the agg emits a single row of per-check sums)."""
-    from jsonschema_spark.plans.rollout import check_activation_profile
-
-    df = _materialized_corpus(spark)
-    plan = _capped_plan(df)
-    return check_activation_profile(plan.annotate(df))
-
-
-def _violation_examples_oracle_sql() -> str:
-    ok = _capped_check_sql()
-    tbl = f"read_parquet('{_corpus_oracle_path()}/*.parquet')"
-    cases = ", ".join(
-        f"CASE WHEN NOT coalesce({expr}, FALSE) THEN '{name}' END"
-        for name, expr in ok.items()
-    )
-    prio = _hex60("concat('vx:', id)")
-    return (
-        f"WITH f AS (SELECT doc_id, list_filter([{cases}],"
-        f"  x -> x IS NOT NULL) AS fl FROM {tbl}),"
-        " e AS (SELECT u.x AS chk, CAST(doc_id AS VARCHAR) AS id"
-        "  FROM f, unnest(f.fl) AS u(x)),"
-        f" p AS (SELECT chk, id, {prio} AS prio FROM e),"
-        " r AS (SELECT chk, id, prio, row_number() OVER"
-        "  (PARTITION BY chk ORDER BY prio, id) AS rn FROM p)"
-        ' SELECT chk AS "check", count(*) AS n_examples,'
-        "  list(id ORDER BY prio, id) AS example_ids"
-        " FROM r WHERE rn <= 5 GROUP BY 1"
-    )
-
-
-def q_violation_examples(spark, sf_dir):
-    """Deterministic debug samples: the 5 content-addressed example rows
-    per failing check (smallest portable hash of the id) — identical on
-    any partitioning or engine, unlike a LIMIT k. Exact two-phase
-    salted top-k, so a hot check never funnels through one reducer;
-    output is ≤ |checks| rows."""
-    from jsonschema_spark.plans.rollout import violation_examples
-
-    df = _materialized_corpus(spark)
-    plan = _capped_plan(df)
-    return violation_examples(plan.annotate(df), id_col="doc_id", k=5)
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Every query, in the order tests/test_driver_contract.py pins."""
     return {
@@ -618,10 +423,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "corpus_validate": q_corpus_validate,
         "quarantine_rows": q_quarantine_rows,
         "sampled_gate": q_sampled_gate,
-        "spec_rollout": q_spec_rollout,
-        "violation_cooccur": q_violation_cooccur,
-        "check_activation": q_check_activation,
-        "violation_examples": q_violation_examples,
     }
 
 
@@ -833,8 +634,4 @@ def oracle_sql() -> dict[str, str]:
             "         '^[0-9]$'))) = 0) AS n_pass,"
             " count(*) AS n_rows FROM events"
         ),
-        "spec_rollout": _spec_rollout_oracle_sql(),
-        "violation_cooccur": _violation_cooccur_oracle_sql(),
-        "check_activation": _check_activation_oracle_sql(),
-        "violation_examples": _violation_examples_oracle_sql(),
     }

@@ -14,8 +14,8 @@ Spark-first:
                   sampled pre-flight gate.
 - ``plans``     — CompiledPlan + ValidationJob: one partition-parallel pass
                   emitting per-row verdicts, violation rows, the
-                  accepted/quarantined split, lineage, checkpoint/resume and
-                  rollout diagnostics.
+                  accepted/quarantined split, lineage with per-check fail
+                  counts, and checkpoint/resume.
 - ``sources``   — Spark session factory + deterministic synthetic corpus
                   generator.
 """

@@ -36,6 +36,17 @@ def _build_session(args):
     return get_spark(app_name="jsonschema_spark-cli", cores=args.cores)
 
 
+def _dim_pair(value: str) -> tuple[str, str]:
+    """``--dim name=parquet_path`` → ``(name, path)``, refused at parse
+    time (exit 2) before any Spark work when either side is missing."""
+    name, sep, path = value.partition("=")
+    if not (sep and name and path):
+        raise argparse.ArgumentTypeError(
+            f"expected name=parquet_path, got {value!r}"
+        )
+    return name, path
+
+
 def cmd_package(args) -> int:
     """Zip the package for --py-files shipping."""
     import jsonschema_spark
@@ -53,8 +64,7 @@ def cmd_validate(args) -> int:
     """Full validation pass over a parquet/corpus input; writes the results
     tree (lineage/violations/duplicates/orphans/profile/summary.json) and
     prints one JSON summary line: the ``summary.json`` fields plus
-    ``wall_sec_total`` (and ``quarantine_dir`` / ``diagnostics`` when
-    asked for)."""
+    ``wall_sec_total`` (and ``quarantine_dir`` when asked for)."""
     spark = _build_session(args)
     from jsonschema_spark.plans.job import ValidationJob
     from jsonschema_spark.plans.plan import TableSpec, compile_table_spec
@@ -69,8 +79,7 @@ def cmd_validate(args) -> int:
     spec = TableSpec.from_json(Path(args.spec).read_text())
     plan = compile_table_spec(spec, df.schema)
     dims = {}
-    for pair in args.dim or []:
-        name, path = pair.split("=", 1)
+    for name, path in args.dim or []:
         dims[name] = spark.read.parquet(path)
     if "dim_source" in {r["dim"] for r in plan.references.values()} and (
         "dim_source" not in dims
@@ -116,31 +125,6 @@ def cmd_validate(args) -> int:
             str(base / "quarantined")
         )
         summary["quarantine_dir"] = str(base)
-    if args.diagnostics:
-        # one extra pass over the corpus, shared by all three diagnostic
-        # artifacts via persist (they are check-keyed and metadata-sized
-        # on the way out; the scan is the only corpus-sized cost)
-        from jsonschema_spark.plans.rollout import (
-            check_activation_profile,
-            violation_cooccurrence,
-            violation_examples,
-        )
-
-        ann = plan.annotate(df).persist()
-        try:
-            base = Path(args.results)
-            check_activation_profile(ann).write.mode("overwrite").parquet(
-                str(base / "activation")
-            )
-            violation_cooccurrence(ann).write.mode("overwrite").parquet(
-                str(base / "cooccurrence")
-            )
-            violation_examples(ann, id_col=args.id_col).write.mode(
-                "overwrite"
-            ).parquet(str(base / "examples"))
-        finally:
-            ann.unpersist()
-        summary["diagnostics"] = ["activation", "cooccurrence", "examples"]
     summary["wall_sec_total"] = round(time.time() - t0, 3)
     print(json.dumps(summary, default=str))
     return 0
@@ -169,12 +153,8 @@ def main(argv=None) -> int:
     pv.add_argument("--rows", type=int, default=100_000)
     pv.add_argument("--seed", type=int, default=42)
     pv.add_argument("--cores", type=int, default=None)
-    pv.add_argument("--dim", action="append", help="name=parquet_path")
     pv.add_argument(
-        "--diagnostics",
-        action="store_true",
-        help="also write activation/cooccurrence/examples to the results"
-        " tree (one extra corpus pass)",
+        "--dim", action="append", type=_dim_pair, help="name=parquet_path"
     )
     pv.add_argument("--id-col", default="doc_id")
     pv.add_argument(

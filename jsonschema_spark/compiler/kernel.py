@@ -144,9 +144,10 @@ def value_validation_kernel(spec: dict | str, value_col: Column) -> Column:
 def multi_spec_validity_kernel(specs: list, idx_col: Column, doc_col: Column) -> Column:
     """Boolean validity of each JSON document against ``specs[idx]``.
 
-    One Arrow-batched kernel serving many specs at once — used by the suite
-    parity harness (557 cases in one Spark job) and by multi-tenant
-    validation jobs where different row groups carry different contracts.
+    One Arrow-batched kernel serving many specs at once in one Spark job.
+    Its callers are the suite parity tests (tests/test_spark_backends.py,
+    tests/test_bench_suite.py) and ``scripts/refbench.py``; the validation
+    path does not use it.
     """
     specs_text = [s if isinstance(s, str) else json.dumps(s) for s in specs]
 

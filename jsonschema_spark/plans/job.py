@@ -24,11 +24,12 @@ the input four times and runs no job whose only purpose is to count:
    domain is resolved once per run (operators/referential.py).
 
 Everything else comes from ONE read of ``lineage/``: ``n_rows``,
-``n_valid``, each orphan count (the sum of ``fail_ref_<col>``) and
-``profile/`` (a roll-up of the partials), so a resumed run's totals and
-profile cover the whole table without re-reading it. The passes re-read
-the scan rather than caching 10^12 rows; Parquet column pruning makes each
-re-read touch only the columns it needs.
+``n_valid``, each check's fail count (the sum of ``fail_<check>``; a
+reference's is its orphan row count) and ``profile/`` (a roll-up of the
+partials), so a resumed run's totals and profile cover the whole table
+without re-reading it. The passes re-read the scan rather than caching
+10^12 rows; Parquet column pruning makes each re-read touch only the
+columns it needs.
 
 Checkpoint/resume: lineage rows are written per unit; a resumed run
 anti-joins completed units and processes only the remainder (results are
@@ -55,7 +56,6 @@ from jsonschema_spark.plans.plan import (
     annotation_columns,
     check_columns,
     failed,
-    failed_checks,
     root_failures,
 )
 
@@ -200,7 +200,13 @@ class ValidationJob:
         drop = annotation_columns(annotated)
         rejected = failed(F.col("_valid"))
         accepted = annotated.filter(~rejected).drop(*drop)
-        names = failed_checks(self.check_columns(annotated))
+        names = F.filter(
+            F.array(*[
+                F.when(failed(F.col(c)), F.lit(c.removeprefix(CHECK_PREFIX)))
+                for c in self.check_columns(annotated)
+            ]),
+            lambda x: x.isNotNull(),
+        )
         quarantined = annotated.filter(rejected).select(
             *[c for c in annotated.columns if c not in drop],
             F.size(names).alias("n_failed"),
@@ -261,7 +267,9 @@ class ValidationJob:
         ``lineage/`` (per-unit verdicts and profile partials, the
         checkpoint), ``violations/``, ``duplicates_<key>/``,
         ``orphans_<col>/``, ``profile/`` (the roll-up of ``lineage/``),
-        ``summary.json``. Returns the summary dict."""
+        ``summary.json``. Returns the summary dict; its ``checks`` maps
+        each check (the plan's, then ``ref_<col>``) to the number of rows
+        that failed it."""
         spark = df.sparkSession
         t0 = time.time()
 
@@ -313,10 +321,11 @@ class ValidationJob:
         # profile roll-up and observed on its one-row result, in the write's
         # own stage (an observation in a shuffle map stage could count a
         # retried task twice)
+        checks = self.plan.check_names + [f"ref_{c}" for c in self.plan.references]
         totals = {
             "n_rows": F.sum("n_rows"),
             "n_valid": F.sum("n_valid"),
-            **{f"orphans_{c}": F.sum(f"fail_ref_{c}") for c in self.plan.references},
+            **{f"fail_{c}": F.sum(f"fail_{c}") for c in checks},
         }
         rolled = spark.read.parquet(lineage_path).agg(
             *[agg.alias(k) for k, agg in totals.items()],
@@ -327,15 +336,15 @@ class ValidationJob:
             F.inline("_profile")
         ).write.mode("overwrite").parquet(os.path.join(results_dir, "profile"))
         got = {k: v or 0 for k, v in seen.get.items()}
+        fails = {c: got[f"fail_{c}"] for c in checks}
 
         summary = {
             "n_rows": got["n_rows"],
             "n_valid": got["n_valid"],
             "n_invalid": got["n_rows"] - got["n_valid"],
-            "checks": self.plan.check_names
-            + [f"ref_{c}" for c in self.plan.references],
+            "checks": fails,
             "duplicates": dup_counts,
-            "orphans": {c: got[f"orphans_{c}"] for c in self.plan.references},
+            "orphans": {c: fails[f"ref_{c}"] for c in self.plan.references},
             "resumed_units_skipped": resumed_units_skipped,
             "wall_sec": time.time() - t0,
         }

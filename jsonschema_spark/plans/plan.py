@@ -56,6 +56,10 @@ from jsonschema_spark.spec.compile import SpecError, compile_spec
 from jsonschema_spark.spec.pointer import split_pointer
 
 
+def _strs(values) -> bool:
+    return all(isinstance(v, str) for v in values)
+
+
 @dataclass
 class TableSpec:
     columns: dict = field(default_factory=dict)       # col -> draft-4 keyword dict
@@ -67,14 +71,31 @@ class TableSpec:
 
     @classmethod
     def from_dict(cls, raw: dict) -> "TableSpec":
-        known = {
-            "columns", "required", "row_checks", "json_columns", "unique",
-            "references",
-        }
-        unknown = set(raw) - known
+        """A TableSpec from its JSON object (CLI ``--spec``). An unknown key,
+        or a value of the wrong shape, raises SpecError naming the key."""
+        if not isinstance(raw, dict):
+            raise SpecError(f"a TableSpec is a JSON object, got {raw!r}")
+        unknown = set(raw) - set(cls.__dataclass_fields__)
         if unknown:
             raise SpecError(f"unknown TableSpec keys: {sorted(unknown)}")
-        return cls(**{k: raw[k] for k in known if k in raw})
+        for key, value in raw.items():
+            if key in ("required", "unique"):
+                want = "an array of column names"
+                ok = isinstance(value, list) and _strs(value)
+            elif key == "row_checks":
+                want = "an object of SQL boolean expressions"
+                ok = isinstance(value, dict) and _strs(value.values())
+            elif key == "references":
+                want = 'an object of {"dim": name, "key": column}'
+                ok = isinstance(value, dict) and all(
+                    isinstance(r, dict) and set(r) == {"dim", "key"} and _strs(r.values())
+                    for r in value.values()
+                )
+            else:
+                want, ok = "an object", isinstance(value, dict)
+            if not ok:
+                raise SpecError(f"TableSpec {key!r} must be {want}, got {value!r}")
+        return cls(**raw)
 
     @classmethod
     def from_json(cls, text: str) -> "TableSpec":
@@ -141,20 +162,6 @@ def annotation_columns(annotated: DataFrame) -> list:
         for c in annotated.columns
         if c.startswith((CHECK_PREFIX, VERDICT_PREFIX)) or c == "_valid"
     ]
-
-
-def failed_checks(checks: list) -> Column:
-    """array<string> of the names (prefix stripped) of the failed ``chk_*``
-    columns among ``checks``, in the given order; bounded by |checks|."""
-    return F.filter(
-        F.array(
-            *[
-                F.when(failed(F.col(c)), F.lit(c.removeprefix(CHECK_PREFIX)))
-                for c in checks
-            ]
-        ),
-        lambda x: x.isNotNull(),
-    )
 
 
 @dataclass(frozen=True)

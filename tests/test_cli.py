@@ -1,5 +1,5 @@
 """CLI (spark-submit entry) contract: package zip, validate job with
-results tree + resume, diagnostics, pre-flight gate and quarantine."""
+results tree + resume, pre-flight gate and quarantine."""
 
 from __future__ import annotations
 
@@ -8,6 +8,8 @@ import subprocess
 import sys
 import zipfile
 from pathlib import Path
+
+import pytest
 
 REPO = Path(__file__).resolve().parent.parent
 
@@ -89,37 +91,23 @@ def test_validate_cli_id_col(tmp_path, spark):
     assert [(r.id, r.check) for r in rows] == [(2, "col_s")]
 
 
-def test_validate_cli_diagnostics(tmp_path, spark):
-    spec = {
-        "columns": {
-            "doc_id": {"type": "string", "pattern": "^doc-[0-9]{12}$"},
-            "n_tok": {"type": "integer", "minimum": 1, "maximum": 2048},
-        },
-        "required": ["doc_id", "tokens", "n_tok", "source"],
-        "row_checks": {"len_consistent": "n_tok = size(tokens)"},
-    }
-    spec_file = tmp_path / "spec.json"
-    spec_file.write_text(json.dumps(spec))
-    results = tmp_path / "results"
-
+def test_validate_cli_rejects_malformed_dim(tmp_path, capsys):
+    """``--dim`` without ``=`` is a usage error (exit 2) raised while the
+    arguments are parsed, before a session starts or results are written."""
     from jsonschema_spark.cli import main
 
-    rc = main([
-        "validate", "--input", "synthetic", "--rows", "5000",
-        "--spec", str(spec_file), "--results", str(results), "--cores", "8",
-        "--diagnostics",
-    ])
-    assert rc == 0
-    act = {
-        r["check"]: r
-        for r in spark.read.parquet(str(results / "activation")).collect()
-    }
-    # the synthetic corpus injects violations, so the length check fires
-    assert act["row_len_consistent"]["status"] == "active"
-    assert all(r["n"] == 5000 for r in act.values())
-    ex = spark.read.parquet(str(results / "examples")).collect()
-    assert all(1 <= r["n_examples"] <= 5 for r in ex)
-    assert (results / "cooccurrence").is_dir()
+    spec_file = tmp_path / "spec.json"
+    spec_file.write_text(json.dumps({"required": ["doc_id"]}))
+    results = tmp_path / "results"
+    with pytest.raises(SystemExit) as exc:
+        main([
+            "validate", "--input", "synthetic", "--rows", "100",
+            "--spec", str(spec_file), "--results", str(results),
+            "--dim", "dim_source",
+        ])
+    assert exc.value.code == 2
+    assert "name=parquet_path" in capsys.readouterr().err
+    assert not results.exists()
 
 
 def test_validate_cli_preflight_and_quarantine(tmp_path, spark):

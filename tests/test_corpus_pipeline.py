@@ -33,10 +33,29 @@ def job(spark, corpus_df):
     return ValidationJob(plan, dims={"dim_source": dim_source(spark)})
 
 
-def test_tablespec_rejects_unknown_keys():
-    """``from_dict`` refuses any key it does not know, ``drift`` included."""
-    with pytest.raises(SpecError, match="unknown TableSpec keys: \\['drift'\\]"):
-        TableSpec.from_dict({**CORPUS_SPEC_DICT, "drift": {}})
+# id -> (keys merged into CORPUS_SPEC_DICT, the SpecError they raise)
+_MALFORMED_TABLESPECS = {
+    "unknown_key": ({"drift": {}}, "unknown TableSpec keys: \\['drift'\\]"),
+    "columns_list": ({"columns": ["doc_id"]}, "'columns' must be an object"),
+    "unique_string": ({"unique": "doc_id"}, "'unique' must be an array"),
+    "required_string": ({"required": "doc_id"}, "'required' must be an array"),
+    "required_nested": ({"required": [["doc_id"]]}, "'required' must be an array"),
+    "row_checks_list": ({"row_checks": ["n_tok > 0"]}, "'row_checks' must be an object"),
+    "row_checks_bool": ({"row_checks": {"pos": True}}, "'row_checks' must be an object"),
+    "json_columns_string": ({"json_columns": "meta"}, "'json_columns' must be an object"),
+    "references_list": ({"references": ["source"]}, "'references' must be an object"),
+    "references_string": ({"references": {"source": "dim_source"}}, "'references' must be"),
+}
+
+
+@pytest.mark.parametrize(
+    "extra, match", _MALFORMED_TABLESPECS.values(), ids=_MALFORMED_TABLESPECS
+)
+def test_tablespec_rejects_unknown_keys(extra, match):
+    """``from_dict`` refuses any key it does not know, ``drift`` included,
+    and any value of the wrong shape, naming its key."""
+    with pytest.raises(SpecError, match=match):
+        TableSpec.from_dict({**CORPUS_SPEC_DICT, **extra})
 
 
 def _expected(mods_hit: str) -> set:
@@ -126,7 +145,7 @@ def test_quarantine_split(job, corpus_df):
     assert labels[src_id] == "ref_source"
 
 
-def test_quarantine_partitions_null_verdicts(spark):
+def test_quarantine_partitions_null_verdicts(tmp_path, spark):
     """Rows whose verdict is NULL stay in the partition: a row check that
     evaluates to NULL, and an annotated frame whose ``_valid`` is NULL,
     both land in the quarantined half, so accepted + quarantined always
@@ -154,6 +173,9 @@ def test_quarantine_partitions_null_verdicts(spark):
     assert sorted(r.id for r in job.violations(raw).collect()) == [2, 3, 4]
     lineage = job.partition_lineage(raw).agg(F.sum("fail_positive")).collect()
     assert lineage[0][0] == 3
+    # and so do run()'s per-check fail counts, a roll-up of that lineage
+    summary = job.run(df, str(tmp_path / "results"))
+    assert summary["checks"] == {"row_positive": 3}
 
 
 def test_null_dimension_key_keeps_orphans_failing(spark):
@@ -229,10 +251,23 @@ def test_run_and_resume(tmp_path, spark, job, corpus_df):
     )
     assert summary["duplicates"]["doc_id"] == len(_expected("dup"))
     assert summary["orphans"]["source"] == len(_expected("src"))
+    # per-check fail counts, in plan order: every corpus check reports at
+    # the root path, so each is its check's row count in violations/
+    assert list(summary["checks"]) == job.plan.check_names + ["ref_source"]
+    written = {
+        r.check: r.n
+        for r in spark.read.parquet(results + "/violations")
+        .groupBy("check").agg(F.count(F.lit(1)).alias("n")).collect()
+    }
+    assert summary["checks"] == {c: written.get(c, 0) for c in summary["checks"]}
+    assert written.keys() <= summary["checks"].keys()
+    assert summary["checks"]["ref_source"] == len(_expected("src"))
+    assert summary["checks"]["col_n_tok"] == len(_expected("ntok"))
     # resume: all units already completed -> zero new rows processed
     summary2 = job.run(corpus_df, results, resume=True)
     assert summary2["resumed_units_skipped"] > 0
     assert summary2["n_rows"] == N  # lineage total unchanged (append of empty)
+    assert summary2["checks"] == summary["checks"]  # a roll-up of lineage/
 
 
 def test_profile(spark, corpus_df):

@@ -83,12 +83,11 @@ def test_entry_smoke(spark):
 
 
 def test_r5_gate_window_order_pinned():
-    """The correctness gate takes the FIRST 50 queries() entries; all 30
+    """The correctness gate takes the FIRST 50 queries() entries; all 26
     fit, so the pin covers the full ordered list: the 21 draft-4
-    keyword queries, the table-scope uniqueness / referential checks,
+    keyword queries, the table-scope uniqueness / referential checks and
     the ValidationJob queries (full pass, quarantine router, pre-flight
-    gate) and the rollout diagnostics. It fails if an edit adds, drops or
-    reorders an entry."""
+    gate). It fails if an edit adds, drops or reorders an entry."""
     assert list(entry_mod.queries()) == [
         # draft-4 keywords lowered to native Columns / kernel
         "type_integer", "enum_scalar", "all_of", "any_of", "one_of", "not",
@@ -100,9 +99,6 @@ def test_r5_gate_window_order_pinned():
         "dup_keys", "orphans",
         # ValidationJob: full pass, quarantine router, pre-flight gate
         "corpus_validate", "quarantine_rows", "sampled_gate",
-        # rollout diagnostics
-        "spec_rollout", "violation_cooccur", "check_activation",
-        "violation_examples",
     ]
 
 
