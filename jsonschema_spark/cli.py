@@ -64,11 +64,14 @@ def cmd_validate(args) -> int:
     """Full validation pass over a parquet/corpus input; writes the results
     tree (lineage/violations/duplicates/orphans/profile/summary.json) and
     prints one JSON summary line: the ``summary.json`` fields plus
-    ``wall_sec_total`` (and ``quarantine_dir`` when asked for)."""
-    spark = _build_session(args)
+    ``wall_sec_total`` (and ``quarantine_dir`` when asked for). The spec
+    is read and shape-checked before the session starts; its columns are
+    checked once the input's schema is known."""
     from jsonschema_spark.plans.job import ValidationJob
     from jsonschema_spark.plans.plan import TableSpec, compile_table_spec
 
+    spec = TableSpec.from_json(Path(args.spec).read_text())
+    spark = _build_session(args)
     if args.input == "synthetic":
         from jsonschema_spark.sources.corpus import corpus
 
@@ -76,7 +79,6 @@ def cmd_validate(args) -> int:
     else:
         df = spark.read.parquet(args.input)
 
-    spec = TableSpec.from_json(Path(args.spec).read_text())
     plan = compile_table_spec(spec, df.schema)
     dims = {}
     for name, path in args.dim or []:
@@ -170,7 +172,13 @@ def main(argv=None) -> int:
     pv.set_defaults(fn=cmd_validate)
 
     args = p.parse_args(argv)
-    return args.fn(args)
+    from jsonschema_spark.spec.compile import SpecError
+
+    try:
+        return args.fn(args)
+    except SpecError as exc:
+        # a malformed spec is a usage error: exit 2 with one line, no traceback
+        p.exit(2, f"{p.prog} {args.cmd}: error: {exc}\n")
 
 
 if __name__ == "__main__":

@@ -7,6 +7,15 @@ keyword follows SURVEY.md §2.1's table; semantics are pinned by the
 pure-Python evaluator (spec/evaluate.py), which the pytest suite
 cross-checks this lowering against on the same inputs.
 
+One walk per column check (:func:`lower_check`) yields both the verdict and
+its parts: a boolean per RFC 6901 path ('' for root-level keywords,
+'/<member>' for struct fields and declared map keys, recursively for nested
+objects) and, for a map whose keys patternProperties/additionalProperties
+match at runtime, one per-entry case list. The verdict is the conjunction
+of the parts; the plan builder turns the same parts into the check's failure
+entries. Where no path is needed (array items, combinators, map entry
+values) ``_lower`` joins the parts under one NULL guard.
+
 Typed-column conventions (documented semantic bridge, SURVEY.md §7):
 
 - SQL ``NULL`` represents JSON ``null``. Struct fields use NULL = "member
@@ -27,9 +36,11 @@ falls back to the Arrow-batched kernel for that check (never silently).
 
 from __future__ import annotations
 
+import operator
 from decimal import Decimal
 from fractions import Fraction
-from typing import Any, Optional
+from functools import reduce
+from typing import Any, Callable, NamedTuple, Optional
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -163,247 +174,105 @@ def lower_predicate(
     return _lower(schema, col, dtype, seen=frozenset())
 
 
-def _has_dynamic_map_keys(s: CompiledSchema) -> bool:
-    return bool(s.pattern_properties) or (
-        s.additional_properties is not None and s.additional_properties is not True
-    )
+class CheckParts(NamedTuple):
+    """A column check from one lowering walk (:func:`lower_check`).
+
+    ``paths`` maps an RFC 6901 path to a boolean Column, never NULL, that
+    holds iff the value meets what the schema asks at that path: '' carries
+    the root-level keywords (type, enum, combinators, required,
+    dependencies, min/maxProperties), '/<name>' a struct field's or a
+    declared map key's subschema, recursively ('/addr/zip') when that
+    member is itself an object. ``entry_cases`` is None unless the column
+    is a map whose keys the schema matches only at runtime
+    (patternProperties / additionalProperties): then it maps one
+    ``map_entries`` element to its ``(failed, keyword)`` cases, where
+    ``keyword`` is the raw-spec key path of the subschema the entry broke
+    (``('patternProperties', regex)`` or ``('additionalProperties',)``).
+    ``verdict`` is the conjunction of ``paths`` and no failed case; it
+    equals ``lower_predicate``."""
+
+    verdict: Column
+    paths: dict
+    entry_cases: Optional[Callable]
 
 
-def lower_dynamic_key_violations(
-    schema: CompiledSchema,
-    col: Column,
-    dtype: T.DataType,
-    raw_spec: Optional[dict] = None,
-) -> Optional[Column]:
-    """``array<struct<path,detail>>`` of per-key failures for map entries
-    matched only DYNAMICALLY — ``patternProperties`` value failures (on any
-    key, declared or not) and ``additionalProperties`` failures on keys
-    matched by neither a declared name nor a pattern. The key names exist
-    only at runtime, so unlike :func:`lower_named_predicates` (static paths)
-    this returns one runtime-computed, RFC 6901-escaped ``'/<key>'`` path
-    per failing entry — the reference's per-key wrapped object errors for
-    arbitrary keys (/root/reference/validate.go:471-500).
-
-    Contract with ``lower_named_predicates(..., dynamic_paths=True)``:
-    ``AND(static predicates) AND size(this) == 0  ==  lower_predicate``.
-    Returns None when the schema has no dynamic key constraints (or the
-    dtype is not map<string, _>). NULL maps yield an empty array (the type
-    gate reports at root). Scope: top-level map columns; nested maps under
-    declared keys keep static-prefix reporting."""
-    import json as _json
-
-    target = deref(schema)
-    if (
-        target is None
-        or not isinstance(dtype, T.MapType)
-        or not isinstance(dtype.keyType, T.StringType)
-        or not _has_dynamic_map_keys(target)
-    ):
-        return None
-    s = target
-    seen = frozenset({id(s)})
-    vtype = dtype.valueType
-    raw = raw_spec or {}
-
-    def _frag(obj: Any, fallback: str) -> str:
-        try:
-            return _json.dumps(obj, sort_keys=True, separators=(",", ":"))
-        except TypeError:
-            return fallback
-
-    def matched(k: Column) -> Column:
-        m = (
-            F.array_contains(F.array(*[F.lit(n) for n in s.properties]), k)
-            if s.properties
-            else F.lit(False)
-        )
-        for regex, _ in s.pattern_properties:
-            m = m | _rlike(k, regex.pattern)
-        return m
-
-    raw_pp = raw.get("patternProperties") or {}
-
-    def per_entry(kv: Column) -> Column:
-        k = kv.getField("key")
-        v = kv.getField("value")
-        # RFC 6901: "~" -> "~0" before "/" -> "~1"
-        path = F.concat(
-            F.lit("/"), F.replace(F.replace(k, F.lit("~"), F.lit("~0")), F.lit("/"), F.lit("~1"))
-        )
-        cases = []
-        for regex, child in s.pattern_properties:
-            ok = F.coalesce(_lower(child, v, vtype, seen), F.lit(False))
-            detail = _frag(
-                {"patternProperties": {regex.pattern: raw_pp.get(regex.pattern)}},
-                '{"patternProperties":%s}' % _json.dumps(regex.pattern),
-            )
-            cases.append(
-                F.when(
-                    _rlike(k, regex.pattern) & ~ok,
-                    F.struct(path.alias("path"), F.lit(detail).alias("detail")),
-                )
-            )
-        if s.additional_properties is False:
-            cases.append(
-                F.when(
-                    ~matched(k),
-                    F.struct(
-                        path.alias("path"),
-                        F.lit('{"additionalProperties":false}').alias("detail"),
-                    ),
-                )
-            )
-        elif s.additional_properties is not None and s.additional_properties is not True:
-            ok = F.coalesce(
-                _lower(s.additional_properties, v, vtype, seen), F.lit(False)
-            )
-            detail = _frag(
-                {"additionalProperties": raw.get("additionalProperties")},
-                '"additionalProperties"',
-            )
-            cases.append(
-                F.when(
-                    ~matched(k) & ~ok,
-                    F.struct(path.alias("path"), F.lit(detail).alias("detail")),
-                )
-            )
-        return F.filter(F.array(*cases), lambda x: x.isNotNull())
-
-    empty = F.array().cast("array<struct<path: string, detail: string>>")
-    return F.coalesce(F.flatten(F.transform(F.map_entries(col), per_entry)), empty)
+def lower_check(schema: CompiledSchema, col: Column, dtype: T.DataType) -> CheckParts:
+    """The column check's verdict and its per-path parts, from one walk.
+    The parts recover the reference's path-wrapped errors
+    (validate.go:74,346,500) and the per-key errors of dynamically matched
+    keys (validate.go:471-500). Dynamic keys of a map nested under a
+    member report at that member's path."""
+    null_ok, paths, cases = _parts(schema, col, dtype, frozenset())
+    guarded = _guarded(col, null_ok, paths)
+    verdict = list(guarded.values())
+    if cases is not None:  # a NULL map's type check is at ''
+        verdict.append(F.coalesce(_entries_ok(col, cases), F.lit(True)))
+    return CheckParts(_conjoin(verdict), guarded, cases)
 
 
-def lower_named_predicates(
-    schema: CompiledSchema, col: Column, dtype: T.DataType, dynamic_paths: bool = False
-) -> dict:
-    """Per-path boolean predicates whose conjunction equals
-    ``lower_predicate``: for struct columns, each property subschema keys
-    under ``/<field>`` (RFC 6901-escaped; recursively ``/a/b`` for nested
-    structs) while every schema-level constraint (type, enum, combinators,
-    required, min/maxProperties, dependencies) keys at ``''``. Non-struct
-    dtypes yield a single ``''`` entry.
-
-    This is how the native path recovers the reference's path-wrapped error
-    locations (validate.go:74,346,500): ValidationJob.violations evaluates
-    these per-path predicates in the same scan stage and emits
-    (id, check, path) rows instead of path-less check names. Termination for
-    cyclic specs is driven by dtype descent, like ``_lower``.
-
-    Map columns (dynamic keys) get per-key entries for the spec's DECLARED
-    property names — the statically known part, matching the reference's
-    per-key wrapped object errors (validate.go:500). Pattern/additional
-    properties over arbitrary keys stay at ``''`` by default (their keys
-    don't exist at compile time); with ``dynamic_paths=True`` the caller
-    pairs this with :func:`lower_dynamic_key_violations` (which reports
-    those per-key at runtime), so the root entry DROPS
-    patternProperties/additionalProperties and the invariant becomes
-    ``AND(static) AND size(dynamic) == 0 == lower_predicate``."""
-    import dataclasses
-
-    target = deref(schema)
-    if (
-        target is not None
-        and isinstance(dtype, T.MapType)
-        and isinstance(dtype.keyType, T.StringType)
-        and (target.properties or (dynamic_paths and _has_dynamic_map_keys(target)))
-    ):
-        s = target
-        seen = frozenset({id(s)})
-        vtype = dtype.valueType
-        entries = {}
-        for name, child in s.properties.items():
-            v = F.element_at(col, F.lit(name))
-            path = "/" + escape_token(name)
-            # absent key / NULL map: a property doesn't constrain
-            guard = ~F.coalesce(F.map_contains_key(col, F.lit(name)), F.lit(False))
-            if isinstance(vtype, (T.StructType, T.MapType)) and deref(child) is not None:
-                for p, pred in lower_named_predicates(child, v, vtype).items():
-                    entries[path + p] = F.when(guard, F.lit(True)).otherwise(
-                        F.coalesce(pred, F.lit(False))
-                    )
-            else:
-                entries[path] = F.when(guard, F.lit(True)).otherwise(
-                    F.coalesce(_lower(child, v, vtype, seen), F.lit(False))
-                )
-        # root keeps everything else; declared property VALUES are already
-        # covered above, so they become empty schemas — but the NAMES must
-        # survive so additionalProperties key-matching still sees them
-        replacements: dict = {
-            "properties": {name: CompiledSchema() for name in s.properties}
-        }
-        if dynamic_paths and _has_dynamic_map_keys(s):
-            # covered per-key by lower_dynamic_key_violations — dropping
-            # them here is what keeps the conjunction-with-dynamic exact
-            replacements["pattern_properties"] = []
-            replacements["additional_properties"] = None
-        root = dataclasses.replace(s, **replacements)
-        entries[""] = lower_predicate(root, col, dtype)
-        return entries
-
-    if target is None or not isinstance(dtype, T.StructType):
-        return {"": lower_predicate(schema, col, dtype)}
-    s = target
-    fields = {f.name: f.dataType for f in dtype.fields}
-    seen = frozenset({id(s)})
-    entries: dict = {}
-
-    def put(key: str, pred: Column, guard: Column) -> None:
-        wrapped = F.when(guard, F.lit(True)).otherwise(F.coalesce(pred, F.lit(False)))
-        entries[key] = (entries[key] & wrapped) if key in entries else wrapped
-
-    for name, ftype in fields.items():
-        applied = [s.properties[name]] if name in s.properties else []
-        for regex, child in s.pattern_properties:
-            if regex.search(name) is not None:
-                applied.append(child)
-        fcol = col.getField(name)
-        path = "/" + escape_token(name)
-        # absent member (NULL field) / NULL object: properties don't constrain
-        guard = col.isNull() | fcol.isNull()
-        if applied:
-            for child in applied:
-                if isinstance(ftype, T.StructType) and deref(child) is not None:
-                    for p, pred in lower_named_predicates(child, fcol, ftype).items():
-                        put(path + p, pred, guard)
-                else:
-                    put(path, _lower(child, fcol, ftype, seen), guard)
-        elif s.additional_properties is False:
-            entries[path] = F.when(col.isNull(), F.lit(True)).otherwise(
-                fcol.isNull()
-            )
-        elif isinstance(s.additional_properties, CompiledSchema):
-            put(path, _lower(s.additional_properties, fcol, ftype, seen), guard)
-
-    root = dataclasses.replace(
-        s, properties={}, pattern_properties=[], additional_properties=None
-    )
-    entries[""] = lower_predicate(root, col, dtype)
-    return entries
+def _conjoin(preds) -> Column:
+    preds = list(preds)
+    return reduce(operator.and_, preds) if preds else F.lit(True)
 
 
-def _lower(
+def _parts(
     schema: CompiledSchema, col: Column, dtype: T.DataType, seen: frozenset
-) -> Column:
+) -> tuple:
+    """``(null_ok, paths, entry_cases)``: ``paths`` maps a path to the
+    predicates the schema puts there on a NON-NULL value (they may be NULL
+    themselves); ``null_ok`` is the exact verdict on NULL, computed at
+    build time."""
     target = deref(schema)
     if target is None:
-        return F.lit(True)  # degenerate pure-$ref cycle: no reachable constraints
+        return True, {"": []}, None  # degenerate pure-$ref cycle: no reachable constraints
     if id(target) in seen:
         # cyclic schema at the same column position: a finite typed value
         # cannot recurse further than its own DataType, so the recursion is
         # driven by dtype descent; a same-position revisit means no progress.
         raise LoweringError("cyclic $ref not expressible at fixed column type")
     seen = seen | {id(target)}
-    schema = target
+    paths, cases = _lower_non_null(target, col, dtype, seen)
+    return is_valid(target, None), paths, cases
 
-    null_verdict = F.lit(is_valid(schema, None))  # exact, computed at build time
-    non_null = _lower_non_null(schema, col, dtype, seen)
-    return F.when(col.isNull(), null_verdict).otherwise(F.coalesce(non_null, F.lit(False)))
+
+def _guarded(col: Column, null_ok: bool, paths: dict) -> dict:
+    """One boolean per path, never NULL: a NULL value gets ``null_ok`` at
+    '' and is not constrained below it."""
+    return {
+        path: F.when(col.isNull(), F.lit(null_ok if path == "" else True)).otherwise(
+            F.coalesce(_conjoin(preds), F.lit(False))
+        )
+        for path, preds in paths.items()
+    }
+
+
+def _lower(
+    schema: CompiledSchema, col: Column, dtype: T.DataType, seen: frozenset
+) -> Column:
+    """The verdict where no failure needs a path: every part joined with
+    AND under one NULL guard."""
+    null_ok, paths, cases = _parts(schema, col, dtype, seen)
+    preds = [p for group in paths.values() for p in group]
+    if cases is not None:
+        preds.append(_entries_ok(col, cases))
+    return _guarded(col, null_ok, {"": preds})[""]
+
+
+def _entries_ok(col: Column, cases: Callable) -> Column:
+    """True iff no entry of the map ``col`` fails one of its cases; NULL
+    for a NULL map."""
+    return F.forall(
+        F.map_entries(col), lambda kv: ~reduce(operator.or_, [bad for bad, _ in cases(kv)])
+    )
 
 
 def _lower_non_null(
     schema: CompiledSchema, col: Column, dtype: T.DataType, seen: frozenset
-) -> Column:
+) -> tuple:
+    """``(paths, entry_cases)`` of a non-null value (see ``_parts``):
+    everything lands at '' except an object's member subschemas."""
     preds: list[Column] = []
+    paths = {"": preds}
     vtype = _json_type_of(dtype)
 
     # type -------------------------------------------------------------------
@@ -413,7 +282,8 @@ def _lower_non_null(
         elif vtype == "number" and "integer" in schema.types:
             preds.append(_is_integral_value(col, dtype))
         else:
-            return F.lit(False)  # statically wrong type for every non-null value
+            preds.append(F.lit(False))  # statically wrong type for every non-null value
+            return paths, None
 
     # enum -------------------------------------------------------------------
     if schema.enum is not None:
@@ -437,6 +307,7 @@ def _lower_non_null(
 
     # type-directed keyword groups (only the group matching the column type
     # can ever fire — the reference's skip-fast path becomes a static skip)
+    cases = None
     if vtype == "number":
         preds.extend(_lower_number(schema, col, dtype))
     elif vtype == "string":
@@ -444,12 +315,11 @@ def _lower_non_null(
     elif vtype == "array":
         preds.extend(_lower_array(schema, col, dtype, seen))
     elif vtype == "object":
-        preds.extend(_lower_object(schema, col, dtype, seen))
-
-    result = None
-    for p in preds:
-        result = p if result is None else result & p
-    return result if result is not None else F.lit(True)
+        # each member's subschema under the member's path (``_nest``);
+        # required, dependencies and min/maxProperties at ''
+        lower = _lower_struct if isinstance(dtype, T.StructType) else _lower_map
+        cases = lower(schema, col, dtype, seen, paths)
+    return paths, cases
 
 
 def _lower_enum(enum: list, col: Column, dtype: T.DataType) -> Column:
@@ -601,134 +471,135 @@ def _bounds_only_items(
     return preds
 
 
-def _lower_object(
-    schema: CompiledSchema, col: Column, dtype: T.DataType, seen: frozenset
+def _nest(
+    paths: dict,
+    prefix: str,
+    child: CompiledSchema,
+    value: Column,
+    dtype: T.DataType,
+    present: Optional[Column],
+    seen: frozenset,
+) -> None:
+    """Add ``child``'s parts on the member ``value`` under ``prefix``.
+    ``present`` tests a map key's presence; for a struct field (``None``)
+    a NULL value is the absent member. An absent member passes, and a NULL
+    member constrains nothing below its own path. A nested map's
+    runtime-matched keys report at ``prefix``."""
+    null_ok, sub, cases = _parts(child, value, dtype, seen)
+    if cases is not None:
+        sub[""].append(_entries_ok(value, cases))
+    for path, preds in sub.items():
+        ok = F.coalesce(_conjoin(preds), F.lit(False))
+        if path or present is None or null_ok:
+            ok = F.when(F.isnull(value), F.lit(True)).otherwise(ok)
+        else:  # a map key's NULL value fails the subschema; an absent key passes
+            ok = F.when(F.isnull(value), ~present).otherwise(ok)
+        paths.setdefault(prefix + path, []).append(ok)
+
+
+def _member_keywords(
+    schema: CompiledSchema,
+    col: Column,
+    dtype: T.DataType,
+    seen: frozenset,
+    present: Callable,
+    count: Callable,
 ) -> list:
-    if isinstance(dtype, T.StructType):
-        return _lower_struct(schema, col, dtype, seen)
-    return _lower_map(schema, col, dtype, seen)
+    """required / dependencies / min-maxProperties, given the member test
+    ``present(name)`` and the member count ``count()``."""
+    preds = [present(name) for name in schema.required]
+    for key, dep in schema.dependencies.items():
+        if isinstance(dep, tuple):
+            need = _conjoin([present(d) for d in dep])
+        else:
+            need = _lower(dep, col, dtype, seen)
+        preds.append(F.when(present(key), need).otherwise(F.lit(True)))
+    if schema.min_properties is not None:
+        preds.append(count() >= schema.min_properties)
+    if schema.max_properties is not None:
+        preds.append(count() <= schema.max_properties)
+    return preds
 
 
 def _lower_struct(
-    schema: CompiledSchema, col: Column, dtype: T.StructType, seen: frozenset
-) -> list:
+    schema: CompiledSchema, col: Column, dtype: T.StructType, seen: frozenset, paths: dict
+) -> None:
     """Struct columns: member names are *static* (the fields), so key-directed
     keywords (properties / patternProperties / additionalProperties /
     required / min-maxProperties counting) partially evaluate at plan-build
     time — the reference's per-key dispatch loop (validate.go:452-508)
-    becomes compile-time constant folding here."""
-    preds = []
+    becomes compile-time constant folding here. A NULL field is an absent
+    member."""
     fields = {f.name: f.dataType for f in dtype.fields}
+    members = {name: col.getField(name) for name in fields}
 
     for name, ftype in fields.items():
-        applied = []
-        if name in schema.properties:
-            applied.append(schema.properties[name])
+        applied = [schema.properties[name]] if name in schema.properties else []
         for regex, child in schema.pattern_properties:
             if regex.search(name) is not None:
                 applied.append(child)
-        fcol = col.getField(name)
-        if applied:
-            for child in applied:
-                child_pred = _lower(child, fcol, ftype, seen)
-                # absent member (NULL field) is not constrained by properties
-                preds.append(F.when(fcol.isNull(), F.lit(True)).otherwise(child_pred))
-        elif schema.additional_properties is False:
-            preds.append(fcol.isNull())
-        elif isinstance(schema.additional_properties, CompiledSchema):
-            extra_pred = _lower(schema.additional_properties, fcol, ftype, seen)
-            preds.append(F.when(fcol.isNull(), F.lit(True)).otherwise(extra_pred))
+        path = "/" + escape_token(name)
+        if not applied and schema.additional_properties is False:
+            paths.setdefault(path, []).append(F.isnull(members[name]))
+        elif not applied and isinstance(schema.additional_properties, CompiledSchema):
+            applied.append(schema.additional_properties)
+        for child in applied:
+            _nest(paths, path, child, members[name], ftype, None, seen)
 
     def present(name: str) -> Column:
-        return col.getField(name).isNotNull() if name in fields else F.lit(False)
+        return F.isnotnull(members[name]) if name in fields else F.lit(False)
 
-    for name in schema.required:
-        preds.append(present(name))
-
-    for key, dep in schema.dependencies.items():
-        if isinstance(dep, tuple):
-            need = present(dep[0])
-            for d in dep[1:]:
-                need = need & present(d)
-        else:
-            need = _lower(dep, col, dtype, seen)
-        preds.append(F.when(present(key), need).otherwise(F.lit(True)))
-
-    if schema.min_properties is not None or schema.max_properties is not None:
+    def count() -> Column:
         n = F.lit(0)
-        for name in fields:
-            n = n + col.getField(name).isNotNull().cast("int")
-        if schema.min_properties is not None:
-            preds.append(n >= schema.min_properties)
-        if schema.max_properties is not None:
-            preds.append(n <= schema.max_properties)
-    return preds
+        for member in members.values():
+            n = n + F.isnotnull(member).cast("int")
+        return n
+
+    paths[""].extend(_member_keywords(schema, col, dtype, seen, present, count))
 
 
 def _lower_map(
-    schema: CompiledSchema, col: Column, dtype: T.MapType, seen: frozenset
-) -> list:
+    schema: CompiledSchema, col: Column, dtype: T.MapType, seen: frozenset, paths: dict
+) -> Optional[Callable]:
     """Map columns: dynamic keys — absent-vs-null is preserved
-    (map_contains_key), pattern keys run per-entry via forall."""
+    (map_contains_key). Declared keys get their own paths; keys matched by
+    patternProperties / additionalProperties are known only per row, so
+    they come back as the per-entry cases."""
     if not isinstance(dtype.keyType, T.StringType):
         raise LoweringError("object checks require map<string, _> columns")
-    preds = []
     vtype = dtype.valueType
 
+    def present(name: str) -> Column:
+        return F.map_contains_key(col, F.lit(name))
+
     for name, child in schema.properties.items():
-        member_ok = _lower(child, F.element_at(col, F.lit(name)), vtype, seen)
-        preds.append(
-            F.when(F.map_contains_key(col, F.lit(name)), member_ok).otherwise(F.lit(True))
-        )
-    for regex, child in schema.pattern_properties:
-        preds.append(
-            F.forall(
-                F.map_entries(col),
-                lambda kv: F.when(
-                    _rlike(kv.getField("key"), regex.pattern),
-                    _lower(child, kv.getField("value"), vtype, seen),
-                ).otherwise(F.lit(True)),
-            )
-        )
-    if schema.additional_properties is not None and schema.additional_properties is not True:
-        known = (
-            F.array(*[F.lit(k) for k in schema.properties])
-            if schema.properties
-            else F.array().cast("array<string>")
-        )
+        value = F.element_at(col, F.lit(name))
+        _nest(paths, "/" + escape_token(name), child, value, vtype, present(name), seen)
+    paths[""].extend(
+        _member_keywords(schema, col, dtype, seen, present, lambda: F.size(col))
+    )
 
-        def matched(k: Column) -> Column:
-            m = F.array_contains(known, k) if schema.properties else F.lit(False)
-            for regex, _ in schema.pattern_properties:
-                m = m | _rlike(k, regex.pattern)
-            return m
+    extra = schema.additional_properties
+    if not schema.pattern_properties and (extra is None or extra is True):
+        return None
+    declared = F.array(*[F.lit(n) for n in schema.properties]) if schema.properties else None
+    needs_value = bool(schema.pattern_properties) or extra is not False
 
-        if schema.additional_properties is False:
-            preds.append(F.forall(F.map_keys(col), matched))
-        else:
-            extra = schema.additional_properties
-            preds.append(
-                F.forall(
-                    F.map_entries(col),
-                    lambda kv: F.when(
-                        matched(kv.getField("key")), F.lit(True)
-                    ).otherwise(_lower(extra, kv.getField("value"), vtype, seen)),
-                )
-            )
-    for name in schema.required:
-        preds.append(F.map_contains_key(col, F.lit(name)))
-    for key, dep in schema.dependencies.items():
-        if isinstance(dep, tuple):
-            need = F.map_contains_key(col, F.lit(dep[0]))
-            for d in dep[1:]:
-                need = need & F.map_contains_key(col, F.lit(d))
-        else:
-            need = _lower(dep, col, dtype, seen)
-        preds.append(
-            F.when(F.map_contains_key(col, F.lit(key)), need).otherwise(F.lit(True))
-        )
-    if schema.min_properties is not None:
-        preds.append(F.size(col) >= schema.min_properties)
-    if schema.max_properties is not None:
-        preds.append(F.size(col) <= schema.max_properties)
-    return preds
+    def cases(kv: Column) -> list:
+        key = kv.getField("key")
+        value = kv.getField("value") if needs_value else None
+        out = []
+        matched = F.array_contains(declared, key) if declared is not None else F.lit(False)
+        for regex, child in schema.pattern_properties:
+            hit = _rlike(key, regex.pattern)
+            matched = matched | hit
+            failed = hit & ~_lower(child, value, vtype, seen)
+            out.append((failed, ("patternProperties", regex.pattern)))
+        if extra is False:
+            out.append((~matched, ("additionalProperties",)))
+        elif isinstance(extra, CompiledSchema):
+            failed = ~matched & ~_lower(extra, value, vtype, seen)
+            out.append((failed, ("additionalProperties",)))
+        return out
+
+    return cases

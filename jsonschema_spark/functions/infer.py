@@ -1,5 +1,5 @@
-"""Infer a Spark DataType for a parsed JSON value, and convert the value into
-the row shape ``spark.createDataFrame`` expects.
+"""Infer a Spark DataType for a parsed JSON value, and build the literal
+Column of the value at that type.
 
 Used to recast free-form JSON instances (e.g. the reference's suite cases)
 into typed single-column DataFrames so they can exercise the native Column
@@ -108,20 +108,3 @@ def to_literal(value: Any, dtype: T.DataType):
         return F.lit(int(value))
     return F.lit(value)
 
-
-def to_row_value(value: Any, dtype: T.DataType) -> Any:
-    """Convert a parsed JSON value into createDataFrame-compatible shape."""
-    if value is None:
-        return None
-    if isinstance(dtype, T.DoubleType):
-        return float(value)
-    if isinstance(dtype, T.LongType):
-        return int(value)
-    if isinstance(dtype, T.ArrayType):
-        return [to_row_value(v, dtype.elementType) for v in value]
-    if isinstance(dtype, T.StructType):
-        return tuple(
-            to_row_value(value.get(f.name), f.dataType) if f.name in value else None
-            for f in dtype.fields
-        )
-    return value

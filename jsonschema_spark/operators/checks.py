@@ -47,8 +47,8 @@ def sampled_validation_gate(
     sane budget).
 
     ``annotate`` is any ``df -> df`` adding ``_valid`` (e.g.
-    ``CompiledPlan.annotate`` / ``ValidationJob.annotate``), so the gate
-    composes with every check the engine can compile.
+    ``ValidationJob.annotate``, which includes the referential checks), so
+    the gate composes with every check the engine can compile.
 
     A NULL ``_valid`` (a row check that evaluates to NULL) counts as a
     failure, so an undecided row can never help the sample pass.

@@ -52,6 +52,7 @@ from jsonschema_spark.operators.referential import domain_flag, orphan_key_count
 from jsonschema_spark.operators.uniqueness import duplicate_keys, salted_key_counts
 from jsonschema_spark.plans.plan import (
     CHECK_PREFIX,
+    VERDICT_PREFIX,
     CompiledPlan,
     annotation_columns,
     check_columns,
@@ -135,12 +136,21 @@ class ValidationJob:
     # ---- row pass -----------------------------------------------------------
 
     def annotate(self, df: DataFrame) -> DataFrame:
-        """Input + one boolean column per check + `_valid`. Referential checks
-        join the row pass as domain-membership predicates: small dimensions
-        compile to an isin set inside the verdict codegen stage; large ones
-        fall back to a (broadcast-eligible) join so the domain never has to
-        fit on the driver (see referential.domain_flag)."""
-        out = self.plan.annotate(df)
+        """Input + one boolean column per check + `_valid`. A json_columns
+        check lands as `_verdict_<name>` + the derived boolean — the kernel
+        runs ONCE for both. Referential checks join the row pass as
+        domain-membership predicates: small dimensions compile to an isin
+        set inside the verdict codegen stage; large ones fall back to a
+        (broadcast-eligible) join so the domain never has to fit on the
+        driver (see referential.domain_flag)."""
+        out = df
+        valid = F.lit(True)
+        for name, check in self.plan.checks.items():
+            if check.kernel is not None:
+                out = out.withColumn(VERDICT_PREFIX + name, check.kernel)
+            out = out.withColumn(CHECK_PREFIX + name, check.verdict)
+            valid = valid & F.col(CHECK_PREFIX + name)
+        out = out.withColumn("_valid", valid)
         for col_name, ref in self.plan.references.items():
             dim = self.dims.get(ref["dim"])
             if dim is None:

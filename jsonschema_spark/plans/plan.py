@@ -44,13 +44,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from jsonschema_spark.compiler.columns import (
-    LoweringError,
-    PrecisionWarning,
-    lower_dynamic_key_violations,
-    lower_named_predicates,
-    lower_predicate,
-)
+from jsonschema_spark.compiler.columns import LoweringError, PrecisionWarning, lower_check
 from jsonschema_spark.compiler.kernel import json_validation_kernel, value_validation_kernel
 from jsonschema_spark.spec.compile import SpecError, compile_spec
 from jsonschema_spark.spec.pointer import split_pointer
@@ -99,7 +93,11 @@ class TableSpec:
 
     @classmethod
     def from_json(cls, text: str) -> "TableSpec":
-        return cls.from_dict(json.loads(text))
+        try:
+            raw = json.loads(text)
+        except json.JSONDecodeError as exc:
+            raise SpecError(f"a TableSpec is a JSON object, got invalid JSON: {exc}") from None
+        return cls.from_dict(raw)
 
 
 CHECK_PREFIX = "chk_"
@@ -168,11 +166,13 @@ def annotation_columns(annotated: DataFrame) -> list:
 class CompiledCheck:
     """One compiled check. ``verdict`` is its boolean (True = pass);
     ``failures`` its ``array<struct<path, detail>>`` of failure entries,
-    empty on a pass: per-field paths for struct and map columns (static
-    names, plus runtime '/<key>' paths for dynamically matched map keys),
-    the evaluator's first path/keyword/message for a JSON-text check, the
-    root path '' with the check's spec fragment otherwise. ``failures``
-    reads the annotated frame, so it is valid only on ``annotate``'s
+    empty on a pass. A struct or map column check with member subschemas
+    has one entry per failing path of its lowering walk (static member
+    paths, plus runtime '/<key>' paths for dynamically matched map keys),
+    built from the same Columns its verdict joins; a JSON-text check has
+    the evaluator's first path/keyword/message; any other check the root
+    path '' with the check's spec fragment. ``failures`` reads the
+    annotated frame, so it is valid only on ``ValidationJob.annotate``'s
     output. ``kernel`` is the evaluator's verdict struct of a
     ``json_columns`` check: annotate materializes it once as
     ``_verdict_<name>`` and both ``verdict`` and ``failures`` read it."""
@@ -189,8 +189,8 @@ def _root_check(name: str, verdict: Column, detail: Optional[str]) -> CompiledCh
 
 @dataclass
 class CompiledPlan:
-    """Compiled checks plus table-check descriptors; the verdict select is
-    one projection over the scan (zero extra passes)."""
+    """Compiled checks plus table-check descriptors; ValidationJob.annotate
+    projects every check over the scan in one pass."""
 
     spec: TableSpec
     checks: dict  # check name -> CompiledCheck; kernel-backed checks last
@@ -200,19 +200,6 @@ class CompiledPlan:
     @property
     def check_names(self) -> list:
         return list(self.checks)
-
-    def annotate(self, df: DataFrame) -> DataFrame:
-        """df + one boolean column per check + `_valid` conjunction. A
-        json_columns check lands as `_verdict_<name>` + the derived
-        boolean — the kernel runs ONCE for both."""
-        out = df
-        valid = F.lit(True)
-        for name, check in self.checks.items():
-            if check.kernel is not None:
-                out = out.withColumn(VERDICT_PREFIX + name, check.kernel)
-            out = out.withColumn(CHECK_PREFIX + name, check.verdict)
-            valid = valid & F.col(CHECK_PREFIX + name)
-        return out.withColumn("_valid", valid)
 
 
 def compile_table_spec(spec: TableSpec, schema: T.StructType) -> CompiledPlan:
@@ -226,26 +213,25 @@ def compile_table_spec(spec: TableSpec, schema: T.StructType) -> CompiledPlan:
             raise SpecError(f"column {col_name!r} not in table schema")
         compiled = compile_spec(col_spec)
         name = f"col_{col_name}"
-        root_spec = _spec_fragment_at(col_spec, "")
         dtype = fields[col_name]
         try:
             with warnings.catch_warnings(record=True) as caught:
                 warnings.simplefilter("always")
-                native = lower_predicate(compiled, F.col(col_name), dtype)
+                check = _native_check(name, compiled, col_name, dtype, col_spec)
         except LoweringError:
             if not isinstance(dtype, T.StringType):
                 raise
             # the kernel validates the cell as a raw string VALUE
             # (json_columns is the explicit JSON-text path) — used when the
             # native lowering refuses, e.g. the regex dialect gate
-            native, caught = None, []
+            check, caught = None, []
         precision_lost = False
         for c in caught:
             if issubclass(c.category, PrecisionWarning):
                 precision_lost = True
             else:  # pass through anything we didn't handle
                 warnings.warn_explicit(c.message, c.category, c.filename, c.lineno)
-        if native is None or (
+        if check is None or (
             precision_lost and not isinstance(dtype, (T.StructType, T.MapType))
         ):
             # a bound beyond Spark's exact range (long / Decimal(38)) would
@@ -254,31 +240,11 @@ def compile_table_spec(spec: TableSpec, schema: T.StructType) -> CompiledPlan:
             # internal/jsonequal/equal.go:39-79 compares 1e1000 exactly via
             # big.Rat)
             kernel_backed[name] = _root_check(
-                name, value_validation_kernel(col_spec, F.col(col_name)), root_spec
+                name,
+                value_validation_kernel(col_spec, F.col(col_name)),
+                _spec_fragment_at(col_spec, ""),
             )
             continue
-        check = _root_check(name, native, root_spec)
-        if isinstance(dtype, (T.StructType, T.MapType)):
-            dyn = lower_dynamic_key_violations(
-                compiled, F.col(col_name), dtype, raw_spec=col_spec
-            )
-            named = lower_named_predicates(
-                compiled, F.col(col_name), dtype, dynamic_paths=dyn is not None
-            )
-            if len(named) > 1 or dyn is not None:
-                # per-field predicates whose conjunction (with no dynamic
-                # failure) is the check, so each failure names its field
-                # path (the reference's path-wrapped errors); pinned by
-                # tests/test_violation_paths.py
-                entries = [
-                    failure_entries(
-                        pred, _sql_string(path), _sql_string(_spec_fragment_at(col_spec, path))
-                    )
-                    for path, pred in named.items()
-                ]
-                check = CompiledCheck(
-                    native, F.concat(*entries, *([dyn] if dyn is not None else []))
-                )
         checks[name] = check
 
     for col_name in spec.required:
@@ -324,18 +290,74 @@ def compile_table_spec(spec: TableSpec, schema: T.StructType) -> CompiledPlan:
     )
 
 
-def _spec_fragment_at(raw_spec: dict, path: str) -> Optional[str]:
+def _native_check(
+    name: str, compiled, col_name: str, dtype: T.DataType, col_spec: dict
+) -> CompiledCheck:
+    """A column check from one lowering walk. With more than the root path
+    it has a failure entry per path whose predicate fails (the reference's
+    path-wrapped errors) and one per failing runtime-matched map key, both
+    built from the Columns the verdict joins; pinned by
+    tests/test_violation_paths.py. Otherwise it is a root check."""
+    col = F.col(col_name)
+    parts = lower_check(compiled, col, dtype)
+    if len(parts.paths) == 1 and parts.entry_cases is None:
+        return _root_check(name, parts.verdict, _spec_fragment_at(col_spec, ""))
+    entries = [
+        failure_entries(pred, _sql_string(path), _sql_string(_spec_fragment_at(col_spec, path)))
+        for path, pred in parts.paths.items()
+    ]
+    if parts.entry_cases is not None:
+        entries.append(_key_failures(col, parts.entry_cases, col_spec))
+    return CompiledCheck(parts.verdict, F.concat(*entries))
+
+
+def _key_failures(col: Column, cases, col_spec: dict) -> Column:
+    """The failure entries of a map's runtime-matched keys: one per entry
+    and failed case, at the entry's RFC 6901-escaped path '/<key>', with
+    the raw keyword the entry broke as detail."""
+
+    def per_entry(kv: Column) -> Column:
+        key = kv.getField("key")
+        escaped = F.replace(F.replace(key, F.lit("~"), F.lit("~0")), F.lit("/"), F.lit("~1"))
+        path = F.concat(F.lit("/"), escaped).alias("path")
+        entries = []
+        for bad, keyword in cases(kv):
+            detail = F.lit(_keyword_fragment(col_spec, keyword)).cast("string")
+            entries.append(F.when(bad, F.struct(path, detail.alias("detail"))))
+        return F.filter(F.array(*entries), lambda e: e.isNotNull())
+
+    empty = F.array().cast(FAILURES_TYPE)
+    return F.coalesce(F.flatten(F.transform(F.map_entries(col), per_entry)), empty)
+
+
+def _compact_json(node) -> Optional[str]:
+    try:
+        return json.dumps(node, sort_keys=True, separators=(",", ":"))
+    except (TypeError, ValueError):
+        return None
+
+
+def _keyword_fragment(col_spec: dict, keyword: tuple) -> Optional[str]:
+    """Compact JSON of the raw spec's keyword at key path ``keyword``,
+    nested under its keys: ('patternProperties', '^n_') ->
+    '{"patternProperties":{"^n_":{...}}}'."""
+    node = col_spec
+    for key in keyword:
+        node = node.get(key) if isinstance(node, dict) else None
+    for key in reversed(keyword):
+        node = {key: node}
+    return _compact_json(node)
+
+
+def _spec_fragment_at(col_spec: dict, path: str) -> Optional[str]:
     """Compact JSON of the subschema a detail path points at — walks the raw
     spec's nested `properties` chain ('' -> the whole spec). Paths reached
     only via patternProperties/additionalProperties yield None (the path
     alone still locates the failure)."""
-    node = raw_spec
+    node = col_spec
     for token in split_pointer(path):
         props = node.get("properties") if isinstance(node, dict) else None
         if not isinstance(props, dict) or token not in props:
             return None
         node = props[token]
-    try:
-        return json.dumps(node, sort_keys=True, separators=(",", ":"))
-    except (TypeError, ValueError):
-        return None
+    return _compact_json(node)

@@ -91,22 +91,32 @@ def test_validate_cli_id_col(tmp_path, spark):
     assert [(r.id, r.check) for r in rows] == [(2, "col_s")]
 
 
-def test_validate_cli_rejects_malformed_dim(tmp_path, capsys):
-    """``--dim`` without ``=`` is a usage error (exit 2) raised while the
-    arguments are parsed, before a session starts or results are written."""
+@pytest.mark.parametrize(
+    "spec_text,extra,message",
+    [
+        ('{"required": ["doc_id"]}', ["--dim", "dim_source"], "name=parquet_path"),
+        ("not json", [], "invalid JSON"),
+        ('{"unique": "doc_id"}', [], "'unique' must be an array of column names"),
+    ],
+    ids=["dim", "spec-not-json", "spec-bad-shape"],
+)
+def test_validate_cli_rejects_malformed_dim(tmp_path, capsys, spec_text, extra, message):
+    """A ``--dim`` without ``=``, a spec file that is not JSON and a spec
+    of the wrong shape are usage errors: exit 2 with one error line,
+    before a session starts or results are written."""
     from jsonschema_spark.cli import main
 
     spec_file = tmp_path / "spec.json"
-    spec_file.write_text(json.dumps({"required": ["doc_id"]}))
+    spec_file.write_text(spec_text)
     results = tmp_path / "results"
     with pytest.raises(SystemExit) as exc:
         main([
             "validate", "--input", "synthetic", "--rows", "100",
-            "--spec", str(spec_file), "--results", str(results),
-            "--dim", "dim_source",
+            "--spec", str(spec_file), "--results", str(results), *extra,
         ])
     assert exc.value.code == 2
-    assert "name=parquet_path" in capsys.readouterr().err
+    errors = [line for line in capsys.readouterr().err.splitlines() if "error:" in line]
+    assert len(errors) == 1 and message in errors[0], errors
     assert not results.exists()
 
 

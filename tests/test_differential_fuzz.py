@@ -246,6 +246,102 @@ def test_differential_map(spark):
     assert not mismatches, f"{len(mismatches)} disagreements, first 3: {mismatches[:3]}"
 
 
+_OBJ_FIELDS = ("a", "b", "n_x", "zb")
+_OBJ_LEAVES = (
+    {"type": "integer", "minimum": 0},
+    {"minimum": 2},
+    {"maximum": 5},
+    {"enum": [1, 2, 3]},
+    {"not": {"minimum": 4}},
+)
+
+
+def _key_matched_obj_spec(r: random.Random) -> dict:
+    """Object keywords including the key-matching ones (patternProperties,
+    additionalProperties) that ``_obj_spec`` never draws."""
+    spec = {}
+    if r.random() < 0.3:
+        spec["type"] = "object"
+    props = {n: r.choice(_OBJ_LEAVES) for n in ("a", "b") if r.random() < 0.5}
+    if props:
+        spec["properties"] = props
+    if r.random() < 0.6:
+        regexes = r.sample(["^n_", "b$", "^z"], k=r.randint(1, 2))
+        spec["patternProperties"] = {p: r.choice(_OBJ_LEAVES) for p in regexes}
+    if r.random() < 0.6:
+        spec["additionalProperties"] = r.choice([False, r.choice(_OBJ_LEAVES)])
+    if r.random() < 0.4:
+        spec["required"] = r.sample(_OBJ_FIELDS, k=r.randint(1, 2))
+    if r.random() < 0.3:
+        spec["dependencies"] = {
+            "a": r.choice([["n_x"], ["b", "zb"], {"properties": {"b": {"maximum": 3}}}])
+        }
+    if r.random() < 0.3:
+        spec["minProperties"] = r.randint(0, 3)
+    if r.random() < 0.3:
+        spec["maxProperties"] = r.randint(1, 3)
+    if r.random() < 0.3:
+        spec["allOf"] = [
+            {"properties": {r.choice(_OBJ_FIELDS): r.choice(_OBJ_LEAVES)}},
+            {"patternProperties": {"^n_": r.choice(_OBJ_LEAVES)}},
+        ]
+    return spec
+
+
+@pytest.mark.parametrize("kind", ["struct", "map"])
+def test_differential_object_failures(spark, kind):
+    """The check compile_table_spec builds from one lowering walk, against
+    the evaluator: on every row each ``chk_col_*`` verdict equals
+    ``is_valid``, and its failure entries are empty exactly when it holds.
+    60 specs over 60 rows run as one TableSpec over 60 copies of the
+    column: one annotate, one collect."""
+    from jsonschema_spark.plans.job import ValidationJob
+    from jsonschema_spark.plans.plan import TableSpec, compile_table_spec
+
+    r = random.Random(f"object-failures-{kind}")
+    specs = [_key_matched_obj_spec(r) for _ in range(60)]
+    values = []
+    for _ in range(60):
+        if r.random() < 0.08:
+            values.append(None)
+        elif kind == "struct":  # NULL field == absent member
+            values.append({n: r.randint(0, 6) for n in _OBJ_FIELDS if r.random() < 0.6})
+        else:  # a map keeps present-null values and takes any key
+            keys = [n for n in _OBJ_FIELDS + ("q",) if r.random() < 0.5]
+            values.append({k: r.choice([None, 0, 1, 2, 3, 4, 5, 6]) for k in keys})
+    if kind == "struct":
+        dtype = T.StructType([T.StructField(n, T.IntegerType()) for n in _OBJ_FIELDS])
+        rows = [(i, None if v is None else tuple(v.get(n) for n in _OBJ_FIELDS))
+                for i, v in enumerate(values)]
+    else:
+        dtype = T.MapType(T.StringType(), T.IntegerType())
+        rows = list(enumerate(values))
+    df = spark.createDataFrame(rows, T.StructType([
+        T.StructField("id", T.LongType()), T.StructField("v", dtype),
+    ]))
+    wide = df.select("id", *[F.col("v").alias(f"c{i}") for i in range(len(specs))])
+    plan = compile_table_spec(
+        TableSpec.from_dict({"columns": {f"c{i}": s for i, s in enumerate(specs)}}),
+        wide.schema,
+    )
+    ann = ValidationJob(plan, id_column="id").annotate(wide)
+    out = ann.select(
+        "id",
+        *[F.col(f"chk_col_c{i}").alias(f"ok{i}") for i in range(len(specs))],
+        *[plan.checks[f"col_c{i}"].failures.alias(f"f{i}") for i in range(len(specs))],
+    ).collect()
+    compiled = [compile_spec(s) for s in specs]
+    mismatches = []
+    for row in out:
+        v = values[row.id]
+        for i, spec in enumerate(specs):
+            want = is_valid(compiled[i], v)
+            got, failures = row[f"ok{i}"], row[f"f{i}"]
+            if got != want or (len(failures) == 0) != got:
+                mismatches.append((spec, v, want, got, failures))
+    assert not mismatches, f"{len(mismatches)} disagreements, first 3: {mismatches[:3]}"
+
+
 def test_render_fuzz_no_crash():
     """Every violation from 400 random spec×value evaluations renders to
     a reference-format string without raising (the render dispatch must

@@ -1,7 +1,7 @@
-"""Struct-path violation detail on the native path (VERDICT r1 #7): the
-typed lowering names per-field predicates so violation rows carry the
+"""Struct-path violation detail on the native path (VERDICT r1 #7): one
+lowering walk yields per-path predicates so violation rows carry the
 failing field location — the reference's path-wrapped errors
-(validate.go:74,346,500) — while the conjunction stays exactly the
+(validate.go:74,346,500) — while their conjunction stays exactly the
 single-column predicate."""
 
 from __future__ import annotations
@@ -10,10 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from jsonschema_spark.compiler.columns import (
-    lower_named_predicates,
-    lower_predicate,
-)
+from jsonschema_spark.compiler.columns import lower_check, lower_predicate
 from jsonschema_spark.plans.audit import plan_report
 from jsonschema_spark.plans.job import ValidationJob
 from jsonschema_spark.plans.plan import TableSpec, compile_table_spec
@@ -70,16 +67,22 @@ def _on_kernel(df, check) -> bool:
     return plan_report(df.select(check.verdict))["arrow_python"]
 
 
+def _conjunction(paths: dict):
+    conj = F.lit(True)
+    for pred in paths.values():
+        conj = conj & pred
+    return conj
+
+
 def test_named_conjunction_equals_single_predicate(spark, docs):
     compiled = compile_spec(DOC_SPEC)
     dtype = docs.schema["doc"].dataType
     single = lower_predicate(compiled, F.col("doc"), dtype)
-    named = lower_named_predicates(compiled, F.col("doc"), dtype)
-    assert "" in named and "/name" in named and "/addr/zip" in named
-    conj = F.lit(True)
-    for pred in named.values():
-        conj = conj & pred
-    mismatches = docs.filter(single != conj).count()
+    parts = lower_check(compiled, F.col("doc"), dtype)
+    assert "" in parts.paths and "/name" in parts.paths and "/addr/zip" in parts.paths
+    assert parts.entry_cases is None
+    conj = _conjunction(parts.paths)
+    mismatches = docs.filter((single != conj) | (single != parts.verdict)).count()
     assert mismatches == 0
 
 
@@ -253,15 +256,18 @@ def map_docs(spark):
 
 
 def test_map_named_conjunction_equals_single_predicate(spark, map_docs):
+    """Declared keys get their own paths; the undeclared key of row 5 is
+    matched per entry (additionalProperties: false), so the verdict is the
+    paths' conjunction AND no failed entry case."""
     compiled = compile_spec(MAP_SPEC)
     dtype = map_docs.schema["doc"].dataType
     single = lower_predicate(compiled, F.col("doc"), dtype)
-    named = lower_named_predicates(compiled, F.col("doc"), dtype)
-    assert set(named) == {"", "/a", "/b"}
-    conj = F.lit(True)
-    for pred in named.values():
-        conj = conj & pred
-    assert map_docs.filter(single != conj).count() == 0
+    parts = lower_check(compiled, F.col("doc"), dtype)
+    assert set(parts.paths) == {"", "/a", "/b"}
+    assert parts.entry_cases is not None
+    assert map_docs.filter(single != parts.verdict).count() == 0
+    conj = _conjunction(parts.paths)
+    assert {r.id for r in map_docs.filter(single != conj).collect()} == {5}
 
 
 def test_map_violations_pinpoint_declared_keys(spark, map_docs):
@@ -332,24 +338,27 @@ def test_dynamic_key_violations_carry_runtime_paths(spark, dyn_docs):
 
 
 def test_dynamic_conjunction_equals_single_predicate(spark, dyn_docs, map_docs):
-    """The split contract: AND(static named predicates) AND
-    size(dynamic failures) == 0 must equal lower_predicate exactly —
-    nothing double-reported, nothing dropped."""
-    from jsonschema_spark.compiler.columns import lower_dynamic_key_violations
-
+    """One walk, two uses: the verdict joined from the parts equals
+    lower_predicate, and the check's failure entries, built from the same
+    parts (static paths and runtime key paths), are empty exactly where it
+    holds — nothing dropped, nothing reported on a passing row."""
     for spec, docs in ((DYN_SPEC, dyn_docs), (MAP_SPEC, map_docs)):
         compiled = compile_spec(spec)
         dtype = docs.schema["doc"].dataType
         single = lower_predicate(compiled, F.col("doc"), dtype)
-        named = lower_named_predicates(
-            compiled, F.col("doc"), dtype, dynamic_paths=True
+        parts = lower_check(compiled, F.col("doc"), dtype)
+        assert parts.entry_cases is not None
+        plan = compile_table_spec(
+            TableSpec.from_dict({"columns": {"doc": spec}}), docs.schema
         )
-        dyn = lower_dynamic_key_violations(compiled, F.col("doc"), dtype)
-        assert dyn is not None
-        conj = F.size(dyn) == 0
-        for pred in named.values():
-            conj = conj & pred
-        assert docs.filter(single != conj).count() == 0
+        ann = ValidationJob(plan, id_column="id").annotate(docs)
+        failures = plan.checks["col_doc"].failures
+        wrong = (
+            (single != parts.verdict)
+            | (single != F.col("chk_col_doc"))
+            | (single != (F.size(failures) == 0))
+        )
+        assert ann.filter(wrong).count() == 0
 
 
 def test_beyond_decimal38_routes_to_exact_kernel(spark):
