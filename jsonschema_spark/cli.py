@@ -66,11 +66,20 @@ def cmd_validate(args) -> int:
     prints one JSON summary line: the ``summary.json`` fields plus
     ``wall_sec_total`` (and ``quarantine_dir`` when asked for). The spec
     is read and shape-checked before the session starts; its columns are
-    checked once the input's schema is known."""
+    checked once the input's schema is known. Every dimension the spec
+    references needs a ``--dim``; only ``--input synthetic`` brings its own
+    ``dim_source``."""
     from jsonschema_spark.plans.job import ValidationJob
     from jsonschema_spark.plans.plan import TableSpec, compile_table_spec
+    from jsonschema_spark.spec.compile import SpecError
 
     spec = TableSpec.from_json(Path(args.spec).read_text())
+    given = {name for name, _ in args.dim or []}
+    if args.input == "synthetic":
+        given.add("dim_source")
+    missing = sorted({r["dim"] for r in spec.references.values()} - given)
+    if missing:
+        raise SpecError(f"the spec references dimension(s) {missing}: pass --dim name=parquet_path")
     spark = _build_session(args)
     if args.input == "synthetic":
         from jsonschema_spark.sources.corpus import corpus
@@ -80,12 +89,8 @@ def cmd_validate(args) -> int:
         df = spark.read.parquet(args.input)
 
     plan = compile_table_spec(spec, df.schema)
-    dims = {}
-    for name, path in args.dim or []:
-        dims[name] = spark.read.parquet(path)
-    if "dim_source" in {r["dim"] for r in plan.references.values()} and (
-        "dim_source" not in dims
-    ):
+    dims = {name: spark.read.parquet(path) for name, path in args.dim or []}
+    if args.input == "synthetic" and "dim_source" not in dims:
         from jsonschema_spark.sources.corpus import dim_source
 
         dims["dim_source"] = dim_source(spark)

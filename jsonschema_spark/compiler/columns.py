@@ -239,7 +239,7 @@ def _guarded(col: Column, null_ok: bool, paths: dict) -> dict:
     """One boolean per path, never NULL: a NULL value gets ``null_ok`` at
     '' and is not constrained below it."""
     return {
-        path: F.when(col.isNull(), F.lit(null_ok if path == "" else True)).otherwise(
+        path: F.when(F.isnull(col), F.lit(null_ok if path == "" else True)).otherwise(
             F.coalesce(_conjoin(preds), F.lit(False))
         )
         for path, preds in paths.items()

@@ -90,6 +90,15 @@ def json_validation_kernel(spec: dict | str, doc_col: Column) -> Column:
     NULL documents are treated as JSON ``null`` instances (consistent with
     the typed-column convention in compiler/columns.py).
     """
+    return json_validation_udf(spec)(doc_col)
+
+
+def json_validation_udf(spec: dict | str):
+    """The pandas UDF behind ``json_validation_kernel``. Deterministic, so
+    it may sit inside an aggregate; ``compile_table_spec`` marks its copy
+    ``asNondeterministic()``, so the optimizer pushes no filter below it
+    and never runs the kernel a second time (see
+    ``ValidationJob.annotate``)."""
     spec_text = spec if isinstance(spec, str) else json.dumps(spec)
 
     @F.pandas_udf(VERDICT_TYPE)
@@ -119,7 +128,7 @@ def json_validation_kernel(spec: dict | str, doc_col: Column) -> Column:
             }
         )
 
-    return _validate(doc_col)
+    return _validate
 
 
 def value_validation_kernel(spec: dict | str, value_col: Column) -> Column:
@@ -129,6 +138,12 @@ def value_validation_kernel(spec: dict | str, value_col: Column) -> Column:
     validated as a JSON string instance with the pure-Python evaluator, so
     kernel semantics match the evaluator exactly. Arrow-batched; used only
     for the rare checks the gate diverts off the codegen fast path."""
+    return value_validation_udf(spec)(value_col)
+
+
+def value_validation_udf(spec: dict | str):
+    """The pandas UDF behind ``value_validation_kernel``; deterministic, as
+    ``json_validation_udf`` is."""
     spec_text = spec if isinstance(spec, str) else json.dumps(spec)
 
     @F.pandas_udf(T.BooleanType())
@@ -138,7 +153,7 @@ def value_validation_kernel(spec: dict | str, value_col: Column) -> Column:
         compiled = _compiled(spec_text)
         return pd.Series([is_valid(compiled, _as_json_value(v)) for v in batch])
 
-    return _validate(value_col)
+    return _validate
 
 
 def multi_spec_validity_kernel(specs: list, idx_col: Column, doc_col: Column) -> Column:

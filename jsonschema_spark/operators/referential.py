@@ -59,13 +59,13 @@ def domain_flag(
     head = keys.limit(isin_max + 1).collect()
     if len(head) <= isin_max:
         domain = [r[0] for r in head]
-        pred = F.col(fact_key).isin(domain) | F.col(fact_key).isNull()
+        pred = F.col(fact_key).isin(domain) | F.isnull(fact_key)
         return fact.withColumn(flag_col, pred)
     marked = keys.withColumn("_in_domain", F.lit(True))
     return (
         fact.join(marked, on=fact_key, how="left")
         .withColumn(
-            flag_col, F.col(fact_key).isNull() | F.col("_in_domain").isNotNull()
+            flag_col, F.isnull(fact_key) | F.isnotnull("_in_domain")
         )
         .drop("_in_domain")
     )

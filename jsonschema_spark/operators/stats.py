@@ -54,7 +54,7 @@ def profile_partials(schema: T.StructType, columns: list[str]) -> list[Column]:
         # every type goes into the sketch as its 64-bit hash: the sketch
         # would skip an empty string or binary given as it is, and xxhash64
         # refuses maps, so unorderable values hash their JSON
-        key = F.when(col.isNotNull(), F.xxhash64(col if orderable else F.to_json(col)))
+        key = F.when(F.isnotnull(col), F.xxhash64(col if orderable else F.to_json(col)))
         if orderable:
             lo, hi = F.min(col), F.max(col)
         else:
@@ -66,7 +66,7 @@ def profile_partials(schema: T.StructType, columns: list[str]) -> list[Column]:
             lengths = [F.lit(None).cast(t) for t in ("int", "int", "long", "long")]
         out.append(
             F.struct(
-                F.count_if(col.isNull()).alias("nulls"),
+                F.count_if(F.isnull(col)).alias("nulls"),
                 F.hll_sketch_agg(key, HLL_LG_K).alias("sketch"),
                 lo.alias("min"),
                 hi.alias("max"),

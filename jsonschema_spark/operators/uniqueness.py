@@ -50,5 +50,5 @@ def duplicate_keys(df: DataFrame, key: str, salt_buckets: int = 64) -> DataFrame
     the rows whose key is not NULL (missingness is the `required` check's
     job)."""
     return salted_key_counts(
-        df.filter(F.col(key).isNotNull()), key, "dup_count", salt_buckets
+        df.filter(F.isnotnull(key)), key, "dup_count", salt_buckets
     ).filter(F.col("dup_count") > 1)

@@ -117,6 +117,19 @@ def _cartesian_facts(df: DataFrame) -> dict:
     return state
 
 
+_PYTHON_EVALS = ("ArrowEvalPython", "BatchEvalPython")
+
+
+def _python_evals(node, depth: int = 0) -> int:
+    """Python eval nodes in the subtree. A reused exchange ran where it was
+    first planned, so its subtree is not counted twice."""
+    name = node.nodeName()
+    if depth > 256 or name.startswith("ReusedExchange"):
+        return 0
+    own = int(name.startswith(_PYTHON_EVALS))
+    return own + sum(_python_evals(c, depth + 1) for c in _children(node))
+
+
 def plan_report(df: DataFrame) -> dict:
     """Inspect the executed plan and report the scale-relevant facts:
 
@@ -129,6 +142,8 @@ def plan_report(df: DataFrame) -> dict:
     - ``row_python``: row-at-a-time Python (BatchEvalPython) on the path
       (10-100x slower than Arrow; ArrowEvalPython / mapInPandas are fine
       and reported separately as ``arrow_python``)
+    - ``python_evals``: the number of Python eval nodes (ArrowEvalPython,
+      BatchEvalPython); each one is a pass of its UDFs over its input rows
     - ``single_partition``: an Exchange SinglePartition (a global
       sort/window funneling the data through one task)
     - ``exchanges``: shuffle count; ``sort_merge_joins`` /
@@ -146,6 +161,7 @@ def plan_report(df: DataFrame) -> dict:
         "arrow_python": "ArrowEvalPython" in plan
         or "FlatMapGroupsInPandas" in plan
         or "MapInPandas" in plan,
+        "python_evals": _python_evals(df._jdf.queryExecution().executedPlan()),
         "single_partition": "SinglePartition" in plan,
         "exchanges": plan.count("Exchange"),
         "sort_merge_joins": plan.count("SortMergeJoin"),

@@ -138,11 +138,19 @@ class ValidationJob:
     def annotate(self, df: DataFrame) -> DataFrame:
         """Input + one boolean column per check + `_valid`. A json_columns
         check lands as `_verdict_<name>` + the derived boolean — the kernel
-        runs ONCE for both. Referential checks join the row pass as
-        domain-membership predicates: small dimensions compile to an isin
-        set inside the verdict codegen stage; large ones fall back to a
-        (broadcast-eligible) join so the domain never has to fit on the
-        driver (see referential.domain_flag)."""
+        runs ONCE for both. Every output built from this frame
+        (``violations``, both halves of ``quarantine``,
+        ``partition_lineage``) reads those columns, so each kernel runs
+        once per row in each: ``compile_table_spec`` marks its UDF
+        non-deterministic, and the optimizer neither pushes a filter below
+        it nor inlines a second copy. A payload filter on this frame stays
+        above the kernel too (``annotate(df).filter("doc_id = '7'")``
+        validates every row): filter the input first. An output that reads
+        no kernel column still drops the kernel. Referential checks join
+        the row pass as domain-membership predicates: small dimensions
+        compile to an isin set inside the verdict codegen stage; large ones
+        fall back to a (broadcast-eligible) join so the domain never has to
+        fit on the driver (see referential.domain_flag)."""
         out = df
         valid = F.lit(True)
         for name, check in self.plan.checks.items():
@@ -169,7 +177,9 @@ class ValidationJob:
         failing rows only, in the scan stage. For struct and map columns
         ``path`` pinpoints the failing field ('/addr/zip'), matching the
         reference's path-wrapped errors (validate.go:74,346,500); scalar
-        checks report path ''. A NULL verdict is a failure."""
+        checks report path ''. A NULL verdict is a failure. A kernel-backed
+        check's failures read its annotated column, so the filter on
+        ``_valid`` runs no kernel of its own (see ``annotate``)."""
         per_check = []
         for c in self.check_columns(annotated):
             name = c.removeprefix(CHECK_PREFIX)
@@ -204,7 +214,9 @@ class ValidationJob:
 
         Scale shape: both halves are filters over the SAME annotated
         scan-stage projection — no shuffle, no second pass; the
-        failed-check array is bounded by |checks|. A NULL ``_valid`` routes
+        failed-check array is bounded by |checks|. Each half runs each
+        kernel once per row: the filter stays above the kernel's
+        projection (see ``annotate``). A NULL ``_valid`` routes
         to the quarantined half, so the two halves always partition the
         input."""
         drop = annotation_columns(annotated)
@@ -215,7 +227,7 @@ class ValidationJob:
                 F.when(failed(F.col(c)), F.lit(c.removeprefix(CHECK_PREFIX)))
                 for c in self.check_columns(annotated)
             ]),
-            lambda x: x.isNotNull(),
+            F.isnotnull,
         )
         quarantined = annotated.filter(rejected).select(
             *[c for c in annotated.columns if c not in drop],

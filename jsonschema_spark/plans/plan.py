@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from jsonschema_spark.compiler.columns import LoweringError, PrecisionWarning, lower_check
-from jsonschema_spark.compiler.kernel import json_validation_kernel, value_validation_kernel
+from jsonschema_spark.compiler.kernel import json_validation_udf, value_validation_udf
 from jsonschema_spark.spec.compile import SpecError, compile_spec
 from jsonschema_spark.spec.pointer import split_pointer
 
@@ -175,7 +175,10 @@ class CompiledCheck:
     annotated frame, so it is valid only on ``ValidationJob.annotate``'s
     output. ``kernel`` is the evaluator's verdict struct of a
     ``json_columns`` check: annotate materializes it once as
-    ``_verdict_<name>`` and both ``verdict`` and ``failures`` read it."""
+    ``_verdict_<name>`` and both ``verdict`` and ``failures`` read it.
+    A kernel-backed check (``kernel``, or a string check the regex gate
+    sends to the evaluator) calls its pandas UDF marked non-deterministic,
+    so each output of ``ValidationJob.annotate`` runs it once per row."""
 
     verdict: Column
     failures: Column
@@ -239,10 +242,9 @@ def compile_table_spec(spec: TableSpec, schema: T.StructType) -> CompiledPlan:
             # evaluator kernel's exact-Fraction math instead (reference:
             # internal/jsonequal/equal.go:39-79 compares 1e1000 exactly via
             # big.Rat)
+            kernel = value_validation_udf(col_spec).asNondeterministic()
             kernel_backed[name] = _root_check(
-                name,
-                value_validation_kernel(col_spec, F.col(col_name)),
-                _spec_fragment_at(col_spec, ""),
+                name, kernel(F.col(col_name)), _spec_fragment_at(col_spec, "")
             )
             continue
         checks[name] = check
@@ -270,7 +272,7 @@ def compile_table_spec(spec: TableSpec, schema: T.StructType) -> CompiledPlan:
                 f"coalesce({v}.first_path, '')",
                 f"concat_ws(': ', {v}.first_keyword, {v}.first_message)",
             ),
-            kernel=json_validation_kernel(col_spec, F.col(col_name)),
+            kernel=json_validation_udf(col_spec).asNondeterministic()(F.col(col_name)),
         )
 
     for col_name in spec.unique:
@@ -324,7 +326,7 @@ def _key_failures(col: Column, cases, col_spec: dict) -> Column:
         for bad, keyword in cases(kv):
             detail = F.lit(_keyword_fragment(col_spec, keyword)).cast("string")
             entries.append(F.when(bad, F.struct(path, detail.alias("detail"))))
-        return F.filter(F.array(*entries), lambda e: e.isNotNull())
+        return F.filter(F.array(*entries), F.isnotnull)
 
     empty = F.array().cast(FAILURES_TYPE)
     return F.coalesce(F.flatten(F.transform(F.map_entries(col), per_entry)), empty)

@@ -120,6 +120,30 @@ def test_validate_cli_rejects_malformed_dim(tmp_path, capsys, spec_text, extra, 
     assert not results.exists()
 
 
+def test_validate_cli_real_input_needs_its_dims(tmp_path, capsys, spark):
+    """Only ``--input synthetic`` brings its own ``dim_source``: a real
+    table whose spec references a dimension without a ``--dim`` is a usage
+    error (exit 2, one error line, nothing written), not a run whose keys
+    are checked against the synthetic domain."""
+    from jsonschema_spark.cli import main
+
+    table = tmp_path / "table"
+    spark.createDataFrame(
+        [("d1", "my-real-source"), ("d2", "another")], "doc_id string, source string"
+    ).write.parquet(str(table))
+    spec_file = tmp_path / "spec.json"
+    spec_file.write_text(
+        json.dumps({"references": {"source": {"dim": "dim_source", "key": "source_id"}}})
+    )
+    results = tmp_path / "results"
+    with pytest.raises(SystemExit) as exc:
+        main(["validate", "--input", str(table), "--spec", str(spec_file), "--results", str(results)])
+    assert exc.value.code == 2
+    errors = [line for line in capsys.readouterr().err.splitlines() if "error:" in line]
+    assert len(errors) == 1 and "dim_source" in errors[0] and "--dim" in errors[0], errors
+    assert not results.exists()
+
+
 def test_validate_cli_preflight_and_quarantine(tmp_path, spark):
     """--preflight-k gates before the full pass; --quarantine writes the
     accepted/quarantined split whose row counts partition the corpus.

@@ -8,9 +8,12 @@ silently regress them:
 - verdict routing is a scan-stage filter (zero exchanges)
 - the validation hot path contains no row-at-a-time Python
   (BatchEvalPython); only Arrow-batched kernels (ArrowEvalPython) appear
+- each kernel runs once per row in every output built from annotate
 """
 
 from __future__ import annotations
+
+import pytest
 
 import __spark_entry__ as entry_mod
 
@@ -104,3 +107,57 @@ def test_quarantine_rows_zero_exchange_scan_stage(spark):
     assert "Exchange" not in plan
     assert "Join" not in plan
     assert "BatchEvalPython" not in plan
+
+
+@pytest.mark.parametrize(
+    "spec,rows",
+    [
+        (
+            {"json_columns": {"doc": {"type": "object", "required": ["a"]}}},
+            ['{"a": 1}', "{}", "not json", None, '{"a": null}'],
+        ),
+        (
+            {"columns": {"doc": {"type": "string", "pattern": "^\\d+$"}}},
+            ["12", "x", "3", None, "4a"],
+        ),
+    ],
+    ids=["json_columns", "regex_gated_value"],
+)
+def test_each_kernel_runs_once_per_pass(spark, spec, rows):
+    """Each output built from ``annotate`` runs a kernel-backed check's
+    pandas UDF once per row: a filter on ``_valid`` is not pushed below
+    annotate's projection, where the optimizer would inline the kernel and
+    run it a second time for the verdict columns above. Column pruning
+    still drops an unread kernel, and the public kernels stay
+    deterministic, so an aggregate may call them directly."""
+    from pyspark.sql import functions as F
+
+    from jsonschema_spark.compiler.kernel import json_validation_kernel, value_validation_kernel
+    from jsonschema_spark.plans.audit import plan_report
+    from jsonschema_spark.plans.job import ValidationJob
+    from jsonschema_spark.plans.plan import TableSpec, compile_table_spec
+
+    df = spark.createDataFrame(
+        [(str(i), doc) for i, doc in enumerate(rows)], "doc_id string, doc string"
+    )
+    job = ValidationJob(compile_table_spec(TableSpec.from_dict(spec), df.schema))
+    annotated = job.annotate(df)
+    accepted, quarantined = job.quarantine(annotated)
+    passes = {
+        "annotate": annotated,
+        "violations": job.violations(annotated),
+        "accepted": accepted,
+        "quarantined": quarantined,
+        "partition_lineage": job.partition_lineage(annotated),
+    }
+    got = {name: plan_report(out)["python_evals"] for name, out in passes.items()}
+    assert got == dict.fromkeys(passes, 1)
+    assert plan_report(annotated.select("doc_id"))["python_evals"] == 0
+    assert accepted.count() == 2 and quarantined.count() == 3
+    assert job.violations(annotated).count() == 3
+
+    if "json_columns" in spec:
+        valid = json_validation_kernel(spec["json_columns"]["doc"], F.col("doc")).getField("valid")
+    else:
+        valid = value_validation_kernel(spec["columns"]["doc"], F.col("doc"))
+    assert df.agg(F.sum(valid.cast("int"))).first()[0] == 2
