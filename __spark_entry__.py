@@ -427,7 +427,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def _hex60(expr: str) -> str:
-    """DuckDB twin of functions.text.portable_hash60."""
+    """DuckDB twin of operators.checks.portable_hash60."""
     return f"CAST(concat('0x', substr(md5({expr}), 1, 15)) AS BIGINT)"
 
 

@@ -47,6 +47,23 @@ def _dim_pair(value: str) -> tuple[str, str]:
     return name, path
 
 
+def _sample_size(value: str) -> int:
+    """``--preflight-k``: a sample size, refused at parse time when
+    negative (``0`` skips the gate)."""
+    k = int(value)
+    if k < 0:
+        raise argparse.ArgumentTypeError(f"expected a sample size >= 0, got {value!r}")
+    return k
+
+
+def _rate(value: str) -> float:
+    """``--preflight-budget``: a violation rate in [0, 1], NaN refused."""
+    rate = float(value)
+    if not 0.0 <= rate <= 1.0:
+        raise argparse.ArgumentTypeError(f"expected a rate in [0, 1], got {value!r}")
+    return rate
+
+
 def cmd_package(args) -> int:
     """Zip the package for --py-files shipping."""
     import jsonschema_spark
@@ -61,39 +78,34 @@ def cmd_package(args) -> int:
 
 
 def cmd_validate(args) -> int:
-    """Full validation pass over a parquet/corpus input; writes the results
-    tree (lineage/violations/duplicates/orphans/profile/summary.json) and
-    prints one JSON summary line: the ``summary.json`` fields plus
+    """Full validation pass over a parquet input; writes the results tree
+    (lineage/violations/duplicates/orphans/profile/summary.json) and prints
+    one JSON summary line: the ``summary.json`` fields plus
     ``wall_sec_total`` (and ``quarantine_dir`` when asked for). The spec
-    is read and shape-checked before the session starts; its columns are
-    checked once the input's schema is known. Every dimension the spec
-    references needs a ``--dim``; only ``--input synthetic`` brings its own
-    ``dim_source``."""
+    is read and shape-checked before the session starts, and every
+    dimension it references needs a ``--dim``; its columns and
+    ``--id-col`` are checked once the input's schema is known, before
+    anything is written."""
+    from pyspark.errors import AnalysisException
+
     from jsonschema_spark.plans.job import ValidationJob
     from jsonschema_spark.plans.plan import TableSpec, compile_table_spec
     from jsonschema_spark.spec.compile import SpecError
 
     spec = TableSpec.from_json(Path(args.spec).read_text())
     given = {name for name, _ in args.dim or []}
-    if args.input == "synthetic":
-        given.add("dim_source")
     missing = sorted({r["dim"] for r in spec.references.values()} - given)
     if missing:
         raise SpecError(f"the spec references dimension(s) {missing}: pass --dim name=parquet_path")
     spark = _build_session(args)
-    if args.input == "synthetic":
-        from jsonschema_spark.sources.corpus import corpus
-
-        df = corpus(spark, args.rows, seed=args.seed)
-    else:
-        df = spark.read.parquet(args.input)
+    df = spark.read.parquet(args.input)
+    try:
+        df.select(args.id_col)
+    except AnalysisException:
+        raise SpecError(f"--id-col {args.id_col!r} is not a column of the input") from None
 
     plan = compile_table_spec(spec, df.schema)
     dims = {name: spark.read.parquet(path) for name, path in args.dim or []}
-    if args.input == "synthetic" and "dim_source" not in dims:
-        from jsonschema_spark.sources.corpus import dim_source
-
-        dims["dim_source"] = dim_source(spark)
 
     job = ValidationJob(plan, dims=dims, id_column=args.id_col)
     t0 = time.time()
@@ -153,23 +165,21 @@ def main(argv=None) -> int:
         " summary.json under --results, then prints one JSON line (the"
         " summary.json fields plus wall_sec_total).",
     )
-    pv.add_argument("--input", required=True, help="parquet dir or 'synthetic'")
+    pv.add_argument("--input", required=True, help="parquet dir")
     pv.add_argument("--spec", required=True, help="TableSpec JSON file")
     pv.add_argument("--results", required=True)
     pv.add_argument("--resume", action="store_true")
-    pv.add_argument("--rows", type=int, default=100_000)
-    pv.add_argument("--seed", type=int, default=42)
     pv.add_argument("--cores", type=int, default=None)
     pv.add_argument(
         "--dim", action="append", type=_dim_pair, help="name=parquet_path"
     )
     pv.add_argument("--id-col", default="doc_id")
     pv.add_argument(
-        "--preflight-k", type=int, default=0,
+        "--preflight-k", type=_sample_size, default=0,
         help="run the constant-size sampled gate first (k docs); exit 3 "
         "when the Wilson bound exceeds --preflight-budget",
     )
-    pv.add_argument("--preflight-budget", type=float, default=0.05)
+    pv.add_argument("--preflight-budget", type=_rate, default=0.05)
     pv.add_argument(
         "--quarantine", default=None,
         help="also write accepted/ + quarantined/ parquet under this dir",

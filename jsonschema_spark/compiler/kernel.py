@@ -12,7 +12,7 @@ text), mirroring the reference's compile-once contract
 evaluator's closures are built on the first document and cached on the
 compiled spec, so they are built once per executor process too.
 
-Kernels that only need the verdict (``value_validation_kernel``,
+Kernels that only need the verdict (``value_validation_udf``,
 ``multi_spec_validity_kernel``) run the evaluator's fail-fast boolean mode.
 ``json_validation_kernel`` runs ``validate_json``: fail-fast with float
 numbers first, so a valid document costs one plain ``json.loads`` and one
@@ -131,19 +131,14 @@ def json_validation_udf(spec: dict | str):
     return _validate
 
 
-def value_validation_kernel(spec: dict | str, value_col: Column) -> Column:
+def value_validation_udf(spec: dict | str):
     """Boolean validity of a *raw typed value* column (NOT JSON text)
     against a compiled spec — the fallback when the native lowering refuses
     a string-column check (e.g. the regex dialect gate): the cell value is
     validated as a JSON string instance with the pure-Python evaluator, so
     kernel semantics match the evaluator exactly. Arrow-batched; used only
-    for the rare checks the gate diverts off the codegen fast path."""
-    return value_validation_udf(spec)(value_col)
-
-
-def value_validation_udf(spec: dict | str):
-    """The pandas UDF behind ``value_validation_kernel``; deterministic, as
-    ``json_validation_udf`` is."""
+    for the rare checks the gate diverts off the codegen fast path. The
+    returned pandas UDF is deterministic, as ``json_validation_udf`` is."""
     spec_text = spec if isinstance(spec, str) else json.dumps(spec)
 
     @F.pandas_udf(T.BooleanType())

@@ -5,11 +5,18 @@ validates single documents, SURVEY.md §2.3 extends to table scale)."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from jsonschema_spark.functions.text import portable_hash60
 from jsonschema_spark.plans.plan import failed
+
+
+def portable_hash60(col: Column) -> Column:
+    """Cross-engine deterministic 60-bit hash: the first 15 hex chars of
+    md5, as a non-negative bigint. Exists so the gate's content-addressed
+    sample is reproducible by an external SQL engine — the DuckDB twin is
+    ``CAST(concat('0x', substr(md5(x), 1, 15)) AS BIGINT)``."""
+    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
 def ensure_parallelism(df: DataFrame) -> DataFrame:

@@ -14,6 +14,18 @@ import pytest
 REPO = Path(__file__).resolve().parent.parent
 
 
+@pytest.fixture(scope="module")
+def corpus_tables(spark, tmp_path_factory):
+    """A 5000-row ``sources.corpus`` table and its ``dim_source``,
+    written as parquet: the CLI's ``--input`` and ``--dim dim_source=``."""
+    from jsonschema_spark.sources.corpus import corpus, dim_source
+
+    base = tmp_path_factory.mktemp("cli_corpus")
+    corpus(spark, 5000).write.parquet(str(base / "corpus"))
+    dim_source(spark).write.parquet(str(base / "dim_source"))
+    return str(base / "corpus"), f"dim_source={base / 'dim_source'}"
+
+
 def test_package_zip(tmp_path):
     out = tmp_path / "dist" / "engine.zip"
     res = subprocess.run(
@@ -28,7 +40,7 @@ def test_package_zip(tmp_path):
     assert not any(n.endswith(".pyc") for n in names if "__pycache__" not in n)
 
 
-def test_validate_cli_and_resume(tmp_path, spark):
+def test_validate_cli_and_resume(tmp_path, corpus_tables):
     spec = {
         "columns": {
             "doc_id": {"type": "string", "pattern": "^doc-[0-9]{12}$"},
@@ -45,9 +57,10 @@ def test_validate_cli_and_resume(tmp_path, spark):
 
     from jsonschema_spark.cli import main
 
+    corpus, dim = corpus_tables
     # use the in-process session (conftest) — get_spark getOrCreate reuses it
     rc = main([
-        "validate", "--input", "synthetic", "--rows", "5000",
+        "validate", "--input", corpus, "--dim", dim,
         "--spec", str(spec_file), "--results", str(results), "--cores", "8",
     ])
     assert rc == 0
@@ -57,7 +70,7 @@ def test_validate_cli_and_resume(tmp_path, spark):
     assert (results / "lineage").is_dir() and (results / "violations").is_dir()
 
     rc = main([
-        "validate", "--input", "synthetic", "--rows", "5000",
+        "validate", "--input", corpus, "--dim", dim,
         "--spec", str(spec_file), "--results", str(results),
         "--resume", "--cores", "8",
     ])
@@ -97,21 +110,32 @@ def test_validate_cli_id_col(tmp_path, spark):
         ('{"required": ["doc_id"]}', ["--dim", "dim_source"], "name=parquet_path"),
         ("not json", [], "invalid JSON"),
         ('{"unique": "doc_id"}', [], "'unique' must be an array of column names"),
+        ('{"required": ["doc_id"]}', ["--id-col", "nope"], "--id-col 'nope'"),
+        ('{"required": ["doc_id"]}', ["--preflight-k", "-5"], "sample size >= 0"),
+        ('{"required": ["doc_id"]}', ["--preflight-budget", "1.5"], "rate in [0, 1]"),
+        ('{"required": ["doc_id"]}', ["--preflight-budget", "nan"], "rate in [0, 1]"),
     ],
-    ids=["dim", "spec-not-json", "spec-bad-shape"],
+    ids=[
+        "dim", "spec-not-json", "spec-bad-shape", "id-col-absent",
+        "preflight-k-negative", "preflight-budget-above-1", "preflight-budget-nan",
+    ],
 )
-def test_validate_cli_rejects_malformed_dim(tmp_path, capsys, spec_text, extra, message):
-    """A ``--dim`` without ``=``, a spec file that is not JSON and a spec
-    of the wrong shape are usage errors: exit 2 with one error line,
-    before a session starts or results are written."""
+def test_validate_cli_rejects_malformed_dim(tmp_path, capsys, corpus_tables, spec_text, extra, message):
+    """A ``--dim`` without ``=``, a spec file that is not JSON, a spec of
+    the wrong shape, a negative ``--preflight-k`` and a
+    ``--preflight-budget`` outside [0, 1] are usage errors refused before a
+    session starts; an ``--id-col`` the input lacks is refused once its
+    schema is read. Each exits 2 with one error line and writes no
+    results."""
     from jsonschema_spark.cli import main
 
+    corpus, dim = corpus_tables
     spec_file = tmp_path / "spec.json"
     spec_file.write_text(spec_text)
     results = tmp_path / "results"
     with pytest.raises(SystemExit) as exc:
         main([
-            "validate", "--input", "synthetic", "--rows", "100",
+            "validate", "--input", corpus, "--dim", dim,
             "--spec", str(spec_file), "--results", str(results), *extra,
         ])
     assert exc.value.code == 2
@@ -121,10 +145,9 @@ def test_validate_cli_rejects_malformed_dim(tmp_path, capsys, spec_text, extra, 
 
 
 def test_validate_cli_real_input_needs_its_dims(tmp_path, capsys, spark):
-    """Only ``--input synthetic`` brings its own ``dim_source``: a real
-    table whose spec references a dimension without a ``--dim`` is a usage
-    error (exit 2, one error line, nothing written), not a run whose keys
-    are checked against the synthetic domain."""
+    """A table whose spec references a dimension without a ``--dim`` is a
+    usage error (exit 2, one error line, nothing written), not a run whose
+    keys are checked against some other domain."""
     from jsonschema_spark.cli import main
 
     table = tmp_path / "table"
@@ -144,7 +167,7 @@ def test_validate_cli_real_input_needs_its_dims(tmp_path, capsys, spark):
     assert not results.exists()
 
 
-def test_validate_cli_preflight_and_quarantine(tmp_path, spark):
+def test_validate_cli_preflight_and_quarantine(tmp_path, spark, corpus_tables):
     """--preflight-k gates before the full pass; --quarantine writes the
     accepted/quarantined split whose row counts partition the corpus.
     A hopeless budget makes the gate exit 3 without writing results."""
@@ -165,8 +188,9 @@ def test_validate_cli_preflight_and_quarantine(tmp_path, spark):
 
     from jsonschema_spark.cli import main
 
+    corpus, dim = corpus_tables
     rc = main([
-        "validate", "--input", "synthetic", "--rows", "5000",
+        "validate", "--input", corpus, "--dim", dim,
         "--spec", str(spec_file), "--results", str(results),
         "--cores", "8", "--preflight-k", "400",
         "--preflight-budget", "0.25", "--quarantine", str(quar),
@@ -180,7 +204,7 @@ def test_validate_cli_preflight_and_quarantine(tmp_path, spark):
     # impossible budget -> gate refuses before the full pass
     results2 = tmp_path / "results2"
     rc = main([
-        "validate", "--input", "synthetic", "--rows", "5000",
+        "validate", "--input", corpus, "--dim", dim,
         "--spec", str(spec_file), "--results", str(results2),
         "--cores", "8", "--preflight-k", "400",
         "--preflight-budget", "0.000001",

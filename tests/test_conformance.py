@@ -128,7 +128,7 @@ def _lower(schema: str, instance: str):
         PrecisionWarning,
         lower_predicate,
     )
-    from jsonschema_spark.functions.infer import Unrepresentable, infer_type, to_literal
+    from infer import Unrepresentable, infer_type, to_literal
 
     value = parse_json(instance)
     with warnings.catch_warnings():

@@ -341,32 +341,3 @@ def test_differential_object_failures(spark, kind):
                 mismatches.append((spec, v, want, got, failures))
     assert not mismatches, f"{len(mismatches)} disagreements, first 3: {mismatches[:3]}"
 
-
-def test_render_fuzz_no_crash():
-    """Every violation from 400 random spec×value evaluations renders to
-    a reference-format string without raising (the render dispatch must
-    be total over whatever the fuzz grammar produces — a narrower
-    property than the keyword-exact pins in test_render_errors.py, over
-    far more shapes; this leg caught the double-quoted-repr key bug)."""
-    from jsonschema_spark.spec.evaluate import validate_value
-    from jsonschema_spark.spec.render import render_reference_error
-
-    legs = [
-        (_num_spec, _num_values),
-        (_str_spec, _str_values),
-        (_arr_spec, _arr_values),
-        (_obj_spec, _obj_values),
-    ]
-    n_rendered = 0
-    for mk_spec, mk_vals in legs:
-        for _ in range(100):
-            spec_dict = mk_spec()
-            if not spec_dict:
-                continue
-            compiled = compile_spec(spec_dict)
-            for value in mk_vals()[:10]:
-                for v in validate_value(compiled, value):
-                    out = render_reference_error(value, v)
-                    assert out and isinstance(out, str)
-                    n_rendered += 1
-    assert n_rendered > 500, n_rendered

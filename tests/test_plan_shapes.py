@@ -132,7 +132,7 @@ def test_each_kernel_runs_once_per_pass(spark, spec, rows):
     deterministic, so an aggregate may call them directly."""
     from pyspark.sql import functions as F
 
-    from jsonschema_spark.compiler.kernel import json_validation_kernel, value_validation_kernel
+    from jsonschema_spark.compiler.kernel import json_validation_kernel, value_validation_udf
     from jsonschema_spark.plans.audit import plan_report
     from jsonschema_spark.plans.job import ValidationJob
     from jsonschema_spark.plans.plan import TableSpec, compile_table_spec
@@ -159,5 +159,5 @@ def test_each_kernel_runs_once_per_pass(spark, spec, rows):
     if "json_columns" in spec:
         valid = json_validation_kernel(spec["json_columns"]["doc"], F.col("doc")).getField("valid")
     else:
-        valid = value_validation_kernel(spec["columns"]["doc"], F.col("doc"))
+        valid = value_validation_udf(spec["columns"]["doc"])(F.col("doc"))
     assert df.agg(F.sum(valid.cast("int"))).first()[0] == 2

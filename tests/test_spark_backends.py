@@ -63,7 +63,7 @@ CASES = _all_cases()
 
 def test_column_backend_matches_suite(spark):
     from jsonschema_spark.compiler.columns import LoweringError, lower_predicate
-    from jsonschema_spark.functions.infer import Unrepresentable, infer_type, to_literal
+    from infer import Unrepresentable, infer_type, to_literal
 
     preds, expected, ids = [], [], []
     skipped = 0
