@@ -64,6 +64,20 @@ def _rate(value: str) -> float:
     return rate
 
 
+def _read_parquet(spark, flag: str, path: str):
+    """``spark.read.parquet(path)``; a path Spark cannot read (absent, or
+    not parquet) is a usage error that names ``flag``."""
+    from pyspark.errors import AnalysisException
+
+    from jsonschema_spark.spec.compile import SpecError
+
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as exc:
+        reason = str(exc).partition("\n")[0]
+        raise SpecError(f"{flag} {path!r} cannot be read: {reason}") from None
+
+
 def cmd_package(args) -> int:
     """Zip the package for --py-files shipping."""
     import jsonschema_spark
@@ -83,9 +97,9 @@ def cmd_validate(args) -> int:
     one JSON summary line: the ``summary.json`` fields plus
     ``wall_sec_total`` (and ``quarantine_dir`` when asked for). The spec
     is read and shape-checked before the session starts, and every
-    dimension it references needs a ``--dim``; its columns and
-    ``--id-col`` are checked once the input's schema is known, before
-    anything is written."""
+    dimension it references needs a ``--dim``; an ``--input`` or
+    ``--dim`` path Spark cannot read, the spec's columns and ``--id-col``
+    are checked once the session is up, before anything is written."""
     from pyspark.errors import AnalysisException
 
     from jsonschema_spark.plans.job import ValidationJob
@@ -98,14 +112,14 @@ def cmd_validate(args) -> int:
     if missing:
         raise SpecError(f"the spec references dimension(s) {missing}: pass --dim name=parquet_path")
     spark = _build_session(args)
-    df = spark.read.parquet(args.input)
+    df = _read_parquet(spark, "--input", args.input)
+    dims = {name: _read_parquet(spark, "--dim", path) for name, path in args.dim or []}
     try:
         df.select(args.id_col)
     except AnalysisException:
         raise SpecError(f"--id-col {args.id_col!r} is not a column of the input") from None
 
     plan = compile_table_spec(spec, df.schema)
-    dims = {name: spark.read.parquet(path) for name, path in args.dim or []}
 
     job = ValidationJob(plan, dims=dims, id_column=args.id_col)
     t0 = time.time()

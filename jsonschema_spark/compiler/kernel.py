@@ -18,11 +18,33 @@ Kernels that only need the verdict (``value_validation_udf``,
 numbers first, so a valid document costs one plain ``json.loads`` and one
 short-circuiting walk; only a failing document collects its violations for
 ``n_violations`` and the ``first_*`` fields.
+
+Every kernel batch first pins the worker's zip importers, once per Python
+worker process (``_pin_spark_zips``). PySpark starts each task with
+``importlib.invalidate_caches()`` (``setup_spark_files`` in
+``pyspark/worker_util.py``), and a plain ``zipimport.zipimporter`` answers
+that by re-reading its archive's central directory. The archives on a
+worker's path are ``pyspark.zip`` (one importer per package imported from
+it), the py4j zip and the Spark jar; re-reading them costs about 0.18 s of
+CPU per task on a 4-core host, more than evaluating 1,000 documents.
+
+- What is pinned: each importer in ``sys.path_importer_cache`` whose type is
+  exactly ``zipimport.zipimporter`` and whose archive lies outside
+  ``SparkFiles.getRootDirectory()``. Its ``invalidate_caches`` then keeps
+  the directory it has.
+- Why that is safe: those archives are Spark's own install, and they do not
+  change while a worker lives.
+- What is not pinned: archives under the SparkFiles root (``--py-files``,
+  ``addPyFile``) keep re-reading, so a later ``addPyFile`` is seen as
+  before; so do importers created after the pin (a path added later).
 """
 
 from __future__ import annotations
 
 import json
+import os
+import sys
+import zipimport
 from decimal import Decimal
 from fractions import Fraction
 from typing import Optional
@@ -33,6 +55,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 _SCHEMA_CACHE: dict = {}
+_ZIPS_PINNED = False
 
 VERDICT_TYPE = T.StructType(
     [
@@ -45,7 +68,41 @@ VERDICT_TYPE = T.StructType(
 )
 
 
+class _PinnedZipImporter(zipimport.zipimporter):
+    """A zip importer that keeps the directory it read."""
+
+    def invalidate_caches(self):
+        pass
+
+
+def _pin_spark_zips() -> int:
+    """Pin, once per process, every plain zip importer in
+    ``sys.path_importer_cache`` whose archive lies outside the SparkFiles
+    root; return how many it pinned (see the module docstring)."""
+    global _ZIPS_PINNED
+    if _ZIPS_PINNED:
+        return 0
+    _ZIPS_PINNED = True
+    if not hasattr(zipimport.zipimporter, "invalidate_caches"):
+        return 0
+    from pyspark import SparkFiles
+
+    user_root = os.path.join(os.path.realpath(SparkFiles.getRootDirectory()), "")
+    pinned = 0
+    for finder in list(sys.path_importer_cache.values()):
+        if type(finder) is not zipimport.zipimporter:
+            continue
+        if os.path.realpath(finder.archive).startswith(user_root):
+            continue  # shipped with the job: --py-files, addPyFile
+        # in place: the importer keeps its directory and prefix, and the
+        # modules it loaded keep it as their loader
+        finder.__class__ = _PinnedZipImporter
+        pinned += 1
+    return pinned
+
+
 def _compiled(spec_text: str):
+    _pin_spark_zips()
     compiled = _SCHEMA_CACHE.get(spec_text)
     if compiled is None:
         # local import keeps executor-side deserialization lean

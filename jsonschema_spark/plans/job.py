@@ -44,6 +44,7 @@ import os
 import time
 from typing import Optional
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
@@ -291,7 +292,12 @@ class ValidationJob:
         ``orphans_<col>/``, ``profile/`` (the roll-up of ``lineage/``),
         ``summary.json``. Returns the summary dict; its ``checks`` maps
         each check (the plan's, then ``ref_<col>``) to the number of rows
-        that failed it."""
+        that failed it. Raises ValueError, before anything is written,
+        when ``id_column`` is not a column of ``df``."""
+        try:
+            df.select(self.id_column)
+        except AnalysisException:
+            raise ValueError(f"id_column {self.id_column!r} is not a column of the input") from None
         spark = df.sparkSession
         t0 = time.time()
 

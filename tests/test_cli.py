@@ -114,25 +114,30 @@ def test_validate_cli_id_col(tmp_path, spark):
         ('{"required": ["doc_id"]}', ["--preflight-k", "-5"], "sample size >= 0"),
         ('{"required": ["doc_id"]}', ["--preflight-budget", "1.5"], "rate in [0, 1]"),
         ('{"required": ["doc_id"]}', ["--preflight-budget", "nan"], "rate in [0, 1]"),
+        ('{"required": ["doc_id"]}', ["--input", "{tmp}/absent"], "--input '{tmp}/absent'"),
+        ('{"required": ["doc_id"]}', ["--dim", "other={tmp}/absent"], "--dim '{tmp}/absent'"),
     ],
     ids=[
         "dim", "spec-not-json", "spec-bad-shape", "id-col-absent",
         "preflight-k-negative", "preflight-budget-above-1", "preflight-budget-nan",
+        "input-missing", "dim-missing",
     ],
 )
 def test_validate_cli_rejects_malformed_dim(tmp_path, capsys, corpus_tables, spec_text, extra, message):
     """A ``--dim`` without ``=``, a spec file that is not JSON, a spec of
     the wrong shape, a negative ``--preflight-k`` and a
     ``--preflight-budget`` outside [0, 1] are usage errors refused before a
-    session starts; an ``--id-col`` the input lacks is refused once its
-    schema is read. Each exits 2 with one error line and writes no
-    results."""
+    session starts; an ``--input`` or ``--dim`` path that does not exist
+    and an ``--id-col`` the input lacks are refused once the session is
+    up. Each exits 2 with one error line and writes no results."""
     from jsonschema_spark.cli import main
 
     corpus, dim = corpus_tables
     spec_file = tmp_path / "spec.json"
     spec_file.write_text(spec_text)
     results = tmp_path / "results"
+    extra = [arg.replace("{tmp}", str(tmp_path)) for arg in extra]
+    message = message.replace("{tmp}", str(tmp_path))
     with pytest.raises(SystemExit) as exc:
         main([
             "validate", "--input", corpus, "--dim", dim,

@@ -350,6 +350,17 @@ def test_resume_refuses_a_lineage_of_another_layout(tmp_path, spark, job, corpus
         assert sorted(os.listdir(path + "/lineage")) == before
 
 
+def test_run_refuses_an_absent_id_column(tmp_path, spark):
+    """An ``id_column`` the frame lacks is refused (ValueError naming it)
+    before ``run()`` writes anything: no partial ``lineage/`` is left."""
+    df = spark.createDataFrame([("a", 1), ("b", 2)], "doc_id string, n long")
+    plan = compile_table_spec(TableSpec.from_dict({"required": ["n"]}), df.schema)
+    results = tmp_path / "results"
+    with pytest.raises(ValueError, match="id_column 'nope'"):
+        ValidationJob(plan, id_column="nope").run(df, str(results))
+    assert not (results / "lineage").exists()
+
+
 def test_run_profile_matches_column_profile(tmp_path, spark, job, corpus_df):
     """``profile/`` written by run() equals column_profile(df) on every
     field; approx_distinct (HLL, lgConfigK 9: rsd 1.04/sqrt(512)) is within
