@@ -17,7 +17,8 @@ driver-side row loops, so parallelism is purely an executor-count knob.
 
 When invoked under spark-submit, the active SparkSession is the one
 spark-submit built (we call ``getOrCreate`` and respect its master);
-standalone invocation builds a local session from --cores.
+standalone invocation builds a local session from --cores (default:
+``SPARK_GRAFT_CPUS``, else every CPU this process may use).
 """
 
 from __future__ import annotations
@@ -66,11 +67,17 @@ def _rate(value: str) -> float:
 
 def _read_parquet(spark, flag: str, path: str):
     """``spark.read.parquet(path)``; a path Spark cannot read (absent, or
-    not parquet) is a usage error that names ``flag``."""
+    not parquet) is a usage error that names ``flag``. An absent path is
+    found through the Hadoop FileSystem (``globStatus``, so globs still
+    work) before Spark's reader logs its own stack trace for it."""
     from pyspark.errors import AnalysisException
 
     from jsonschema_spark.spec.compile import SpecError
 
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.globStatus(hpath):  # null (no such path) or no glob match
+        raise SpecError(f"{flag} {path!r} cannot be read: no such path")
     try:
         return spark.read.parquet(path)
     except AnalysisException as exc:

@@ -10,6 +10,11 @@ from pyspark.sql import functions as F
 
 from jsonschema_spark.plans.plan import failed
 
+# Wilson bound at 95% confidence, rounded to 6 decimals before the verdict;
+# the DuckDB twin of the gate (``__spark_entry__``) uses the same two values
+WILSON_Z = 1.96
+ROUND_DECIMALS = 6
+
 
 def portable_hash60(col: Column) -> Column:
     """Cross-engine deterministic 60-bit hash: the first 15 hex chars of
@@ -36,14 +41,12 @@ def sampled_validation_gate(
     annotate,
     sample_k: int = 1024,
     budget: float = 0.01,
-    z: float = 1.96,
-    decimals: int = 6,
 ) -> DataFrame:
     """One-row PRE-FLIGHT validation gate: estimate the corpus's row-level
     violation rate from a deterministic CONSTANT-SIZE sample before
     paying for the full pass — ``(n_sampled, n_fail, fail_rate,
     wilson_hi, within_budget)`` where ``wilson_hi`` is the Wilson upper
-    bound on the true rate at confidence ``z`` and ``within_budget``
+    bound on the true rate at confidence ``WILSON_Z`` and ``within_budget``
     compares it to ``budget``. At 10^12 rows the full validation pass is
     the expensive step; this gate answers "is this snapshot roughly
     sane?" from ``sample_k`` documents at any corpus size — run it
@@ -88,25 +91,25 @@ def sampled_validation_gate(
     )
     n = F.col("n_sampled").cast("double")
     p = F.col("n_fail") / n
-    z2 = F.lit(float(z) * float(z))
+    z2 = F.lit(WILSON_Z * WILSON_Z)
     wilson_hi = (
         (p + z2 / (F.lit(2.0) * n))
-        + F.lit(float(z))
+        + F.lit(WILSON_Z)
         * F.sqrt(p * (F.lit(1.0) - p) / n + z2 / (F.lit(4.0) * n * n))
     ) / (F.lit(1.0) + z2 / n)
     return agg.select(
         "n_sampled",
         "n_fail",
-        F.round(F.when(F.col("n_sampled") > 0, p), decimals).alias(
+        F.round(F.when(F.col("n_sampled") > 0, p), ROUND_DECIMALS).alias(
             "fail_rate"
         ),
-        F.round(F.when(F.col("n_sampled") > 0, wilson_hi), decimals).alias(
+        F.round(F.when(F.col("n_sampled") > 0, wilson_hi), ROUND_DECIMALS).alias(
             "wilson_hi"
         ),
         # verdict on the ROUNDED bound (CLAUDE.md invariant: verdicts that
-        # hinge on digits beyond `decimals` are engine-underspecified)
+        # hinge on digits beyond ROUND_DECIMALS are engine-underspecified)
         F.when(
             F.col("n_sampled") > 0,
-            F.round(wilson_hi, decimals) <= F.lit(float(budget)),
+            F.round(wilson_hi, ROUND_DECIMALS) <= F.lit(float(budget)),
         ).otherwise(F.lit(False)).alias("within_budget"),
     )

@@ -22,8 +22,7 @@ from jsonschema_spark.operators.uniqueness import salted_key_counts
 
 
 def orphan_key_counts(
-    fact: DataFrame, fact_key: str, dim: DataFrame, dim_key: str,
-    salt_buckets: int = 64,
+    fact: DataFrame, fact_key: str, dim: DataFrame, dim_key: str
 ) -> DataFrame:
     """``(fact_key, n_rows)`` per distinct key of ``fact`` that is not in
     ``dim.dim_key``: the salted count over the rows ``domain_flag`` fails
@@ -32,9 +31,7 @@ def orphan_key_counts(
     (one unregistered source typically accounts for most violations — our
     injected corpus does exactly this), hence the salt."""
     flagged = domain_flag(fact, fact_key, dim, dim_key, "_in_dim")
-    return salted_key_counts(
-        flagged.filter(~F.col("_in_dim")), fact_key, "n_rows", salt_buckets
-    )
+    return salted_key_counts(flagged.filter(~F.col("_in_dim")), fact_key, "n_rows")
 
 
 # Above this many distinct dimension keys the isin literal list stops being
@@ -45,8 +42,7 @@ DOMAIN_ISIN_MAX = 10_000
 
 
 def domain_flag(
-    fact: DataFrame, fact_key: str, dim: DataFrame, dim_key: str,
-    flag_col: str, isin_max: int = DOMAIN_ISIN_MAX,
+    fact: DataFrame, fact_key: str, dim: DataFrame, dim_key: str, flag_col: str
 ) -> DataFrame:
     """``fact`` + boolean ``flag_col`` = key is NULL or present in the
     dimension. Small domains compile to the isin fast path (stays inside the
@@ -56,8 +52,8 @@ def domain_flag(
     NULL dimension keys are not in the domain: ``key IN (..., NULL)`` would
     make the flag NULL for every orphan key."""
     keys = dim.select(F.col(dim_key).alias(fact_key)).dropna().distinct()
-    head = keys.limit(isin_max + 1).collect()
-    if len(head) <= isin_max:
+    head = keys.limit(DOMAIN_ISIN_MAX + 1).collect()
+    if len(head) <= DOMAIN_ISIN_MAX:
         domain = [r[0] for r in head]
         pred = F.col(fact_key).isin(domain) | F.isnull(fact_key)
         return fact.withColumn(flag_col, pred)

@@ -6,11 +6,12 @@ Strategy (north rule: skew handled explicitly):
 
 - ``duplicate_keys``: two-phase *salted* aggregation. Phase 1 groups by
   (salt, key) where salt varies per partition — a hot key is split across
-  S reducers, each emitting one (key, partial_count) row; phase 2 sums the
-  ≤S partials per key. A pathological key that appears 10^9 times costs
-  bounded rows per reducer instead of 10^9. For near-unique keys AQE
-  coalesces the tiny second shuffle. ``salted_key_counts`` is that
-  count; ``referential.orphan_key_counts`` uses it too.
+  ``SALT_BUCKETS`` reducers, each emitting one (key, partial_count) row;
+  phase 2 sums the ≤``SALT_BUCKETS`` partials per key. A pathological key
+  that appears 10^9 times costs bounded rows per reducer instead of 10^9.
+  For near-unique keys AQE coalesces the tiny second shuffle.
+  ``salted_key_counts`` is that count; ``referential.orphan_key_counts``
+  uses it too.
 """
 
 from __future__ import annotations
@@ -18,22 +19,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# reducers a hot key's phase-1 rows are spread over
+SALT_BUCKETS = 64
 
-def salted_key_counts(
-    df: DataFrame, key: str, count_col: str, salt_buckets: int = 64
-) -> DataFrame:
+
+def salted_key_counts(df: DataFrame, key: str, count_col: str) -> DataFrame:
     """``(key, count_col)`` per distinct value of ``key`` in ``df``, in two
     salted phases. The salt must vary *within* a key or it splits nothing:
     we salt by partition id, so a key appearing 10^9 times across the
     cluster contributes at most (#partitions) phase-1 rows spread over
-    salt_buckets reducers, and phase 2 sums ≤ salt_buckets partials per
+    SALT_BUCKETS reducers, and phase 2 sums ≤ SALT_BUCKETS partials per
     key. (Catalyst's map-side partial aggregation gives count-aggs similar
     protection implicitly; the explicit two-phase shape keeps the bound
     even where partial agg degrades — hash-table spill fallback — and is
     the required pattern for non-combinable aggregates.)"""
     salted = (
         df.select(F.col(key).alias("key"))
-        .withColumn("salt", F.pmod(F.spark_partition_id(), F.lit(salt_buckets)))
+        .withColumn("salt", F.pmod(F.spark_partition_id(), F.lit(SALT_BUCKETS)))
         .groupBy("salt", "key")
         .agg(F.count(F.lit(1)).alias("partial"))
     )
@@ -44,11 +46,10 @@ def salted_key_counts(
     )
 
 
-def duplicate_keys(df: DataFrame, key: str, salt_buckets: int = 64) -> DataFrame:
+def duplicate_keys(df: DataFrame, key: str) -> DataFrame:
     """``(key, dup_count)`` for every key value appearing more than once.
     NULL is not a key value: as in SQL ``UNIQUE``, uniqueness holds over
     the rows whose key is not NULL (missingness is the `required` check's
     job)."""
-    return salted_key_counts(
-        df.filter(F.isnotnull(key)), key, "dup_count", salt_buckets
-    ).filter(F.col("dup_count") > 1)
+    counts = salted_key_counts(df.filter(F.isnotnull(key)), key, "dup_count")
+    return counts.filter(F.col("dup_count") > 1)

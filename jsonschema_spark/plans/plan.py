@@ -228,15 +228,16 @@ def compile_table_spec(spec: TableSpec, schema: T.StructType) -> CompiledPlan:
             # (json_columns is the explicit JSON-text path) — used when the
             # native lowering refuses, e.g. the regex dialect gate
             check, caught = None, []
+        # the kernel takes no struct or map cell, so a nested column keeps
+        # the double approximation and its PrecisionWarning
+        nested = isinstance(dtype, (T.StructType, T.MapType))
         precision_lost = False
         for c in caught:
-            if issubclass(c.category, PrecisionWarning):
+            if issubclass(c.category, PrecisionWarning) and not nested:
                 precision_lost = True
             else:  # pass through anything we didn't handle
                 warnings.warn_explicit(c.message, c.category, c.filename, c.lineno)
-        if check is None or (
-            precision_lost and not isinstance(dtype, (T.StructType, T.MapType))
-        ):
+        if check is None or precision_lost:
             # a bound beyond Spark's exact range (long / Decimal(38)) would
             # compile to a double approximation — route the check to the
             # evaluator kernel's exact-Fraction math instead (reference:

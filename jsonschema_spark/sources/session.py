@@ -38,8 +38,8 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    if cores is None:  # else every CPU this process may use
+        cores = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 8)
     mem = os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory()

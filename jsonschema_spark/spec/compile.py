@@ -23,7 +23,7 @@ from urllib.parse import urldefrag, urljoin
 
 from jsonschema_spark.spec.metaschema import DRAFT4_METASCHEMA, DRAFT4_URI
 from jsonschema_spark.spec.model import ALL_TYPES, CompiledSchema, parse_json
-from jsonschema_spark.spec.pointer import PointerError, resolve_pointer
+from jsonschema_spark.spec.pointer import PointerError
 
 MAX_RESOLVE_DEPTH = 1000  # cycle guard, same cap as the reference (resolve.go:11)
 
@@ -364,7 +364,7 @@ class Compiler:
         cache_key = (id(node), base)
         if cache_key in self.node_cache:
             return self.node_cache[cache_key]
-        cs = CompiledSchema(source_uri=base)
+        cs = CompiledSchema()
         self.node_cache[cache_key] = cs  # pre-register: cyclic refs terminate
 
         ref = node.get("$ref")
@@ -383,7 +383,6 @@ class Compiler:
 
         if isinstance(node.get("id"), str) and node["id"]:
             base = urldefrag(urljoin(base, node["id"]) if base else node["id"])[0]
-            cs.source_uri = base
 
         self._compile_type(node, cs)
         self._compile_combinators(node, cs, base)

@@ -196,8 +196,5 @@ class CompiledSchema:
     # $ref indirection: filled after resolution (may create cycles).
     ref: Optional["CompiledSchema"] = None
 
-    # provenance for error paths / plan naming
-    source_uri: str = ""
-
     # evaluator closures (spec/evaluate.py), built on first use, keyed by mode
     closures: dict = field(default_factory=dict, init=False, repr=False, compare=False)

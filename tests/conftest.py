@@ -1,7 +1,5 @@
 from __future__ import annotations
 
-import os
-
 import pytest
 
 
@@ -9,8 +7,7 @@ import pytest
 def spark():
     from jsonschema_spark.sources.session import get_spark
 
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     session = get_spark(
-        app_name="jsonschema_spark-tests", cores=cores, shuffle_partitions=8
+        app_name="jsonschema_spark-tests", shuffle_partitions=8
     )
     yield session

@@ -123,15 +123,29 @@ def test_validate_cli_id_col(tmp_path, spark):
         "input-missing", "dim-missing",
     ],
 )
-def test_validate_cli_rejects_malformed_dim(tmp_path, capsys, corpus_tables, spec_text, extra, message):
+def test_validate_cli_rejects_malformed_dim(
+    tmp_path, capsys, monkeypatch, corpus_tables, spec_text, extra, message
+):
     """A ``--dim`` without ``=``, a spec file that is not JSON, a spec of
     the wrong shape, a negative ``--preflight-k`` and a
     ``--preflight-budget`` outside [0, 1] are usage errors refused before a
     session starts; an ``--input`` or ``--dim`` path that does not exist
     and an ``--id-col`` the input lacks are refused once the session is
-    up. Each exits 2 with one error line and writes no results."""
+    up. Each exits 2 with one error line and writes no results. An absent
+    path never reaches Spark's parquet reader, which would log a Java
+    stack trace for it."""
+    from pyspark.sql.readwriter import DataFrameReader
+
     from jsonschema_spark.cli import main
 
+    absent = str(tmp_path / "absent")
+    read_parquet = DataFrameReader.parquet
+
+    def parquet(self, *paths, **options):
+        assert absent not in paths, "the parquet reader was asked for an absent path"
+        return read_parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", parquet)
     corpus, dim = corpus_tables
     spec_file = tmp_path / "spec.json"
     spec_file.write_text(spec_text)

@@ -53,39 +53,25 @@ def test_plan_audit_api(spark):
     """The public audit API sees what the pinned tests see: a clean
     scan-stage query reports no hazards; a crossJoin and a row-Python UDF
     are caught by name."""
-    import pytest
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType
 
-    from jsonschema_spark.plans.audit import assert_plan, plan_report
+    from jsonschema_spark.plans.audit import plan_report
 
     clean = entry_mod.queries()["quarantine_rows"](spark, SF_DIR)
-    rep = assert_plan(clean, no_single_partition=True, max_exchanges=0)
+    rep = plan_report(clean)
+    assert sorted(rep) == [
+        "arrow_python", "cartesian", "exchanges", "python_evals",
+        "row_python", "single_partition",
+    ]
     assert not rep["cartesian"] and not rep["row_python"]
+    assert not rep["single_partition"] and rep["exchanges"] == 0
 
     df = spark.range(10)
-    cart = df.crossJoin(spark.range(3))
-    with pytest.raises(AssertionError, match="cartesian"):
-        assert_plan(cart)
-    assert plan_report(cart)["cartesian"]
-
-    # the sanctioned scalar-normalization shape is NOT a cartesian: a
-    # crossJoin whose build side is a grouping-keyless aggregate is
-    # provably 1 row and reported separately — even through a cache
-    scalar = spark.range(100).selectExpr("sum(id) AS total")
-    rep2 = plan_report(df.crossJoin(scalar))
-    assert not rep2["cartesian"] and rep2["scalar_nested_loop"] == 1
-    cached = scalar.persist()
-    try:
-        cached.count()
-        rep3 = plan_report(df.crossJoin(cached))
-        assert not rep3["cartesian"] and rep3["scalar_nested_loop"] == 1
-    finally:
-        cached.unpersist()
+    assert plan_report(df.crossJoin(spark.range(3)))["cartesian"]
 
     slow = df.select(F.udf(lambda x: x + 1, LongType())("id"))
-    with pytest.raises(AssertionError, match="row-at-a-time"):
-        assert_plan(slow)
+    assert plan_report(slow)["row_python"]
 
 
 def test_sampled_gate_topk_sample_no_row_python(spark):

@@ -230,6 +230,33 @@ def test_precision_warning_beyond_decimal38(spark):
         )
 
 
+def test_precision_warning_on_struct_column(spark):
+    """A bound beyond Decimal(38) inside a struct check keeps the double
+    approximation (the kernel takes no struct cell), so compiling the
+    table spec warns; the same bound on a plain column goes to the
+    kernel's exact math and stays silent."""
+    import warnings as W
+    from decimal import Decimal
+
+    from jsonschema_spark.compiler.columns import PrecisionWarning
+
+    bound = {"minimum": 10**38 + 7}
+    near = Decimal(10**38 - 1)
+    nested = spark.createDataFrame([((near,),)], "s struct<a: decimal(38,0)>")
+    with pytest.warns(PrecisionWarning):
+        compile_table_spec(
+            TableSpec.from_dict({"columns": {"s": {"properties": {"a": bound}}}}),
+            nested.schema,
+        )
+
+    flat = spark.createDataFrame([(near,)], "a decimal(38,0)")
+    with W.catch_warnings():
+        W.simplefilter("error", PrecisionWarning)
+        plan = compile_table_spec(TableSpec.from_dict({"columns": {"a": bound}}), flat.schema)
+    assert _on_kernel(flat, plan.checks["col_a"])
+    assert flat.filter(~plan.checks["col_a"].verdict).count() == 1
+
+
 MAP_SPEC = {
     "type": "object",
     "required": ["a"],
