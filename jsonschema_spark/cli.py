@@ -65,19 +65,48 @@ def _rate(value: str) -> float:
     return rate
 
 
+_PARQUET_MAGIC = b"PAR1"
+
+
+def _is_parquet_file(fs, status) -> bool:
+    """The file starts and ends with the parquet magic: Spark's schema
+    inference reads the footer, and a file without it fails a task whose
+    stack trace the executor logs before the error reaches Python."""
+    size = status.getLen()
+    if size < 3 * len(_PARQUET_MAGIC):  # head magic, footer length, tail magic
+        return False
+    stream = fs.open(status.getPath())
+    try:
+        ends = []
+        for offset in (0, size - len(_PARQUET_MAGIC)):
+            stream.seek(offset)
+            ends.append(bytes(stream.read() for _ in _PARQUET_MAGIC))
+    finally:
+        stream.close()
+    return ends == [_PARQUET_MAGIC, _PARQUET_MAGIC]
+
+
 def _read_parquet(spark, flag: str, path: str):
     """``spark.read.parquet(path)``; a path Spark cannot read (absent, or
-    not parquet) is a usage error that names ``flag``. An absent path is
-    found through the Hadoop FileSystem (``globStatus``, so globs still
-    work) before Spark's reader logs its own stack trace for it."""
+    not parquet) is a usage error that names ``flag``. An absent path, and
+    a file that is not parquet, are found through the Hadoop FileSystem
+    (``globStatus``, so globs still work) before Spark's reader logs its
+    own stack trace for them."""
     from pyspark.errors import AnalysisException
 
     from jsonschema_spark.spec.compile import SpecError
 
     hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.globStatus(hpath):  # null (no such path) or no glob match
+    matches = fs.globStatus(hpath)
+    if not matches:  # null (no such path) or no glob match
         raise SpecError(f"{flag} {path!r} cannot be read: no such path")
+    for status in matches:
+        if status.isFile() and not _is_parquet_file(fs, status):
+            raise SpecError(
+                f"{flag} {path!r} cannot be read: {status.getPath().getName()!r}"
+                " is not a parquet file"
+            )
     try:
         return spark.read.parquet(path)
     except AnalysisException as exc:

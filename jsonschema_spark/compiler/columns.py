@@ -36,6 +36,7 @@ falls back to the Arrow-batched kernel for that check (never silently).
 
 from __future__ import annotations
 
+import math
 import operator
 from decimal import Decimal
 from fractions import Fraction
@@ -100,8 +101,6 @@ class PrecisionWarning(UserWarning):
 def _approx_float(value: Fraction) -> float:
     """float(value), saturating to ±inf when the rational overflows a
     double (e.g. 1e1000 — the reference compares it exactly via big.Rat)."""
-    import math
-
     try:
         return float(value)
     except OverflowError:
@@ -439,7 +438,8 @@ def _bounds_only_items(
     bounds are equivalent and stay out of interpreted higher-order-function
     evaluation (the hottest expression of the corpus validation pass; see
     BASELINE.md). Null elements fail the numeric type check in the general
-    path, so the fast path adds an explicit no-nulls guard for parity."""
+    path, so the fast path adds an explicit no-nulls guard for parity
+    (``_no_null_elements``)."""
     target = deref(items)
     if target is None or not isinstance(elem_type, _INTEGRAL):
         return None
@@ -455,7 +455,7 @@ def _bounds_only_items(
     preds = []
     if target.types:
         # a NULL element fails the type check in the general path
-        preds.append(F.size(F.array_compact(col)) == F.size(col))
+        preds.append(_no_null_elements(target, col, elem_type))
     # bounds are vacuous over empty / all-null arrays (array_min -> NULL),
     # matching forall's vacuous truth — hence the coalesce(True)
     if target.minimum is not None:
@@ -469,6 +469,31 @@ def _bounds_only_items(
         p = mx < bound if target.exclusive_maximum else mx <= bound
         preds.append(F.coalesce(p, F.lit(True)))
     return preds
+
+
+# an integral element type holds [-half, half)
+_INTEGRAL_HALF = {T.ByteType: 2**7, T.ShortType: 2**15, T.IntegerType: 2**31, T.LongType: 2**63}
+
+
+def _no_null_elements(target: CompiledSchema, col: Column, elem_type: T.DataType) -> Column:
+    """True iff the non-null integral array ``col`` has no NULL element,
+    next to ``target``'s bounds. With a value ``s`` of the element type
+    that fails a bound, ``array_contains(col, s) IS NOT NULL`` is exact:
+    ``array_contains`` is NULL only when ``s`` is absent and some element
+    is NULL, and an array holding ``s`` fails its bound anyway. It stays in
+    whole-stage codegen, where ``array_compact`` is an interpreted
+    ``filter`` lambda. Without such an ``s`` (no bound, or one at the
+    type's edge) the guard counts the elements ``array_compact`` keeps."""
+    half = _INTEGRAL_HALF[type(elem_type)]
+    candidates = []
+    if target.minimum is not None:
+        candidates.append(math.floor(target.minimum) - 1)
+    if target.maximum is not None:
+        candidates.append(math.ceil(target.maximum) + 1)
+    for s in candidates:
+        if -half <= s < half:
+            return F.array_contains(col, F.lit(s).cast(elem_type)).isNotNull()
+    return F.size(F.array_compact(col)) == F.size(col)
 
 
 def _nest(

@@ -151,13 +151,24 @@ class ValidationJob:
         the row pass as domain-membership predicates: small dimensions
         compile to an isin set inside the verdict codegen stage; large ones
         fall back to a (broadcast-eligible) join so the domain never has to
-        fit on the driver (see referential.domain_flag)."""
-        out = df
+        fit on the driver (see referential.domain_flag).
+
+        Each layer is one projection (a column of the input with the same
+        name is replaced in place): the kernel verdict structs, then the
+        checks, then ``_valid`` over them, then each reference's flag."""
+        checks = self.plan.checks
+        kernels = {
+            VERDICT_PREFIX + name: check.kernel
+            for name, check in checks.items()
+            if check.kernel is not None
+        }
+        out = df.withColumns(kernels) if kernels else df
+        if checks:
+            out = out.withColumns(
+                {CHECK_PREFIX + name: check.verdict for name, check in checks.items()}
+            )
         valid = F.lit(True)
-        for name, check in self.plan.checks.items():
-            if check.kernel is not None:
-                out = out.withColumn(VERDICT_PREFIX + name, check.kernel)
-            out = out.withColumn(CHECK_PREFIX + name, check.verdict)
+        for name in checks:
             valid = valid & F.col(CHECK_PREFIX + name)
         out = out.withColumn("_valid", valid)
         for col_name, ref in self.plan.references.items():

@@ -66,6 +66,14 @@ def get_spark(
         # Spark; measured ~1.6x on the corpus scan at local[32])
         .config("spark.sql.parquet.enableNestedColumnVectorizedReader", "true")
         .config("spark.ui.enabled", "false")
+        # PySpark's DataFrame debugging records the Python call site of
+        # every Column method on the JVM: 11-21 py4j round trips per call
+        # instead of 1, most of compiling and annotating a small shard. A
+        # runtime error then lacks the Python call site in its DataFrame
+        # context (the SQL-text context stays). A static conf: it holds only
+        # on a session this call creates, and PySpark reads it once per
+        # process, on the first Column call made with an active session.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)

@@ -116,11 +116,19 @@ def test_validate_cli_id_col(tmp_path, spark):
         ('{"required": ["doc_id"]}', ["--preflight-budget", "nan"], "rate in [0, 1]"),
         ('{"required": ["doc_id"]}', ["--input", "{tmp}/absent"], "--input '{tmp}/absent'"),
         ('{"required": ["doc_id"]}', ["--dim", "other={tmp}/absent"], "--dim '{tmp}/absent'"),
+        (
+            '{"required": ["doc_id"]}', ["--input", "{tmp}/spec.json"],
+            "--input '{tmp}/spec.json' cannot be read: 'spec.json' is not a parquet file",
+        ),
+        (
+            '{"required": ["doc_id"]}', ["--dim", "other={tmp}/spec.json"],
+            "--dim '{tmp}/spec.json' cannot be read: 'spec.json' is not a parquet file",
+        ),
     ],
     ids=[
         "dim", "spec-not-json", "spec-bad-shape", "id-col-absent",
         "preflight-k-negative", "preflight-budget-above-1", "preflight-budget-nan",
-        "input-missing", "dim-missing",
+        "input-missing", "dim-missing", "input-not-parquet", "dim-not-parquet",
     ],
 )
 def test_validate_cli_rejects_malformed_dim(
@@ -131,18 +139,19 @@ def test_validate_cli_rejects_malformed_dim(
     ``--preflight-budget`` outside [0, 1] are usage errors refused before a
     session starts; an ``--input`` or ``--dim`` path that does not exist
     and an ``--id-col`` the input lacks are refused once the session is
-    up. Each exits 2 with one error line and writes no results. An absent
-    path never reaches Spark's parquet reader, which would log a Java
-    stack trace for it."""
+    up, and so is a file that is not parquet (the spec file itself). Each
+    exits 2 with one error line and writes no results. Neither an absent
+    path nor a non-parquet file reaches Spark's parquet reader, which
+    would log a Java stack trace for it."""
     from pyspark.sql.readwriter import DataFrameReader
 
     from jsonschema_spark.cli import main
 
-    absent = str(tmp_path / "absent")
+    unreadable = {str(tmp_path / "absent"), str(tmp_path / "spec.json")}
     read_parquet = DataFrameReader.parquet
 
     def parquet(self, *paths, **options):
-        assert absent not in paths, "the parquet reader was asked for an absent path"
+        assert not unreadable & set(paths), "the parquet reader was asked for an unreadable path"
         return read_parquet(self, *paths, **options)
 
     monkeypatch.setattr(DataFrameReader, "parquet", parquet)

@@ -395,6 +395,41 @@ def test_run_pass_structure(spark, job, corpus_df, tmp_path):
     assert 0 < len(sc.statusTracker().getJobIdsForGroup(group)) <= 16
 
 
+def test_shard_check_build_round_trips(spark, corpus_df, monkeypatch):
+    """Compiling the corpus spec, annotating and building ``violations``
+    stays under 700 py4j round trips (``send_command`` calls, py4j's own
+    garbage-collection messages aside). A Column method costs 1 with the
+    session's DataFrame debugging off and 11-21 with it on; this build
+    took about 1,200 with it on."""
+    from py4j.clientserver import ClientServerConnection
+
+    dim = dim_source(spark)
+    sent = []
+    send = ClientServerConnection.send_command
+
+    def counting(self, command, *args, **kwargs):
+        if not command.startswith("m\n"):
+            sent.append(command)
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    plan = compile_table_spec(TableSpec.from_dict(CORPUS_SPEC_DICT), corpus_df.schema)
+    job = ValidationJob(plan, dims={"dim_source": dim})
+    job.violations(job.annotate(corpus_df))
+    monkeypatch.undo()
+    assert 100 < len(sent) <= 700, len(sent)
+
+
+def test_annotate_runs_in_codegen_without_lambdas(job, corpus_df):
+    """The corpus spec's annotate projection has no interpreted lambda (the
+    ``items`` NULL guard is ``array_contains``, not ``array_compact``'s
+    ``filter``), so each of its projections is whole-stage codegen'd."""
+    plan = job.annotate(corpus_df)._jdf.queryExecution().executedPlan().toString()
+    assert "lambdafunction" not in plan
+    projects = [line for line in plan.splitlines() if "Project [" in line]
+    assert projects and all("*(" in line for line in projects), plan
+
+
 def test_run_on_map_column(spark, tmp_path):
     """A MAP column has no ordering: the profile leaves its min/max NULL
     instead of failing the run, and still counts its distinct values."""

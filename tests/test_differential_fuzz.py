@@ -84,6 +84,13 @@ def _str_values():
             for _ in range(40)]
 
 
+# array elements: in-range values, NULLs, and the values just outside the
+# fuzzed bounds (floor(minimum) - 1 and ceil(maximum) + 1 for the minimum
+# and maximum choices of _num_spec), which the bounds-only items guard
+# probes for
+_ARR_ELEMS = [0, 1, 2, 3, 5, 5, -2, 7, None, None, -1, -6, 6, 8, 11, 101]
+
+
 def _arr_values():
     out = []
     for _ in range(40):
@@ -91,7 +98,7 @@ def _arr_values():
             out.append(None)
         else:
             n = rng.randint(0, 5)
-            out.append([rng.choice([0, 1, 2, 3, 5, 5, -2, 7]) for _ in range(n)])
+            out.append([rng.choice(_ARR_ELEMS) for _ in range(n)])
     return out
 
 
@@ -100,6 +107,7 @@ def _arr_values():
     ("num-double", T.DoubleType(), _num_spec, _num_values),
     ("string", T.StringType(), _str_spec, _str_values),
     ("array", T.ArrayType(T.IntegerType()), _arr_spec, _arr_values),
+    ("array-long", T.ArrayType(T.LongType()), _arr_spec, _arr_values),
 ])
 def test_differential(spark, kind, dtype, mk_spec, mk_vals):
     """200 random specs per kind; each evaluated over a 40-value column in
@@ -341,3 +349,61 @@ def test_differential_object_failures(spark, kind):
                 mismatches.append((spec, v, want, got, failures))
     assert not mismatches, f"{len(mismatches)} disagreements, first 3: {mismatches[:3]}"
 
+
+_I32, _I64 = 2**31, 2**63
+
+# (id, element type, items spec, s, lo, hi): s is the value the bounds-only
+# items guard probes for (floor(minimum) - 1, else ceil(maximum) + 1), None
+# where no such value fits the element type and the guard falls back to
+# array_compact; lo and hi are the in-range values nearest the bounds.
+_GUARD_CASES = [
+    ("inclusive", T.IntegerType(), {"type": "integer", "minimum": 1, "maximum": 9}, 0, 1, 9),
+    ("exclusive", T.IntegerType(), {"type": "integer", "minimum": 1, "exclusiveMinimum": True,
+                                    "maximum": 9, "exclusiveMaximum": True}, 0, 2, 8),
+    ("fractional", T.IntegerType(), {"type": "integer", "minimum": 1.5, "maximum": 8.5}, 0, 2, 8),
+    ("number-max-only", T.LongType(), {"type": "number", "maximum": 9}, 10, -5, 9),
+    ("int-min-at-edge", T.IntegerType(), {"type": "integer", "minimum": -_I32, "maximum": 9},
+     10, -_I32, 9),
+    ("int-extremes", T.IntegerType(), {"type": "integer", "minimum": -_I32, "maximum": _I32 - 1},
+     None, -_I32, _I32 - 1),
+    ("long-extremes", T.LongType(), {"type": "integer", "minimum": -_I64, "maximum": _I64 - 1},
+     None, -_I64, _I64 - 1),
+    ("byte-extremes", T.ByteType(), {"type": "integer", "minimum": -128, "maximum": 127},
+     None, -128, 127),
+]
+
+
+@pytest.mark.parametrize(
+    "dtype", [T.ByteType(), T.IntegerType(), T.LongType()], ids=lambda t: t.simpleString()
+)
+def test_bounds_only_items_null_guard(spark, dtype):
+    """The bounds-only ``items`` fast path's NULL-element guard against the
+    evaluator, on the arrays that decide it: ``[]``, NULL, ``[null]``,
+    ``[1, null]``, ``[s]``, ``[s, null]``, ``[lo, hi]``, ``[lo, null]`` and
+    ``[hi, null]`` of every case with this element type, each case's spec
+    run over every case's arrays in one job. A guard probing for a value
+    that passes the bound (``[lo, null]`` holds one) would accept an array
+    with a NULL element. Cases without an ``s`` that fits the type must
+    take the ``array_compact`` fallback."""
+    cases = [c for c in _GUARD_CASES if c[1] == dtype]
+    arrays = [[], None, [None], [1, None]]
+    for _, _, _, s, lo, hi in cases:
+        if s is not None:
+            arrays += [[s], [s, None]]
+        arrays += [[lo, hi], [lo, None], [hi, None]]
+    adtype = T.ArrayType(dtype)
+    df = spark.createDataFrame([(a,) for a in arrays], T.StructType([T.StructField("v", adtype)]))
+    compiled = {cid: compile_spec({"items": items}) for cid, _, items, *_ in cases}
+    preds = {cid: lower_predicate(c, F.col("v"), adtype) for cid, c in compiled.items()}
+    out = df.select(*[p.alias(cid) for cid, p in preds.items()]).collect()
+    mismatches = [
+        (cid, arr, is_valid(compiled[cid], arr), row[cid])
+        for row, arr in zip(out, arrays)
+        for cid in compiled
+        if row[cid] != is_valid(compiled[cid], arr)
+    ]
+    assert not mismatches, mismatches
+    for cid, _, _, s, _, _ in cases:
+        plan = df.select(preds[cid])._jdf.queryExecution().optimizedPlan().toString()
+        want = "array_contains" if s is not None else "lambdafunction"
+        assert want in plan, (cid, plan)
