@@ -86,12 +86,30 @@ def _is_parquet_file(fs, status) -> bool:
     return ends == [_PARQUET_MAGIC, _PARQUET_MAGIC]
 
 
+def _first_data_file(fs, status):
+    """The file of a matched path that parquet schema inference opens: the
+    path itself when it is a file, else the first visible file by path
+    under the directory (names starting with ``_`` or ``.`` are not data),
+    or None when it holds none."""
+    while status.isDirectory():
+        visible = sorted(
+            (s for s in fs.listStatus(status.getPath())
+             if not s.getPath().getName().startswith(("_", "."))),
+            key=lambda s: s.getPath().toString(),
+        )
+        if not visible:
+            return None
+        status = visible[0]
+    return status
+
+
 def _read_parquet(spark, flag: str, path: str):
     """``spark.read.parquet(path)``; a path Spark cannot read (absent, or
     not parquet) is a usage error that names ``flag``. An absent path, and
-    a file that is not parquet, are found through the Hadoop FileSystem
-    (``globStatus``, so globs still work) before Spark's reader logs its
-    own stack trace for them."""
+    a file that is not parquet (the path itself, or the first data file of
+    a directory, the one schema inference reads), are found through the
+    Hadoop FileSystem (``globStatus``, so globs still work) before Spark's
+    reader logs its own stack trace for them."""
     from pyspark.errors import AnalysisException
 
     from jsonschema_spark.spec.compile import SpecError
@@ -102,9 +120,10 @@ def _read_parquet(spark, flag: str, path: str):
     if not matches:  # null (no such path) or no glob match
         raise SpecError(f"{flag} {path!r} cannot be read: no such path")
     for status in matches:
-        if status.isFile() and not _is_parquet_file(fs, status):
+        data = _first_data_file(fs, status)
+        if data is not None and not _is_parquet_file(fs, data):
             raise SpecError(
-                f"{flag} {path!r} cannot be read: {status.getPath().getName()!r}"
+                f"{flag} {path!r} cannot be read: {data.getPath().getName()!r}"
                 " is not a parquet file"
             )
     try:

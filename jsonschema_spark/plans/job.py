@@ -27,9 +27,22 @@ Everything else comes from ONE read of ``lineage/``: ``n_rows``,
 ``n_valid``, each check's fail count (the sum of ``fail_<check>``; a
 reference's is its orphan row count) and ``profile/`` (a roll-up of the
 partials), so a resumed run's totals and profile cover the whole table
-without re-reading it. The passes re-read the scan rather than caching
-10^12 rows; Parquet column pruning makes each re-read touch only the
-columns it needs.
+without re-reading it. That read takes the schema the run wrote (no
+inference job) and rolls up in one task (no exchange): ``lineage/`` holds
+one row per unit. The passes re-read the scan rather than caching 10^12
+rows; Parquet column pruning makes each re-read touch only the columns it
+needs.
+
+The outputs are independent, so they run as concurrent Spark jobs, one
+driver thread each (the ``lineage/`` read waits for its write in the same
+thread): at today's sizes most of a job is fixed cost, and the small
+outputs fill the cores the large scans leave idle. With FIFO scheduling a
+large input's first scan takes every slot, so at scale the run falls back
+to the serial order. Each thread keeps the caller's job group,
+description and tags; a perfbench ``corpus_batch`` op (the input read and
+``run()``) is 12 jobs. The first output to fail cancels the others' jobs
+and its error is raised; ``summary.json`` is written only after every
+output has succeeded.
 
 Checkpoint/resume: lineage rows are written per unit; a resumed run
 anti-joins completed units and processes only the remainder (results are
@@ -39,14 +52,18 @@ the ones it would append (another spec, or no profile partials).
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import time
-from typing import Optional
+import uuid
+from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
+from typing import Callable, Optional
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from jsonschema_spark.operators import stats as stats_ops
 from jsonschema_spark.operators.referential import domain_flag, orphan_key_counts
@@ -104,6 +121,33 @@ def _check_lineage_layout(spark, lineage_path: str, lineage: DataFrame) -> None:
             " lineage this run writes; write to a new results directory"
             " instead"
         )
+
+
+def _run_concurrently(spark: SparkSession, tasks: dict[str, Callable]) -> dict:
+    """Run each task (name -> callable without arguments) in a driver thread
+    of its own, so that their Spark jobs share the cores, and return name ->
+    result in ``tasks`` order. Each thread is wrapped with
+    ``inheritable_thread_target``, so its jobs keep the caller's job group,
+    description and tags; a plain thread's jobs would leave the group. The
+    jobs also carry a tag of their own: the first task to fail cancels its
+    siblings' jobs, and its error is raised once every task has ended, so no
+    job of this call outlives it."""
+    sc = spark.sparkContext
+    tag = f"jsonschema_spark-run-{uuid.uuid4().hex}"
+    sc.addJobTag(tag)
+    try:
+        wrapped = {name: inheritable_thread_target(spark)(fn) for name, fn in tasks.items()}
+    finally:
+        sc.removeJobTag(tag)
+    with ThreadPoolExecutor(max_workers=len(wrapped)) as pool:
+        futures = {name: pool.submit(fn) for name, fn in wrapped.items()}
+        finished, running = wait(futures.values(), return_when=FIRST_EXCEPTION)
+        first = next((f.exception() for f in finished if f.exception()), None)
+        if first is not None:
+            sc.cancelJobsWithTag(tag)
+            wait(running)
+            raise first
+    return {name: f.result() for name, f in futures.items()}
 
 
 def drop_completed_units(annotated: DataFrame, done_units: DataFrame) -> DataFrame:
@@ -312,7 +356,6 @@ class ValidationJob:
         spark = df.sparkSession
         t0 = time.time()
 
-        # orphans read the whole annotated table, resumed units included
         full = annotated = self.annotate(df)
         columns = _payload(annotated)
 
@@ -338,45 +381,61 @@ class ValidationJob:
                 annotated = drop_completed_units(annotated, done_units)
 
         mode = "append" if resume else "overwrite"
-        self.partition_lineage(annotated).write.mode(mode).parquet(lineage_path)
-        self.violations(annotated).write.mode(mode).parquet(
-            os.path.join(results_dir, "violations")
-        )
-
-        dup_counts = {}
-        for key, dups in self.uniqueness(df).items():
-            seen = Observation()
-            dups.observe(seen, F.count(F.lit(1)).alias("n")).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(results_dir, f"duplicates_{key}"))
-            dup_counts[key] = seen.get["n"]
-
-        for col_name, orphans in self.referential(full).items():
-            orphans.write.mode("overwrite").parquet(
-                os.path.join(results_dir, f"orphans_{col_name}")
-            )
-
-        # one read of lineage/: the totals are aggregated next to the
-        # profile roll-up and observed on its one-row result, in the write's
-        # own stage (an observation in a shuffle map stage could count a
-        # retried task twice)
+        lineage = self.partition_lineage(annotated)
         checks = self.plan.check_names + [f"ref_{c}" for c in self.plan.references]
         totals = {
             "n_rows": F.sum("n_rows"),
             "n_valid": F.sum("n_valid"),
             **{f"fail_{c}": F.sum(f"fail_{c}") for c in checks},
         }
-        rolled = spark.read.parquet(lineage_path).agg(
-            *[agg.alias(k) for k, agg in totals.items()],
-            stats_ops.profile_rollup(df.schema, columns).alias("_profile"),
-        )
-        seen = Observation()
-        rolled.observe(seen, *[F.max(k).alias(k) for k in totals]).select(
-            F.inline("_profile")
-        ).write.mode("overwrite").parquet(os.path.join(results_dir, "profile"))
-        got = {k: v or 0 for k, v in seen.get.items()}
-        fails = {c: got[f"fail_{c}"] for c in checks}
 
+        def write(frame: DataFrame, name: str, how: str = "overwrite") -> None:
+            frame.write.mode(how).parquet(os.path.join(results_dir, name))
+
+        def lineage_and_profile() -> dict:
+            write(lineage, "lineage", mode)
+            # one read of lineage/, with the schema this run wrote (no
+            # inference job) and in one task (no exchange): the totals are
+            # aggregated next to the profile roll-up and observed on its
+            # one-row result, in the write's own stage (an observation in a
+            # shuffle map stage could count a retried task twice)
+            rolled = (
+                spark.read.schema(lineage.schema)
+                .parquet(lineage_path)
+                .coalesce(1)
+                .agg(
+                    *[agg.alias(k) for k, agg in totals.items()],
+                    stats_ops.profile_rollup(df.schema, columns).alias("_profile"),
+                )
+            )
+            seen = Observation()
+            observed = rolled.observe(seen, *[F.max(k).alias(k) for k in totals])
+            write(observed.select(F.inline("_profile")), "profile")
+            return {k: v or 0 for k, v in seen.get.items()}
+
+        def duplicates(key: str, dups: DataFrame) -> int:
+            seen = Observation()
+            write(dups.observe(seen, F.count(F.lit(1)).alias("n")), f"duplicates_{key}")
+            return seen.get["n"]
+
+        outputs = {
+            "lineage": lineage_and_profile,
+            "violations": functools.partial(
+                write, self.violations(annotated), "violations", mode
+            ),
+        }
+        for key, dups in self.uniqueness(df).items():
+            outputs[f"duplicates_{key}"] = functools.partial(duplicates, key, dups)
+        # orphans read the whole annotated table, resumed units included
+        for col_name, counts in self.referential(full).items():
+            outputs[f"orphans_{col_name}"] = functools.partial(
+                write, counts, f"orphans_{col_name}"
+            )
+        done = _run_concurrently(spark, outputs)
+
+        got = done["lineage"]
+        fails = {c: got[f"fail_{c}"] for c in checks}
+        dup_counts = {key: done[f"duplicates_{key}"] for key in self.plan.unique}
         summary = {
             "n_rows": got["n_rows"],
             "n_valid": got["n_valid"],

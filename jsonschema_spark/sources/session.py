@@ -65,6 +65,10 @@ def get_spark(
         # vectorized decode for array<int> token columns (off by default in
         # Spark; measured ~1.6x on the corpus scan at local[32])
         .config("spark.sql.parquet.enableNestedColumnVectorizedReader", "true")
+        # 256 rows per vectorized batch, not 4096: a 4096-row batch of
+        # token arrays is 8 MB or more of column vectors per task, and
+        # ValidationJob.run scans its outputs side by side
+        .config("spark.sql.parquet.columnarReaderBatchSize", "256")
         .config("spark.ui.enabled", "false")
         # PySpark's DataFrame debugging records the Python call site of
         # every Column method on the JVM: 11-21 py4j round trips per call

@@ -124,11 +124,20 @@ def test_validate_cli_id_col(tmp_path, spark):
             '{"required": ["doc_id"]}', ["--dim", "other={tmp}/spec.json"],
             "--dim '{tmp}/spec.json' cannot be read: 'spec.json' is not a parquet file",
         ),
+        (
+            '{"required": ["doc_id"]}', ["--input", "{tmp}/json_dir"],
+            "--input '{tmp}/json_dir' cannot be read: 'part-0.json' is not a parquet file",
+        ),
+        (
+            '{"required": ["doc_id"]}', ["--dim", "other={tmp}/json_dir"],
+            "--dim '{tmp}/json_dir' cannot be read: 'part-0.json' is not a parquet file",
+        ),
     ],
     ids=[
         "dim", "spec-not-json", "spec-bad-shape", "id-col-absent",
         "preflight-k-negative", "preflight-budget-above-1", "preflight-budget-nan",
         "input-missing", "dim-missing", "input-not-parquet", "dim-not-parquet",
+        "input-dir-not-parquet", "dim-dir-not-parquet",
     ],
 )
 def test_validate_cli_rejects_malformed_dim(
@@ -139,15 +148,21 @@ def test_validate_cli_rejects_malformed_dim(
     ``--preflight-budget`` outside [0, 1] are usage errors refused before a
     session starts; an ``--input`` or ``--dim`` path that does not exist
     and an ``--id-col`` the input lacks are refused once the session is
-    up, and so is a file that is not parquet (the spec file itself). Each
-    exits 2 with one error line and writes no results. Neither an absent
-    path nor a non-parquet file reaches Spark's parquet reader, which
-    would log a Java stack trace for it."""
+    up, and so is a file that is not parquet (the spec file itself) or a
+    directory whose first data file is not (``json_dir``; its ``_SUCCESS``
+    marker and hidden checksum file are not data). Each exits 2 with one
+    error line and writes no results. Neither an absent path nor a
+    non-parquet file reaches Spark's parquet reader, which would log a Java
+    stack trace for it."""
     from pyspark.sql.readwriter import DataFrameReader
 
     from jsonschema_spark.cli import main
 
-    unreadable = {str(tmp_path / "absent"), str(tmp_path / "spec.json")}
+    json_dir = tmp_path / "json_dir"
+    json_dir.mkdir()
+    for name in ("_SUCCESS", ".part-0.json.crc", "part-0.json"):
+        (json_dir / name).write_text(spec_text)
+    unreadable = {str(tmp_path / "absent"), str(tmp_path / "spec.json"), str(json_dir)}
     read_parquet = DataFrameReader.parquet
 
     def parquet(self, *paths, **options):

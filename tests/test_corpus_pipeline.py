@@ -382,17 +382,107 @@ def test_run_profile_matches_column_profile(tmp_path, spark, job, corpus_df):
         assert got[name] == want[name], name
 
 
+def _last_job_id(spark, group: str) -> int:
+    """Run one small job under ``group`` and return its id: job ids grow
+    in submission order, so two of these bracket every job in between."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        spark.range(1).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return max(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_run_pass_structure(spark, job, corpus_df, tmp_path):
-    """run() is four input passes plus one lineage read: at most 16 Spark
-    jobs on this corpus (no read-back counts, no separate profile scan)."""
+    """run() is four input passes plus one lineage read: at most 11 Spark
+    jobs on this corpus (no read-back counts, no separate profile scan, no
+    schema inference on ``lineage/``, no exchange before its roll-up), and
+    every job started while it runs is in the caller's job group, although
+    its outputs run in threads of their own."""
     sc = spark.sparkContext
     group = "test_run_pass_structure"
+    first = _last_job_id(spark, group + ":before")
     sc.setJobGroup(group, "run()")
     try:
         ValidationJob(job.plan, dims=job.dims).run(corpus_df, str(tmp_path / "r"))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert 0 < len(sc.statusTracker().getJobIdsForGroup(group)) <= 16
+    last = _last_job_id(spark, group + ":after")
+    grouped = sorted(sc.statusTracker().getJobIdsForGroup(group))
+    assert grouped == list(range(first + 1, last))
+    assert 0 < len(grouped) <= 11
+
+
+def test_a_failing_output_stops_the_run(spark, job, corpus_df, tmp_path, monkeypatch):
+    """When one output fails, run() cancels the jobs of the others and
+    raises that output's error: no job of the run is left running and no
+    ``summary.json`` is written. The orphans output here is made slow (one
+    task that sleeps a millisecond per row, about 20 s): it is still running
+    when the duplicates output fails, so it never completes."""
+    uniqueness = ValidationJob.uniqueness
+
+    def failing(self, df):
+        boom = F.raise_error(F.lit("duplicates failed on purpose")).cast("string")
+        return {key: df.select(boom.alias(key)) for key in uniqueness(self, df)}
+
+    def slow(self, df):
+        sleep = F.expr("reflect('java.lang.Thread', 'sleep', cast(1 as bigint))")
+        return {"source": df.select("source", sleep.alias("slept")).coalesce(1)}
+
+    monkeypatch.setattr(ValidationJob, "uniqueness", failing)
+    monkeypatch.setattr(ValidationJob, "referential", slow)
+    results = tmp_path / "r"
+    with pytest.raises(Exception, match="duplicates failed on purpose"):
+        ValidationJob(job.plan, dims=job.dims).run(corpus_df, str(results))
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
+    assert not (results / "summary.json").exists()
+    assert not (results / "orphans_source" / "_SUCCESS").exists()
+
+
+def test_summary_order_under_concurrency(spark, tmp_path, monkeypatch):
+    """``summary["duplicates"]`` follows ``plan.unique`` and
+    ``summary["checks"]`` the plan, whichever output finishes first: the
+    first key's write is delayed here, so the second key's ends first. The
+    values equal those of a run that writes its outputs one after another."""
+    from jsonschema_spark.plans import job as job_module
+
+    df = spark.createDataFrame(
+        [(1, "x", "p", 5), (2, "x", "p", -1), (3, "y", "q", 2), (4, "z", "q", None),
+         (5, "w", "r", 7), (6, "v", "r", 0)],
+        "id long, a string, b string, n int",
+    )
+    spec = {
+        "columns": {"n": {"type": "integer", "minimum": 1}},
+        "required": ["n"],
+        "row_checks": {"small": "n < 7"},
+        "unique": ["a", "b"],
+    }
+    plan = compile_table_spec(TableSpec.from_dict(spec), df.schema)
+    run = ValidationJob(plan, id_column="id").run
+
+    monkeypatch.setattr(
+        job_module, "_run_concurrently", lambda spark, tasks: {n: t() for n, t in tasks.items()}
+    )
+    serial = run(df, str(tmp_path / "serial"))
+    monkeypatch.undo()
+
+    uniqueness = ValidationJob.uniqueness
+    sleep = F.expr("reflect('java.lang.Thread', 'sleep', cast(3000 as bigint))")
+
+    def first_key_late(self, frame):
+        dups = uniqueness(self, frame)
+        first = plan.unique[0]
+        return {**dups, first: dups[first].filter(F.isnotnull(sleep))}
+
+    monkeypatch.setattr(ValidationJob, "uniqueness", first_key_late)
+    got = run(df, str(tmp_path / "concurrent"))
+    assert list(got["duplicates"]) == plan.unique == ["a", "b"]
+    assert list(got["checks"]) == plan.check_names
+    assert got["duplicates"] == {"a": 1, "b": 3}
+    del serial["wall_sec"], got["wall_sec"]
+    assert got == serial
 
 
 def test_shard_check_build_round_trips(spark, corpus_df, monkeypatch):
