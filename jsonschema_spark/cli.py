@@ -180,10 +180,11 @@ def cmd_validate(args) -> int:
     t0 = time.time()
 
     if args.preflight_k:
-        # constant-size sampled gate BEFORE the full pass: if the Wilson
-        # upper bound on the violation rate exceeds the budget, exit
-        # nonzero without scanning the corpus (the 10^12-row-scale
-        # "don't run the expensive job on a broken snapshot" guard)
+        # sampled gate BEFORE the full pass: if the Wilson upper bound on
+        # the violation rate exceeds the budget, exit nonzero before any
+        # output is written. The gate costs one scan of the payload
+        # columns, then the checks on k rows (the "don't run the
+        # expensive job on a broken snapshot" guard)
         from jsonschema_spark.operators.checks import sampled_validation_gate
 
         gate = sampled_validation_gate(

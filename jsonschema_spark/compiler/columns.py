@@ -49,7 +49,7 @@ from pyspark.sql import types as T
 
 from jsonschema_spark.spec.compile import regex_dialect_risks
 from jsonschema_spark.spec.evaluate import is_valid
-from jsonschema_spark.spec.model import CompiledSchema, deref
+from jsonschema_spark.spec.model import CompiledSchema, deref, to_float
 from jsonschema_spark.spec.pointer import escape_token
 
 
@@ -98,21 +98,12 @@ class PrecisionWarning(UserWarning):
     compile time (SURVEY §7), never during execution."""
 
 
-def _approx_float(value: Fraction) -> float:
-    """float(value), saturating to ±inf when the rational overflows a
-    double (e.g. 1e1000 — the reference compares it exactly via big.Rat)."""
-    try:
-        return float(value)
-    except OverflowError:
-        return math.inf if value > 0 else -math.inf
-
-
 def _warn_precision(value: Fraction) -> None:
     import warnings
 
     warnings.warn(
         f"bound {value} exceeds Decimal(38) exact precision; compiled as the "
-        f"double approximation {_approx_float(value)!r}",
+        f"double approximation {to_float(value)!r}",
         PrecisionWarning,
         stacklevel=4,
     )
@@ -129,9 +120,9 @@ def _fraction_literal(value: Fraction) -> Column:
             return F.lit(n)
         if len(str(abs(n))) <= 38:
             return F.lit(Decimal(n))
-        if value != _approx_float(value):
+        if value != to_float(value):
             _warn_precision(value)
-        return F.lit(_approx_float(value))
+        return F.lit(to_float(value))
     d = value.denominator
     while d % 2 == 0:
         d //= 2
@@ -147,9 +138,9 @@ def _fraction_literal(value: Fraction) -> Column:
         # a wider exact expansion (e.g. binary floats like 0.02) goes float.
         if len(dec.as_tuple().digits) <= 38:
             return F.lit(dec)
-    if value != _approx_float(value):
+    if value != to_float(value):
         _warn_precision(value)
-    return F.lit(_approx_float(value))
+    return F.lit(to_float(value))
 
 
 def _scalar_literal(value: Any) -> Column:

@@ -24,17 +24,6 @@ def portable_hash60(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def ensure_parallelism(df: DataFrame) -> DataFrame:
-    """Guard against under-partitioned inputs (a single parquet file would
-    serialize the per-row work onto one core). Only repartitions when the
-    scan has fewer partitions than the cluster's default parallelism —
-    real corpora with thousands of files never pay this extra shuffle."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
-
-
 def sampled_validation_gate(
     df: DataFrame,
     id_col: str,
@@ -43,13 +32,13 @@ def sampled_validation_gate(
     budget: float = 0.01,
 ) -> DataFrame:
     """One-row PRE-FLIGHT validation gate: estimate the corpus's row-level
-    violation rate from a deterministic CONSTANT-SIZE sample before
-    paying for the full pass — ``(n_sampled, n_fail, fail_rate,
+    violation rate from a deterministic fixed-size sample before
+    paying for the full validation pass — ``(n_sampled, n_fail, fail_rate,
     wilson_hi, within_budget)`` where ``wilson_hi`` is the Wilson upper
     bound on the true rate at confidence ``WILSON_Z`` and ``within_budget``
     compares it to ``budget``. At 10^12 rows the full validation pass is
     the expensive step; this gate answers "is this snapshot roughly
-    sane?" from ``sample_k`` documents at any corpus size — run it
+    sane?" by running the checks on ``sample_k`` documents — run it
     first, ship the full pass (``ValidationJob``) only when the gate
     passes, and keep the full pass's exact counts as the artifact of
     record. Fails closed: wilson_hi is an UPPER bound, so a small sample
@@ -63,13 +52,12 @@ def sampled_validation_gate(
     A NULL ``_valid`` (a row check that evaluates to NULL) counts as a
     failure, so an undecided row can never help the sample pass.
 
-    Scale shape: the corpus contributes one (id, prio, payload-cols)
-    projection to a TakeOrderedAndProject top-k (per-partition heads +
-    driver merge of ≤ partitions·k rows; no global sort, no
-    single-partition window);
-    the k survivors repartition (a k-row shuffle) so the check
-    expressions evaluate core-parallel; everything downstream touches k
-    rows. Content-addressed (``portable_hash60('vgate:'+id)``), so the
+    Cost: one scan of the payload columns, then k rows. Every input row
+    is read and hashed into a TakeOrderedAndProject top-k (per-partition
+    heads + driver merge of ≤ partitions·k rows; no global sort, no
+    shuffle of the input); the checks then run on the k survivors only,
+    so the gate skips the check work on all but k rows, not the scan.
+    Content-addressed (``portable_hash60('vgate:'+id)``), so the
     sample — and therefore the gate verdict — is a pure function of the
     corpus on any partitioning, engine, or cluster size.
     """
@@ -77,11 +65,9 @@ def sampled_validation_gate(
         F.concat(F.lit("vgate:"), F.col(id_col).cast("string"))
     )
     sample = (
-        ensure_parallelism(df)
-        .withColumn("_prio", prio)
+        df.withColumn("_prio", prio)
         .orderBy("_prio", id_col)
         .limit(int(sample_k))
-        .repartition(32, F.col(id_col))
         .drop("_prio")
     )
     ann = annotate(sample)

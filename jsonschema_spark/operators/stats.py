@@ -111,15 +111,14 @@ def profile_rollup(schema: T.StructType, columns: list[str]) -> Column:
     return F.array(*rows)
 
 
-def column_profile(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
+def column_profile(df: DataFrame) -> DataFrame:
     """One row per column: null_rate, approx distinct (HLL), min/max
     (numeric or lexicographic, cast to string), plus length stats for
     string/array columns — ``profile_rollup`` over a single group, so one
     scan, no driver round trip."""
-    columns = columns or df.columns
     partials = df.agg(
-        F.count(F.lit(1)).alias("n_rows"), *profile_partials(df.schema, columns)
+        F.count(F.lit(1)).alias("n_rows"), *profile_partials(df.schema, df.columns)
     )
-    return partials.agg(profile_rollup(df.schema, columns).alias("_profile")).select(
+    return partials.agg(profile_rollup(df.schema, df.columns).alias("_profile")).select(
         F.inline("_profile")
     )

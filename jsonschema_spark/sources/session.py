@@ -35,18 +35,15 @@ def _default_driver_memory() -> str:
 def get_spark(
     app_name: str = "jsonschema_spark",
     cores: int | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
     if cores is None:  # else every CPU this process may use
         cores = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
-    if shuffle_partitions is None:
-        shuffle_partitions = max(cores, 8)
     mem = os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory()
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(max(cores, 8)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -15,7 +15,6 @@ pandas-UDF kernels for free-form JSON columns) and the native-Column lowerer
 
 from __future__ import annotations
 
-import json
 import re
 from fractions import Fraction
 from typing import Any, Callable, Optional, Union
@@ -23,7 +22,7 @@ from urllib.parse import urldefrag, urljoin
 
 from jsonschema_spark.spec.metaschema import DRAFT4_METASCHEMA, DRAFT4_URI
 from jsonschema_spark.spec.model import ALL_TYPES, CompiledSchema, parse_json
-from jsonschema_spark.spec.pointer import PointerError
+from jsonschema_spark.spec.pointer import PointerError, walk_pointer
 
 MAX_RESOLVE_DEPTH = 1000  # cycle guard, same cap as the reference (resolve.go:11)
 
@@ -121,11 +120,9 @@ Resolver = Callable[[str], Any]
 
 
 def default_resolver(uri: str) -> Any:
-    """Resolves only the embedded public draft-4 metaschema. Remote http/file
-    loading must be injected explicitly (driver-side only; executors never
-    resolve refs)."""
-    if urldefrag(uri)[0].rstrip("#") == DRAFT4_URI:
-        return DRAFT4_METASCHEMA
+    """Resolves nothing: remote http/file loading must be injected
+    explicitly (driver-side only; executors never resolve refs). The
+    embedded draft-4 metaschema resolves before any resolver is asked."""
     raise SpecError(f"cannot resolve remote spec {uri!r}: no resolver configured")
 
 
@@ -140,9 +137,7 @@ def file_map_resolver(prefix_to_dir: dict, fallback: Optional[Resolver] = None) 
                 path = os.path.join(directory, uri[len(prefix):].lstrip("/"))
                 with open(path, "rb") as fh:
                     return parse_json(fh.read())
-        if fallback is not None:
-            return fallback(uri)
-        return default_resolver(uri)
+        return (fallback or default_resolver)(uri)
 
     return resolve
 
@@ -159,9 +154,10 @@ def http_resolver(
 
     Guard rails, because a $ref is attacker-controllable in hosted settings:
     scheme must be http/https (everything else falls through to ``fallback``
-    / the metaschema-only default), an optional host allowlist, a response
+    / the refusing default), an optional host allowlist, a response
     size cap, and per-URI memoization. Resolution happens ONLY at compile
     time on the driver; executors receive compiled specs and never fetch.
+    The embedded draft-4 metaschema never reaches this resolver.
     """
     import urllib.request
     from urllib.parse import urlparse
@@ -169,15 +165,9 @@ def http_resolver(
     cache: dict = {}
 
     def resolve(uri: str) -> Any:
-        # the embedded draft-4 metaschema always resolves locally — its URI
-        # is http-scheme but must never trigger a network fetch
-        if urldefrag(uri)[0].rstrip("#") == DRAFT4_URI:
-            return DRAFT4_METASCHEMA
         parsed = urlparse(uri)
         if parsed.scheme not in ("http", "https"):
-            if fallback is not None:
-                return fallback(uri)
-            return default_resolver(uri)
+            return (fallback or default_resolver)(uri)
         if allow_hosts is not None and parsed.hostname not in allow_hosts:
             raise SpecError(
                 f"refusing to fetch {uri!r}: host {parsed.hostname!r} "
@@ -199,15 +189,45 @@ def http_resolver(
     return resolve
 
 
-def _norm_uri(uri: str) -> str:
-    base, frag = urldefrag(uri)
-    return f"{base}#{frag}" if frag else base
+def _join(base: str, ref: str) -> str:
+    """An ``id`` or a ``$ref`` resolved against ``base`` (RFC 3986), as a
+    normalized absolute URI: an empty fragment is dropped. ``base`` never
+    has a fragment. A fragment-only ``ref`` keeps ``base`` whatever its
+    scheme: ``urljoin`` returns it unchanged against a ``urn:`` base."""
+    if ref.startswith("#"):
+        uri, frag = base, ref[1:]
+    else:
+        uri, frag = urldefrag(urljoin(base, ref))
+    return f"{uri}#{frag}" if frag else uri
+
+
+def _id_uri(node: Any, base: str) -> Optional[str]:
+    """The URI ``node``'s ``id`` names, or None when it names nothing new:
+    no ``id``, an ``id`` beside ``$ref`` (inert in draft 4), or one that
+    resolves to ``base`` itself (an empty ``id``)."""
+    if not isinstance(node, dict) or "$ref" in node:
+        return None
+    ident = node.get("id")
+    if not isinstance(ident, str):
+        return None
+    uri = _join(base, ident)
+    return None if uri == base else uri
+
+
+def _scope(node: Any, base: str) -> str:
+    """The base URI inside ``node``, given the base around it."""
+    uri = _id_uri(node, base)
+    return base if uri is None else urldefrag(uri)[0]
 
 
 class Compiler:
     """Compiles one root spec document (plus any transitively referenced
     documents) into a CompiledSchema graph. Reusable caches make repeated and
-    cyclic refs cheap and terminating."""
+    cyclic refs cheap and terminating.
+
+    A base URI passed with a node is always the base *around* it; the node's
+    own ``id`` is applied by whoever enters it (``_compile``, ``_collect_ids``,
+    the pointer walk in ``_resolve_ref``)."""
 
     def __init__(self, root: Any, resolver: Optional[Resolver] = None):
         if isinstance(root, (str, bytes)):
@@ -217,23 +237,14 @@ class Compiler:
                 raise SpecError(f"invalid json: {exc}") from exc
         self.root = root
         self.resolver = resolver or default_resolver
-        # normalized absolute uri -> (raw schema node, base uri at that node)
-        self.ids: dict = {}
+        # normalized absolute uri -> (raw schema node, base uri around it)
+        self.ids: dict = {"": (root, "")}
         # (id(raw node), base uri) -> CompiledSchema (pre-registered: cycle-safe)
         self.node_cache: dict = {}
         self.depth = 0
-
-        root_base = ""
-        if isinstance(root, dict) and isinstance(root.get("id"), str):
-            root_base = urldefrag(root["id"])[0]
-        self.root_base = root_base
-        self.ids[""] = (root, root_base)
-        self._collect_ids(root, root_base)
+        self._collect_ids(root, "")
 
     # -- id collection (reference analog: document.go:59-136) ----------------
-
-    def _register(self, uri: str, node: Any, base: str) -> None:
-        self.ids[_norm_uri(uri)] = (node, base)
 
     @staticmethod
     def _validate_id(node: dict) -> None:
@@ -255,11 +266,10 @@ class Compiler:
         if not isinstance(node, dict):
             return
         self._validate_id(node)
-        # a sibling id next to $ref is inert: not an identifier, no base change
-        if "$ref" not in node and isinstance(node.get("id"), str):
-            new_uri = urljoin(base, node["id"]) if base else node["id"]
-            self._register(new_uri, node, urldefrag(new_uri)[0])
-            base = urldefrag(new_uri)[0]
+        uri = _id_uri(node, base)
+        if uri is not None:
+            self.ids[uri] = (node, base)
+            base = urldefrag(uri)[0]
         for key in _SINGLE_SCHEMA_KEYS:
             self._collect_ids(node.get(key), base)
         items = node.get("items")
@@ -287,76 +297,43 @@ class Compiler:
     # -- ref resolution (reference analog: resolve.go:56-91) -----------------
 
     def _resolve_ref(self, ref: str, base: str) -> tuple:
-        """ref + base uri -> (raw target node, base uri at target)."""
-        absolute = urljoin(base, ref) if base else ref
-        key = _norm_uri(absolute)
-        if key in self.ids:
-            return self.ids[key]
+        """ref + base uri -> (raw target node, base uri around the target)."""
+        absolute = _join(base, ref)
         doc_uri, frag = urldefrag(absolute)
-        if _norm_uri(doc_uri) not in self.ids and doc_uri:
+        if absolute not in self.ids and doc_uri not in self.ids:
             self._load_remote(doc_uri)
-        doc_entry = self.ids.get(_norm_uri(doc_uri))
-        if doc_entry is None:
+        if absolute in self.ids:  # a document, or an id ("#name" included)
+            return self.ids[absolute]
+        if doc_uri not in self.ids or not frag.startswith("/"):
             raise SpecError(f"unresolvable $ref {ref!r} (absolute: {absolute!r})")
-        node, node_base = doc_entry
-        if not frag:
-            return node, node_base
-        if not frag.startswith("/"):
-            # location-independent "#name" fragment: must already be indexed
-            raise SpecError(f"unresolvable $ref fragment {frag!r} in {absolute!r}")
-        # pointer walk, updating base when crossing nodes that declare ids
-        current_base = node_base
+        node, base = self.ids[doc_uri]
         try:
-            from jsonschema_spark.spec.pointer import split_pointer
-
-            tokens = split_pointer(frag, uri_escaped=True)
-            for pos, token in enumerate(tokens):
-                if isinstance(node, dict):
-                    if token not in node:
-                        raise PointerError(f"pointer member {token!r} not found")
-                    node = node[token]
-                elif isinstance(node, list):
-                    if not token.isdigit() or int(token) >= len(node):
-                        raise PointerError(f"bad array index {token!r}")
-                    node = node[int(token)]
-                else:
-                    raise PointerError(f"cannot index scalar with {token!r}")
-                if (
-                    pos + 1 < len(tokens)  # final node's own id is applied by _compile
-                    and isinstance(node, dict)
-                    and "$ref" not in node
-                    and isinstance(node.get("id"), str)
-                ):
-                    current_base = urldefrag(
-                        urljoin(current_base, node["id"]) if current_base else node["id"]
-                    )[0]
+            path = walk_pointer(node, frag, uri_escaped=True)
         except PointerError as exc:
             raise SpecError(f"unresolvable $ref {ref!r}: {exc}") from exc
-        return node, current_base
+        for passed in path[:-1]:  # the base moves across each id on the way
+            base = _scope(passed, base)
+        return path[-1], base
 
     def _load_remote(self, doc_uri: str) -> None:
-        try:
-            raw = self.resolver(doc_uri)
-        except SpecError:
-            return  # lookup failure surfaces as unresolvable-$ref below
-        except OSError as exc:
-            raise SpecError(f"failed to load remote spec {doc_uri!r}: {exc}") from exc
-        if isinstance(raw, (str, bytes)):
-            raw = parse_json(raw)
-        base = doc_uri
-        if isinstance(raw, dict) and isinstance(raw.get("id"), str):
-            base = urldefrag(urljoin(doc_uri, raw["id"]))[0]
-        self._register(doc_uri, raw, urldefrag(base)[0])
-        self._collect_ids(raw, urldefrag(base)[0])
+        if doc_uri == DRAFT4_URI:
+            raw = DRAFT4_METASCHEMA
+        else:
+            try:
+                raw = self.resolver(doc_uri)
+            except SpecError:
+                return  # lookup failure surfaces as unresolvable-$ref
+            except OSError as exc:
+                raise SpecError(f"failed to load remote spec {doc_uri!r}: {exc}") from exc
+            if isinstance(raw, (str, bytes)):
+                raw = parse_json(raw)
+        self.ids[doc_uri] = (raw, doc_uri)
+        self._collect_ids(raw, doc_uri)
 
     # -- keyword lowering (reference analog: compiler.go:48-247) -------------
 
-    def compile(self, node: Any = None, base: Optional[str] = None) -> CompiledSchema:
-        if node is None:
-            node = self.root
-        if base is None:
-            base = self.root_base
-        return self._compile(node, base)
+    def compile(self) -> CompiledSchema:
+        return self._compile(self.root, "")
 
     def _compile(self, node: Any, base: str) -> CompiledSchema:
         if not isinstance(node, dict):
@@ -381,9 +358,7 @@ class Compiler:
                 self.depth -= 1
             return cs  # $ref overrides all sibling keywords (draft 4)
 
-        if isinstance(node.get("id"), str) and node["id"]:
-            base = urldefrag(urljoin(base, node["id"]) if base else node["id"])[0]
-
+        base = _scope(node, base)
         self._compile_type(node, cs)
         self._compile_combinators(node, cs, base)
         self._compile_number(node, cs)

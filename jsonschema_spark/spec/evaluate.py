@@ -44,6 +44,7 @@ from jsonschema_spark.spec.model import (
     json_type,
     parse_json,
     parse_json_float,
+    to_float,
 )
 from jsonschema_spark.spec.pointer import escape_token
 
@@ -200,14 +201,6 @@ def _combinators(s: CompiledSchema, exact: bool) -> list:
 # --- numbers -------------------------------------------------------------------
 
 
-def _to_float(q: Any) -> float:
-    """The nearest double, saturating to ±inf like float('1e400')."""
-    try:
-        return float(q)
-    except OverflowError:
-        return math.inf if q > 0 else -math.inf
-
-
 def _integer_exact(v: Any) -> bool:
     return v.is_integer() if type(v) is float else is_json_integer(v)
 
@@ -224,7 +217,7 @@ def _bound(keyword: str, bound: Fraction, fails: Callable, message: str, exact: 
     """``fails(v, bound)`` decides the keyword; a float compares against the
     bound's double first, which settles it unless the two are equal."""
     b = int(bound) if bound.denominator == 1 else bound
-    bf = _to_float(bound)
+    bf = to_float(bound)
 
     def check(v: Any, path: str, out: Optional[list]) -> bool:
         if type(v) is float:
@@ -284,7 +277,7 @@ def _no_float(n: Any) -> Any:
 
 
 def _rounded(n: Any) -> float:
-    return n if type(n) is float else _to_float(n)
+    return n if type(n) is float else to_float(n)
 
 
 def _key(v: Any, num: Callable) -> Any:

@@ -1,7 +1,7 @@
 """The JSON Schema Draft-4 metaschema (public standard document,
-http://json-schema.org/draft-04/schema). Embedded as a Python literal so the
-engine can self-validate constraint specs before compiling them, mirroring the
-reference's metaschema gate (/root/reference/jsonschema_test.go:22-24,55).
+http://json-schema.org/draft-04/schema). Embedded as a Python literal so a
+``$ref`` to it compiles without a resolver or a network fetch; no spec is
+validated against it before compiling.
 """
 
 DRAFT4_URI = "http://json-schema.org/draft-04/schema"

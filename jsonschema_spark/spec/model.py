@@ -21,6 +21,7 @@ Design notes (Spark-first, not a port):
 from __future__ import annotations
 
 import json
+import math
 import re
 from dataclasses import dataclass, field
 from fractions import Fraction
@@ -39,8 +40,6 @@ TYPE_OBJECT = "object"
 ALL_TYPES = frozenset(
     {TYPE_NULL, TYPE_BOOLEAN, TYPE_STRING, TYPE_NUMBER, TYPE_INTEGER, TYPE_ARRAY, TYPE_OBJECT}
 )
-
-NumberLike = Union[int, Fraction]
 
 
 def _not_json(token: str) -> Any:
@@ -103,6 +102,15 @@ def json_type(value: Any) -> str:
     if isinstance(value, dict):
         return TYPE_OBJECT
     raise TypeError(f"not a JSON value: {type(value)!r}")
+
+
+def to_float(q: Any) -> float:
+    """The nearest double, saturating to ±inf like float('1e400') (e.g.
+    1e1000, which the reference compares exactly via big.Rat)."""
+    try:
+        return float(q)
+    except OverflowError:
+        return math.inf if q > 0 else -math.inf
 
 
 def as_fraction(value: Any) -> Fraction:

@@ -4,6 +4,7 @@
 
 from __future__ import annotations
 
+import re
 from typing import Any
 from urllib.parse import unquote
 
@@ -38,28 +39,32 @@ def split_pointer(pointer: str, uri_escaped: bool = False) -> list[str]:
     return [unescape_token(t) for t in tokens]
 
 
-def resolve_pointer(doc: Any, pointer: str, uri_escaped: bool = False) -> Any:
-    """Walk ``pointer`` into ``doc``; raise PointerError when not found."""
-    node = doc
+def walk_pointer(doc: Any, pointer: str, uri_escaped: bool = False) -> list:
+    """The nodes ``pointer`` passes through: ``doc`` first, the target last.
+    Raise PointerError when not found."""
+    path = [doc]
     for token in split_pointer(pointer, uri_escaped=uri_escaped):
+        node = path[-1]
         if isinstance(node, dict):
             if token not in node:
                 raise PointerError(f"pointer member {token!r} not found")
-            node = node[token]
+            path.append(node[token])
         elif isinstance(node, list):
-            if token == "-" or not _is_array_index(token):
+            if _ARRAY_INDEX.fullmatch(token) is None:
                 raise PointerError(f"invalid array index {token!r}")
             idx = int(token)
             if idx >= len(node):
                 raise PointerError(f"array index {idx} out of range")
-            node = node[idx]
+            path.append(node[idx])
         else:
             raise PointerError(f"cannot index scalar with {token!r}")
-    return node
+    return path
 
 
-def _is_array_index(token: str) -> bool:
-    # RFC 6901: no leading zeros (except "0" itself), digits only
-    if not token.isdigit():
-        return False
-    return not (len(token) > 1 and token[0] == "0")
+def resolve_pointer(doc: Any, pointer: str, uri_escaped: bool = False) -> Any:
+    """Walk ``pointer`` into ``doc``; raise PointerError when not found."""
+    return walk_pointer(doc, pointer, uri_escaped=uri_escaped)[-1]
+
+
+# RFC 6901 §4: "0" or ASCII digits without a leading zero ("-" never resolves)
+_ARRAY_INDEX = re.compile(r"0|[1-9][0-9]*")

@@ -7,7 +7,5 @@ import pytest
 def spark():
     from jsonschema_spark.sources.session import get_spark
 
-    session = get_spark(
-        app_name="jsonschema_spark-tests", shuffle_partitions=8
-    )
+    session = get_spark(app_name="jsonschema_spark-tests")
     yield session

@@ -4,7 +4,7 @@ silently regress them:
 
 - small dimensions broadcast (never SortMergeJoin)
 - the pre-flight gate samples with TakeOrderedAndProject (no full sort
-  of the corpus)
+  of the corpus) and shuffles no input rows
 - verdict routing is a scan-stage filter (zero exchanges)
 - the validation hot path contains no row-at-a-time Python
   (BatchEvalPython); only Arrow-batched kernels (ArrowEvalPython) appear
@@ -83,6 +83,24 @@ def test_sampled_gate_topk_sample_no_row_python(spark):
     assert "TakeOrderedAndProject" in plan
     assert "BatchEvalPython" not in plan
     assert "CartesianProduct" not in plan
+
+
+def test_sampled_gate_shuffles_no_rows(spark):
+    """The gate takes its input as partitioned: a one-partition input is
+    not spread round-robin over the cores, and the k survivors are not
+    hash-repartitioned before the checks run."""
+    from pyspark.sql import functions as F
+
+    from jsonschema_spark.operators.checks import sampled_validation_gate
+
+    df = spark.range(0, 100, 1, 1).withColumnRenamed("id", "doc_id")
+    plan = _plan(sampled_validation_gate(
+        df, "doc_id", lambda d: d.withColumn("_valid", F.col("doc_id") % 7 > 0),
+        sample_k=16,
+    ))
+    assert "TakeOrderedAndProject" in plan
+    assert "RoundRobinPartitioning" not in plan
+    assert "hashpartitioning" not in plan
 
 
 def test_quarantine_rows_zero_exchange_scan_stage(spark):

@@ -78,6 +78,8 @@ def test_escape_order():
         "/foo/2",               # index out of range
         "/foo/-",               # "-" (past-the-end) is unresolvable
         "/foo/01",              # leading zero index
+        "/foo/\u0661",          # Arabic-Indic digit one: indexes are ASCII
+        "/foo/\uff11",          # full-width digit one
         "/foo/bar",             # non-numeric index into array
         "/foo/0/deep",          # indexing into a scalar
         "foo",                  # missing leading slash
