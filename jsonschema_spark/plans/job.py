@@ -13,7 +13,9 @@ the input four times and runs no job whose only purpose is to count:
 1. **Lineage** — ONE aggregation over the annotated scan, grouped by a
    *unit id* (input file when reading files, else spark partition id) with
    map-side combine: row and valid counts, each check's fail count and the
-   mergeable profile partials (operators/stats.py). Shuffle volume is
+   mergeable profile partials (operators/stats.py; a nested column's are
+   its NULL count and sizes). Each aggregate is one SQL expression over
+   the columns' positional names (``plan.positions``). Shuffle volume is
    O(#units × (#checks + #columns)), independent of row count.
 2. **Violations** — failing rows filtered *before* leaving the scan stage
    and written partition-parallel.
@@ -36,18 +38,22 @@ needs.
 The outputs are independent, so they run as concurrent Spark jobs, one
 driver thread each (the ``lineage/`` read waits for its write in the same
 thread): at today's sizes most of a job is fixed cost, and the small
-outputs fill the cores the large scans leave idle. With FIFO scheduling a
-large input's first scan takes every slot, so at scale the run falls back
-to the serial order. Each thread keeps the caller's job group,
-description and tags; a perfbench ``corpus_batch`` op (the input read and
-``run()``) is 12 jobs. The first output to fail cancels the others' jobs
-and its error is raised; ``summary.json`` is written only after every
-output has succeeded.
+outputs fill the cores the large scans leave idle. The lineage frame, its
+schema and the roll-up aggregates are built before any output starts; the
+other outputs build their frames in their own threads, so the lineage job
+does not wait for them, and an error building one fails the run as a
+failing job does. With FIFO scheduling a large input's first scan takes
+every slot, so at scale the run falls back to the serial order. Each
+thread keeps the caller's job group, description and tags; a perfbench
+``corpus_batch`` op (the input read and ``run()``) is 12 jobs. The first
+output to fail cancels the others' jobs and its error is raised;
+``summary.json`` is written only after every output has succeeded.
 
 Checkpoint/resume: lineage rows are written per unit; a resumed run
 anti-joins completed units and processes only the remainder (results are
 parquet directories). It refuses a ``lineage/`` whose columns differ from
-the ones it would append (another spec, or no profile partials).
+the ones it would append (another spec, or another profile layout), and a
+``lineage/`` without data files (what a failed write leaves).
 """
 
 from __future__ import annotations
@@ -55,6 +61,7 @@ from __future__ import annotations
 import functools
 import json
 import os
+import threading
 import time
 import uuid
 from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
@@ -63,6 +70,7 @@ from typing import Callable, Optional
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.util import inheritable_thread_target
 
 from jsonschema_spark.operators import stats as stats_ops
@@ -72,9 +80,11 @@ from jsonschema_spark.plans.plan import (
     CHECK_PREFIX,
     VERDICT_PREFIX,
     CompiledPlan,
+    _sql_string,
     annotation_columns,
     check_columns,
     failed,
+    positions,
     root_failures,
 )
 
@@ -82,9 +92,9 @@ from jsonschema_spark.plans.plan import (
 def _unit() -> Column:
     """The lineage unit of a row: its input file when reading files (stable
     across reruns, so resumable), else its spark partition id."""
-    return F.coalesce(
-        F.nullif(F.input_file_name(), F.lit("")),
-        F.concat(F.lit("partition:"), F.spark_partition_id().cast("string")),
+    return F.expr(
+        "coalesce(nullif(input_file_name(), ''),"
+        " concat('partition:', CAST(spark_partition_id() AS STRING)))"
     )
 
 
@@ -97,11 +107,22 @@ def _payload(annotated: DataFrame) -> list:
 def _check_lineage_layout(spark, lineage_path: str, lineage: DataFrame) -> None:
     """Refuse to resume onto a ``lineage/`` whose columns differ from the
     ones this run writes — one written for another spec or by a version
-    without the profile partials. Appending to it would leave units whose
+    with another profile layout. Appending to it would leave units whose
     counts or partials read as NULL or cannot be read at all, and the
     totals and profile would come out wrong. The footers of all files are
     merged, and a file without some column reads as NULL there, which no
-    unit with rows has: its counts and partials are aggregates."""
+    unit with rows has: its counts and partials are aggregates.
+
+    A ``lineage/`` without data files (what a failed write leaves) is
+    refused too: read as "no units done", the resume would append every
+    unit's violation rows again next to those a failed run may have
+    committed."""
+    if all(name.startswith(("_", ".")) for name in os.listdir(lineage_path)):
+        raise ValueError(
+            f"cannot resume onto {lineage_path}: it holds no data files, as a"
+            " failed write leaves it, and the run's other outputs may be"
+            " complete; write to a new results directory instead"
+        )
     found = spark.read.option("mergeSchema", "true").parquet(lineage_path)
     got = {f.name: f.dataType.simpleString() for f in found.schema.fields}
     want = {f.name: f.dataType.simpleString() for f in lineage.schema.fields}
@@ -121,6 +142,21 @@ def _check_lineage_layout(spark, lineage_path: str, lineage: DataFrame) -> None:
             " lineage this run writes; write to a new results directory"
             " instead"
         )
+
+
+def _built_once(build: Callable[[], dict]) -> Callable[[], dict]:
+    """``build`` as a call that runs it once: the first thread to call it
+    builds, the others wait for that result."""
+    lock = threading.Lock()
+    built = []
+
+    def get() -> dict:
+        with lock:
+            if not built:
+                built.append(build())
+            return built[0]
+
+    return get
 
 
 def _run_concurrently(spark: SparkSession, tasks: dict[str, Callable]) -> dict:
@@ -148,6 +184,22 @@ def _run_concurrently(spark: SparkSession, tasks: dict[str, Callable]) -> dict:
             wait(running)
             raise first
     return {name: f.result() for name, f in futures.items()}
+
+
+def _lineage_rollup(
+    checks: list[str], schema: T.StructType, columns: list[str], refs: dict
+) -> list:
+    """The aggregates that roll ``lineage/`` up: ``_totals``, a struct of
+    the sums of ``n_rows``, ``n_valid`` and each check's ``fail_<check>``,
+    and ``_profile`` (``stats.profile_rollup`` of the input ``columns``).
+    ``refs`` maps each ``lineage/`` column to its name in the frame read
+    (``positions``)."""
+    totals = ["n_rows", "n_valid", *[f"fail_{c}" for c in checks]]
+    summed = ", ".join(f"{_sql_string(k)}, sum({refs[k]})" for k in totals)
+    return [
+        F.expr(f"named_struct({summed})").alias("_totals"),
+        stats_ops.profile_rollup(schema, columns, refs).alias("_profile"),
+    ]
 
 
 def drop_completed_units(annotated: DataFrame, done_units: DataFrame) -> DataFrame:
@@ -301,19 +353,20 @@ class ValidationJob:
         Columns: ``unit``, ``n_rows``, ``n_valid``, ``fail_<check>`` per
         check, then ``profile_<column>`` per input column (a struct of
         mergeable partials, see ``stats.profile_partials``; the HLL sketch
-        adds 552 bytes per unit and column)."""
+        adds 552 bytes per unit and scalar column)."""
+        refs = positions(annotated.columns)
         aggs = [
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(F.col("_valid").cast("long")).alias("n_valid"),
+            F.expr("count(1)").alias("n_rows"),
+            F.expr(f"sum(CAST({refs['_valid']} AS BIGINT))").alias("n_valid"),
         ]
         for c in self.check_columns(annotated):
             aggs.append(
-                F.sum(failed(F.col(c)).cast("long")).alias(
-                    f"fail_{c.removeprefix(CHECK_PREFIX)}"
+                F.expr(f"sum(CAST(NOT coalesce({refs[c]}, false) AS BIGINT))").alias(
+                    "fail_" + c.removeprefix(CHECK_PREFIX)
                 )
             )
-        aggs.extend(stats_ops.profile_partials(annotated.schema, _payload(annotated)))
-        return annotated.groupBy(_unit().alias("unit")).agg(*aggs)
+        aggs.extend(stats_ops.profile_partials(annotated.schema, _payload(annotated), refs))
+        return annotated.toDF(*refs.values()).groupBy(_unit().alias("unit")).agg(*aggs)
 
     # ---- table-level checks --------------------------------------------------
 
@@ -381,13 +434,20 @@ class ValidationJob:
                 annotated = drop_completed_units(annotated, done_units)
 
         mode = "append" if resume else "overwrite"
+        # everything the lineage thread needs is built here, before any
+        # output starts: the other outputs build their frames in their own
+        # threads while the lineage job runs
         lineage = self.partition_lineage(annotated)
+        lineage_schema = lineage.schema
+        lineage_refs = positions(lineage_schema.names)
         checks = self.plan.check_names + [f"ref_{c}" for c in self.plan.references]
-        totals = {
-            "n_rows": F.sum("n_rows"),
-            "n_valid": F.sum("n_valid"),
-            **{f"fail_{c}": F.sum(f"fail_{c}") for c in checks},
-        }
+        rollup = _lineage_rollup(checks, df.schema, columns, lineage_refs)
+        observed_totals = F.expr("max(_totals) AS _totals")
+        profile_rows = F.inline("_profile")
+
+        duplicate_frames = _built_once(lambda: self.uniqueness(df))
+        # orphans read the whole annotated table, resumed units included
+        orphan_frames = _built_once(lambda: self.referential(full))
 
         def write(frame: DataFrame, name: str, how: str = "overwrite") -> None:
             frame.write.mode(how).parquet(os.path.join(results_dir, name))
@@ -400,37 +460,33 @@ class ValidationJob:
             # one-row result, in the write's own stage (an observation in a
             # shuffle map stage could count a retried task twice)
             rolled = (
-                spark.read.schema(lineage.schema)
+                spark.read.schema(lineage_schema)
                 .parquet(lineage_path)
+                .toDF(*lineage_refs.values())
                 .coalesce(1)
-                .agg(
-                    *[agg.alias(k) for k, agg in totals.items()],
-                    stats_ops.profile_rollup(df.schema, columns).alias("_profile"),
-                )
+                .agg(*rollup)
             )
             seen = Observation()
-            observed = rolled.observe(seen, *[F.max(k).alias(k) for k in totals])
-            write(observed.select(F.inline("_profile")), "profile")
-            return {k: v or 0 for k, v in seen.get.items()}
+            write(rolled.observe(seen, observed_totals).select(profile_rows), "profile")
+            return {k: v or 0 for k, v in seen.get["_totals"].asDict().items()}
 
-        def duplicates(key: str, dups: DataFrame) -> int:
+        def violations() -> None:
+            write(self.violations(annotated), "violations", mode)
+
+        def duplicates(key: str) -> int:
             seen = Observation()
+            dups = duplicate_frames()[key]
             write(dups.observe(seen, F.count(F.lit(1)).alias("n")), f"duplicates_{key}")
             return seen.get["n"]
 
-        outputs = {
-            "lineage": lineage_and_profile,
-            "violations": functools.partial(
-                write, self.violations(annotated), "violations", mode
-            ),
-        }
-        for key, dups in self.uniqueness(df).items():
-            outputs[f"duplicates_{key}"] = functools.partial(duplicates, key, dups)
-        # orphans read the whole annotated table, resumed units included
-        for col_name, counts in self.referential(full).items():
-            outputs[f"orphans_{col_name}"] = functools.partial(
-                write, counts, f"orphans_{col_name}"
-            )
+        def orphans(col_name: str) -> None:
+            write(orphan_frames()[col_name], f"orphans_{col_name}")
+
+        outputs = {"lineage": lineage_and_profile, "violations": violations}
+        for key in self.plan.unique:
+            outputs[f"duplicates_{key}"] = functools.partial(duplicates, key)
+        for col_name in self.plan.references:
+            outputs[f"orphans_{col_name}"] = functools.partial(orphans, col_name)
         done = _run_concurrently(spark, outputs)
 
         got = done["lineage"]

@@ -147,6 +147,15 @@ def root_failures(name: str, detail: Optional[str]) -> Column:
     return failure_entries(_sql_ident(CHECK_PREFIX + name), "''", _sql_string(detail))
 
 
+def positions(columns: list[str]) -> dict:
+    """Each column name -> ``_<its index>``, the name SQL text reads it by
+    in the frame renamed with ``toDF(*positions(df.columns).values())``.
+    The SQL parser's variable substitution rewrites a ``${...}`` in a name
+    even inside backticks (``_sql_ident``); ``toDF`` renames without
+    parsing."""
+    return {c: f"_{i}" for i, c in enumerate(columns)}
+
+
 def check_columns(annotated: DataFrame) -> list:
     """The ``chk_*`` verdict columns of an annotated frame, in order."""
     return [c for c in annotated.columns if c.startswith(CHECK_PREFIX)]

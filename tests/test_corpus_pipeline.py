@@ -350,6 +350,24 @@ def test_resume_refuses_a_lineage_of_another_layout(tmp_path, spark, job, corpus
         assert sorted(os.listdir(path + "/lineage")) == before
 
 
+def test_resume_refuses_a_lineage_without_data_files(tmp_path, spark, job, corpus_df):
+    """A ``lineage/`` directory without data files, what a failed lineage
+    write leaves next to a committed ``violations/``, is refused on resume
+    with one ValueError line before anything is written. Read as "no units
+    done", the resume would append every violation row a second time."""
+    import shutil
+
+    results = tmp_path / "empty_lineage"
+    job.run(corpus_df, str(results))
+    shutil.rmtree(results / "lineage")
+    (results / "lineage").mkdir()
+    before = {p: p.stat().st_mtime_ns for p in results.rglob("*")}
+    with pytest.raises(ValueError, match="lineage: it holds no data files") as refused:
+        job.run(corpus_df, str(results), resume=True)
+    assert "\n" not in str(refused.value)
+    assert {p: p.stat().st_mtime_ns for p in results.rglob("*")} == before
+
+
 def test_run_refuses_an_absent_id_column(tmp_path, spark):
     """An ``id_column`` the frame lacks is refused (ValueError naming it)
     before ``run()`` writes anything: no partial ``lineage/`` is left."""
@@ -363,8 +381,10 @@ def test_run_refuses_an_absent_id_column(tmp_path, spark):
 
 def test_run_profile_matches_column_profile(tmp_path, spark, job, corpus_df):
     """``profile/`` written by run() equals column_profile(df) on every
-    field; approx_distinct (HLL, lgConfigK 9: rsd 1.04/sqrt(512)) is within
-    3 rsd of the exact distinct count."""
+    field; a scalar column's approx_distinct (HLL, lgConfigK 9: rsd
+    1.04/sqrt(512)) is within 3 rsd of the exact distinct count, and the
+    nested ``tokens`` column is profiled by nulls and lengths only: its
+    approx_distinct, min_value and max_value are NULL."""
     from jsonschema_spark.operators.stats import column_profile
 
     results = str(tmp_path / "profiled")
@@ -372,14 +392,17 @@ def test_run_profile_matches_column_profile(tmp_path, spark, job, corpus_df):
     got = {r.column: r.asDict() for r in spark.read.parquet(results + "/profile").collect()}
     want = {r.column: r.asDict() for r in column_profile(corpus_df).collect()}
     assert list(got) == corpus_df.columns
-    exact = corpus_df.agg(
-        *[F.countDistinct(c).alias(c) for c in corpus_df.columns]
-    ).collect()[0]
+    scalars = [c for c in corpus_df.columns if c != "tokens"]
+    exact = corpus_df.agg(*[F.countDistinct(c).alias(c) for c in scalars]).collect()[0]
     rsd = 1.04 / 512 ** 0.5
-    for name in corpus_df.columns:
+    for name in scalars:
         assert abs(got[name].pop("approx_distinct") - exact[name]) <= 3 * rsd * exact[name]
         want[name].pop("approx_distinct")
         assert got[name] == want[name], name
+    tokens = got["tokens"]
+    assert (tokens["approx_distinct"], tokens["min_value"], tokens["max_value"]) == (None,) * 3
+    assert tokens == want["tokens"]
+    assert tokens["min_len"] >= 1 and tokens["null_rate"] == 0.0
 
 
 def _last_job_id(spark, group: str) -> int:
@@ -439,6 +462,62 @@ def test_a_failing_output_stops_the_run(spark, job, corpus_df, tmp_path, monkeyp
     assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
     assert not (results / "summary.json").exists()
     assert not (results / "orphans_source" / "_SUCCESS").exists()
+
+
+def test_a_failing_frame_build_stops_the_run(spark, job, corpus_df, tmp_path, monkeypatch):
+    """An output frame that fails to build, now inside its own output
+    thread, fails the run as a failing job does: its error is raised, no
+    job of the run is left running and no ``summary.json`` is written."""
+
+    def broken(self, df):
+        raise RuntimeError("orphans frame failed to build")
+
+    monkeypatch.setattr(ValidationJob, "referential", broken)
+    results = tmp_path / "r"
+    with pytest.raises(RuntimeError, match="orphans frame failed to build"):
+        ValidationJob(job.plan, dims=job.dims).run(corpus_df, str(results))
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
+    assert not (results / "summary.json").exists()
+
+
+def test_a_frame_is_built_once_across_threads():
+    """``_built_once``: however many output threads ask for a frame map at
+    the same moment, it is built once and every thread gets that build."""
+    import sys
+    import threading
+    import time
+
+    from jsonschema_spark.plans.job import _built_once
+
+    calls = []
+
+    def build():
+        calls.append(1)
+        time.sleep(0.01)
+        return {"n": len(calls)}
+
+    get = _built_once(build)
+    start = threading.Barrier(16)
+    got = []
+
+    def ask():
+        start.wait(timeout=10)
+        got.append(get())
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=ask) for _ in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=10)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert len(calls) == 1 and len(got) == 16
+    assert all(g is got[0] for g in got)
 
 
 def test_summary_order_under_concurrency(spark, tmp_path, monkeypatch):
@@ -510,6 +589,54 @@ def test_shard_check_build_round_trips(spark, corpus_df, monkeypatch):
     assert 100 < len(sent) <= 700, len(sent)
 
 
+def test_lineage_and_rollup_build_round_trips(spark, job, corpus_df, monkeypatch):
+    """Building ``partition_lineage``, its schema and the roll-up aggregates
+    of ``lineage/`` on the corpus spec stays under 250 py4j round trips:
+    each aggregate is one SQL expression, not a tree of Column calls (about
+    1,070 trips when each partial was built from Column calls)."""
+    from py4j.clientserver import ClientServerConnection
+
+    from jsonschema_spark.plans.job import _lineage_rollup, _payload
+    from jsonschema_spark.plans.plan import positions
+
+    annotated = job.annotate(corpus_df)
+    checks = job.plan.check_names + [f"ref_{c}" for c in job.plan.references]
+    sent = []
+    send = ClientServerConnection.send_command
+
+    def counting(self, command, *args, **kwargs):
+        if not command.startswith("m\n"):
+            sent.append(command)
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    refs = positions(job.partition_lineage(annotated).schema.names)
+    _lineage_rollup(checks, corpus_df.schema, _payload(annotated), refs)
+    monkeypatch.undo()
+    assert 0 < len(sent) <= 250, len(sent)
+
+
+def test_lineage_reads_an_array_column_by_size_and_nulls(job, corpus_df):
+    """The lineage aggregate profiles the nested ``tokens`` column by its
+    NULLs and sizes only: no ``xxhash64``, HLL sketch, ``min`` or ``max``
+    runs over the array."""
+    import re
+
+    plan = job.partition_lineage(job.annotate(corpus_df))._jdf.queryExecution()
+    text = plan.optimizedPlan().toString()
+    aggregate = text.splitlines()[0]
+    assert aggregate.startswith("Aggregate"), text
+    # the aggregate reads the column by its positional name (``positions``)
+    names = set(re.findall(r"\btokens#\d+", text))
+    names |= set(re.findall(r"\btokens#\d+ AS (\w+#\d+)", text))
+    ref = "|".join(map(re.escape, names))
+    # a function applied to the column in the aggregate itself, or in a
+    # common subexpression the optimizer moved into the projection below it
+    direct = set(re.findall(rf"(\w+)\((?:{ref})\b", aggregate))
+    common = set(re.findall(rf"(\w+)\((?:{ref})\) AS _common_expr", text))
+    assert "size" in direct and (direct | common) <= {"size", "isnull"}, (direct, common)
+
+
 def test_annotate_runs_in_codegen_without_lambdas(job, corpus_df):
     """The corpus spec's annotate projection has no interpreted lambda (the
     ``items`` NULL guard is ``array_contains``, not ``array_compact``'s
@@ -521,8 +648,9 @@ def test_annotate_runs_in_codegen_without_lambdas(job, corpus_df):
 
 
 def test_run_on_map_column(spark, tmp_path):
-    """A MAP column has no ordering: the profile leaves its min/max NULL
-    instead of failing the run, and still counts its distinct values."""
+    """A MAP column is nested: the profile leaves its approx_distinct,
+    min and max NULL (a map has no ordering) instead of failing the run,
+    and still counts its NULLs."""
     df = spark.createDataFrame(
         [(1, {"a": 1}), (2, {"b": 2}), (3, None), (4, {"a": 1})],
         "id long, doc map<string,long>",
@@ -533,8 +661,52 @@ def test_run_on_map_column(spark, tmp_path):
     assert summary["n_rows"] == 4 and summary["n_invalid"] == 0
     prof = {r.column: r for r in spark.read.parquet(results + "/profile").collect()}
     assert prof["doc"].min_value is None and prof["doc"].max_value is None
-    assert prof["doc"].null_rate == 0.25 and prof["doc"].approx_distinct == 2
+    assert prof["doc"].null_rate == 0.25 and prof["doc"].approx_distinct is None
     assert (prof["id"].min_value, prof["id"].max_value) == ("1", "4")
+    assert (prof["doc"].min_len, prof["doc"].max_len, prof["doc"].avg_len) == (1, 1, 1.0)
+
+
+def test_run_profiles_hostile_column_names(spark, tmp_path):
+    """Column names that SQL text must quote (a backtick, a quote, a ``$``,
+    a space, a non-ASCII letter; one of them an array) or could not name at
+    all (``${...}``, which the SQL parser's variable substitution rewrites
+    even inside backticks) reach ``lineage/``'s ``profile_<name>`` columns,
+    the ``fail_<check>`` counts and the ``profile/`` rows exactly as they
+    are."""
+    from pyspark.sql import types as T
+
+    types = {
+        "a`b": T.StringType(), "it's": T.ArrayType(T.IntegerType()), "x$y": T.IntegerType(),
+        "two words": T.StringType(), "é": T.DoubleType(), "v${spark.app.name}": T.LongType(),
+    }
+    schema = T.StructType(
+        [T.StructField("id", T.LongType())] + [T.StructField(n, t) for n, t in types.items()]
+    )
+    df = spark.createDataFrame(
+        [(1, "p", [1, 2], 3, "q r", 1.5, 7), (2, None, [], 4, "s", None, 8),
+         (3, "t", None, 5, "", 2.5, 9)],
+        schema,
+    )
+    spec = {"required": ["it's", "x$y"]}
+    plan = compile_table_spec(TableSpec.from_dict(spec), df.schema)
+    results = str(tmp_path / "hostile")
+    summary = ValidationJob(plan, id_column="id").run(df, results)
+    assert summary["checks"] == {"required_it's": 1, "required_x$y": 0}
+    # Spark's parquet write rewrites a ``${...}`` in a column name on its
+    # own, so the last column is left out of the comparison
+    lineage = spark.read.parquet(results + "/lineage")
+    assert [c for c in lineage.columns if c.startswith(("fail_", "profile_"))][:-1] == [
+        "fail_required_it's", "fail_required_x$y", *["profile_" + n for n in df.columns[:-1]]
+    ]
+    prof = {r.column: r for r in spark.read.parquet(results + "/profile").collect()}
+    assert list(prof) == df.columns
+    assert (prof["a`b"].min_value, prof["a`b"].max_value, prof["a`b"].null_rate) == ("p", "t", 1 / 3)
+    assert (prof["it's"].approx_distinct, prof["it's"].min_len, prof["it's"].max_len) == (None, 0, 2)
+    assert (prof["x$y"].min_value, prof["x$y"].max_value, prof["x$y"].approx_distinct) == ("3", "5", 3)
+    assert (prof["two words"].min_value, prof["two words"].max_len) == ("", 3)
+    assert (prof["é"].max_value, prof["é"].dtype) == ("2.5", "double")
+    dollar = prof["v${spark.app.name}"]
+    assert (dollar.min_value, dollar.max_value, dollar.approx_distinct) == ("7", "9", 3)
 
 
 def test_json_columns_kernel_in_tablespec(spark):
